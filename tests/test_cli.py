@@ -39,34 +39,43 @@ def test_cli_crawl_readdb_index_roundtrip(spark, tmp_path, seeds_file, capsys):
     assert len(rounds) == 2 and rounds[1]["fetched"] > 0
 
     # readdb --stats
-    assert main(["readdb", "--workdir", wd, "--host-buckets", "4", "--stats"], spark=spark) == 0
+    assert main(["readdb", "--workdir", wd, "--stats"], spark=spark) == 0
     stats = json.loads(capsys.readouterr().out.strip())
     assert stats["rows"] > 0 and stats["by_status"]
 
     # readdb --dump
-    assert main(["readdb", "--workdir", wd, "--host-buckets", "4", "--dump", "5"], spark=spark) == 0
+    assert main(["readdb", "--workdir", wd, "--dump", "5"], spark=spark) == 0
     lines = capsys.readouterr().out.strip().splitlines()
     assert len(lines) == 5 and all("url" in json.loads(l) for l in lines)
 
     # readdb --url (existing vs missing rc)
     url = json.loads(lines[0])["url"]
-    assert main(["readdb", "--workdir", wd, "--host-buckets", "4", "--url", url], spark=spark) == 0
+    assert main(["readdb", "--workdir", wd, "--url", url], spark=spark) == 0
     capsys.readouterr()
-    assert main(["readdb", "--workdir", wd, "--host-buckets", "4", "--url", "http://nope.test/x"], spark=spark) == 1
+    assert main(["readdb", "--workdir", wd, "--url", "http://nope.test/x"], spark=spark) == 1
     capsys.readouterr()
 
     # readdb --host (partition-pruned read)
     host = url.split("/")[2]
-    assert main(["readdb", "--workdir", wd, "--host-buckets", "4", "--host", host], spark=spark) == 0
+    assert main(["readdb", "--workdir", wd, "--host", host], spark=spark) == 0
     hosted = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
     assert hosted and all(host in h["url"] for h in hosted)
 
     # index -> parquet dir
     out = str(tmp_path / "idx")
-    assert main(["index", "--workdir", wd, "--host-buckets", "4", "--out", out], spark=spark) == 0
+    assert main(["index", "--workdir", wd, "--out", out], spark=spark) == 0
     res = json.loads(capsys.readouterr().out.strip())
     assert res["indexed_docs"] > 0
     assert spark.read.parquet(out).count() == res["indexed_docs"]
+
+
+def test_cli_readdb_missing_workdir_creates_nothing(spark, tmp_path):
+    """A pure reader opens the store with the layout recorded on disk:
+    on a workdir with no store it fails and writes nothing."""
+    wd = str(tmp_path / "absent")
+    with pytest.raises(FileNotFoundError):
+        main(["readdb", "--workdir", wd, "--stats"], spark=spark)
+    assert not os.path.exists(wd)
 
 
 def test_cli_inject_only(spark, tmp_path, seeds_file, capsys):
@@ -150,7 +159,7 @@ def test_cli_clean_deletes_gone_redirect_duplicates(spark, tmp_path, seeds_file,
     assert main(["crawl", *_crawl_args(wd, seeds_file), "--rounds", "2"], spark=spark) == 0
     capsys.readouterr()
     out = str(tmp_path / "deletes")
-    assert main(["clean", "--workdir", wd, "--host-buckets", "4", "--out", out], spark=spark) == 0
+    assert main(["clean", "--workdir", wd, "--out", out], spark=spark) == 0
     res = json.loads(capsys.readouterr().out.strip())
     assert res["deleted"] > 0 and "gone" in res["by_reason"]
 
@@ -189,7 +198,7 @@ def test_cli_solrdedup_keeps_best_per_digest(spark, tmp_path, seeds_file, capsys
     capsys.readouterr()
     out = str(tmp_path / "dedup-deletes")
     assert (
-        main(["solrdedup", "--workdir", wd, "--host-buckets", "4", "--out", out], spark=spark)
+        main(["solrdedup", "--workdir", wd, "--out", out], spark=spark)
         == 0
     )
     res = json.loads(capsys.readouterr().out.strip())

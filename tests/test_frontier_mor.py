@@ -346,3 +346,110 @@ def test_merge_linked_rejects_mismatched_bucketing(spark, tmp_path):
     st.merge_linked(art2)
     got = {r["url_hash"]: r["score"] for r in st.read().collect()}
     assert got == {"a": 1.0, "b": 20.0}
+
+
+def test_single_resolver_equals_pandas_upsert(spark, tmp_path):
+    """read(), the union of read_host() over every host, and read()
+    after an incremental compact() all resolve through one MOR
+    resolver, and all equal a plain pandas upsert of the same inputs:
+    three overlapping deltas (newest wins), tombstones carrying a host,
+    and a re-insert of a deleted key."""
+    import pandas as pd
+
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    base = [(f"u{i}", (i % 12) + 1, float(i)) for i in range(24)]
+    # every delta stays on hosts 1-3, so compaction leaves buckets alone
+    steps = [
+        ("merge", [("u0", 1, 100.0), ("u1", 2, 101.0), ("n0", 3, 50.0)]),
+        ("merge", [("u0", 1, 200.0), ("u1", 2, 201.0)]),
+        ("delete", [("u2", 3), ("u12", 1)]),
+        ("merge", [("u0", 1, 300.0), ("u2", 3, 302.0)]),
+    ]
+    st.init(_rows(spark, base))
+    want = pd.DataFrame(base, columns=["url_hash", "h", "score"]).set_index("url_hash")
+    for op, items in steps:
+        if op == "merge":
+            st.merge(_rows(spark, items))
+            upd = pd.DataFrame(items, columns=["url_hash", "h", "score"])
+            want = pd.concat([want.drop(upd.url_hash, errors="ignore"),
+                              upd.set_index("url_hash")])
+        else:
+            st.delete(spark.createDataFrame(
+                [(u, f"host{h}.test") for u, h in items], ["url_hash", "host"]
+            ))
+            want = want.drop([u for u, _ in items])
+    want = want.score.to_dict()
+    assert [ln["kind"] for ln in st.lineage_chain()] == ["base"] + ["delta"] * 4
+    assert want["u0"] == 300.0 and want["u2"] == 302.0 and "u12" not in want
+
+    def _scores(rows):
+        got = {r["url_hash"]: r["score"] for r in rows}
+        assert len(got) == len(rows), "duplicate keys after resolution"
+        return got
+
+    assert _scores(st.read().collect()) == want
+    per_host = []
+    for h in range(1, 13):
+        per_host += st.read_host(f"host{h}.test").collect()
+    assert _scores(per_host) == want
+
+    v = st.compact()
+    ln = st.lineage(v)
+    base_buckets = [d for d in os.listdir(st._data_dir(0)) if d.startswith("host_bucket=")]
+    assert ln["kind"] == "base" and 0 < ln["compacted_buckets"] < len(base_buckets)
+    assert _scores(st.read().collect()) == want
+
+
+def test_compaction_trigger_snapshot_count_and_linked_merge(spark, tmp_path):
+    """One trigger serves merge and merge_linked: the delta-count cap
+    fires with a lax row ratio, and a linked delta that outgrows the row
+    ratio compacts right after it commits."""
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    st.MAX_DELTA_SNAPSHOTS = 2
+    st.init(_rows(spark, [(f"u{i}", i % 3, float(i)) for i in range(6)]))
+    st.merge(_rows(spark, [("u0", 0, 10.0)]))
+    st.merge(_rows(spark, [("u1", 1, 11.0)]))
+    assert [ln["kind"] for ln in st.lineage_chain()] == ["base", "delta", "delta"]
+    st.merge(_rows(spark, [("u2", 2, 12.0)]))  # third delta exceeds the cap
+    assert [ln["kind"] for ln in st.lineage_chain()][-2:] == ["delta", "base"]
+
+    lk = ParquetFrontierStore(
+        spark, os.path.join(str(tmp_path), "linked"), host_buckets=4, compact_ratio=0.5
+    )
+    lk.init(_rows(spark, [(f"u{i}", i % 3, float(i)) for i in range(6)]))
+    art = os.path.join(str(tmp_path), "artifact")
+    upd = [("u0", 0, 10.0), ("n1", 1, 1.0), ("n2", 2, 2.0), ("n3", 0, 3.0)]
+    lk.with_bucket(_rows(spark, upd)).write.parquet(art)
+    lk.stamp_bucketing(art)
+    lk.merge_linked(art)  # 4 delta rows > 0.5 * 6 base rows
+    chain = lk.lineage_chain()
+    assert [ln["kind"] for ln in chain] == ["base", "delta", "base"]
+    assert chain[1]["linked_from"] == art
+    got = {r["url_hash"]: r["score"] for r in lk.read().collect()}
+    assert got == {**{f"u{i}": float(i) for i in range(6)}, **{u: s for u, _, s in upd}}
+
+
+def test_uninitialized_store_reads_raise_file_not_found(spark, tmp_path):
+    st = _store(spark, tmp_path)
+    with pytest.raises(FileNotFoundError):
+        st.read()
+    with pytest.raises(FileNotFoundError):
+        st.read_host("host1.test")
+
+
+def test_mor_read_plan_broadcasts_delta_keys(spark, tmp_path, capsys):
+    """Under the broadcast gate the base side of the MOR anti-join never
+    shuffles: the delta key set is broadcast into a left-anti join by
+    the store's own hint, not by Spark's size-based choice."""
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    st.init(_rows(spark, [(f"u{i}", i % 3, float(i)) for i in range(20)]))
+    st.merge(_rows(spark, [("u1", 1, 9.0)]))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        capsys.readouterr()
+        st.read().explain("formatted")
+        assert "BroadcastHashJoin LeftAnti" in capsys.readouterr().out
+    finally:
+        spark.conf.set(key, prev)

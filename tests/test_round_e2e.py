@@ -191,3 +191,27 @@ def test_kill_and_resume_identical_state(spark, tmp_path_factory):
     assert (a.status == b.status).all()
     assert (a.distance == b.distance).all()
     assert ((a.score - b.score).abs() < 1e-3).all()
+
+
+def test_overlapped_failures_all_surface(spark, tmp_path):
+    """Overlapped stage actions: a lone failure re-raises unchanged,
+    two failures surface together as one ExceptionGroup."""
+    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(), WEB, START)
+    assert spark.sparkContext.defaultParallelism >= 4  # the threaded path
+    ran = []
+
+    def ok():
+        ran.append("ok")
+
+    def bad_io():
+        raise OSError("disk")
+
+    def bad_value():
+        raise ValueError("layout")
+
+    with pytest.raises(ValueError, match="layout"):
+        drv._run_overlapped(ok, bad_value)
+    with pytest.raises(ExceptionGroup) as info:
+        drv._run_overlapped(bad_io, ok, bad_value)
+    assert {type(e) for e in info.value.exceptions} == {OSError, ValueError}
+    assert ran == ["ok", "ok"]  # every action ran to the end

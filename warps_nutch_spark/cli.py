@@ -83,6 +83,14 @@ def _driver(spark, args):
     return RoundDriver(spark, args.workdir, _cfg_from_args(args), _web_params(args))
 
 
+def _open_store(spark, args):
+    """Pure readers adopt the store's recorded bucket layout (as the
+    REST /db endpoint does) and create nothing on disk."""
+    from .store.frontier import ParquetFrontierStore
+
+    return ParquetFrontierStore.open(spark, os.path.join(args.workdir, "frontier"))
+
+
 def _seeds_df(spark, path: str):
     return spark.read.text(path).withColumnRenamed("value", "value")
 
@@ -156,11 +164,7 @@ def cmd_crawl(spark, args) -> int:
 def cmd_readdb(spark, args) -> int:
     from pyspark.sql import functions as F
 
-    from .store.frontier import ParquetFrontierStore
-
-    store = ParquetFrontierStore(
-        spark, os.path.join(args.workdir, "frontier"), args.host_buckets or 8
-    )
+    store = _open_store(spark, args)
     if args.url:
         rows = store.read().filter(F.col("url") == args.url).collect()
         for r in rows:
@@ -210,11 +214,7 @@ def cmd_index(spark, args) -> int:
         write_bulk_files,
         write_index,
     )
-    from .store.frontier import ParquetFrontierStore
-
-    store = ParquetFrontierStore(
-        spark, os.path.join(args.workdir, "frontier"), args.host_buckets or 8
-    )
+    store = _open_store(spark, args)
     docs = build_index_documents(store.read(), batch_id=args.batch)
     if args.format == "bulk":
         lines = to_bulk_ndjson(docs, index_name=args.index_name)
@@ -239,11 +239,7 @@ def cmd_clean(spark, args) -> int:
         push_bulk_http,
         write_bulk_files,
     )
-    from .store.frontier import ParquetFrontierStore
-
-    store = ParquetFrontierStore(
-        spark, os.path.join(args.workdir, "frontier"), args.host_buckets or 8
-    )
+    store = _open_store(spark, args)
     dels = build_clean_deletes(store.read())
     by_reason = {
         r["reason"]: r["n"]
@@ -271,11 +267,7 @@ def cmd_solrdedup(spark, args) -> int:
         solr_dedup_deletes,
         write_bulk_files,
     )
-    from .store.frontier import ParquetFrontierStore
-
-    store = ParquetFrontierStore(
-        spark, os.path.join(args.workdir, "frontier"), args.host_buckets or 8
-    )
+    store = _open_store(spark, args)
     indexed = store.read().filter(F.col("status") == CrawlStatus.FETCHED)
     dels = solr_dedup_deletes(
         indexed.select(
@@ -548,7 +540,6 @@ def make_parser() -> argparse.ArgumentParser:
 
     rd = sub.add_parser("readdb", help="read/dump records from the page database")
     rd.add_argument("--workdir", required=True)
-    rd.add_argument("--host-buckets", dest="host_buckets", type=int, default=8)
     rd.add_argument("--stats", action="store_true")
     rd.add_argument("--dump", type=int)
     rd.add_argument("--url")
@@ -557,7 +548,6 @@ def make_parser() -> argparse.ArgumentParser:
     ix = sub.add_parser("index", help="run the indexer over the frontier")
     ix.add_argument("--workdir", required=True)
     ix.add_argument("--out", required=True)
-    ix.add_argument("--host-buckets", dest="host_buckets", type=int, default=8)
     ix.add_argument("--format", choices=["parquet", "json", "bulk"], default="parquet")
     ix.add_argument("--index-name", dest="index_name", default="nutch")
     ix.add_argument("--endpoint", default="")
@@ -567,14 +557,12 @@ def make_parser() -> argparse.ArgumentParser:
         "clean", help="remove gone/redirect/duplicate docs from index backends"
     )
     cl.add_argument("--workdir", required=True)
-    cl.add_argument("--host-buckets", dest="host_buckets", type=int, default=8)
     cl.add_argument("--out", default="")
     cl.add_argument("--index-name", dest="index_name", default="nutch")
     cl.add_argument("--endpoint", default="")
 
     sd = sub.add_parser("solrdedup", help="remove duplicates from the index")
     sd.add_argument("--workdir", required=True)
-    sd.add_argument("--host-buckets", dest="host_buckets", type=int, default=8)
     sd.add_argument("--out", default="")
     sd.add_argument("--index-name", dest="index_name", default="nutch")
     sd.add_argument("--endpoint", default="")

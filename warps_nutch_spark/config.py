@@ -153,7 +153,7 @@ class CrawlConfig:
     # time ~17% (one compaction per 3 rounds instead of 3). Reads stay
     # cheap across the extra deltas because the MOR anti-join
     # broadcast-hints the delta key set; the snapshot-count cap in
-    # ParquetFrontierStore (max_delta_snapshots=8) bounds the read
+    # ParquetFrontierStore (MAX_DELTA_SNAPSHOTS = 8) bounds the read
     # plan's delta fan-in regardless of ratio.
     frontier_compact_ratio: float = 4.0
     # salt factor for payload-parallel stages (never the politeness UDF)

@@ -25,6 +25,7 @@ Per-round state maintained alongside the frontier:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from contextlib import contextmanager
@@ -41,6 +42,8 @@ from ..operators import parse as parse_op
 from ..operators import updatedb as upd_op
 from ..store.frontier import ParquetFrontierStore
 from ..store.urlseen import BloomUrlSeen
+
+log = logging.getLogger(__name__)
 
 
 def host_eviction_cond(cfg: CrawlConfig):
@@ -159,7 +162,9 @@ class RoundDriver:
         application). Callers pass only actions that are mutually
         independent AND individually idempotent on resume; exceptions
         propagate after all threads finish, so the stage's _DONE marker
-        is never written when any action failed.
+        is never written when any action failed. A lone failure is
+        re-raised as is; several are raised together as an
+        ExceptionGroup so none of their tracebacks is lost.
 
         Overlap only pays when there IS a task tail to back-fill: on a
         near-single-core scheduler (e.g. one-core executors in the
@@ -181,8 +186,11 @@ class RoundDriver:
                     fut.result()
                 except BaseException as exc:  # propagate after joining all
                     errors.append(exc)
-        if errors:
+        if len(errors) == 1:
             raise errors[0]
+        if errors:
+            # an ExceptionGroup unless an interrupt is among them
+            raise BaseExceptionGroup("overlapped stage actions failed", errors)
 
     def _metrics_sum(self, batch_id: str, stage: str) -> int:
         """Sum of one committed metrics slice — the resume-path source
@@ -596,18 +604,10 @@ class RoundDriver:
                 def _adopt() -> None:
                     tt = time.time()
                     if ("updatedb", batch_id) not in self.store.committed_ops():
-                        lineage = {"op": "updatedb", "batch_id": batch_id}
-                        try:
-                            self.store.merge_linked(
-                                os.path.join(
-                                    self._stage_dir(batch_id, "updatedb"), "data"
-                                ),
-                                lineage,
-                            )
-                        except ValueError:
-                            # artifact from an older layout (no
-                            # host_bucket): fall back to the shuffling merge
-                            self.store.merge(merge_rows, lineage)
+                        self.store.merge_linked(
+                            os.path.join(self._stage_dir(batch_id, "updatedb"), "data"),
+                            {"op": "updatedb", "batch_id": batch_id},
+                        )
                     stage_times["updatedb.adopt"] = time.time() - tt
 
                 def _urlseen_merge() -> None:
@@ -767,8 +767,8 @@ class RoundDriver:
         try:
             self.spark.catalog.clearCache()
             self.spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # hygiene only — never fail a crawl over it
+        except Exception:  # hygiene only — never fail a crawl over it
+            log.warning("pre-crawl cache clear / GC failed", exc_info=True)
         if self.store.current_version() < 0:
             self.inject(seeds)
         stats = []

@@ -9,15 +9,18 @@ Two implementations behind one interface:
   parquet snapshots with an atomic version pointer and a lineage log
   per version. ``merge`` appends the update rows as a *delta*
   snapshot (cost O(updates), never O(frontier) — the r1 copy-on-write
-  form rewrote the full table every round, the measured scale-killer);
-  ``read`` reconstructs the current table as
+  form rewrote the full table every round, the measured scale-killer).
+  One resolver, ``_resolve``, reconstructs the table as
 
       base  ⟕anti  delta-keys   ∪   latest-version delta rows
 
   i.e. exactly Iceberg's equality-delete MOR scan: the anti-join
   against the (small) delta key set is a broadcast hash join while
   deltas are small, and AQE falls back to a shuffle join when they
-  grow. When total delta rows exceed ``compact_ratio`` × base rows,
+  grow. ``read`` resolves every bucket, ``read_host`` one host bucket
+  and ``compact`` the delta-touched buckets, each through that one
+  resolver. When total delta rows exceed ``compact_ratio`` × base
+  rows (or the delta count or broadcast gate is exceeded),
   ``compact()`` materializes the merged view as a new base — amortized
   O(frontier) every ~1/ratio rounds instead of every round.
   Snapshots are partitioned by ``host_bucket`` = pmod(xxhash64(host),
@@ -45,9 +48,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -62,23 +66,27 @@ class FrontierStore:
 
 
 class ParquetFrontierStore(FrontierStore):
+    #: broadcast the delta key set into the base anti-join while it is
+    #: small enough (keys are 8-byte hashes; 4M keys ~ tens of MB of
+    #: build-side hash table). Above this, leave the strategy to AQE.
+    BROADCAST_DELTA_KEYS_MAX = 4_000_000
+    #: bound on delta snapshots between compactions, independent of the
+    #: row ratio: every delta adds a scan + union branch to the MOR read
+    #: plan, so a lax row ratio must not let the plan's delta fan-in
+    #: grow without limit
+    MAX_DELTA_SNAPSHOTS = 8
+
     def __init__(
         self,
         spark: SparkSession,
         path: str,
         host_buckets: int = 64,
         compact_ratio: float = 4.0,
-        max_delta_snapshots: int = 8,
     ):
         self.spark = spark
         self.path = path
         self.host_buckets = host_buckets
         self.compact_ratio = compact_ratio
-        # bound on delta snapshots between compactions, independent of
-        # the row ratio: every delta adds a scan + union branch to the
-        # MOR read plan, so a lax row ratio must not let the plan's
-        # delta fan-in grow without limit
-        self.max_delta_snapshots = max_delta_snapshots
         os.makedirs(path, exist_ok=True)
         # the bucket count is part of the on-disk layout: reopening an
         # existing store with a different host_buckets would make
@@ -109,16 +117,16 @@ class ParquetFrontierStore(FrontierStore):
                 )
 
     @classmethod
-    def open(cls, spark: SparkSession, path: str, compact_ratio: float = 4.0):
+    def open(cls, spark: SparkSession, path: str):
         """Open an existing store adopting its recorded on-disk layout
         (pure readers — e.g. the REST /db endpoint — must not need to
-        know the writer's host_buckets)."""
+        know the writer's host_buckets). Creates nothing on disk."""
         meta_file = os.path.join(path, "_STORE_META.json")
         if not os.path.exists(meta_file):
             raise FileNotFoundError(f"no frontier store at {path}")
         with open(meta_file) as f:
             meta = json.load(f)
-        return cls(spark, path, int(meta["host_buckets"]), compact_ratio)
+        return cls(spark, path, int(meta["host_buckets"]))
 
     # -- version bookkeeping ------------------------------------------
     @property
@@ -152,77 +160,85 @@ class ParquetFrontierStore(FrontierStore):
         check a resumed round uses to skip a re-merge."""
         return {(ln.get("op"), ln.get("batch_id")) for ln in self.lineage_chain()}
 
-    def _commit_version(self, version: int, lineage: dict) -> None:
+    def _commit(self, version: int, lineage: dict, kind: str) -> dict:
+        """Stamp the written snapshot's lineage (version, kind, row
+        count) and swap the version pointer; returns the lineage."""
+        lineage = dict(lineage)
+        lineage["version"] = version
+        lineage["kind"] = kind
+        # parquet-metadata count (no data scan)
+        lineage["rows"] = self.spark.read.parquet(self._data_dir(version)).count()
         with open(os.path.join(self._snapshot_dir(version), "_LINEAGE.json"), "w") as f:
             json.dump(lineage, f, indent=2)
         tmp = self._version_file + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"version": version, "committed_at": time.time()}, f)
         os.replace(tmp, self._version_file)  # atomic pointer swap
+        return lineage
 
-    def _layout(self) -> tuple[int, list[int]]:
-        """(base_version, delta_versions since it). The base is the
-        most recent snapshot with kind == 'base'."""
+    def _layout(self) -> tuple[dict, list[dict]]:
+        """(base lineage, delta lineages since it), from one pass over
+        the chain. The base is the most recent snapshot with kind ==
+        'base'. Every read and write path starts here, so an
+        uninitialized store fails the same way everywhere."""
         chain = self.lineage_chain()
-        base_v = 0
+        if not chain:
+            raise FileNotFoundError(f"frontier not initialized at {self.path}")
+        base = chain[0]
         for ln in chain:
             if ln.get("kind", "base") == "base":
-                base_v = ln["version"]
+                base = ln
         deltas = [
-            ln["version"]
+            ln
             for ln in chain
-            if ln["version"] > base_v and ln.get("kind") == "delta"
+            if ln["version"] > base["version"] and ln.get("kind") == "delta"
         ]
-        return base_v, deltas
+        return base, deltas
 
-    # -- operations ------------------------------------------------------
+    # -- merge-on-read resolution -----------------------------------------
+    def _bucket(self, col: Column) -> Column:
+        return F.pmod(F.xxhash64(col), F.lit(self.host_buckets)).cast("int")
+
     def with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "host_bucket",
-            F.pmod(F.xxhash64(F.col("host")), F.lit(self.host_buckets)).cast("int"),
-        )
+        return df.withColumn("host_bucket", self._bucket(F.col("host")))
 
-    #: broadcast the delta key set into the base anti-join while it is
-    #: small enough (keys are 8-byte hashes; 4M keys ~ tens of MB of
-    #: build-side hash table). Above this, leave the strategy to AQE.
-    BROADCAST_DELTA_KEYS_MAX = 4_000_000
+    def _read_base(self, base: dict) -> DataFrame:
+        df = self.spark.read.parquet(self._data_dir(base["version"]))
+        if "_tombstone" in df.columns:  # never true after compaction
+            df = df.filter(~F.col("_tombstone")).drop("_tombstone")
+        return df
 
-    def _delta_rows(self, deltas: list[int]) -> int:
-        """Total delta rows since the base, from lineage metadata only
-        (no Spark job)."""
-        return sum(self.lineage(dv).get("rows", 0) for dv in deltas)
-
-    def has_deltas(self) -> bool:
-        """True when read() must resolve delta snapshots (window +
-        anti-join) on top of the base scan. Callers use this to decide
-        whether caching the MOR view is worth anything: a base-only
-        read is a plain columnar parquet scan, and re-scanning it is
-        CHEAPER than building + reading a block cache (measured: the
-        unconditional per-round persist cost ~1.5x per-shard slowdown
-        under 4-way executor concurrency on the scaling bench)."""
-        return bool(self._layout()[1])
-
-    def read(self) -> DataFrame:
-        """MOR scan: base rows not shadowed by a delta key, plus the
-        newest delta row per key; tombstoned keys (equality deletes)
-        drop out entirely."""
-        v = self.current_version()
-        if v < 0:
-            raise FileNotFoundError(f"frontier not initialized at {self.path}")
-        base_v, deltas = self._layout()
-        base = self.spark.read.parquet(self._data_dir(base_v))
-        if "_tombstone" in base.columns:  # never true after compaction
-            base = base.filter(~F.col("_tombstone")).drop("_tombstone")
-        if not deltas:
-            return base
+    def _delta_union(self, deltas: list[dict]) -> DataFrame:
+        """Every delta snapshot since the base in one union, each row
+        tagged with its version and a ``_tombstone`` flag."""
         dl = None
-        for dv in deltas:
+        for ln in deltas:
+            dv = ln["version"]
             d = self.spark.read.parquet(self._data_dir(dv)).withColumn(
                 "_delta_v", F.lit(dv)
             )
             if "_tombstone" not in d.columns:
                 d = d.withColumn("_tombstone", F.lit(False))
             dl = d if dl is None else dl.unionByName(d)
+        return dl
+
+    @staticmethod
+    def _has_hostless_tombstone(dl: DataFrame) -> bool:
+        """A host-less tombstone buckets by url_hash, NOT by its
+        victim's host bucket — bucket-scoped resolution would then miss
+        the victim and resurrect it, so bucket-scoped callers fall back
+        to resolving every bucket (delete() with host is colocated and
+        safe)."""
+        return (
+            dl.filter(F.col("_tombstone") & F.col("host").isNull()).limit(1).count()
+            > 0
+        )
+
+    def _resolve(self, base: DataFrame, dl: DataFrame, deltas: list[dict]) -> DataFrame:
+        """The MOR scan: base rows not shadowed by a delta key, plus the
+        newest delta row per key; tombstoned keys (equality deletes)
+        drop out entirely. Callers may pre-filter ``base`` and ``dl`` to
+        the same buckets."""
         # newest delta wins per key; the delta set is O(updates since
         # last compaction), so this window shuffles deltas, not the base
         win = Window.partitionBy("url_hash").orderBy(F.desc("_delta_v"))
@@ -236,89 +252,98 @@ class ParquetFrontierStore(FrontierStore):
         # construction): hint the broadcast explicitly so the base side
         # NEVER shuffles at 10^10 rows, AQE present or not (the hint is
         # what Iceberg MOR relies on AQE for; here we know the count)
-        if self._delta_rows(deltas) <= self.BROADCAST_DELTA_KEYS_MAX:
+        if sum(ln.get("rows", 0) for ln in deltas) <= self.BROADCAST_DELTA_KEYS_MAX:
             delta_keys = F.broadcast(delta_keys)
         kept = base.join(delta_keys, on="url_hash", how="left_anti")
         live = latest.filter(~F.col("_tombstone")).drop("_tombstone")
         return kept.unionByName(live.select(*base.columns))
+
+    def has_deltas(self) -> bool:
+        """True when read() must resolve delta snapshots (window +
+        anti-join) on top of the base scan. Callers use this to decide
+        whether caching the MOR view is worth anything: a base-only
+        read is a plain columnar parquet scan, and re-scanning it is
+        CHEAPER than building + reading a block cache (measured: the
+        unconditional per-round persist cost ~1.5x per-shard slowdown
+        under 4-way executor concurrency on the scaling bench)."""
+        return bool(self._layout()[1])
+
+    def read(self) -> DataFrame:
+        """The current table: the base scan, MOR-resolved against every
+        delta since it."""
+        base_ln, deltas = self._layout()
+        base = self._read_base(base_ln)
+        if not deltas:
+            return base
+        return self._resolve(base, self._delta_union(deltas), deltas)
 
     def read_host(self, host: str) -> DataFrame:
         """Host-scoped MOR read that touches ONLY the host's bucket:
         the base scan is partition-pruned to ``host_bucket=N`` (the S4
         reversed-key range-scan analog, CrawlFilters.java:147-175) and
         delta resolution filters to the same bucket. Falls back to the
-        full read when any delta carries a host-less tombstone (those
-        bucket by key and could sit outside the pruned bucket)."""
-        bucket_row = (
-            self.spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(F.lit(host)), F.lit(self.host_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .collect()
-        )
-        b = bucket_row[0]["b"]
-        base_v, deltas = self._layout()
-        base = self.spark.read.parquet(self._data_dir(base_v)).filter(
-            F.col("host_bucket") == b
-        )
-        if "_tombstone" in base.columns:
-            base = base.filter(~F.col("_tombstone")).drop("_tombstone")
-        if not deltas:
-            return base.filter(F.col("host") == host)
-        dl = None
-        for dv in deltas:
-            d = self.spark.read.parquet(self._data_dir(dv)).withColumn(
-                "_delta_v", F.lit(dv)
-            )
-            if "_tombstone" not in d.columns:
-                d = d.withColumn("_tombstone", F.lit(False))
-            dl = d if dl is None else dl.unionByName(d)
-        stray = (
-            dl.filter(F.col("_tombstone") & F.col("host").isNull()).limit(1).count()
-            > 0
-        )
-        if stray:
-            return self.read().filter(F.col("host") == host)
-        dl = dl.filter(F.col("host_bucket") == b)
-        win = Window.partitionBy("url_hash").orderBy(F.desc("_delta_v"))
-        latest = (
-            dl.withColumn("_rn", F.row_number().over(win))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_delta_v")
-        )
-        delta_keys = latest.select("url_hash")
-        if self._delta_rows(deltas) <= self.BROADCAST_DELTA_KEYS_MAX:
-            delta_keys = F.broadcast(delta_keys)
-        kept = base.join(delta_keys, on="url_hash", how="left_anti")
-        live = latest.filter(~F.col("_tombstone")).drop("_tombstone")
-        return kept.unionByName(live.select(*base.columns)).filter(
-            F.col("host") == host
-        )
+        full read when any delta carries a host-less tombstone."""
+        base_ln, deltas = self._layout()
+        bucket = self.spark.range(1).select(self._bucket(F.lit(host)).alias("b"))
+        in_bucket = F.col("host_bucket") == bucket.collect()[0]["b"]
+        rows = self._read_base(base_ln).filter(in_bucket)
+        if deltas:
+            dl = self._delta_union(deltas)
+            if self._has_hostless_tombstone(dl):
+                rows = self._resolve(self._read_base(base_ln), dl, deltas)
+            else:
+                rows = self._resolve(rows, dl.filter(in_bucket), deltas)
+        return rows.filter(F.col("host") == host)
 
+    # -- operations ------------------------------------------------------
     def init(self, df: DataFrame, lineage: dict | None = None) -> int:
         return self._write_snapshot(
             self.with_bucket(df), dict(lineage or {"op": "init"}), kind="base"
-        )
+        )["version"]
 
-    def _write_snapshot(self, df: DataFrame, lineage: dict, kind: str) -> int:
-        v = self.current_version() + 1
-        out = self._data_dir(v)
+    @staticmethod
+    def _write_buckets(df: DataFrame, out: str) -> None:
         (
             df.repartition(F.col("host_bucket"))
             .write.mode("overwrite")
             .partitionBy("host_bucket")
             .parquet(out)
         )
-        # parquet-metadata count (no data scan)
-        rows = self.spark.read.parquet(out).count()
-        lineage = dict(lineage)
-        lineage["version"] = v
-        lineage["kind"] = kind
-        lineage["rows"] = rows
-        self._commit_version(v, lineage)
-        return v
+
+    def _write_snapshot(self, df: DataFrame, lineage: dict, kind: str) -> dict:
+        v = self.current_version() + 1
+        self._write_buckets(df, self._data_dir(v))
+        return self._commit(v, lineage, kind)
+
+    @staticmethod
+    def _link_parts(src: str, dst: str) -> int:
+        """Hard-link (copy across filesystems) every parquet part file
+        of ``src`` into ``dst``; returns how many."""
+        os.makedirs(dst, exist_ok=True)
+        linked = 0
+        for fn in os.listdir(src):
+            if not (fn.startswith("part-") and fn.endswith(".parquet")):
+                continue
+            try:
+                os.link(os.path.join(src, fn), os.path.join(dst, fn))
+            except OSError:
+                shutil.copy2(os.path.join(src, fn), os.path.join(dst, fn))
+            linked += 1
+        return linked
+
+    def _maybe_compact(self, base: dict, deltas: list[dict]) -> None:
+        """Compaction trigger after a delta commit (``deltas`` includes
+        the new one): row ratio, snapshot count, or broadcast gate."""
+        delta_rows = sum(ln.get("rows", 0) for ln in deltas)
+        if (
+            delta_rows > self.compact_ratio * max(base.get("rows", 0), 1)
+            or len(deltas) > self.MAX_DELTA_SNAPSHOTS
+            # keep the MOR read on the broadcast anti-join path: once
+            # accumulated delta keys outgrow the broadcast gate, every
+            # read would shuffle the full base 2-3x per round (ADVICE r5)
+            or delta_rows > self.BROADCAST_DELTA_KEYS_MAX
+        ):
+            self.compact()
 
     def merge(self, updates: DataFrame, lineage: dict | None = None) -> int:
         """Upsert full rows keyed by url_hash (WHEN MATCHED -> replace,
@@ -326,22 +351,13 @@ class ParquetFrontierStore(FrontierStore):
         shadowing happens at read (MOR). ``updates`` must carry
         complete frontier-schema rows; the merge itself is mechanical
         so update logic stays in the operators."""
-        base_v, deltas = self._layout()
-        cols = self.spark.read.parquet(self._data_dir(base_v)).columns
+        base_ln, deltas = self._layout()
+        cols = self.spark.read.parquet(self._data_dir(base_ln["version"])).columns
         updates = self.with_bucket(updates.drop("host_bucket")).select(*cols)
-        v = self._write_snapshot(updates, dict(lineage or {"op": "merge"}), kind="delta")
-        base_rows = self.lineage(base_v).get("rows", 0)
-        delta_rows = sum(self.lineage(dv).get("rows", 0) for dv in deltas)
-        delta_rows += self.lineage(v).get("rows", 0)
-        if (
-            delta_rows > self.compact_ratio * max(base_rows, 1)
-            or len(deltas) + 1 > self.max_delta_snapshots
-            # keep the MOR read on the broadcast anti-join path: once
-            # accumulated delta keys outgrow the broadcast gate, every
-            # read would shuffle the full base 2-3x per round (ADVICE r5)
-            or delta_rows > self.BROADCAST_DELTA_KEYS_MAX
-        ):
-            self.compact()
+        new = self._write_snapshot(
+            updates, dict(lineage or {"op": "merge"}), kind="delta"
+        )
+        self._maybe_compact(base_ln, deltas + [new])
         return self.current_version()
 
     def merge_linked(self, data_dir: str, lineage: dict | None = None) -> int:
@@ -353,16 +369,14 @@ class ParquetFrontierStore(FrontierStore):
         Requirements: the directory's schema must carry every store
         column including a ``host_bucket`` computed with THIS store's
         bucket count (callers use :meth:`with_bucket` before writing
-        the artifact). Falls back with ValueError otherwise so callers
-        can use the regular :meth:`merge`.
+        the artifact). Raises ValueError otherwise; :meth:`merge`
+        rebuckets.
 
         Scale note: this is the difference between writing the round's
         updates once vs twice; at 10^10 rows the delta write is pure
         I/O, so halving it halves the updatedb tail."""
-        import shutil
-
-        base_v, deltas = self._layout()
-        cols = set(self.spark.read.parquet(self._data_dir(base_v)).columns)
+        base_ln, deltas = self._layout()
+        cols = set(self.spark.read.parquet(self._data_dir(base_ln["version"])).columns)
         src = self.spark.read.parquet(data_dir)
         if not cols <= set(src.columns):
             missing = cols - set(src.columns)
@@ -387,11 +401,7 @@ class ParquetFrontierStore(FrontierStore):
             mismatch = (
                 src.filter(F.col("host").isNotNull())
                 .limit(1024)
-                .withColumn(
-                    "_expected",
-                    F.pmod(F.xxhash64("host"), F.lit(self.host_buckets)).cast("int"),
-                )
-                .filter(F.col("host_bucket") != F.col("_expected"))
+                .filter(F.col("host_bucket") != self._bucket(F.col("host")))
                 .limit(1)
                 .count()
             )
@@ -402,36 +412,12 @@ class ParquetFrontierStore(FrontierStore):
                     "use merge() to rebucket"
                 )
         v = self.current_version() + 1
-        out = self._data_dir(v)
-        os.makedirs(out, exist_ok=True)
-        linked = 0
-        for fn in os.listdir(data_dir):
-            if not (fn.startswith("part-") and fn.endswith(".parquet")):
-                continue
-            dst = os.path.join(out, fn)
-            try:
-                os.link(os.path.join(data_dir, fn), dst)
-            except OSError:
-                shutil.copy2(os.path.join(data_dir, fn), dst)
-            linked += 1
-        if not linked:
+        if not self._link_parts(data_dir, self._data_dir(v)):
             raise ValueError(f"merge_linked: no part files in {data_dir}")
-        rows = self.spark.read.parquet(out).count()  # footer-only
         meta = dict(lineage or {"op": "merge"})
-        meta["version"] = v
-        meta["kind"] = "delta"
-        meta["rows"] = rows
         meta["linked_from"] = data_dir
-        self._commit_version(v, meta)
-        base_rows = self.lineage(base_v).get("rows", 0)
-        delta_rows = sum(self.lineage(dv).get("rows", 0) for dv in deltas) + rows
-        if (
-            delta_rows > self.compact_ratio * max(base_rows, 1)
-            or len(deltas) + 1 > self.max_delta_snapshots
-            # broadcast-path guard — see merge()
-            or delta_rows > self.BROADCAST_DELTA_KEYS_MAX
-        ):
-            self.compact()
+        new = self._commit(v, meta, kind="delta")
+        self._maybe_compact(base_ln, deltas + [new])
         return self.current_version()
 
     def stamp_bucketing(self, data_dir: str) -> None:
@@ -447,10 +433,9 @@ class ParquetFrontierStore(FrontierStore):
         O(deletes), the rows vanish at read and physically at the next
         compaction. ``keys`` must have url_hash; pass host too when
         available so tombstones land in the SAME bucket as the live
-        rows they kill — a future host_bucket-pruned MOR read would
-        otherwise miss them and resurrect deleted rows (today read()
-        scans all buckets, so the url_hash fallback is merely
-        non-colocated, not wrong).
+        rows they kill — bucket-scoped resolution (read_host,
+        incremental compact) can then stay in one bucket; a host-less
+        tombstone forces those back to resolving every bucket.
 
         URL-seen interplay: the Bloom backend cannot unset bits, so a
         deleted URL still probes maybe_seen=True — which routes it to
@@ -460,29 +445,24 @@ class ParquetFrontierStore(FrontierStore):
         (``store/cuckoo.py``, cfg.urlseen_backend="cuckoo") supports
         true deletion — call its ``delete_round`` with the same keys
         so the pre-screen's selectivity recovers too."""
-        base_v, _ = self._layout()
-        schema = self.spark.read.parquet(self._data_dir(base_v)).schema
+        base_ln, _ = self._layout()
+        schema = self.spark.read.parquet(self._data_dir(base_ln["version"])).schema
         has_host = "host" in keys.columns
         tomb = keys.select("url_hash", *(["host"] if has_host else []))
         for field in schema.fields:
             if field.name in ("url_hash", "host_bucket") or field.name in tomb.columns:
                 continue
             tomb = tomb.withColumn(field.name, F.lit(None).cast(field.dataType))
-        if has_host:
-            # bucket identically to live rows (with_bucket) so a
-            # bucket-pruned read sees tombstone and victim together
-            tomb = self.with_bucket(tomb)
-        else:
-            # no host available: spread by key (correct for full scans
-            # only — see docstring)
-            tomb = tomb.withColumn(
-                "host_bucket",
-                F.pmod(F.xxhash64("url_hash"), F.lit(self.host_buckets)).cast("int"),
-            )
+        # with host: bucket identically to live rows (with_bucket) so a
+        # bucket-pruned read sees tombstone and victim together; without
+        # one, spread by key (correct for full scans only — see above)
+        tomb = tomb.withColumn(
+            "host_bucket", self._bucket(F.col("host" if has_host else "url_hash"))
+        )
         tomb = tomb.withColumn("_tombstone", F.lit(True))
         return self._write_snapshot(
             tomb, dict(lineage or {"op": "delete"}), kind="delta"
-        )
+        )["version"]
 
     def compact(self, lineage: dict | None = None) -> int:
         """Materialize the MOR view as a new base snapshot (Iceberg's
@@ -497,41 +477,24 @@ class ParquetFrontierStore(FrontierStore):
         the periodic compaction spike shrinks with update locality
         instead of scaling with the table. Falls back to the full
         rewrite when every bucket is touched."""
-        import shutil
-
-        base_v, deltas = self._layout()
+        base_ln, deltas = self._layout()
         if not deltas:
             return self.current_version()
         meta = dict(lineage or {"op": "compact"})
+        dl = self._delta_union(deltas)
+        base = self._read_base(base_ln)
+        if self._has_hostless_tombstone(dl):
+            return self._write_snapshot(
+                self._resolve(base, dl, deltas), meta, kind="base"
+            )["version"]
         # touched buckets = buckets present in any delta (linked deltas
         # carry host_bucket as a data column; partitioned ones as a
         # partition column — both read back as a column)
-        dl = None
-        for dv in deltas:
-            d = self.spark.read.parquet(self._data_dir(dv)).withColumn(
-                "_delta_v", F.lit(dv)
-            )
-            if "_tombstone" not in d.columns:
-                d = d.withColumn("_tombstone", F.lit(False))
-            dl = d if dl is None else dl.unionByName(d)
-        # a host-less tombstone buckets by url_hash, NOT by its
-        # victim's host bucket — bucket-scoped resolution would then
-        # miss the victim and resurrect it. Those deltas force the
-        # full rewrite (delete() with host is colocated and safe).
-        stray_tombs = (
-            dl.filter(F.col("_tombstone") & F.col("host").isNull()).limit(1).count()
-            > 0
-        )
-        if stray_tombs:
-            return self._write_snapshot(self.read(), meta, kind="base")
         touched = sorted(
             r["host_bucket"]
             for r in dl.select("host_bucket").distinct().collect()
         )
-        base_dir = self._data_dir(base_v)
-        base = self.spark.read.parquet(base_dir)
-        if "_tombstone" in base.columns:
-            base = base.filter(~F.col("_tombstone")).drop("_tombstone")
+        base_dir = self._data_dir(base_ln["version"])
         # derive untouched buckets from the base directory listing, not
         # range(host_buckets): the listing is ground truth for what the
         # base actually holds, so even a bucket-count drift that slipped
@@ -546,48 +509,18 @@ class ParquetFrontierStore(FrontierStore):
         # base scan). When EVERY bucket is touched this is the full
         # rewrite — still resolved from the dl union built above (one
         # delta read + one window), never a second self.read() pass.
-        win = Window.partitionBy("url_hash").orderBy(F.desc("_delta_v"))
-        latest = (
-            dl.withColumn("_rn", F.row_number().over(win))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_delta_v")
-        )
-        tb = base if not untouched else base.filter(F.col("host_bucket").isin(touched))
-        delta_keys = latest.select("url_hash")
-        if self._delta_rows(deltas) <= self.BROADCAST_DELTA_KEYS_MAX:
-            delta_keys = F.broadcast(delta_keys)
-        kept = tb.join(delta_keys, on="url_hash", how="left_anti")
-        live = latest.filter(~F.col("_tombstone")).drop("_tombstone")
-        resolved = kept.unionByName(live.select(*tb.columns))
+        if untouched:
+            base = base.filter(F.col("host_bucket").isin(touched))
         v = self.current_version() + 1
         out = self._data_dir(v)
-        (
-            resolved.repartition(F.col("host_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("host_bucket")
-            .parquet(out)
-        )
+        self._write_buckets(self._resolve(base, dl, deltas), out)
         # link every untouched bucket's partition dir from the old base
         for b in untouched:
             src = os.path.join(base_dir, f"host_bucket={b}")
-            if not os.path.isdir(src):
-                continue  # bucket empty in base
-            dst = os.path.join(out, f"host_bucket={b}")
-            os.makedirs(dst, exist_ok=True)
-            for fn in os.listdir(src):
-                if not fn.endswith(".parquet"):
-                    continue
-                try:
-                    os.link(os.path.join(src, fn), os.path.join(dst, fn))
-                except OSError:
-                    shutil.copy2(os.path.join(src, fn), os.path.join(dst, fn))
-        rows = self.spark.read.parquet(out).count()
-        meta["version"] = v
-        meta["kind"] = "base"
-        meta["rows"] = rows
+            if os.path.isdir(src):  # else: bucket empty in base
+                self._link_parts(src, os.path.join(out, f"host_bucket={b}"))
         meta["compacted_buckets"] = len(touched)
-        self._commit_version(v, meta)
-        return v
+        return self._commit(v, meta, kind="base")["version"]
 
 
 class IcebergFrontierStore(FrontierStore):
