@@ -75,6 +75,30 @@ def test_pair_scores_by_id_tolerates_identical_duplicate_ids(spark):
 
 
 @pytest.mark.parametrize(
+    "rows",
+    [
+        [(1, [1.0, 0.0]), (2, None)],  # null embedding
+        [(1, [1.0, 0.0]), (2, [1.0])],  # ragged embeddings
+        [(1, [1.0, 0.0]), (2, [1.0, None])],  # null element
+        [(1, None), (2, None)],  # every embedding null
+    ],
+    ids=["null", "ragged", "null-element", "all-null"],
+)
+def test_pair_scores_by_id_declines_on_non_matrix_embeddings(spark, rows):
+    # the broadcast matrix cannot hold these rows: the core must decline
+    # (return None) so the join form scores them, not raise
+    vecs = (
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        .select(
+            "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
+        )
+        .coalesce(1)
+    )
+    pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    assert ann._pair_scores_by_id(vecs, pairs) is None
+
+
+@pytest.mark.parametrize(
     "edges,expect",
     [
         # proper star forest: children -> smaller roots, disjoint sides

@@ -68,6 +68,12 @@ def test_cli_crawl_readdb_index_roundtrip(spark, tmp_path, seeds_file, capsys):
     assert res["indexed_docs"] > 0
     assert spark.read.parquet(out).count() == res["indexed_docs"]
 
+    # reports adopts the store's 4-bucket layout with no layout flag
+    rep = str(tmp_path / "reports")
+    assert main(["reports", "--workdir", wd, "--out", rep], spark=spark) == 0
+    res = json.loads(capsys.readouterr().out.strip())
+    assert res["report_dir"].startswith(rep) and os.path.isdir(res["report_dir"])
+
 
 def test_cli_readdb_missing_workdir_creates_nothing(spark, tmp_path):
     """A pure reader opens the store with the layout recorded on disk:
@@ -75,6 +81,15 @@ def test_cli_readdb_missing_workdir_creates_nothing(spark, tmp_path):
     wd = str(tmp_path / "absent")
     with pytest.raises(FileNotFoundError):
         main(["readdb", "--workdir", wd, "--stats"], spark=spark)
+    assert not os.path.exists(wd)
+
+
+def test_cli_reports_missing_workdir_creates_nothing(spark, tmp_path):
+    """``reports`` is a pure reader too: no store, no frontier meta,
+    URL-seen filter, rounds or report directory gets created."""
+    wd = str(tmp_path / "absent")
+    with pytest.raises(FileNotFoundError):
+        main(["reports", "--workdir", wd], spark=spark)
     assert not os.path.exists(wd)
 
 

@@ -1,0 +1,208 @@
+"""The REST ``/db`` handler serves pages from one persisted merge-on-read
+view per store version. The cached path must return exactly what
+``db_query`` returns over a fresh ``store.read()`` at the version the
+store is at, across every kind of commit (merge, delete, compact), and
+the view must be rebuilt when Spark evicts it behind the server's back.
+"""
+
+import os
+import sys
+import threading
+import time
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from warps_nutch_spark.config import make_test_config
+from warps_nutch_spark.operators.rows import complete_rows
+from warps_nutch_spark.service.client import NutchServiceClient
+from warps_nutch_spark.service.dbreader import db_query
+from warps_nutch_spark.service.master import NutchMasterServer
+from warps_nutch_spark.store.frontier import ParquetFrontierStore
+
+NOW = 1_700_000_000_000
+HOSTS = 6
+PAGES = 40
+CRAWL = "viewcrawl"
+
+# DbFilter JSON -> db_query keywords
+_KW = {
+    "startKey": "start_key",
+    "endKey": "end_key",
+    "urlFilter": "url_filter",
+    "batchId": "batch_id",
+    "fields": "fields",
+    "start": "start",
+    "limit": "limit",
+}
+
+QUERIES = [
+    {"startKey": "http://h2.test/", "endKey": "http://h2.test/~", "limit": 25},
+    {"urlFilter": "-/p/1\n+h[0-3]\\.test/", "batchId": None, "limit": 40},
+    {"start": 60, "limit": 30},
+    {"batchId": "b1", "fields": ["url", "score", "updated_batch"], "start": 3, "limit": 20},
+]
+
+
+def _rows(spark, urls, score, batch):
+    pdf = pd.DataFrame(
+        {"url": urls, "score": [float(score(i)) for i in range(len(urls))], "updated_batch": batch}
+    )
+    df = spark.createDataFrame(pdf).withColumn("score", F.col("score").cast("float"))
+    return complete_rows(df, make_test_config(), NOW)
+
+
+def _urls(hosts, pages):
+    return [f"http://h{h}.test/p/{p}" for h in hosts for p in pages]
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _expected(store, q) -> list[dict]:
+    kw = {_KW[k]: v for k, v in q.items()}
+    return [r.asDict(recursive=True) for r in db_query(store.read(), **kw).collect()]
+
+
+def _check_pages(client, store):
+    for q in QUERIES:
+        got = client.db_query(crawlId=CRAWL, **q)["values"]
+        assert got == _expected(store, q), q
+        assert got, f"vacuous page for {q}"
+
+
+@pytest.fixture()
+def served(spark, tmp_path):
+    base = str(tmp_path)
+    store = ParquetFrontierStore(spark, os.path.join(base, CRAWL, "frontier"), 4)
+    store.init(
+        _rows(spark, _urls(range(HOSTS), range(PAGES)), lambda i: i % 7, "b0"),
+        {"op": "init"},
+    )
+    store.merge(
+        _rows(spark, _urls(range(HOSTS), range(0, PAGES, 3)), lambda i: 10 + i, "b1"),
+        {"op": "updatedb", "batch_id": "b1"},
+    )
+    before = _persisted(spark)
+    srv = NutchMasterServer(spark, base)
+    try:
+        yield spark, srv, NutchServiceClient(srv.endpoint), store, before
+    finally:
+        srv.close()
+
+
+def test_cached_pages_equal_fresh_read_across_commits(served):
+    spark, srv, client, store, before = served
+    _check_pages(client, store)
+    views = _persisted(spark) - before
+    assert len(views) == 1
+    assert srv._views[CRAWL][1] == store.current_version()
+
+    # a merge that re-marks and re-scores rows, and adds new ones
+    store.merge(
+        _rows(
+            spark,
+            _urls(range(HOSTS), range(1, PAGES + 5, 4)),
+            lambda i: 100 - i,
+            "b1",
+        ),
+        {"op": "updatedb", "batch_id": "b2"},
+    )
+    _check_pages(client, store)
+    # a delete whose tombstones carry the host
+    victims = store.read().filter(F.col("url").rlike(r"/p/(2|5)$"))
+    store.delete(victims.select("url_hash", "host"), {"op": "delete"})
+    _check_pages(client, store)
+    assert store.read().filter(F.col("url").rlike(r"/p/(2|5)$")).count() == 0
+    # a compaction: same rows, new base
+    store.compact()
+    assert not store.has_deltas()
+    _check_pages(client, store)
+
+    # one view at a time: each commit's view replaced the last
+    assert len(_persisted(spark) - before) == 1
+    assert srv._views[CRAWL][1] == store.current_version()
+
+
+def test_concurrent_first_queries_build_the_view_once(served, monkeypatch):
+    spark, srv, client, store, before = served
+    _check_pages(client, store)
+    store.merge(
+        _rows(spark, _urls(range(HOSTS), range(PAGES, PAGES + 3)), lambda i: i, "b1"),
+        {"op": "updatedb", "batch_id": "b3"},
+    )
+    expected = [_expected(store, q) for q in QUERIES]
+
+    reads = []
+    read = ParquetFrontierStore.read
+
+    def counted(self):
+        reads.append(self.current_version())
+        return read(self)
+
+    monkeypatch.setattr(ParquetFrontierStore, "read", counted)
+    got: dict = {}
+    errors: list = []
+    n = (os.cpu_count() or 2) + 2  # more clients than cores
+    go = threading.Barrier(n)
+
+    def ask(t: int) -> None:
+        cli = NutchServiceClient(srv.endpoint, timeout_s=120)
+        go.wait(timeout=60)
+        try:
+            got[t] = [cli.db_query(crawlId=CRAWL, **q)["values"] for q in QUERIES]
+        except Exception as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=ask, args=(t,)) for t in range(n)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors
+    assert all(got[t] == expected for t in range(n))
+    assert reads == [store.current_version()]
+    assert len(_persisted(spark) - before) == 1
+
+
+def test_cached_page_is_one_spark_job(served):
+    spark, srv, client, store, _ = served
+    sc = spark.sparkContext
+    for q in QUERIES:
+        client.db_query(crawlId=CRAWL, **q)  # build the view
+    group = f"db-view-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "cached /db pages")
+    try:
+        for q in QUERIES:
+            srv._db_query(dict(q, crawlId=CRAWL))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == len(QUERIES)
+
+
+def test_evicted_view_is_rebuilt_and_close_releases_it(served):
+    spark, srv, client, store, before = served
+    _check_pages(client, store)
+    assert len(_persisted(spark) - before) == 1
+    view = srv._views[CRAWL][2]
+
+    # the cache manager matches by plan: clearCache() drops the view
+    # without the server knowing, and the next query must rebuild it
+    spark.catalog.clearCache()
+    assert not view.storageLevel.useMemory
+    _check_pages(client, store)
+    level = srv._views[CRAWL][2].storageLevel
+    assert level.useMemory or level.useDisk
+    assert len(_persisted(spark) - before) == 1
+
+    srv.close()
+    assert not srv._views
+    assert not (_persisted(spark) - before)

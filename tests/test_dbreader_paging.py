@@ -50,3 +50,22 @@ def test_start_quirk_and_bounds(spark):
     # bad key -> ValueError (DbReader 'Wrong url format!')
     with pytest.raises(ValueError):
         db_query(fr, start_key="not a url", batch_id=None).collect()
+
+
+def test_deep_page_over_persisted_frontier_is_one_take_ordered(spark):
+    """A deep-``start`` page over a persisted frontier (the REST
+    server's cached view) plans as one TakeOrderedAndProject carrying
+    the offset, with no shuffle above the cached relation."""
+    fr = derived_frontier(spark, "/root/testdata/sf0.001").persist()
+    try:
+        fr.count()
+        page = db_query(fr, batch_id=None, start=120, limit=50)
+        plan = page._jdf.queryExecution().executedPlan().toString()
+        # what follows InMemoryRelation is the cached plan, built once
+        above_cache = plan.split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in above_cache
+        assert "TakeOrderedAndProject(limit=169, offset=119," in above_cache
+        assert "Exchange" not in above_cache
+        assert "Window" not in above_cache
+    finally:
+        fr.unpersist()

@@ -426,17 +426,19 @@ def cmd_resolveurls(spark, args) -> int:
 def cmd_reports(spark, args) -> int:
     """``reports`` verb (``tools/NutchMetrics.java``): emit the
     reference's operator-facing text reports (unreachable hosts,
-    redirects, fetch-time history) from the crawl workdir state."""
+    redirects, fetch-time history) from the crawl workdir state. A pure
+    reader: the store's layout comes from disk, and a workdir with no
+    store fails before anything is written."""
+    from .config import CrawlConfig
     from .metrics import NutchMetrics
-    from .plans.round import RoundDriver
+    from .plans.round import unreachable_hosts
 
     from pyspark.sql import functions as F
 
-    drv = RoundDriver(spark, args.workdir, _cfg_from_args(args), _web_params(args))
+    fr = _open_store(spark, args).read()
+    unreachable = unreachable_hosts(spark, args.workdir, CrawlConfig())
     m = NutchMetrics(args.out or os.path.join(args.workdir, "reports"))
-    unreachable = drv.unreachable_hosts()
     n_hosts = m.write_unreachable_hosts(unreachable) if unreachable is not None else 0
-    fr = drv.store.read()
     if args.batch:
         # per-batch report = only rows last updated by that batch
         fr = fr.filter(F.col("updated_batch") == args.batch)
@@ -621,8 +623,6 @@ def make_parser() -> argparse.ArgumentParser:
     rp.add_argument("--workdir", required=True)
     rp.add_argument("--out", default="")
     rp.add_argument("--batch", default="")
-    rp.add_argument("--web", default="8,120,42")
-    rp.add_argument("--host-buckets", dest="host_buckets", type=int, default=8)
 
     sg = sub.add_parser("seedgen", help="expand a {{{min,max}}} url template")
     sg.add_argument("--format", required=True)

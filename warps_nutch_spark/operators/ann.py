@@ -288,9 +288,10 @@ def _pair_scores_by_id(vecs, pairs, id_col="vec_id", emb_col="embedding"):
     dot/norm folds run dimension-by-dimension in float64, bit-identical
     to the JVM expression fold. Returns (id_a, id_b, _dot, _na, _nb)
     or None (caller falls back to the join form) when the table is not
-    batch-bounded or IDs are not integer-typed. Duplicate ids in
-    ``vecs`` are tolerated when they carry the same vector (first
-    occurrence wins)."""
+    batch-bounded, IDs are not integer-typed, or the embeddings do not
+    form one dense matrix (a null or ragged embedding, a null element).
+    Duplicate ids in ``vecs`` are tolerated when they carry the same
+    vector (first occurrence wins)."""
     import numpy as np
 
     if not scan_is_narrow(vecs):
@@ -302,7 +303,14 @@ def _pair_scores_by_id(vecs, pairs, id_col="vec_id", emb_col="embedding"):
     if not rows:
         return None
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    M = np.array([r[1] for r in rows], dtype=np.float32)
+    try:
+        M = np.array([r[1] for r in rows], dtype=np.float32)
+    except ValueError:  # ragged, or a null among non-null embeddings
+        return None
+    # all-null embeddings give a 1-D array; a null element reads as NaN
+    # here but as null in the JVM fold, so the join form scores both
+    if M.ndim != 2 or np.isnan(M).any():
+        return None
     order = np.argsort(ids, kind="stable")
     ids, M = ids[order], M[order]
     keep = np.concatenate([[True], np.diff(ids) != 0])

@@ -59,6 +59,31 @@ def host_eviction_cond(cfg: CrawlConfig):
     return cond
 
 
+def host_state_versions(workdir: str) -> list[str]:
+    """Committed host-state versions under ``workdir`` (dir carries the
+    batch id so a resumed fetch stage can tell its update already
+    landed; only dirs with _SUCCESS count, so a mid-write kill is
+    invisible)."""
+    base = os.path.join(workdir, "hosts")
+    if not os.path.isdir(base):
+        return []
+    return sorted(
+        d
+        for d in os.listdir(base)
+        if d.startswith("v") and os.path.exists(os.path.join(base, d, "_SUCCESS"))
+    )
+
+
+def unreachable_hosts(spark: SparkSession, workdir: str, cfg: CrawlConfig) -> DataFrame | None:
+    """Detached hosts in the latest committed host state (see
+    :func:`host_eviction_cond`), or None before the first fetch."""
+    versions = host_state_versions(workdir)
+    if not versions:
+        return None
+    hosts = spark.read.parquet(os.path.join(workdir, "hosts", versions[-1]))
+    return hosts.filter(host_eviction_cond(cfg)).select("host")
+
+
 @contextmanager
 def python_stage_parallelism(spark: SparkSession):
     """AQE coalesces shuffles by BYTES, which serializes Python-heavy
@@ -213,44 +238,23 @@ class RoundDriver:
         )
 
     # ---- unreachable hosts ------------------------------------------
-    def _host_versions(self) -> list[str]:
-        """Committed host-state versions (dir carries the batch id so a
-        resumed fetch stage can tell its update already landed; only
-        dirs with _SUCCESS count, so a mid-write kill is invisible)."""
-        base = os.path.join(self.workdir, "hosts")
-        if not os.path.isdir(base):
-            return []
-        return sorted(
-            d
-            for d in os.listdir(base)
-            if d.startswith("v") and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        )
-
     def _hosts_path(self) -> str:
         base = os.path.join(self.workdir, "hosts")
-        versions = self._host_versions()
+        versions = host_state_versions(self.workdir)
         return os.path.join(base, versions[-1]) if versions else os.path.join(base, "v0000")
 
     def _hosts_batch_done(self, batch_id: str) -> bool:
-        return any(v.endswith(f"-{batch_id}") for v in self._host_versions())
+        return any(v.endswith(f"-{batch_id}") for v in host_state_versions(self.workdir))
 
     def _next_hosts_path(self, batch_id: str) -> str:
         base = os.path.join(self.workdir, "hosts")
         os.makedirs(base, exist_ok=True)
-        versions = self._host_versions()
+        versions = host_state_versions(self.workdir)
         n = int(versions[-1][1:5]) + 1 if versions else 0
         return os.path.join(base, f"v{n:04d}-{batch_id}")
 
     def unreachable_hosts(self) -> DataFrame | None:
-        """Detached hosts: unreachable (>= max failures,
-        TasksMonitor.java:343-366) plus, when slow-queue eviction is
-        on, hosts whose avg fetch duration exceeds the threshold (Q5,
-        FetchMonitor.java:437-460)."""
-        p = self._hosts_path()
-        if not os.path.exists(p):
-            return None
-        hosts = self.spark.read.parquet(p)
-        return hosts.filter(host_eviction_cond(self.cfg)).select("host")
+        return unreachable_hosts(self.spark, self.workdir, self.cfg)
 
     def _update_host_failures(self, fetch_results: DataFrame, batch_id: str) -> None:
         if self._hosts_batch_done(batch_id):

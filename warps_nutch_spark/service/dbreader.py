@@ -8,10 +8,14 @@ UPDATEDB-mark batch filter, field projection, and start/limit paging.
 Spark shape: one declarative plan — the reversed key is a codegen
 expression (``reverse_url_col``), the range predicate and regex chain
 are Catalyst filters (pushed to the scan where the source allows), and
-paging is a global ``orderBy(key).offset().limit()`` (CollectLimit with
-offset — no single-partition window). The reference iterates the whole
-range driver-side row by row; here only the requested page leaves the
-executors.
+paging is a global ``orderBy(key).offset().limit()``, which Spark plans
+as one ``TakeOrderedAndProject(limit=offset+limit, offset=offset)``:
+each partition keeps its first ``offset + limit`` rows by key and the
+driver merges them and drops the offset (no shuffle, no single-partition
+window). The reference iterates the whole range driver-side row by row;
+here only the top rows of each partition leave the executors. Over the
+REST server's persisted frontier view (``service/master.py``) a page is
+one Spark job: ``InMemoryTableScan`` → filter → ``TakeOrderedAndProject``.
 
 Reference quirks mirrored exactly (so a reference user sees identical
 pages):

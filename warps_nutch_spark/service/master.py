@@ -22,10 +22,14 @@ classes under ``service/resources/``:
 
 Transport is stdlib ThreadingHTTPServer (the proven in-process live
 test pattern from the ES-bulk / fetch-server sinks); every data-plane
-call delegates to the shared SparkSession. The server holds no row
-data — jobs stream through Spark, the db endpoint returns one bounded
-page — so its footprint is O(jobs + configs) exactly like the
-reference's in-memory managers.
+call delegates to the shared SparkSession. Jobs stream through Spark
+and the db endpoint returns one bounded page. The only row data the
+server holds is one cached frontier view per ``crawlId``: the
+merge-on-read (MOR) resolution of the store at one version, persisted
+in Spark's block cache (the analog of the HBase block cache under the
+reference's DbReader scans). It is released when the store's version
+changes and on ``close()``. Beyond that the footprint is O(jobs +
+configs), like the reference's in-memory managers.
 """
 
 from __future__ import annotations
@@ -74,6 +78,9 @@ class NutchMasterServer:
         self.start_time_ms = int(_dt.datetime.now().timestamp() * 1000)
         self._stop_delay_s = stop_delay_s
         self._stopped = threading.Event()
+        # crawlId -> (store, resolved version, persisted MOR view)
+        self._views: dict[str, tuple] = {}
+        self._views_lock = threading.Lock()
         outer = self
 
         class _Handler(BaseHTTPRequestHandler):
@@ -143,6 +150,10 @@ class NutchMasterServer:
             self._stopped.set()
             self._srv.shutdown()
             self._srv.server_close()
+        with self._views_lock:
+            for _, _, view in self._views.values():
+                view.unpersist()
+            self._views.clear()
 
     # -- routing ----------------------------------------------------------
     def _dispatch(self, method, parts, params, read_body):
@@ -229,20 +240,11 @@ class NutchMasterServer:
 
     # -- db (DbResource.runQuery) ------------------------------------------
     def _db_query(self, flt: dict) -> dict:
-        from ..store.frontier import ParquetFrontierStore
-
-        crawl_id = flt.get("crawlId") or "default"
-        try:
-            # pure reader: adopt the store's recorded bucket layout
-            store = ParquetFrontierStore.open(
-                self.spark, os.path.join(self.base_dir, crawl_id, "frontier")
-            )
-        except FileNotFoundError:
-            return {"values": []}
-        if store.current_version() < 0:
+        view = self._frontier_view(flt.get("crawlId") or "default")
+        if view is None:
             return {"values": []}
         page = db_query(
-            store.read(),
+            view,
             start_key=flt.get("startKey"),
             end_key=flt.get("endKey"),
             url_filter=flt.get("urlFilter"),
@@ -253,6 +255,62 @@ class NutchMasterServer:
             keys_reversed=bool(flt.get("isKeysReversed", False)),
         )
         return {"values": [r.asDict(recursive=True) for r in page.collect()]}
+
+    @staticmethod
+    def _is_live(entry: tuple) -> bool:
+        """The cached view still serves its store's current version.
+        Spark's cache manager matches cached data by plan, so
+        ``clearCache()`` or an ``unpersist()`` of an equal plan (a
+        round's released frontier at the same version) evicts the view
+        behind the server's back; its storage level then reads NONE."""
+        store, version, view = entry
+        level = view.storageLevel
+        return store.current_version() == version and (level.useMemory or level.useDisk)
+
+    def _frontier_view(self, crawl_id: str):
+        """The crawl's frontier, MOR-resolved and persisted once per
+        store version, or None when the crawl has no store yet. A hit
+        reads only ``_VERSION``; a miss (new version, evicted view)
+        builds the view under the lock, so concurrent first queries
+        after a commit resolve it once, and releases the old one.
+
+        The view's lineage reads the snapshot files of its version, so
+        snapshot expiry must pin the version a cached view holds."""
+        from ..store.frontier import ParquetFrontierStore
+
+        entry = self._views.get(crawl_id)
+        if entry is not None and self._is_live(entry):
+            return entry[2]
+        with self._views_lock:
+            entry = self._views.get(crawl_id)
+            if entry is not None:
+                if self._is_live(entry):
+                    return entry[2]
+                del self._views[crawl_id]
+                entry[2].unpersist()
+            try:
+                # pure reader: adopt the store's recorded bucket layout
+                store = ParquetFrontierStore.open(
+                    self.spark, os.path.join(self.base_dir, crawl_id, "frontier")
+                )
+            except FileNotFoundError:
+                return None
+            # tag the view with the version read() resolved: unchanged
+            # across the call means no commit landed inside it
+            version = store.current_version()
+            if version < 0:
+                return None
+            while True:
+                view = store.read()
+                before, version = version, store.current_version()
+                if version == before:
+                    break
+            if self._stopped.is_set():  # close() already released the cache
+                return view
+            view = view.persist()
+            view.count()
+            self._views[crawl_id] = (store, version, view)
+            return view
 
     # -- seed (SeedResource.createSeedFile) --------------------------------
     def _create_seed(self, seed_list: dict) -> str:
