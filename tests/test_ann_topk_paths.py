@@ -42,6 +42,21 @@ def test_ivf_topk_batch_fast_path_equals_join_path(spark, monkeypatch):
     assert fast, "vacuous: no candidates scored"
 
 
+def test_cosine_verify_double_embeddings_equal_join_path(spark, monkeypatch):
+    # the broadcast matrix is float32: cutting array<double> to it moves
+    # this cosine from 0.99503719021 to 0.99503719006, across the
+    # threshold, so the batch path must score doubles as the join form
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.1])], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    batch = ann.cosine_verify_pairs(vecs, pairs, 0.99503719015).collect()
+    monkeypatch.setattr(ann, "_pair_scores_by_id", lambda *a, **k: None)
+    join = ann.cosine_verify_pairs(vecs, pairs, 0.99503719015).collect()
+    assert batch == join
+    assert len(join) == 1, "vacuous: the pair fell below the threshold"
+
+
 def test_pair_scores_by_id_declines_on_conflicting_duplicate_ids(spark):
     # same id, different vector: the broadcast-matrix closure cannot
     # represent both — the core must decline (return None), not pick one

@@ -89,6 +89,18 @@ def _parsed_df(spark, rows):
     return spark.createDataFrame(rows, schema=schema)
 
 
+def _fetchlist(frontier, parsed):
+    """The frontier rows the parsed pages were generated from, marked
+    as the generate stage marks them."""
+    return frontier.join(parsed.select("url_hash"), on="url_hash", how="left_semi").withColumn(
+        "generated_batch", F.lit("b1")
+    )
+
+
+def _updatedb(frontier, parsed, cfg):
+    return upd_op.updatedb(frontier, _fetchlist(frontier, parsed), parsed, cfg, NOW, "b1")
+
+
 def test_opic_distribution_positional_and_cash(spark):
     cfg = make_test_config()
     # page A (cash 12) links to 3 urls: positional scores 3,2,1 + 12/3=4 each
@@ -135,7 +147,8 @@ def test_updatedb_new_rows_and_existing_update(spark):
             )
         ],
     )
-    merged, counters = upd_op.updatedb(frontier, parsed, cfg, NOW, "b1")
+    merged = _updatedb(frontier, parsed, cfg)
+    counters = upd_op.updatedb_counters(merged, "b1")
     rows = {r["url"]: r for r in merged.collect()}
     # source page: cash reset, fetched schedule applied, marks cleared
     src = rows["http://a.test/p"]
@@ -171,7 +184,7 @@ def test_updatedb_from_seed_priority(spark):
         spark,
         [_parsed_row("http://s.test/seed", ["http://s.test/child"], is_seed=True)],
     )
-    merged, _ = upd_op.updatedb(frontier, parsed, cfg, NOW, "b1")
+    merged = _updatedb(frontier, parsed, cfg)
     child = [r for r in merged.collect() if r["url"].endswith("child")][0]
     assert child["priority"] == cfg.priority_from_seed
 
@@ -190,7 +203,7 @@ def test_updatedb_retry_and_gone(spark):
         _parsed_row("http://g.test/b", [], status=CrawlStatus.GONE),
     ]
     rows[0]["retries_since_fetch"] = 0
-    merged, _ = upd_op.updatedb(frontier, parsed := _parsed_df(spark, rows), cfg, NOW, "b1")
+    merged = _updatedb(frontier, _parsed_df(spark, rows), cfg)
     out = {r["url"]: r for r in merged.collect()}
     a = out["http://r.test/a"]
     assert a["status"] == CrawlStatus.RETRY and a["retries_since_fetch"] == 1
@@ -201,7 +214,7 @@ def test_updatedb_retry_and_gone(spark):
     # retries exhausted -> GONE
     rows2 = [_parsed_row("http://r.test/a", [], status=CrawlStatus.RETRY)]
     rows2[0]["retries_since_fetch"] = 2
-    merged2, _ = upd_op.updatedb(frontier, _parsed_df(spark, rows2), cfg, NOW, "b1")
+    merged2 = _updatedb(frontier, _parsed_df(spark, rows2), cfg)
     a2 = [r for r in merged2.collect() if r["url"] == "http://r.test/a"][0]
     assert a2["status"] == CrawlStatus.GONE
 
@@ -247,7 +260,7 @@ def test_updatedb_dedup_no_duplicate_urlhash(spark):
             _parsed_row("http://a.test/q", ["http://a.test/p"]),
         ],
     )
-    merged, _ = upd_op.updatedb(frontier, parsed, cfg, NOW, "b1")
+    merged = _updatedb(frontier, parsed, cfg)
     pdf = merged.toPandas()
     assert pdf.url_hash.nunique() == len(pdf) == 2
     # both fetched rows got the inlink bonus on top of the fetch update
@@ -287,7 +300,11 @@ def test_inlinks_state_and_repr_url(spark):
             ),
         ],
     )
-    merged, _ = upd_op.updatedb(frontier, parsed, cfg, NOW, "b1")
+    # the redirect row's page is not in the frontier, so not in the
+    # fetchlist either: it is still merged once
+    merged = _updatedb(frontier, parsed, cfg)
+    pdf = merged.toPandas()
+    assert pdf.url_hash.nunique() == len(pdf) == 6
     rows = {r["url"]: r for r in merged.collect()}
     known = rows["http://a.test/known"]
     inl = [i["url"] for i in known["inlinks"]]
@@ -324,3 +341,116 @@ def test_retry_row_cash_reset_on_refetch(spark):
     assert out["cash"] == 0.0
     assert out["status"] == CrawlStatus.RETRY
     assert out["retries_since_fetch"] == 1
+
+
+def test_budget_dropped_rows_keep_mark_and_fold_inlinks(spark):
+    """Fetchlist rows the fetch budget dropped (no parsed row) keep
+    their GENERATE_MARK; one that receives an inlink from a fetched
+    page also gets its score and cash folded and is counted."""
+    cfg = make_test_config()
+    frontier = complete_rows(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "url": ["http://a.test/p", "http://a.test/linked", "http://a.test/idle"],
+                    "score": [1.0, 5.0, 3.0],
+                    "cash": [12.0, 2.0, 4.0],
+                    "distance": [0, 4, 2],
+                }
+            )
+        ),
+        cfg,
+        NOW - 5000,
+    )
+    # the generate stage marks the fetchlist rows; the frontier rows
+    # carry no mark until updatedb merges them
+    fetchlist = frontier.withColumn("generated_batch", F.lit("b1")).withColumn(
+        "batch_id", F.lit("b1")
+    )
+    parsed = _parsed_df(
+        spark, [_parsed_row("http://a.test/p", ["http://a.test/linked"], cash=12.0)]
+    )
+    merged = upd_op.updatedb(frontier, fetchlist, parsed, cfg, NOW, "b1")
+    rows = {r["url"]: r for r in merged.collect()}
+    assert len(rows) == merged.count() == 3
+    assert rows["http://a.test/p"]["generated_batch"] is None
+    linked = rows["http://a.test/linked"]
+    assert linked["generated_batch"] == "b1" and linked["batch_id"] == "b1"
+    # one outlink: positional 1 + cash 12/1
+    assert linked["score"] == pytest.approx(5.0 + 13)
+    assert linked["cash"] == pytest.approx(2.0 + 13)
+    assert linked["distance"] == 1
+    assert linked["updated_batch"] == "b1"
+    idle = rows["http://a.test/idle"]
+    want = fetchlist.filter(F.col("url") == "http://a.test/idle").collect()[0]
+    assert idle.asDict() == want.asDict()
+    counted = {r["counter"]: r["value"] for r in upd_op.updatedb_counters(merged, "b1").collect()}
+    assert sum(counted.values()) == 2
+
+
+def _plan_leaves(plan):
+    """Leaf operators of an executed physical plan, descending into
+    adaptive query stages, cached relations and subqueries."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    elif name == "InMemoryTableScanExec":
+        return [plan] + _plan_leaves(plan.relation().cachedPlan())
+    else:
+        seqs = [plan.children(), plan.subqueries()]
+        kids = [s.apply(i) for s in seqs for i in range(s.size())]
+    if not kids:
+        return [plan]
+    return [leaf for k in kids for leaf in _plan_leaves(k)]
+
+
+def test_merge_rows_scan_the_frontier_once_uncached(spark, workdir):
+    """The merge rows are one keyed fold over one frontier lookup: the
+    executed plan reads the frontier's files once and caches nothing."""
+    import os
+
+    from warps_nutch_spark.store.urlseen import BloomUrlSeen
+
+    cfg = make_test_config()
+    path = os.path.join(workdir, "frontier")
+    complete_rows(
+        spark.createDataFrame(
+            pd.DataFrame({"url": ["http://a.test/p", "http://a.test/known", "http://a.test/d"]})
+        ),
+        cfg,
+        NOW,
+    ).write.parquet(path)
+    frontier = spark.read.parquet(path)
+    fl_path = os.path.join(workdir, "fetchlist")
+    frontier.filter(F.col("url") != "http://a.test/known").withColumn(
+        "generated_batch", F.lit("b1")
+    ).write.parquet(fl_path)
+    parsed_path = os.path.join(workdir, "parsed")
+    _parsed_df(
+        spark, [_parsed_row("http://a.test/p", ["http://a.test/known", "http://a.test/new"])]
+    ).write.parquet(parsed_path)
+    seen = BloomUrlSeen(os.path.join(workdir, "urlseen"), 2, 1000, 0.01)
+    seen.merge_round(frontier.select("url_hash"), "url_hash", "inject")
+
+    merged = upd_op.updatedb(
+        frontier, spark.read.parquet(fl_path), spark.read.parquet(parsed_path),
+        cfg, NOW, "b1", seen,
+    )
+    assert sorted(r["url"] for r in merged.collect()) == [
+        "http://a.test/d", "http://a.test/known", "http://a.test/new", "http://a.test/p",
+    ]
+    leaves = _plan_leaves(merged._jdf.queryExecution().executedPlan())
+    names = [leaf.getClass().getSimpleName() for leaf in leaves]
+
+    def roots(scan):
+        paths = scan.relation().location().rootPaths()
+        return [paths.apply(i).toString().rstrip("/") for i in range(paths.size())]
+
+    frontier_scans = [
+        leaf for leaf, name in zip(leaves, names)
+        if name == "FileSourceScanExec" and any(r.endswith("/frontier") for r in roots(leaf))
+    ]
+    assert len(frontier_scans) == 1, names
+    assert "InMemoryTableScanExec" not in names

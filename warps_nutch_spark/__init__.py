@@ -13,8 +13,8 @@ Spark DataFrames:
 - parse = vectorized image decode + outlink extraction,
 - updatedb = posexplode(outlinks) + OPIC cash distribution +
   groupBy(url) merge back into the frontier (the URL-seen dedup),
-- URL-seen = partitioned Bloom filter pre-screen with exact anti-join
-  ground truth.
+- URL-seen = partitioned Bloom filter pre-screen with an exact frontier
+  semi-join as ground truth.
 
 All semantics derive from public knowledge: the Apache Nutch 2.3 sources
 in the read-only reference checkout, and the PySpark API. No code is

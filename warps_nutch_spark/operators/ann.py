@@ -288,8 +288,10 @@ def _pair_scores_by_id(vecs, pairs, id_col="vec_id", emb_col="embedding"):
     dot/norm folds run dimension-by-dimension in float64, bit-identical
     to the JVM expression fold. Returns (id_a, id_b, _dot, _na, _nb)
     or None (caller falls back to the join form) when the table is not
-    batch-bounded, IDs are not integer-typed, or the embeddings do not
-    form one dense matrix (a null or ragged embedding, a null element).
+    batch-bounded, IDs are not integer-typed, the embedding elements
+    are not float (the matrix is float32: cutting ``array<double>``
+    to it would change the scores), or the embeddings do not form one
+    dense matrix (a null or ragged embedding, a null element).
     Duplicate ids in ``vecs`` are tolerated when they carry the same
     vector (first occurrence wins)."""
     import numpy as np
@@ -298,6 +300,8 @@ def _pair_scores_by_id(vecs, pairs, id_col="vec_id", emb_col="embedding"):
         return None
     id_field = vecs.schema[id_col].dataType.typeName()
     if id_field not in ("long", "integer", "short", "byte"):
+        return None
+    if vecs.schema[emb_col].dataType.elementType.typeName() != "float":
         return None
     rows = vecs.select(id_col, emb_col).collect()
     if not rows:

@@ -29,17 +29,10 @@ def page_category_col(url: Column) -> Column:
     )
 
 
-def complete_rows(df: DataFrame, cfg: CrawlConfig, now_ms: int) -> DataFrame:
-    """Fill every missing frontier column with its schema default.
-    ``df`` must already have ``url``; url_hash/host are derived if
-    absent."""
-    cols = {f.name: f.dataType.simpleString() for f in schema.FRONTIER.fields}
-    out = df
-    if "url_hash" not in out.columns:
-        out = out.withColumn("url_hash", urls.url_hash_col(F.col("url")))
-    if "host" not in out.columns:
-        out = out.withColumn("host", urls.host_col(F.col("url")))
-    defaults: dict[str, Column] = {
+def frontier_defaults(cfg: CrawlConfig, now_ms: int) -> dict[str, Column]:
+    """Schema default of every frontier column except url/url_hash/host:
+    the row a discovered URL starts from (ReduceDatumBuilder.java:76-96)."""
+    return {
         "host_bucket": F.lit(None).cast("int"),
         "status": F.lit(CrawlStatus.UNFETCHED),
         "fetch_time": F.lit(now_ms),
@@ -68,7 +61,19 @@ def complete_rows(df: DataFrame, cfg: CrawlConfig, now_ms: int) -> DataFrame:
         "phash": F.lit(None).cast("long"),
         "is_seed": F.lit(False),
     }
-    for name, default in defaults.items():
+
+
+def complete_rows(df: DataFrame, cfg: CrawlConfig, now_ms: int) -> DataFrame:
+    """Fill every missing frontier column with its schema default.
+    ``df`` must already have ``url``; url_hash/host are derived if
+    absent."""
+    cols = {f.name: f.dataType.simpleString() for f in schema.FRONTIER.fields}
+    out = df
+    if "url_hash" not in out.columns:
+        out = out.withColumn("url_hash", urls.url_hash_col(F.col("url")))
+    if "host" not in out.columns:
+        out = out.withColumn("host", urls.host_col(F.col("url")))
+    for name, default in frontier_defaults(cfg, now_ms).items():
         if name not in out.columns:
             out = out.withColumn(name, default)
         else:

@@ -16,19 +16,23 @@ Reference dataflow (``mapreduce/DbUpdateJob``, SURVEY.md §3.4):
   (``ReduceDatumBuilder.java:114,162-184``) -> window rank + min agg;
 - R6 new-row creation: unseen URL -> UNFETCHED row, initial score 0
   (+contributions), priority FROM_SEED if the linking page was a seed
-  (``ReduceDatumBuilder.java:76-96,134-153``) -> the MERGE anti-join
-  IS the URL-seen dedup, pre-screened by the Bloom filter;
+  (``ReduceDatumBuilder.java:76-96,134-153``) -> a key of the keyed
+  fold below with no row side; the URL-seen check is the frontier
+  semi-join, pre-screened by the Bloom filter;
 - R7-R9 fetch schedule by status (adaptive), retry/gone backoff
   (``ReduceDatumBuilder.java:215-276``) -> CASE WHEN columns;
 - R10 mark cleanup (``ReduceDatumBuilder.java:195-213``);
 - R11 status counters (``NutchCounter.java:49-71``) -> groupBy/count.
 
-Scale shape: ONE shuffle for the contribution aggregation (groupBy
-url_hash), one join of aggregated contributions (small: <= distinct
-discovered URLs) against the frontier, then the MERGE. The Bloom
-pre-screen drops already-seen URLs from the *insert* path before the
-join so the candidate side stays proportional to newly discovered
-URLs, not total outlinks.
+Scale shape: one keyed merge per URL, as the reference's one reduce
+per URL. The round's own rows (fetched pages and the fetchlist rows
+the fetch budget dropped) and the existing link targets meet the
+aggregated contributions in ONE full outer join on url_hash, consumed
+by one projection. The frontier is read once, by a semi-join against
+the broadcast link targets that are not own rows; the Bloom pre-screen
+keeps definitely-new targets off that broadcast side, so it stays
+proportional to the already-known targets, not to all outlinks.
+Nothing is persisted.
 """
 
 from __future__ import annotations
@@ -46,7 +50,7 @@ from ..functions.schedules import (
 )
 from ..functions.status import CrawlStatus
 from ..store.urlseen import BloomUrlSeen
-from .rows import complete_rows
+from .rows import complete_rows, frontier_defaults
 
 
 def explode_contributions(parsed: DataFrame, cfg: CrawlConfig) -> DataFrame:
@@ -214,49 +218,35 @@ def updated_fetched_rows(
 
 def updatedb(
     frontier: DataFrame,
+    fetchlist: DataFrame,
     parsed: DataFrame,
     cfg: CrawlConfig,
     now_ms: int,
     batch_id: str,
     urlseen: BloomUrlSeen | None = None,
-    cached_out: list | None = None,
-    prev_state: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (merge_rows, counters). ``merge_rows`` are full
-    frontier-schema rows: updated fetched pages + updated existing
-    link targets + newly discovered rows. Persisted intermediates are
-    appended to ``cached_out`` (if given) so the caller can unpersist
-    them once the merge plan is materialized — a long-running driver
-    (many rounds per session) must not accumulate cached blocks."""
-    contribs = explode_contributions(parsed, cfg)
-    # agg feeds three consumers (existing-row update, new-row insert,
-    # fetched-row inlink fold) — persist so the explode+groupBy shuffle
-    # runs once, not per branch
-    agg = aggregate_contributions(contribs, cfg).persist()
-    if cached_out is not None:
-        cached_out.append(agg)
+) -> DataFrame:
+    """The round's merge rows, full frontier-schema rows keyed by
+    url_hash: the fetched pages, the fetchlist rows the fetch budget
+    dropped, the existing link targets and the newly discovered URLs.
+    ``fetchlist`` is the round's generate artifact and ``parsed`` the
+    rows the round fetched from it."""
+    cols = frontier.columns
+    agg = aggregate_contributions(explode_contributions(parsed, cfg), cfg)
 
-    fetched_updates = updated_fetched_rows(parsed, cfg, now_ms, batch_id)
-    # inlinks / repr_url state does not ride through the fetch UDF
-    # (arrays through Arrow would dominate the politeness stage); the
-    # caller supplies the fetchlist's prior state instead — a
-    # small x small join, never a frontier point-lookup.
-    if prev_state is not None:
-        ps = prev_state.select(
-            "url_hash",
-            F.col("inlinks").alias("_prev_inlinks"),
-            F.col("repr_url").alias("_prev_repr"),
-        )
-        fetched_updates = fetched_updates.join(ps, on="url_hash", how="left")
-    else:
-        fetched_updates = fetched_updates.withColumn(
-            "_prev_inlinks", F.lit(None).cast("array<struct<url:string,anchor:string>>")
-        ).withColumn("_prev_repr", F.lit(None).cast("string"))
+    # own rows: the fetched pages take their prior inlinks / repr_url
+    # from the fetchlist (that state does not ride through the fetch
+    # UDF); fetchlist rows with no parsed row were dropped by the fetch
+    # budget and stay as generated, GENERATE_MARK included
+    # (FeederThread drain semantics)
+    prior = fetchlist.select("url_hash", "inlinks", F.col("repr_url").alias("_prev_repr"))
+    fetched = updated_fetched_rows(parsed, cfg, now_ms, batch_id).join(
+        prior, on="url_hash", how="left"
+    )
     # reprUrl on redirect (URLUtil.chooseRepr, TaskScheduler.java:731-774)
     redirected = F.col("new_status").isin(
         CrawlStatus.REDIR_PERM, CrawlStatus.REDIR_TEMP
     ) & (F.size(F.coalesce("outlinks", F.array())) > 0)
-    fetched_updates = fetched_updates.withColumn(
+    fetched = fetched.withColumn(
         "repr_url",
         F.when(
             redirected,
@@ -266,114 +256,61 @@ def updatedb(
                 F.col("new_status") == CrawlStatus.REDIR_TEMP,
             ),
         ).otherwise(F.col("_prev_repr")),
-    ).drop("_prev_repr")
+    )
+    dropped = fetchlist.join(parsed.select("url_hash"), on="url_hash", how="left_anti")
+    own = complete_rows(fetched, cfg, now_ms).select(*cols).unionByName(dropped.select(*cols))
 
-    # score updates for pages receiving inlinks that already exist
-    existing = frontier.join(
-        agg.select(
-            F.col("to_url_hash").alias("url_hash"),
-            "inlink_sum",
-            "min_inlink_distance",
-            F.col("inlinks").alias("_new_inlinks"),
+    # existing link targets: the one frontier lookup. The Bloom
+    # pre-screen (R6 URL-seen) keeps definitely-new targets off the
+    # broadcast side; the semi-join itself is the exact check.
+    own_keys = fetchlist.select("url_hash").unionByName(parsed.select("url_hash"))
+    targets = agg.select(F.col("to_url_hash").alias("url_hash")).join(
+        own_keys, on="url_hash", how="left_anti"
+    )
+    if urlseen is not None:
+        targets = urlseen.maybe_seen(targets, "url_hash").filter("maybe_seen").drop("maybe_seen")
+    existing = frontier.join(F.broadcast(targets), on="url_hash", how="left_semi")
+
+    # R3-R6 as one keyed fold: a row side meets its aggregated inlinks;
+    # a key with no row side is a newly discovered URL
+    rows = own.unionByName(existing)
+    inl = agg.withColumnRenamed("inlinks", "_new_inlinks")
+    joined = rows.join(
+        inl,
+        rows["url_hash"] == inl["to_url_hash"],
+        "full" if cfg.additions_allowed else "left",
+    )
+    hit = F.col("to_url_hash").isNotNull()
+    folded = {
+        "score": scoring.updated_score(F.col("score"), F.col("inlink_sum")),
+        "cash": scoring.updated_cash(F.col("cash"), F.col("inlink_sum")),
+        "distance": F.least(F.col("distance"), F.col("min_inlink_distance")),
+        "inlinks": F.coalesce(F.col("_new_inlinks"), F.col("inlinks")),
+        "updated_batch": F.when(hit, F.lit(batch_id)).otherwise(F.col("updated_batch")),
+    }
+    new = {
+        **frontier_defaults(cfg, now_ms),
+        "url": F.col("to_url"),
+        "url_hash": F.col("to_url_hash"),
+        "host": F.col("to_host"),
+        "score": F.col("inlink_sum").cast("float"),
+        "cash": F.col("inlink_sum").cast("float"),
+        "distance": F.col("min_inlink_distance"),
+        "inlinks": F.col("_new_inlinks"),
+        "priority": F.when(F.col("any_from_seed"), F.lit(cfg.priority_from_seed)).otherwise(
+            F.lit(cfg.priority_default)
         ),
-        on="url_hash",
-        how="inner",
-    )
-    # fetched pages may also receive inlinks: fold their update in later
-    existing = (
-        existing.withColumn("score", scoring.updated_score(F.col("score"), F.col("inlink_sum")))
-        .withColumn("cash", scoring.updated_cash(F.col("cash"), F.col("inlink_sum")))
-        .withColumn(
-            "distance",
-            F.least(F.col("distance"), F.col("min_inlink_distance")),
-        )
-        .withColumn("inlinks", F.col("_new_inlinks"))
-        .withColumn("updated_batch", F.lit(batch_id))
-        .drop("inlink_sum", "min_inlink_distance", "_new_inlinks")
+        "updated_batch": F.lit(batch_id),
+    }
+    absent = F.col("url_hash").isNull()
+    return joined.select(
+        *(F.when(absent, new[c]).otherwise(folded.get(c, F.col(c))).alias(c) for c in cols)
     )
 
-    # new rows: discovered URLs not in the frontier (R6). Bloom
-    # pre-screen keeps known URLs out of the anti-join; membership
-    # ground truth remains the anti-join itself.
-    if cfg.additions_allowed:
-        cand = agg
-        if urlseen is not None:
-            # persisted: both union branches below read it
-            screened = urlseen.maybe_seen(
-                agg.withColumnRenamed("to_url_hash", "url_hash"), "url_hash"
-            ).persist()
-            if cached_out is not None:
-                cached_out.append(screened)
-            cand = screened.filter(~F.col("maybe_seen")).drop("maybe_seen").unionByName(
-                screened.filter(F.col("maybe_seen"))
-                .drop("maybe_seen")
-                .join(frontier.select("url_hash"), on="url_hash", how="left_anti")
-            ).withColumnRenamed("url_hash", "to_url_hash")
-        else:
-            cand = agg.join(
-                frontier.select(F.col("url_hash").alias("to_url_hash")),
-                on="to_url_hash",
-                how="left_anti",
-            )
-        # also not among the just-fetched rows
-        cand = cand.join(
-            fetched_updates.select(F.col("url_hash").alias("to_url_hash")),
-            on="to_url_hash",
-            how="left_anti",
-        )
-        new_rows = complete_rows(
-            cand.select(
-                F.col("to_url").alias("url"),
-                F.col("to_url_hash").alias("url_hash"),
-                F.col("to_host").alias("host"),
-                F.col("inlink_sum").cast("float").alias("score"),
-                F.col("inlink_sum").cast("float").alias("cash"),
-                F.col("min_inlink_distance").alias("distance"),
-                F.col("inlinks"),
-                F.when(F.col("any_from_seed"), F.lit(cfg.priority_from_seed))
-                .otherwise(F.lit(cfg.priority_default))
-                .alias("priority"),
-                F.lit(batch_id).alias("updated_batch"),
-            ),
-            cfg,
-            now_ms,
-        )
-    else:
-        new_rows = None
 
-    # fetched rows can also receive inlink contributions this round
-    fetched_updates = (
-        fetched_updates.join(
-            agg.select(
-                F.col("to_url_hash").alias("url_hash"),
-                "inlink_sum",
-                "min_inlink_distance",
-                F.col("inlinks").alias("_new_inlinks"),
-            ),
-            on="url_hash",
-            how="left",
-        )
-        .withColumn("score", scoring.updated_score(F.col("score"), F.col("inlink_sum")))
-        .withColumn("cash", scoring.updated_cash(F.col("cash"), F.col("inlink_sum")))
-        .withColumn(
-            "distance",
-            F.least(F.col("distance"), F.coalesce("min_inlink_distance", F.col("distance"))),
-        )
-        .withColumn("inlinks", F.coalesce(F.col("_new_inlinks"), F.col("_prev_inlinks")))
-        .drop("inlink_sum", "min_inlink_distance", "_new_inlinks", "_prev_inlinks")
-    )
-
-    frontier_cols = frontier.columns
-    fetched_full = complete_rows(fetched_updates, cfg, now_ms).select(*frontier_cols)
-    # a URL may be both a fetched page and a link target; fetched wins
-    existing = existing.join(
-        fetched_full.select("url_hash"), on="url_hash", how="left_anti"
-    ).select(*frontier_cols)
-    merge_rows = fetched_full.unionByName(existing)
-    if new_rows is not None:
-        merge_rows = merge_rows.unionByName(new_rows.select(*frontier_cols))
-
-    counters = (
+def updatedb_counters(merge_rows: DataFrame, batch_id: str) -> DataFrame:
+    """R11 status counters: rows this batch updated, per status."""
+    return (
         merge_rows.filter(F.col("updated_batch") == batch_id)
         .groupBy("status")
         .agg(F.count("*").alias("value"))
@@ -384,4 +321,3 @@ def updatedb(
             F.col("value"),
         )
     )
-    return merge_rows, counters

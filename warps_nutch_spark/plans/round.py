@@ -322,21 +322,6 @@ class RoundDriver:
         )
         return float(row["avg_bytes"]) if row["avg_bytes"] is not None else None
 
-    def _updatedb_counters(self, merge_rows: DataFrame, batch_id: str) -> DataFrame:
-        """R11 status counters recomputed from the committed updatedb
-        artifact (resume path)."""
-        return (
-            merge_rows.filter(F.col("updated_batch") == batch_id)
-            .groupBy("status")
-            .agg(F.count("*").alias("value"))
-            .select(
-                F.lit(batch_id).alias("batch_id"),
-                F.lit("updatedb").alias("stage"),
-                F.col("status").cast("string").alias("counter"),
-                F.col("value"),
-            )
-        )
-
     # ---- stages ---------------------------------------------------------
     def inject(self, seeds, batch_id: str = "inject") -> None:
         parsed = inj_op.parse_seed_lines(self.spark, seeds)
@@ -365,15 +350,15 @@ class RoundDriver:
 
         # One frontier MOR materialization per round: the store version
         # is constant from generate until the updatedb merge at the end,
-        # and the merge plan alone references the frontier 2-3x
-        # (existing-row join, new-row anti-join) — without a persist the
-        # base+delta resolution subtree executes once per consumer.
+        # and both generate and updatedb's frontier semi-join read it —
+        # without a persist the base+delta resolution subtree executes
+        # once per consumer.
         # MEMORY_AND_DISK: at 10^10 rows the cache spills instead of
         # OOMing, and a spilled read still beats re-running the MOR
         # window + anti-join per consumer.
         # ONLY cache when deltas exist: a base-only read is a plain
         # parquet scan, and caching it costs more memory traffic than
-        # the 2-3 re-scans it saves (the unconditional persist cut the
+        # the re-scan it saves (the unconditional persist cut the
         # 4-executor scaling efficiency from ~0.9 to 0.64 — the cache
         # build saturated the box's shared memory bandwidth).
         _round_frontier: list[DataFrame] = []
@@ -539,50 +524,15 @@ class RoundDriver:
             t_u = time.time()
             if not self._done(batch_id, "updatedb"):
                 t_sub = time.time()
-                cached: list[DataFrame] = []
                 if self._stage_data_ok(batch_id, "updatedb"):
                     # resume after the artifact committed: NEVER recompute —
                     # the frontier may already contain this batch's merge,
                     # and recomputing against it would double-apply inlink
                     # contributions. The artifact is the single source.
                     merge_rows = self._read_stage(batch_id, "updatedb")
-                    counters = self._updatedb_counters(merge_rows, batch_id)
                 else:
-                    frontier = _frontier()
-                    merge_rows, counters = upd_op.updatedb(
-                        frontier, parsed, self.cfg, now, batch_id, self.urlseen,
-                        cached_out=cached,
-                        prev_state=fetchlist.select("url_hash", "inlinks", "repr_url"),
-                    )
-                    # Budget-dropped fetchlist rows (generated but never
-                    # reached by the round's fetch budget) keep their
-                    # GENERATE_MARK — FeederThread drain semantics. The
-                    # dropped set is fetchlist MINUS actually-fetched rows
-                    # (parsed); a dropped row that also received inlinks
-                    # this round sits in updatedb's 'existing' branch with
-                    # the frontier's stale mark, so restore the fetchlist's
-                    # mark there too.
-                    merge_rows = merge_rows.persist()
-                    cached.append(merge_rows)
-                    dropped = fetchlist.select(*frontier.columns).join(
-                        parsed.select("url_hash"), on="url_hash", how="left_anti"
-                    )
-                    marks = dropped.select(
-                        "url_hash", F.col("generated_batch").alias("_keep_mark")
-                    )
-                    merge_rows = (
-                        merge_rows.join(marks, on="url_hash", how="left")
-                        .withColumn(
-                            "generated_batch",
-                            F.coalesce(F.col("_keep_mark"), F.col("generated_batch")),
-                        )
-                        .drop("_keep_mark")
-                    )
-                    dropped_rest = dropped.join(
-                        merge_rows.select("url_hash"), on="url_hash", how="left_anti"
-                    )
-                    merge_rows = merge_rows.unionByName(
-                        dropped_rest.select(*merge_rows.columns)
+                    merge_rows = upd_op.updatedb(
+                        _frontier(), fetchlist, parsed, self.cfg, now, batch_id, self.urlseen
                     )
                     # pre-bucket so the resume artifact doubles as the
                     # store's delta snapshot (merge_linked below): the
@@ -597,6 +547,7 @@ class RoundDriver:
                     self.store.stamp_bucketing(
                         os.path.join(self._stage_dir(batch_id, "updatedb"), "data")
                     )
+                counters = upd_op.updatedb_counters(merge_rows, batch_id)
                 stage_times["updatedb.plan_write"] = time.time() - t_sub
 
                 # the three post-write actions — store adopt, URL-seen
@@ -631,8 +582,6 @@ class RoundDriver:
                     stage_times["updatedb.metrics"] = time.time() - tt
 
                 self._run_overlapped(_adopt, _urlseen_merge, _updatedb_metrics)
-                for df in cached:
-                    df.unpersist()
                 self._mark_done(batch_id, "updatedb")
             stage_times["updatedb"] = time.time() - t_u
             _release_frontier()  # merged: the cached MOR view is now stale

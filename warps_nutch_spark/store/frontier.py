@@ -439,7 +439,7 @@ class ParquetFrontierStore(FrontierStore):
 
         URL-seen interplay: the Bloom backend cannot unset bits, so a
         deleted URL still probes maybe_seen=True — which routes it to
-        the exact frontier anti-join, where it correctly shows as new
+        updatedb's exact frontier semi-join, where it correctly shows as new
         and can be re-discovered. No invariant breaks (this is the
         same path as any Bloom false positive). The cuckoo backend
         (``store/cuckoo.py``, cfg.urlseen_backend="cuckoo") supports

@@ -4,11 +4,10 @@ pre-screen (north_rule).
 The reference answers "have we seen this URL?" with a per-row HBase
 point-get (``DbUpdateReducer.java:98``, ``TaskScheduler.java:891``).
 Distributed Spark must never do per-row point lookups; membership is a
-set operation. Ground truth stays the MERGE anti-join against the
-frontier (``store/frontier.py``); this Bloom filter is the cheap
-pre-screen that keeps already-seen URLs out of the updatedb shuffle:
-at 10^10 frontier rows, most discovered outlinks are already known, so
-dropping them before the groupBy saves the dominant shuffle volume.
+set operation. Ground truth stays updatedb's semi-join of the frontier
+(``store/frontier.py``) against the round's link targets; this Bloom
+filter is the cheap pre-screen that keeps definitely-new targets off
+that join's broadcast side.
 
 Layout: P partitions by pmod(xxhash64(url_hash), P); one bitmap file
 per partition (``pid=N.npy``) + a JSON manifest with lineage (rounds
@@ -144,7 +143,7 @@ class BloomUrlSeen:
     # -- membership pre-screen --------------------------------------------
     def maybe_seen(self, df: DataFrame, key: str) -> DataFrame:
         """Adds boolean ``maybe_seen``: False -> definitely new (safe to
-        skip the anti-join for), True -> possibly seen (needs the exact
+        skip the exact check for), True -> possibly seen (needs the exact
         check). No bitmaps loaded on the driver."""
         path, m, k, parts = self.path, self.m, self.k, self.partitions
 
