@@ -160,6 +160,20 @@ def test_bloom_incremental_merge(spark, workdir):
     assert len(bloom.manifest()["rounds"]) == 2
 
 
+def test_bloom_resume_replay_is_noop(spark, workdir):
+    """A resumed round that merges its batch a second time leaves the
+    manifest as the first merge wrote it: no second round entry and no
+    doubled ``items``."""
+    bloom = BloomUrlSeen(f"{workdir}/bloom3", partitions=2,
+                         capacity_per_partition=1_000, fp_rate=0.01)
+    keys = spark.createDataFrame(pd.DataFrame({"k": ["a", "b", "c"]}))
+    bloom.merge_round(keys, "k", "r0")
+    before = bloom.manifest()
+    bloom.merge_round(keys, "k", "r0")
+    assert bloom.manifest() == before
+    assert before["items"] == 3 and len(before["rounds"]) == 1
+
+
 def test_lsh_cosine_dedup_recall_and_precision(spark):
     """The bucketed near-dup pipeline (sign-LSH bands -> exact-cosine
     verify) must (a) return ONLY pairs above the threshold (precision

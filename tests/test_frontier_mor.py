@@ -10,6 +10,7 @@ contributions regardless of kill point.
 
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,8 +31,11 @@ def _rows(spark, items):
     )
 
 
-def _store(spark, tmp, **kw):
-    return ParquetFrontierStore(spark, os.path.join(str(tmp), "fr"), host_buckets=4, **kw)
+def _store(spark, tmp, compact_ratio=None):
+    st = ParquetFrontierStore(spark, os.path.join(str(tmp), "fr"), host_buckets=4)
+    if compact_ratio is not None:
+        st.COMPACT_RATIO = compact_ratio
+    return st
 
 
 def test_mor_merge_equals_logical_upsert(spark, tmp_path):
@@ -122,6 +126,41 @@ def test_resume_after_merge_before_done_is_idempotent(spark, tmp_path_factory):
     assert (a.status == b.status).all()
     assert ((a.score - b.score).abs() < 1e-3).all(), "scores double-applied on resume"
     assert ((a.cash - b.cash).abs() < 1e-3).all()
+
+
+def test_resume_stamps_an_unstamped_updatedb_artifact(spark, tmp_path_factory, monkeypatch):
+    """Kill point: updatedb's artifact committed but its bucketing stamp
+    not yet written. merge_linked refuses unstamped artifacts, so the
+    resume must stamp the artifact it reuses and end in the state of an
+    uninterrupted round."""
+    web = SimWeb(*WEB)
+    cfg = _cfg()
+
+    wd_a = str(tmp_path_factory.mktemp("uninterrupted"))
+    drv_a = RoundDriver(spark, wd_a, cfg, WEB, START)
+    drv_a.inject(_seeds_df(spark, web))
+    drv_a.run_round(0)
+
+    wd_b = str(tmp_path_factory.mktemp("killed_before_stamp"))
+    drv_b = RoundDriver(spark, wd_b, cfg, WEB, START)
+    drv_b.inject(_seeds_df(spark, web))
+
+    def killed(data_dir):
+        raise RuntimeError("killed before the stamp")
+
+    monkeypatch.setattr(drv_b.store, "stamp_bucketing", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        drv_b.run_round(0)
+    art = os.path.join(wd_b, "rounds", "batch-0000", "updatedb", "data")
+    assert os.path.exists(os.path.join(art, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(art, "_WNS_BUCKETING.json"))
+
+    drv_c = RoundDriver(spark, wd_b, cfg, WEB, START)
+    drv_c.run_round(0)  # resume
+    pd.testing.assert_frame_equal(_frontier_pdf(drv_a), _frontier_pdf(drv_c))
+    assert [(ln["op"], ln.get("batch_id")) for ln in drv_c.store.lineage_chain()] == [
+        (ln["op"], ln.get("batch_id")) for ln in drv_a.store.lineage_chain()
+    ]
 
 
 def test_budget_dropped_rows_keep_generate_mark(spark, tmp_path_factory):
@@ -331,8 +370,8 @@ def test_merge_linked_rejects_mismatched_bucketing(spark, tmp_path):
     other.stamp_bucketing(art)
     with pytest.raises(ValueError, match="host_buckets"):
         st.merge_linked(art)
-    # unstamped mismatch -> caught by the sample recheck (bucket value
-    # forced out of this store's range so the mismatch is deterministic)
+    # unstamped artifact -> refused, since the bucketing stamp is
+    # required (its bucket value is also out of this store's range)
     art_bad = os.path.join(str(tmp_path), "artifact_bad")
     st.with_bucket(_rows(spark, [("b", 2, 20.0)])).withColumn(
         "host_bucket", F.lit(99)
@@ -413,9 +452,8 @@ def test_compaction_trigger_snapshot_count_and_linked_merge(spark, tmp_path):
     st.merge(_rows(spark, [("u2", 2, 12.0)]))  # third delta exceeds the cap
     assert [ln["kind"] for ln in st.lineage_chain()][-2:] == ["delta", "base"]
 
-    lk = ParquetFrontierStore(
-        spark, os.path.join(str(tmp_path), "linked"), host_buckets=4, compact_ratio=0.5
-    )
+    lk = ParquetFrontierStore(spark, os.path.join(str(tmp_path), "linked"), host_buckets=4)
+    lk.COMPACT_RATIO = 0.5
     lk.init(_rows(spark, [(f"u{i}", i % 3, float(i)) for i in range(6)]))
     art = os.path.join(str(tmp_path), "artifact")
     upd = [("u0", 0, 10.0), ("n1", 1, 1.0), ("n2", 2, 2.0), ("n3", 0, 3.0)]
@@ -437,6 +475,19 @@ def test_uninitialized_store_reads_raise_file_not_found(spark, tmp_path):
         st.read_host("host1.test")
 
 
+def test_store_from_before_the_single_manifest_is_refused(spark, tmp_path):
+    """A ``_VERSION`` in the old pointer-only form names the layout it
+    predates instead of failing on a missing key."""
+    path = os.path.join(str(tmp_path), "fr")
+    os.makedirs(path)
+    with open(os.path.join(path, "_VERSION"), "w") as f:
+        f.write('{"version": 0, "committed_at": 0.0}')
+    with pytest.raises(ValueError, match="single-manifest"):
+        ParquetFrontierStore(spark, path, host_buckets=4)
+    with pytest.raises(ValueError, match="single-manifest"):
+        ParquetFrontierStore.open(spark, path)
+
+
 def test_mor_read_plan_broadcasts_delta_keys(spark, tmp_path, capsys):
     """Under the broadcast gate the base side of the MOR anti-join never
     shuffles: the delta key set is broadcast into a left-anti join by
@@ -453,3 +504,122 @@ def test_mor_read_plan_broadcasts_delta_keys(spark, tmp_path, capsys):
         assert "BroadcastHashJoin LeftAnti" in capsys.readouterr().out
     finally:
         spark.conf.set(key, prev)
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """Spark jobs that ``fn`` submits from this thread, counted through a
+    job group. A marker job in a second group is awaited before
+    counting: the status store applies listener events in order, so
+    once the marker shows, every job ``fn`` started is counted."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, marker = f"guard-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "store guard")
+    try:
+        fn()
+        sc.setJobGroup(marker, "store guard marker")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not sc.statusTracker().getJobIdsForGroup(marker) and time.time() < deadline:
+        time.sleep(0.05)
+    assert sc.statusTracker().getJobIdsForGroup(marker), "marker job never showed"
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_metadata_costs_no_spark_job(spark, tmp_path):
+    """Every metadata answer comes from the manifest: planning a MOR
+    read and adopting a stamped artifact submit no Spark job, and the
+    footer row counts a commit records equal Spark's count of each
+    snapshot (init, merge, linked, delete and compact)."""
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    st.init(_rows(spark, [(f"u{i}", (i % 6) + 1, float(i)) for i in range(24)]))
+    st.merge(_rows(spark, [("u0", 1, 100.0), ("n0", 2, 50.0)]))
+    st.merge(_rows(spark, [("u1", 2, 101.0)]))
+    assert _jobs_submitted(spark, st.read) == 0
+    assert _jobs_submitted(spark, lambda: st.read().count()) > 0  # the counter counts
+
+    art = os.path.join(str(tmp_path), "artifact")
+    st.with_bucket(_rows(spark, [("u2", 3, 102.0), ("n1", 4, 51.0)])).write.parquet(art)
+    st.stamp_bucketing(art)
+    assert _jobs_submitted(spark, lambda: st.merge_linked(art)) == 0
+    st.delete(spark.createDataFrame([("u3", "host4.test")], ["url_hash", "host"]))
+    st.compact()
+
+    chain = st.lineage_chain()
+    assert [(ln["op"], ln["kind"]) for ln in chain] == [
+        ("init", "base"), ("merge", "delta"), ("merge", "delta"),
+        ("merge", "delta"), ("delete", "delta"), ("compact", "base"),
+    ]
+    assert "linked_from" in chain[3]
+    for ln in chain:
+        assert ln["rows"] == spark.read.parquet(st._data_dir(ln["version"])).count(), ln
+    # the manifest is the only metadata file the store writes
+    names = {fn for _, _, files in os.walk(st.path) for fn in files}
+    assert not names & {"_LINEAGE.json", "_STORE_META.json"}
+    assert ParquetFrontierStore.open(spark, st.path).host_buckets == 4
+
+
+def test_readers_during_commits_see_committed_versions(spark, tmp_path):
+    """A reader looping read().collect() while the writer merges, adopts
+    a linked artifact, deletes and compacts never fails, and every
+    result equals the upsert state of some committed version."""
+    import threading
+    import time
+
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    base = [(f"u{i}", (i % 6) + 1, float(i)) for i in range(24)]
+    st.init(_rows(spark, base))
+    state = {u: s for u, _, s in base}
+    states = [dict(state)]
+
+    reads, errors = [], []
+    stop = threading.Event()
+
+    def reader():
+        try:
+            while not stop.is_set():
+                reads.append({r["url_hash"]: r["score"] for r in st.read().collect()})
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    def committed(items=(), deleted=()):
+        """Record the new committed state, then let the reader finish
+        at least one more read before the next commit."""
+        state.update({u: s for u, _, s in items})
+        for u in deleted:
+            del state[u]
+        states.append(dict(state))
+        n, deadline = len(reads), time.time() + 60
+        while len(reads) == n and not errors and time.time() < deadline:
+            time.sleep(0.05)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        committed()
+        upd = [("u0", 1, 100.0), ("n0", 2, 50.0)]
+        st.merge(_rows(spark, upd))
+        committed(upd)
+        art = os.path.join(str(tmp_path), "artifact")
+        upd = [("u0", 1, 200.0), ("n1", 3, 51.0)]
+        st.with_bucket(_rows(spark, upd)).write.parquet(art)
+        st.stamp_bucketing(art)
+        st.merge_linked(art)
+        committed(upd)
+        st.delete(spark.createDataFrame([("u1", "host2.test")], ["url_hash", "host"]))
+        committed(deleted=["u1"])
+        st.compact()
+        committed()
+    finally:
+        stop.set()
+        t.join(timeout=120)
+    assert not t.is_alive(), "reader thread did not stop"
+    assert not errors, errors
+    assert len(reads) >= 5
+    for got in reads:
+        assert got in states
+    assert {r["url_hash"]: r["score"] for r in st.read().collect()} == states[-1]

@@ -454,3 +454,31 @@ def test_merge_rows_scan_the_frontier_once_uncached(spark, workdir):
     ]
     assert len(frontier_scans) == 1, names
     assert "InMemoryTableScanExec" not in names
+
+
+def test_second_inject_seed_keeps_seed_state_when_linked(spark, workdir):
+    """Every inject feeds the URL-seen pre-screen, also a second one
+    under the same default batch id: a seed of the second inject that
+    gets an inlink before it is fetched is found in the frontier and
+    keeps its seed state, rather than being re-created as a new row."""
+    import os
+
+    from warps_nutch_spark.plans.round import RoundDriver
+
+    cfg = make_test_config(host_buckets=4, bloom_partitions=2)
+    drv = RoundDriver(spark, os.path.join(workdir, "crawl"), cfg, start_ms=NOW)
+    first, second = "http://a.test/p", "http://b.test/seed"
+    drv.inject(spark.createDataFrame([(first,)], ["value"]))
+    drv.inject(spark.createDataFrame([(second,)], ["value"]))
+
+    frontier = drv.store.read()
+    parsed = _parsed_df(spark, [_parsed_row(first, [second], is_seed=True)])
+    merged = upd_op.updatedb(
+        frontier, _fetchlist(frontier, parsed), parsed, cfg, NOW, "b1", drv.urlseen
+    )
+    seed = {r["url"]: r for r in merged.collect()}[second]
+    injected = frontier.filter(F.col("url") == second).collect()[0]
+    assert seed["is_seed"] is True
+    assert seed["priority"] == injected["priority"] == cfg.priority_seed
+    assert seed["fetch_interval"] == injected["fetch_interval"]
+    assert len(drv.urlseen.manifest()["rounds"]) == 2

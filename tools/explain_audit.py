@@ -218,7 +218,8 @@ def main():
     from warps_nutch_spark.store.frontier import ParquetFrontierStore
 
     wd = tempfile.mkdtemp(prefix="wns-plan-mor-")
-    st = ParquetFrontierStore(spark, wd, host_buckets=4, compact_ratio=100.0)
+    st = ParquetFrontierStore(spark, wd, host_buckets=4)
+    st.COMPACT_RATIO = 100.0
     base = spark.createDataFrame(
         [(f"u{i}", f"h{i}", f"host{i % 3}.test", float(i)) for i in range(50)],
         ["url_hash", "url", "host", "score"],

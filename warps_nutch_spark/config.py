@@ -142,20 +142,6 @@ class CrawlConfig:
     # number of host-hash buckets the frontier is written under
     # (partition pruning analog of the reversed-key range scan)
     host_buckets: int = 64
-    # MOR compaction threshold: materialize a new base when total
-    # delta rows exceed this fraction of the base (store/frontier.py).
-    # Lower = cheaper reads, more rewrite; higher = cheaper writes,
-    # heavier MOR scans. During crawl expansion any ratio compacts at
-    # a geometric cadence, which amortizes to O(1) rewrites per
-    # doubling of the frontier — but at 0.5 the expansion phase
-    # (updates ≈ base each round) compacted EVERY round, i.e. degraded
-    # to copy-on-write; measured A/B at the bench config: 4.0 cut round
-    # time ~17% (one compaction per 3 rounds instead of 3). Reads stay
-    # cheap across the extra deltas because the MOR anti-join
-    # broadcast-hints the delta key set; the snapshot-count cap in
-    # ParquetFrontierStore (MAX_DELTA_SNAPSHOTS = 8) bounds the read
-    # plan's delta fan-in regardless of ratio.
-    frontier_compact_ratio: float = 4.0
     # salt factor for payload-parallel stages (never the politeness UDF)
     salt_factor: int = 8
 

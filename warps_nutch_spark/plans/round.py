@@ -115,10 +115,7 @@ class RoundDriver:
         self.web_params = web_params
         self.start_ms = start_ms
         self.store = ParquetFrontierStore(
-            spark,
-            os.path.join(workdir, "frontier"),
-            cfg.host_buckets,
-            compact_ratio=cfg.frontier_compact_ratio,
+            spark, os.path.join(workdir, "frontier"), cfg.host_buckets
         )
         seen_cls = BloomUrlSeen
         if cfg.urlseen_backend == "cuckoo":
@@ -147,9 +144,11 @@ class RoundDriver:
             json.dump(meta or {}, f)
 
     def _write_stage(self, df: DataFrame, batch_id: str, stage: str) -> DataFrame:
+        """Write the stage artifact and return it read back with the
+        schema it was written with (no schema-inference job)."""
         path = os.path.join(self._stage_dir(batch_id, stage), "data")
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def _stage_data_ok(self, batch_id: str, stage: str) -> bool:
         """True when the stage's data artifact committed (_SUCCESS) —
@@ -326,7 +325,13 @@ class RoundDriver:
     def inject(self, seeds, batch_id: str = "inject") -> None:
         parsed = inj_op.parse_seed_lines(self.spark, seeds)
         rows = inj_op.inject(self.store, parsed, self.cfg, self.start_ms, batch_id)
-        self.urlseen.merge_round(rows.select("url_hash"), "url_hash", batch_id)
+        # keyed by the store version the inject committed: URL-seen skips
+        # a batch id it already lists, and a second inject may reuse the
+        # batch id while adding seeds the filter must still learn
+        self.urlseen.merge_round(
+            rows.select("url_hash"), "url_hash",
+            f"{batch_id}@v{self.store.current_version()}",
+        )
 
     def round_now(self, r: int) -> int:
         return self.start_ms + r * self.cfg.round_time_limit_ms
@@ -387,6 +392,10 @@ class RoundDriver:
                 "stage_sec": {k: round(v, 2) for k, v in stage_times.items()},
             }
 
+        # a stage that runs in this call hands its artifact on as the
+        # DataFrame _write_stage returned; a stage an earlier call
+        # completed is read back from disk
+        fetchlist = fetch_results = parsed = None
         try:
             # -- generate ----------------------------------------------------
             if not self._done(batch_id, "generate"):
@@ -401,18 +410,19 @@ class RoundDriver:
                     # frontier delta per round instead of two; intra-round
                     # resume is covered by the artifact + _DONE marker, the
                     # F13 guard semantics are unchanged for the next round).
-                    self._write_stage(fl, batch_id, "generate")
+                    fetchlist = self._write_stage(fl, batch_id, "generate")
                 self._mark_done(batch_id, "generate")
             stage_times["generate"] = time.time() - t0
             if stop_after == "generate":
                 return _partial("generate")
-            fetchlist = self._read_stage(batch_id, "generate")
+            if fetchlist is None:
+                fetchlist = self._read_stage(batch_id, "generate")
 
             # -- fetch ---------------------------------------------------------
             t_f = time.time()
             if not self._done(batch_id, "fetch"):
                 if self._stage_data_ok(batch_id, "fetch"):
-                    res = self._read_stage(batch_id, "fetch")  # resume: reuse
+                    fetch_results = self._read_stage(batch_id, "fetch")  # resume: reuse
                 else:
                     if self.cfg.fetch_mode == "crowd":
                         res = self._crowd_fetch(fetchlist, batch_id, now)
@@ -422,13 +432,13 @@ class RoundDriver:
                             self.web_params, host_config=self.host_config(),
                         )
                     with python_stage_parallelism(self.spark):
-                        res = self._write_stage(res, batch_id, "fetch")
+                        fetch_results = self._write_stage(res, batch_id, "fetch")
                 # the host-state update and the fetch metrics both read
                 # the committed fetch artifact but are independent of
                 # each other: overlap the two actions (guide §2.6) so
                 # the second one back-fills the first one's task tail
                 def _hosts_update() -> None:
-                    self._update_host_failures(res, batch_id)
+                    self._update_host_failures(fetch_results, batch_id)
 
                 def _fetch_metrics() -> None:
                     # collect the handful of per-status rows once: the
@@ -437,7 +447,7 @@ class RoundDriver:
                     # artifact scan
                     fetch_counter_rows = [
                         tuple(r)
-                        for r in res.filter(F.col("fetched"))
+                        for r in fetch_results.filter(F.col("fetched"))
                         .groupBy("new_status")
                         .agg(F.count("*").alias("value"))
                         .select(
@@ -456,7 +466,8 @@ class RoundDriver:
             stage_times["fetch"] = time.time() - t_f
             if stop_after == "fetch":
                 return _partial("fetch")
-            fetch_results = self._read_stage(batch_id, "fetch")
+            if fetch_results is None:
+                fetch_results = self._read_stage(batch_id, "fetch")
 
             # -- parse -----------------------------------------------------------
             t_p = time.time()
@@ -491,7 +502,8 @@ class RoundDriver:
             stage_times["parse"] = time.time() - t_p
             if stop_after == "parse":
                 return _partial("parse")
-            parsed = self._read_stage(batch_id, "parse")
+            if parsed is None:
+                parsed = self._read_stage(batch_id, "parse")
 
             # -- JIT index (TaskScheduler.java:799-804 + JITIndexer.java):
             # index documents leave the round as soon as parse lands,
@@ -542,20 +554,23 @@ class RoundDriver:
                     # by bytes (the python_stage_parallelism pin here was
                     # vestigial and cost ~1 s/round in tiny-task overhead)
                     merge_rows = self._write_stage(merge_rows, batch_id, "updatedb")
-                    # record the bucket count the artifact was written with so
-                    # merge_linked can reject a stale-layout resume artifact
-                    self.store.stamp_bucketing(
-                        os.path.join(self._stage_dir(batch_id, "updatedb"), "data")
-                    )
+                # record the bucket count the artifact was written with so
+                # merge_linked can reject a stale-layout artifact. A resume
+                # stamps too: a kill between the artifact's commit and its
+                # stamp leaves it unstamped, and this store wrote it (the
+                # manifest pins the store's bucket count)
+                self.store.stamp_bucketing(
+                    os.path.join(self._stage_dir(batch_id, "updatedb"), "data")
+                )
                 counters = upd_op.updatedb_counters(merge_rows, batch_id)
                 stage_times["updatedb.plan_write"] = time.time() - t_sub
 
                 # the three post-write actions — store adopt, URL-seen
                 # Bloom merge, counter metrics — touch disjoint state
                 # and each is idempotent on resume (committed_ops guard,
-                # Bloom OR, keyed metrics overwrite): overlap them
-                # (guide §2.6); per-substage times stay in stage_sec as
-                # each thread's own wall
+                # URL-seen batch guard, keyed metrics overwrite):
+                # overlap them (guide §2.6); per-substage times stay in
+                # stage_sec as each thread's own wall
                 def _adopt() -> None:
                     tt = time.time()
                     if ("updatedb", batch_id) not in self.store.committed_ops():
@@ -567,8 +582,8 @@ class RoundDriver:
 
                 def _urlseen_merge() -> None:
                     tt = time.time()
-                    # Bloom OR is idempotent: re-merging the same keys
-                    # is a no-op
+                    # a batch the URL-seen manifest already lists is
+                    # skipped, so a resumed round does not replay it
                     self.urlseen.merge_round(
                         merge_rows.select("url_hash"), "url_hash", batch_id
                     )

@@ -270,12 +270,15 @@ class NutchMasterServer:
     def _frontier_view(self, crawl_id: str):
         """The crawl's frontier, MOR-resolved and persisted once per
         store version, or None when the crawl has no store yet. A hit
-        reads only ``_VERSION``; a miss (new version, evicted view)
-        builds the view under the lock, so concurrent first queries
-        after a commit resolve it once, and releases the old one.
+        reads only the store's manifest (``_VERSION``); a miss (new
+        version, evicted view) builds the view under the lock, so
+        concurrent first queries after a commit resolve it once, and
+        releases the old one. Opening the store and planning the view
+        take the layout and schema from the manifest, not from Spark.
 
-        The view's lineage reads the snapshot files of its version, so
-        snapshot expiry must pin the version a cached view holds."""
+        The view reads the snapshot files its version's manifest
+        lists, so snapshot expiry must pin the version a cached view
+        holds."""
         from ..store.frontier import ParquetFrontierStore
 
         entry = self._views.get(crawl_id)
@@ -298,8 +301,6 @@ class NutchMasterServer:
             # tag the view with the version read() resolved: unchanged
             # across the call means no commit landed inside it
             version = store.current_version()
-            if version < 0:
-                return None
             while True:
                 view = store.read()
                 before, version = version, store.current_version()

@@ -6,8 +6,10 @@ the Spark analog of the reference's Gora/HBase web table
 Two implementations behind one interface:
 
 - :class:`ParquetFrontierStore` — **merge-on-read** over versioned
-  parquet snapshots with an atomic version pointer and a lineage log
-  per version. ``merge`` appends the update rows as a *delta*
+  parquet snapshots described by one manifest, ``_VERSION`` (current
+  version, bucket count, table schema and every snapshot's lineage),
+  swapped in atomically on each commit; no metadata question costs a
+  Spark job. ``merge`` appends the update rows as a *delta*
   snapshot (cost O(updates), never O(frontier) — the r1 copy-on-write
   form rewrote the full table every round, the measured scale-killer).
   One resolver, ``_resolve``, reconstructs the table as
@@ -19,7 +21,7 @@ Two implementations behind one interface:
   deltas are small, and AQE falls back to a shuffle join when they
   grow. ``read`` resolves every bucket, ``read_host`` one host bucket
   and ``compact`` the delta-touched buckets, each through that one
-  resolver. When total delta rows exceed ``compact_ratio`` × base
+  resolver. When total delta rows exceed ``COMPACT_RATIO`` × base
   rows (or the delta count or broadcast gate is exceeded),
   ``compact()`` materializes the merged view as a new base — amortized
   O(frontier) every ~1/ratio rounds instead of every round.
@@ -39,7 +41,7 @@ Two implementations behind one interface:
 
 Scale note (100 TB / 10^10 rows): per-round write cost is O(updates);
 per-read overhead is one anti-join whose build side is the delta key
-set (≤ compact_ratio × base). At the reference's sizing (10^7 new
+set (≤ COMPACT_RATIO × base). At the reference's sizing (10^7 new
 URLs/round against 10^10 stored) the delta keys broadcast and the MOR
 read is within noise of a plain scan.
 """
@@ -51,8 +53,35 @@ import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: the store's one metadata file, swapped in atomically on each commit:
+#: ``{version, committed_at, host_buckets, schema, snapshots: [lineage, ...]}``
+_MANIFEST = "_VERSION"
+
+
+def _read_manifest(path: str) -> dict | None:
+    """The manifest of the store at ``path``, or None before its first
+    commit."""
+    try:
+        with open(os.path.join(path, _MANIFEST)) as f:
+            man = json.load(f)
+    except FileNotFoundError:
+        return None
+    if "snapshots" not in man:
+        raise ValueError(
+            f"frontier store at {path} was written before the single-manifest "
+            f"layout ({_MANIFEST} lists no snapshots); re-inject into a new store"
+        )
+    return man
+
+
+def _is_part(filename: str) -> bool:
+    """A parquet part file, as Spark names the data files it writes."""
+    return filename.startswith("part-") and filename.endswith(".parquet")
 
 
 class FrontierStore:
@@ -76,124 +105,127 @@ class ParquetFrontierStore(FrontierStore):
     #: grow without limit
     MAX_DELTA_SNAPSHOTS = 8
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        host_buckets: int = 64,
-        compact_ratio: float = 4.0,
-    ):
+    #: MOR compaction threshold: materialize a new base when total
+    #: delta rows exceed this multiple of the base rows. Lower = cheaper
+    #: reads, more rewrite; higher = cheaper writes, heavier MOR scans.
+    #: During crawl expansion any ratio compacts at a geometric cadence,
+    #: which amortizes to O(1) rewrites per doubling of the frontier —
+    #: but at 0.5 the expansion phase (updates ≈ base each round)
+    #: compacted EVERY round, i.e. degraded to copy-on-write; measured
+    #: A/B at the bench config: 4.0 cut round time ~17% (one compaction
+    #: per 3 rounds instead of 3). Reads stay cheap across the extra
+    #: deltas because the MOR anti-join broadcast-hints the delta key
+    #: set; MAX_DELTA_SNAPSHOTS bounds the read plan's delta fan-in
+    #: regardless of ratio.
+    COMPACT_RATIO = 4.0
+
+    def __init__(self, spark: SparkSession, path: str, host_buckets: int = 64):
         self.spark = spark
         self.path = path
         self.host_buckets = host_buckets
-        self.compact_ratio = compact_ratio
-        os.makedirs(path, exist_ok=True)
         # the bucket count is part of the on-disk layout: reopening an
         # existing store with a different host_buckets would make
         # bucket-pruned reads and incremental compaction resolve against
         # the wrong partitions (silently dropping rows with bucket ids
-        # >= the new count). Persist it on first open and hard-fail on
-        # mismatch ever after.
-        meta_file = os.path.join(path, "_STORE_META.json")
-        if os.path.exists(meta_file):
-            with open(meta_file) as f:
-                meta = json.load(f)
-            disk_buckets = int(meta.get("host_buckets", -1))
-            if disk_buckets != host_buckets:
-                raise ValueError(
-                    f"frontier store at {path} was created with "
-                    f"host_buckets={disk_buckets}; reopening with "
-                    f"host_buckets={host_buckets} would corrupt bucket-"
-                    f"pruned reads and compaction. Pass the original value."
-                )
-        else:
-            with open(meta_file, "w") as f:
-                json.dump(
-                    {
-                        "host_buckets": host_buckets,
-                        "bucket_scheme": "pmod(xxhash64(host), host_buckets)",
-                    },
-                    f,
-                )
+        # >= the new count). The manifest records it; hard-fail on a
+        # mismatch.
+        man = _read_manifest(path)
+        if man is not None and man["host_buckets"] != host_buckets:
+            raise ValueError(
+                f"frontier store at {path} was created with "
+                f"host_buckets={man['host_buckets']}; reopening with "
+                f"host_buckets={host_buckets} would corrupt bucket-"
+                f"pruned reads and compaction. Pass the original value."
+            )
 
     @classmethod
     def open(cls, spark: SparkSession, path: str):
         """Open an existing store adopting its recorded on-disk layout
         (pure readers — e.g. the REST /db endpoint — must not need to
         know the writer's host_buckets). Creates nothing on disk."""
-        meta_file = os.path.join(path, "_STORE_META.json")
-        if not os.path.exists(meta_file):
+        man = _read_manifest(path)
+        if man is None:
             raise FileNotFoundError(f"no frontier store at {path}")
-        with open(meta_file) as f:
-            meta = json.load(f)
-        return cls(spark, path, int(meta["host_buckets"]))
+        return cls(spark, path, man["host_buckets"])
 
-    # -- version bookkeeping ------------------------------------------
-    @property
-    def _version_file(self) -> str:
-        return os.path.join(self.path, "_VERSION")
+    # -- version bookkeeping: every answer is one manifest read ------------
+    def _committed(self) -> dict:
+        man = _read_manifest(self.path)
+        if man is None:
+            raise FileNotFoundError(f"frontier not initialized at {self.path}")
+        return man
 
     def current_version(self) -> int:
-        try:
-            with open(self._version_file) as f:
-                return int(json.load(f)["version"])
-        except FileNotFoundError:
-            return -1
-
-    def _snapshot_dir(self, version: int) -> str:
-        return os.path.join(self.path, f"v{version:06d}")
+        man = _read_manifest(self.path)
+        return -1 if man is None else man["version"]
 
     def _data_dir(self, version: int) -> str:
-        return os.path.join(self._snapshot_dir(version), "data")
+        return os.path.join(self.path, f"v{version:06d}", "data")
 
     def lineage(self, version: int | None = None) -> dict:
-        v = self.current_version() if version is None else version
-        with open(os.path.join(self._snapshot_dir(v), "_LINEAGE.json")) as f:
-            return json.load(f)
+        man = self._committed()
+        return man["snapshots"][man["version"] if version is None else version]
 
     def lineage_chain(self) -> list[dict]:
         """All committed lineages, oldest first."""
-        return [self.lineage(v) for v in range(self.current_version() + 1)]
+        man = _read_manifest(self.path)
+        return [] if man is None else man["snapshots"]
 
     def committed_ops(self) -> set[tuple[str, str | None]]:
         """(op, batch_id) pairs already committed — the idempotency
         check a resumed round uses to skip a re-merge."""
         return {(ln.get("op"), ln.get("batch_id")) for ln in self.lineage_chain()}
 
-    def _commit(self, version: int, lineage: dict, kind: str) -> dict:
-        """Stamp the written snapshot's lineage (version, kind, row
-        count) and swap the version pointer; returns the lineage."""
+    @staticmethod
+    def _footer_rows(data_dir: str) -> int:
+        """Rows in a snapshot, summed from its part files' parquet
+        footers on the driver (no Spark job)."""
+        return sum(
+            pq.read_metadata(os.path.join(root, fn)).num_rows
+            for root, _, files in os.walk(data_dir)
+            for fn in files
+            if _is_part(fn)
+        )
+
+    def _commit(
+        self, version: int, lineage: dict, kind: str, schema: T.StructType | None = None
+    ) -> dict:
+        """Append the written snapshot's lineage (version, kind, row
+        count) to the manifest and swap it in; ``init`` passes the
+        table schema. Returns the lineage."""
         lineage = dict(lineage)
         lineage["version"] = version
         lineage["kind"] = kind
-        # parquet-metadata count (no data scan)
-        lineage["rows"] = self.spark.read.parquet(self._data_dir(version)).count()
-        with open(os.path.join(self._snapshot_dir(version), "_LINEAGE.json"), "w") as f:
-            json.dump(lineage, f, indent=2)
-        tmp = self._version_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "committed_at": time.time()}, f)
-        os.replace(tmp, self._version_file)  # atomic pointer swap
+        lineage["rows"] = self._footer_rows(self._data_dir(version))
+        prev = _read_manifest(self.path) or {"snapshots": []}
+        man = {
+            "version": version,
+            "committed_at": time.time(),
+            "host_buckets": self.host_buckets,
+            "schema": schema.jsonValue() if schema is not None else prev["schema"],
+            "snapshots": prev["snapshots"] + [lineage],
+        }
+        out = os.path.join(self.path, _MANIFEST)
+        with open(out + ".tmp", "w") as f:
+            json.dump(man, f)
+        os.replace(out + ".tmp", out)  # atomic manifest swap
         return lineage
 
-    def _layout(self) -> tuple[dict, list[dict]]:
-        """(base lineage, delta lineages since it), from one pass over
-        the chain. The base is the most recent snapshot with kind ==
-        'base'. Every read and write path starts here, so an
+    def _layout(self) -> tuple[T.StructType, dict, list[dict]]:
+        """(table schema, base lineage, delta lineages since it), from
+        one manifest read. The base is the most recent snapshot with
+        kind == 'base'. Every read and write path starts here, so an
         uninitialized store fails the same way everywhere."""
-        chain = self.lineage_chain()
-        if not chain:
-            raise FileNotFoundError(f"frontier not initialized at {self.path}")
+        man = self._committed()
+        chain = man["snapshots"]
         base = chain[0]
         for ln in chain:
-            if ln.get("kind", "base") == "base":
+            if ln["kind"] == "base":
                 base = ln
         deltas = [
-            ln
-            for ln in chain
-            if ln["version"] > base["version"] and ln.get("kind") == "delta"
+            ln for ln in chain if ln["version"] > base["version"] and ln["kind"] == "delta"
         ]
-        return base, deltas
+        return T.StructType.fromJson(man["schema"]), base, deltas
 
     # -- merge-on-read resolution -----------------------------------------
     def _bucket(self, col: Column) -> Column:
@@ -202,25 +234,21 @@ class ParquetFrontierStore(FrontierStore):
     def with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn("host_bucket", self._bucket(F.col("host")))
 
-    def _read_base(self, base: dict) -> DataFrame:
-        df = self.spark.read.parquet(self._data_dir(base["version"]))
-        if "_tombstone" in df.columns:  # never true after compaction
-            df = df.filter(~F.col("_tombstone")).drop("_tombstone")
-        return df
+    def _read_base(self, schema: T.StructType, base: dict) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(self._data_dir(base["version"]))
 
-    def _delta_union(self, deltas: list[dict]) -> DataFrame:
+    def _delta_union(self, schema: T.StructType, deltas: list[dict]) -> DataFrame:
         """Every delta snapshot since the base in one union, each row
-        tagged with its version and a ``_tombstone`` flag."""
+        tagged with its version and a ``_tombstone`` flag (null in the
+        snapshots that carry no tombstones)."""
+        schema = T.StructType(schema.fields + [T.StructField("_tombstone", T.BooleanType())])
         dl = None
         for ln in deltas:
             dv = ln["version"]
-            d = self.spark.read.parquet(self._data_dir(dv)).withColumn(
-                "_delta_v", F.lit(dv)
-            )
-            if "_tombstone" not in d.columns:
-                d = d.withColumn("_tombstone", F.lit(False))
+            d = self.spark.read.schema(schema).parquet(self._data_dir(dv))
+            d = d.withColumn("_delta_v", F.lit(dv))
             dl = d if dl is None else dl.unionByName(d)
-        return dl
+        return dl.withColumn("_tombstone", F.coalesce("_tombstone", F.lit(False)))
 
     @staticmethod
     def _has_hostless_tombstone(dl: DataFrame) -> bool:
@@ -266,16 +294,16 @@ class ParquetFrontierStore(FrontierStore):
         CHEAPER than building + reading a block cache (measured: the
         unconditional per-round persist cost ~1.5x per-shard slowdown
         under 4-way executor concurrency on the scaling bench)."""
-        return bool(self._layout()[1])
+        return bool(self._layout()[2])
 
     def read(self) -> DataFrame:
         """The current table: the base scan, MOR-resolved against every
         delta since it."""
-        base_ln, deltas = self._layout()
-        base = self._read_base(base_ln)
+        schema, base_ln, deltas = self._layout()
+        base = self._read_base(schema, base_ln)
         if not deltas:
             return base
-        return self._resolve(base, self._delta_union(deltas), deltas)
+        return self._resolve(base, self._delta_union(schema, deltas), deltas)
 
     def read_host(self, host: str) -> DataFrame:
         """Host-scoped MOR read that touches ONLY the host's bucket:
@@ -283,22 +311,25 @@ class ParquetFrontierStore(FrontierStore):
         reversed-key range-scan analog, CrawlFilters.java:147-175) and
         delta resolution filters to the same bucket. Falls back to the
         full read when any delta carries a host-less tombstone."""
-        base_ln, deltas = self._layout()
+        schema, base_ln, deltas = self._layout()
         bucket = self.spark.range(1).select(self._bucket(F.lit(host)).alias("b"))
         in_bucket = F.col("host_bucket") == bucket.collect()[0]["b"]
-        rows = self._read_base(base_ln).filter(in_bucket)
+        rows = self._read_base(schema, base_ln).filter(in_bucket)
         if deltas:
-            dl = self._delta_union(deltas)
+            dl = self._delta_union(schema, deltas)
             if self._has_hostless_tombstone(dl):
-                rows = self._resolve(self._read_base(base_ln), dl, deltas)
+                rows = self._resolve(self._read_base(schema, base_ln), dl, deltas)
             else:
                 rows = self._resolve(rows, dl.filter(in_bucket), deltas)
         return rows.filter(F.col("host") == host)
 
     # -- operations ------------------------------------------------------
     def init(self, df: DataFrame, lineage: dict | None = None) -> int:
+        """Write ``df`` as the base snapshot; its bucketed schema
+        becomes the table schema every later read and write uses."""
+        df = self.with_bucket(df.drop("host_bucket"))
         return self._write_snapshot(
-            self.with_bucket(df), dict(lineage or {"op": "init"}), kind="base"
+            df, dict(lineage or {"op": "init"}), kind="base", schema=df.schema
         )["version"]
 
     @staticmethod
@@ -310,33 +341,32 @@ class ParquetFrontierStore(FrontierStore):
             .parquet(out)
         )
 
-    def _write_snapshot(self, df: DataFrame, lineage: dict, kind: str) -> dict:
+    def _write_snapshot(
+        self, df: DataFrame, lineage: dict, kind: str, schema: T.StructType | None = None
+    ) -> dict:
         v = self.current_version() + 1
         self._write_buckets(df, self._data_dir(v))
-        return self._commit(v, lineage, kind)
+        return self._commit(v, lineage, kind, schema)
 
     @staticmethod
-    def _link_parts(src: str, dst: str) -> int:
+    def _link_parts(src: str, dst: str) -> None:
         """Hard-link (copy across filesystems) every parquet part file
-        of ``src`` into ``dst``; returns how many."""
+        of ``src`` into ``dst``."""
         os.makedirs(dst, exist_ok=True)
-        linked = 0
         for fn in os.listdir(src):
-            if not (fn.startswith("part-") and fn.endswith(".parquet")):
+            if not _is_part(fn):
                 continue
             try:
                 os.link(os.path.join(src, fn), os.path.join(dst, fn))
             except OSError:
                 shutil.copy2(os.path.join(src, fn), os.path.join(dst, fn))
-            linked += 1
-        return linked
 
     def _maybe_compact(self, base: dict, deltas: list[dict]) -> None:
         """Compaction trigger after a delta commit (``deltas`` includes
         the new one): row ratio, snapshot count, or broadcast gate."""
         delta_rows = sum(ln.get("rows", 0) for ln in deltas)
         if (
-            delta_rows > self.compact_ratio * max(base.get("rows", 0), 1)
+            delta_rows > self.COMPACT_RATIO * max(base.get("rows", 0), 1)
             or len(deltas) > self.MAX_DELTA_SNAPSHOTS
             # keep the MOR read on the broadcast anti-join path: once
             # accumulated delta keys outgrow the broadcast gate, every
@@ -351,9 +381,8 @@ class ParquetFrontierStore(FrontierStore):
         shadowing happens at read (MOR). ``updates`` must carry
         complete frontier-schema rows; the merge itself is mechanical
         so update logic stays in the operators."""
-        base_ln, deltas = self._layout()
-        cols = self.spark.read.parquet(self._data_dir(base_ln["version"])).columns
-        updates = self.with_bucket(updates.drop("host_bucket")).select(*cols)
+        schema, base_ln, deltas = self._layout()
+        updates = self.with_bucket(updates.drop("host_bucket")).select(*schema.names)
         new = self._write_snapshot(
             updates, dict(lineage or {"op": "merge"}), kind="delta"
         )
@@ -366,54 +395,47 @@ class ParquetFrontierStore(FrontierStore):
         snapshot by hard-linking its part files — no second shuffle,
         no second write of the same rows. Iceberg's add_files analog.
 
-        Requirements: the directory's schema must carry every store
+        Requirements: the directory's part files must carry every store
         column including a ``host_bucket`` computed with THIS store's
         bucket count (callers use :meth:`with_bucket` before writing
-        the artifact). Raises ValueError otherwise; :meth:`merge`
-        rebuckets.
+        the artifact and :meth:`stamp_bucketing` after). Raises
+        ValueError otherwise; :meth:`merge` rebuckets. The checks read
+        the stamp and one part file's footer, so adopting the artifact
+        runs no Spark job.
 
         Scale note: this is the difference between writing the round's
         updates once vs twice; at 10^10 rows the delta write is pure
         I/O, so halving it halves the updatedb tail."""
-        base_ln, deltas = self._layout()
-        cols = set(self.spark.read.parquet(self._data_dir(base_ln["version"])).columns)
-        src = self.spark.read.parquet(data_dir)
-        if not cols <= set(src.columns):
-            missing = cols - set(src.columns)
-            raise ValueError(f"merge_linked: artifact missing columns {missing}")
+        schema, base_ln, deltas = self._layout()
         # the artifact's host_bucket values must have been computed with
         # THIS store's bucket count — a stale resume artifact with a
         # different bucketing would pass the column check but poison
         # bucket-pruned reads and incremental compaction. Writers stamp
-        # the count via stamp_bucketing(); unstamped artifacts get a
-        # bounded sample recheck instead of blind trust.
+        # the count via stamp_bucketing(); an unstamped artifact is
+        # refused.
         stamp = os.path.join(data_dir, "_WNS_BUCKETING.json")
-        if os.path.exists(stamp):
-            with open(stamp) as f:
-                artifact_buckets = int(json.load(f).get("host_buckets", -1))
-            if artifact_buckets != self.host_buckets:
-                raise ValueError(
-                    f"merge_linked: artifact bucketed with host_buckets="
-                    f"{artifact_buckets}, store uses {self.host_buckets}; "
-                    f"use merge() to rebucket"
-                )
-        else:
-            mismatch = (
-                src.filter(F.col("host").isNotNull())
-                .limit(1024)
-                .filter(F.col("host_bucket") != self._bucket(F.col("host")))
-                .limit(1)
-                .count()
+        if not os.path.exists(stamp):
+            raise ValueError(
+                f"merge_linked: {data_dir} carries no bucketing stamp "
+                "(stamp_bucketing); use merge() to rebucket"
             )
-            if mismatch:
-                raise ValueError(
-                    "merge_linked: artifact host_bucket values do not match "
-                    f"this store's bucketing (host_buckets={self.host_buckets}); "
-                    "use merge() to rebucket"
-                )
-        v = self.current_version() + 1
-        if not self._link_parts(data_dir, self._data_dir(v)):
+        with open(stamp) as f:
+            artifact_buckets = int(json.load(f).get("host_buckets", -1))
+        if artifact_buckets != self.host_buckets:
+            raise ValueError(
+                f"merge_linked: artifact bucketed with host_buckets="
+                f"{artifact_buckets}, store uses {self.host_buckets}; "
+                f"use merge() to rebucket"
+            )
+        parts = sorted(fn for fn in os.listdir(data_dir) if _is_part(fn))
+        if not parts:
             raise ValueError(f"merge_linked: no part files in {data_dir}")
+        footer = pq.read_schema(os.path.join(data_dir, parts[0]))
+        missing = set(schema.names) - set(footer.names)
+        if missing:
+            raise ValueError(f"merge_linked: artifact missing columns {missing}")
+        v = self.current_version() + 1
+        self._link_parts(data_dir, self._data_dir(v))
         meta = dict(lineage or {"op": "merge"})
         meta["linked_from"] = data_dir
         new = self._commit(v, meta, kind="delta")
@@ -445,8 +467,7 @@ class ParquetFrontierStore(FrontierStore):
         (``store/cuckoo.py``, cfg.urlseen_backend="cuckoo") supports
         true deletion — call its ``delete_round`` with the same keys
         so the pre-screen's selectivity recovers too."""
-        base_ln, _ = self._layout()
-        schema = self.spark.read.parquet(self._data_dir(base_ln["version"])).schema
+        schema, _, _ = self._layout()
         has_host = "host" in keys.columns
         tomb = keys.select("url_hash", *(["host"] if has_host else []))
         for field in schema.fields:
@@ -477,12 +498,12 @@ class ParquetFrontierStore(FrontierStore):
         the periodic compaction spike shrinks with update locality
         instead of scaling with the table. Falls back to the full
         rewrite when every bucket is touched."""
-        base_ln, deltas = self._layout()
+        schema, base_ln, deltas = self._layout()
         if not deltas:
-            return self.current_version()
+            return base_ln["version"]
         meta = dict(lineage or {"op": "compact"})
-        dl = self._delta_union(deltas)
-        base = self._read_base(base_ln)
+        dl = self._delta_union(schema, deltas)
+        base = self._read_base(schema, base_ln)
         if self._has_hostless_tombstone(dl):
             return self._write_snapshot(
                 self._resolve(base, dl, deltas), meta, kind="base"
@@ -498,7 +519,7 @@ class ParquetFrontierStore(FrontierStore):
         # derive untouched buckets from the base directory listing, not
         # range(host_buckets): the listing is ground truth for what the
         # base actually holds, so even a bucket-count drift that slipped
-        # past the _STORE_META guard cannot silently drop partitions
+        # past the manifest's guard cannot silently drop partitions
         base_listed = sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(base_dir)

@@ -108,7 +108,14 @@ class BloomUrlSeen:
 
         Executors each build the delta bitmap for one pid group; the
         OR-merge with the existing on-disk bitmap also happens in the
-        executor task (the driver never holds bitmaps)."""
+        executor task (the driver never holds bitmaps). The bits are
+        idempotent but the manifest's round list and ``items`` count
+        are not, so a batch_id the manifest already lists is a no-op
+        (a resumed round replaying its merge). A caller that merges new
+        keys under a reused name (a second inject) must make the id
+        unique, e.g. by the store version it committed."""
+        if any(r.get("batch_id") == batch_id for r in self.manifest()["rounds"]):
+            return  # resume replay: already applied
         path, m, k = self.path, self.m, self.k
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -101,14 +101,17 @@ def run_ingest(
             current = store.read()
         except FileNotFoundError:
             store.init(rows, {"op": "stream-init", "stream_batch": batch_id})
-            if urlseen is not None:
-                urlseen.merge_round(rows.select("url_hash"), "url_hash", f"stream-{batch_id}")
-            return
-        new_rows = rows.join(current.select("url_hash"), on="url_hash", how="left_anti")
-        store.merge(new_rows, {"op": "stream-ingest", "stream_batch": batch_id})
+            new_rows = rows
+        else:
+            new_rows = rows.join(current.select("url_hash"), on="url_hash", how="left_anti")
+            store.merge(new_rows, {"op": "stream-ingest", "stream_batch": batch_id})
         if urlseen is not None:
+            # micro-batch ids restart under a new checkpoint, and URL-seen
+            # skips a batch id it already lists: key the merge by the
+            # store version this batch committed
             urlseen.merge_round(
-                new_rows.select("url_hash"), "url_hash", f"stream-{batch_id}"
+                new_rows.select("url_hash"), "url_hash",
+                f"stream-{batch_id}@v{store.current_version()}",
             )
 
     writer = (
