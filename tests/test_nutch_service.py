@@ -242,3 +242,20 @@ def test_error_paths(client, master):
     with pytest.raises(urllib.error.HTTPError) as ei:
         client.db_query(crawlId="stagecrawl", startKey="not a url")
     assert ei.value.code == 400
+
+
+def test_create_right_after_finished_is_admitted(spark, tmp_path, monkeypatch):
+    """A job reads FINISHED only once its worker has closed the driver
+    and reset the job group, so the next job on the same config is
+    admitted at once even when that cleanup is slow."""
+    from warps_nutch_spark.service.jobs import ConfManager, JobManager
+
+    monkeypatch.setattr(RoundDriver, "close", lambda self: time.sleep(0.3))
+    monkeypatch.setattr(JobManager, "_execute", lambda self, info, drv, stop: {"ok": True})
+    jobs = JobManager(spark, str(tmp_path), ConfManager(), web_params=WEB)
+    for _ in range(3):
+        jid = jobs.create({"type": "READDB", "args": {}})
+        deadline = time.time() + 30
+        while jobs.get(jid)["state"] in ("IDLE", "RUNNING") and time.time() < deadline:
+            time.sleep(0.005)
+        assert jobs.get(jid)["state"] == "FINISHED"

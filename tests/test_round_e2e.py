@@ -215,3 +215,36 @@ def test_overlapped_failures_all_surface(spark, tmp_path):
         drv._run_overlapped(bad_io, ok, bad_value)
     assert {type(e) for e in info.value.exceptions} == {OSError, ValueError}
     assert ran == ["ok", "ok"]  # every action ran to the end
+
+
+def test_overlapped_actions_run_in_the_callers_job_group(spark, tmp_path):
+    """Pool-thread jobs carry the caller's job group, so a REST KILL
+    (cancelJobGroup) reaches the overlapped post-write actions."""
+    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(), WEB, START)
+    sc = spark.sparkContext
+    group = "overlapped-job-group"
+    sc.setJobGroup(group, "overlapped actions")
+    try:
+        drv._run_overlapped(
+            lambda: spark.range(10).count(), lambda: spark.range(20).collect()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
+def test_overlapped_actions_run_without_pinned_threads(spark, tmp_path, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false the gateway is not a ClientServer and
+    inheritable_thread_target(session) returns the session; the overlapped
+    actions must still run."""
+    import py4j.clientserver
+
+    monkeypatch.setattr(py4j.clientserver, "ClientServer", type("Unpinned", (), {}))
+    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(), WEB, START)
+    out: list[int] = []
+    drv._run_overlapped(
+        lambda: out.append(spark.range(10).count()),
+        lambda: out.append(len(spark.range(20).collect())),
+    )
+    assert sorted(out) == [10, 20]

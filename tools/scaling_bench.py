@@ -162,10 +162,11 @@ the bandwidth ceiling scales with node count.
 Notes:
 - Politeness delays are virtual-clock, so wall time measures engine
   work (shuffles, pandas UDF batches, merge writes), not sleeps.
-- Python-heavy stages (politeness fetch engine, decode) pin their
-  partition counts so parallelism follows cores, not shuffle bytes
-  (see plans/round.py::python_stage_parallelism) — this is what makes
-  the 8 -> 32 scaling visible at all on byte-small inputs.
+- The Python-heavy fetch pass (politeness engine + decode) repartitions
+  by number to spark.sql.shuffle.partitions, which AQE never
+  coalesces, so parallelism follows cores, not shuffle bytes (see
+  operators/fetch.py::fetch) — this is what makes the 8 -> 32 scaling
+  visible at all on byte-small inputs.
 - Per-round stage timings are in each run's `per_round[].stage_sec`.
 
 Raw JSON:

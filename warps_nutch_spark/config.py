@@ -135,14 +135,12 @@ class CrawlConfig:
     # nutch-default.xml:603-605): the politeness-queue unit — byHost
     # (default) or byDomain (byIP needs DNS, n/a in the sandbox)
     partition_mode: str = "host"
-    # partition.url.seed analog (URLPartitioner.java:101-103): per-round
-    # seed XOR'd into the host hash so a hot host moves between
-    # partitions across rounds.
-    partition_seed: int = 42
     # number of host-hash buckets the frontier is written under
     # (partition pruning analog of the reversed-key range scan)
     host_buckets: int = 64
-    # salt factor for payload-parallel stages (never the politeness UDF)
+    # salt factor for payload-parallel stages. The round no longer reads
+    # it (decode runs inside the fetch pass); kept because the benchmark
+    # config sets it, and to be removed with the next benchmark change.
     salt_factor: int = 8
 
     # --- URL-seen filter (north_rule: "Bloom/cuckoo") -------------------

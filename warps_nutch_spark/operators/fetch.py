@@ -32,10 +32,17 @@ concurrency model. The invariants that survive are:
   limit never reached being returned untouched (the FeederThread
   drain at ``fetch/FeederThread.java:126-140``).
 
+The same group call decodes the payloads it has just rendered
+(``parse.decode_payloads``; the reference fork's parse inside the
+fetch reducer, ``TaskScheduler.java:777-835``), so each payload makes
+one trip through Python and the fetch result carries the parse columns.
+
 Skew note: group size per host is bounded by generate.max_per_host,
-so one hot host cannot dominate a task. Hosts themselves are spread
-across tasks by Spark's hash of the group key; the per-round
-partition seed ships in the config for the stages that salt.
+so one hot host cannot dominate a task. Hosts are spread across tasks
+by an explicit ``repartition(spark.sql.shuffle.partitions, queue
+key)``: AQE coalesces shuffles by bytes and would pack the
+byte-small, Python-heavy groups onto one or two tasks, but it never
+coalesces a repartition by number.
 
 The protocol here is the deterministic SimWeb (the sandbox has no
 network); a production deployment swaps ``_simulate_host`` for an
@@ -53,6 +60,7 @@ from pyspark.sql import types as T
 from .. import simweb as sw
 from ..config import CrawlConfig
 from ..functions.status import HTTP_TO_PROTOCOL, PROTOCOL_TO_CRAWL, CrawlStatus, ProtocolStatus
+from .parse import PARSE_FIELDS, decode_payloads
 
 # fetch output = the fetchlist columns we carry + result columns
 RESULT_EXTRA_FIELDS = [
@@ -101,6 +109,12 @@ def fetch_result_schema() -> T.StructType:
         T.StructField("is_seed", T.BooleanType()),
     ]
     return T.StructType(base + RESULT_EXTRA_FIELDS)
+
+
+def fetch_output_schema() -> T.StructType:
+    """What a fetch pass returns, native or crowd: the fetch result
+    plus the decode columns of each payload."""
+    return T.StructType(fetch_result_schema().fields + PARSE_FIELDS)
 
 
 def queue_spacing_cols(q_cd, q_mt, q_mcd, robots_delay, cfg: CrawlConfig):
@@ -263,7 +277,7 @@ def _make_fetch_group(cfg: CrawlConfig, web_params: tuple, round_start_ms: int):
         out["out_urls"] = outs
         out["fetched"] = fetched
         out["fetch_duration_ms"] = durations
-        return out
+        return out.join(decode_payloads(blobs))
 
     return fetch_group
 
@@ -279,8 +293,9 @@ def fetch(
 ) -> DataFrame:
     """Run the politeness engine. Returns fetch results (one row per
     fetchlist row; ``fetched`` False for rows the round budget never
-    reached). Mark-presence guard: only rows generated for this batch
-    are fetched (FetchMapper.java:102-106).
+    reached) with the decode columns (``PARSE_FIELDS``) of each
+    rendered payload. Mark-presence guard: only rows generated for
+    this batch are fetched (FetchMapper.java:102-106).
 
     ``host_config``: optional per-host queue overrides (columns
     ``host``, ``q_mt``, ``q_cd``, ``q_mcd`` — TasksMonitor.java:
@@ -315,7 +330,9 @@ def fetch(
     else:
         fl = fl.withColumn("_queue_key", F.col("host"))
     group_fn = _make_fetch_group(cfg, web_params, round_start_ms)
+    n_tasks = int(fl.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        fl.groupBy("_queue_key")
-        .applyInPandas(group_fn, schema=fetch_result_schema())
+        fl.repartition(n_tasks, "_queue_key")
+        .groupBy("_queue_key")
+        .applyInPandas(group_fn, schema=fetch_output_schema())
     )

@@ -2,28 +2,29 @@
 
 Reference mapping (SURVEY.md §2.5):
 - X1 parser dispatch by contentType (``parse/ParseUtil.java:83-148``)
-  -> a single vectorized decode over WNIM image bytes (the graft's
-  only content type), run via ``mapInPandas`` (Arrow batches);
+  -> a single decode over WNIM image bytes (the graft's only content
+  type), :func:`decode_payloads`, called by the fetch pass on the
+  payloads it renders (the reference fork parses inside the fetch
+  reducer, ``TaskScheduler.java:777-835``);
 - X2 outlink extraction (``parse/OutlinkExtractor.java``) -> outlinks
   already ride the fetch result (the protocol returns them, like DOM
   anchors); parse owns their post-processing;
 - X3 outlink normalize/filter/dedup/limit (``ParseUtil.java:196-274``)
-  -> pure built-ins AFTER the UDF: transform(canonicalize) + asset
-  suffix filter (js/css/jpg/png/jpeg/gif, line 236) + array_distinct
-  + slice(db.max.outlinks.per.page);
+  -> pure built-ins: transform(canonicalize) + asset suffix filter
+  (js/css/jpg/png/jpeg/gif, line 236) + array_distinct +
+  slice(db.max.outlinks.per.page);
 - X4 signature: md5 of raw content, fallback md5(url)
   (``crawl/MD5Signature.java:44-66``) -> ``F.md5`` on bytes; plus the
   image pHash per input_hint;
 - PARSE_MARK gate: only rows fetched in this batch are parsed
   (``ParserMapper.java:121-130``).
 
-The decode is the only Python-side work and it is Arrow-batched; all
-column logic after it is JVM-side.
+The decode runs in the fetch pass, so the fetch artifact already holds
+the parse columns and :func:`parse` runs no Python: it is one JVM-side
+projection of the gated fetch rows.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -66,46 +67,45 @@ def process_outlinks_col(out_urls, cfg: CrawlConfig):
     )
 
 
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Input batches carry ONLY (url_hash, bytes); output carries ONLY
-    (url_hash, parse columns) — the payload bytes never make the
-    Python -> JVM return trip (they rejoin JVM-side by url_hash).
-    This halves the Arrow traffic of the decode stage, which is
-    memory-bandwidth-bound, not CPU-bound."""
-    for pdf in batches:
-        n = len(pdf)
-        image_id = [None] * n
-        caption = [None] * n
-        phash = [None] * n
-        ws = [None] * n
-        hs = [None] * n
-        fmts = [None] * n
-        ok = [False] * n
-        for i, blob in enumerate(pdf["bytes"]):
-            if blob is None:
-                continue
-            try:
-                px, cap, w, h, fmt = codec.decode_full(bytes(blob))
-            except Exception:
-                continue  # truncated/corrupt content (F12 analog)
-            caption[i] = cap
-            phash[i] = codec.phash(px)
-            ws[i], hs[i], fmts[i] = w, h, fmt
-            ok[i] = True
-            if cap and cap.startswith("caption of "):
-                image_id[i] = cap.split(" ")[2]
-        yield pd.DataFrame(
-            {
-                "url_hash": pdf["url_hash"],
-                "image_id": pd.array(image_id, dtype="string"),
-                "caption": pd.array(caption, dtype="string"),
-                "phash": pd.array(phash, dtype="Int64"),
-                "w": pd.array(ws, dtype="Int32"),
-                "h": pd.array(hs, dtype="Int32"),
-                "fmt": pd.array(fmts, dtype="string"),
-                "decode_ok": ok,
-            }
-        )
+def decode_payloads(blobs) -> pd.DataFrame:
+    """Decode payload blobs into the :data:`PARSE_FIELDS` columns, one
+    row per blob in input order under a default index. A missing or
+    corrupt blob (F12 analog) gives null columns and ``decode_ok =
+    False``. The fetch pass calls this on the payloads it has just
+    rendered, and crowd mode on the bytes its workers submitted: it is
+    the only decode on the crawl path."""
+    n = len(blobs)
+    image_id = [None] * n
+    caption = [None] * n
+    phash = [None] * n
+    ws = [None] * n
+    hs = [None] * n
+    fmts = [None] * n
+    ok = [False] * n
+    for i, blob in enumerate(blobs):
+        if blob is None:
+            continue
+        try:
+            px, cap, w, h, fmt = codec.decode_full(bytes(blob))
+        except Exception:
+            continue  # truncated/corrupt content (F12 analog)
+        caption[i] = cap
+        phash[i] = codec.phash(px)
+        ws[i], hs[i], fmts[i] = w, h, fmt
+        ok[i] = True
+        if cap and cap.startswith("caption of "):
+            image_id[i] = cap.split(" ")[2]
+    return pd.DataFrame(
+        {
+            "image_id": pd.array(image_id, dtype="string"),
+            "caption": pd.array(caption, dtype="string"),
+            "phash": pd.array(phash, dtype="Int64"),
+            "w": pd.array(ws, dtype="Int32"),
+            "h": pd.array(hs, dtype="Int32"),
+            "fmt": pd.array(fmts, dtype="string"),
+            "decode_ok": ok,
+        }
+    )
 
 
 def parse(
@@ -113,56 +113,29 @@ def parse(
     cfg: CrawlConfig,
     batch_id: str,
 ) -> DataFrame:
-    """Returns fetch rows + parse columns + processed ``outlinks``
+    """Returns the gated fetch rows (decode columns included) +
+    ``new_signature``, ``parsed_batch`` and processed ``outlinks``
     array<struct<url,anchor>>. Non-success rows pass through with null
     parse columns (their redirect outlinks still get processed)."""
     gated = fetch_results.filter(
         (F.col("batch_id") == batch_id) & F.col("fetched")
     )
-    # Python sees only (url_hash, bytes): distribute decode evenly
-    # (salt within host is fine post-fetch) with an explicit partition
-    # count so AQE's byte-based view can't serialize the Python stage
-    n_parts = max(cfg.salt_factor * 16, 32)
-    decode_in = gated.select("url_hash", "bytes").repartition(
-        n_parts, F.xxhash64("url_hash", F.lit(cfg.partition_seed))
-    )
-    parse_schema = T.StructType(
-        [T.StructField("url_hash", T.StringType())] + PARSE_FIELDS
-    )
-    parse_cols = decode_in.mapInPandas(_decode_batches, schema=parse_schema)
-    # bytes + carry columns rejoin JVM-side. parse_cols is bounded by
-    # the fetchlist (<= topN rows, ~100 bytes each): broadcast it while
-    # topN is comfortably under the broadcast limit so the payload
-    # bytes are never shuffled again; at the reference's big-cluster
-    # sizing (topN = 10k x slaves) fall back to a shuffle join on
-    # url_hash and let AQE pick the strategy.
-    if cfg.top_n * 100 <= 512 * 1024 * 1024:
-        parse_cols = F.broadcast(parse_cols)
-    decoded = gated.join(parse_cols, on="url_hash", how="left")
-
-    # X4 signature: md5(bytes) (NULL when no content — the old
-    # `signature` column still holds the frontier's previous value,
-    # which updatedb needs for the modified-state compare)
-    decoded = decoded.withColumn(
-        "new_signature",
-        F.when(F.col("bytes").isNotNull(), F.md5(F.col("bytes"))).otherwise(
-            F.lit(None).cast("string")
-        ),
-    )
-
-    # X3 outlink pipeline, all JVM-side
-    processed = (
-        decoded.withColumn("out_canon", process_outlinks_col(F.col("out_urls"), cfg))
-        .withColumn(
-            "outlinks",
-            F.transform(
-                F.col("out_canon"),
+    return gated.withColumns(
+        {
+            # X4 signature: md5(bytes) (NULL when no content — the old
+            # `signature` column still holds the frontier's previous
+            # value, which updatedb needs for the modified-state compare)
+            "new_signature": F.when(
+                F.col("bytes").isNotNull(), F.md5(F.col("bytes"))
+            ).otherwise(F.lit(None).cast("string")),
+            # X3 outlink pipeline
+            "outlinks": F.transform(
+                process_outlinks_col(F.col("out_urls"), cfg),
                 lambda u: F.struct(u.alias("url"), F.lit("").alias("anchor")),
             ),
-        )
-        .drop("out_canon")
+            "parsed_batch": F.lit(batch_id),
+        }
     )
-    return processed.withColumn("parsed_batch", F.lit(batch_id))
 
 
 def payload_rows(parsed: DataFrame) -> DataFrame:

@@ -28,7 +28,6 @@ import json
 import logging
 import os
 import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,22 +81,6 @@ def unreachable_hosts(spark: SparkSession, workdir: str, cfg: CrawlConfig) -> Da
         return None
     hosts = spark.read.parquet(os.path.join(workdir, "hosts", versions[-1]))
     return hosts.filter(host_eviction_cond(cfg)).select("host")
-
-
-@contextmanager
-def python_stage_parallelism(spark: SparkSession):
-    """AQE coalesces shuffles by BYTES, which serializes Python-heavy
-    group stages (a 25k-row fetchlist is a few MB -> 2 tasks -> 2000
-    sequential politeness groups). Around pandas-UDF stage actions we
-    pin partition-coalescing off so parallelism follows cores, not
-    bytes; byte-based coalescing stays on for the JVM-side stages."""
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 class RoundDriver:
@@ -202,8 +185,18 @@ class RoundDriver:
             return
         from concurrent.futures import ThreadPoolExecutor
 
+        from py4j.clientserver import ClientServer
+        from pyspark import SparkContext, inheritable_thread_target
+
+        # In pinned-thread mode (PYSPARK_PIN_THREAD, on by default) each
+        # action carries the caller's local properties (job group,
+        # description), so a cancelJobGroup reaches the pool-thread jobs.
+        # Unpinned, Python threads have no JVM thread of their own to carry
+        # them, and inheritable_thread_target(session) returns the session.
+        pinned = isinstance(SparkContext._gateway, ClientServer)
+        wrap = inheritable_thread_target(self.spark) if pinned else (lambda f: f)
         with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-            futures = [pool.submit(fn) for fn in fns]
+            futures = [pool.submit(wrap(fn)) for fn in fns]
             errors: list[BaseException] = []
             for fut in futures:
                 try:
@@ -431,8 +424,7 @@ class RoundDriver:
                             fetchlist, self._robots_df(), self.cfg, now, batch_id,
                             self.web_params, host_config=self.host_config(),
                         )
-                    with python_stage_parallelism(self.spark):
-                        fetch_results = self._write_stage(res, batch_id, "fetch")
+                    fetch_results = self._write_stage(res, batch_id, "fetch")
                 # the host-state update and the fetch metrics both read
                 # the committed fetch artifact but are independent of
                 # each other: overlap the two actions (guide §2.6) so
@@ -472,27 +464,16 @@ class RoundDriver:
             # -- parse -----------------------------------------------------------
             t_p = time.time()
             if not self._done(batch_id, "parse"):
+                # a JVM projection of the fetch artifact, which already
+                # holds the payload bytes and their decode columns
+                full = parse_op.parse(fetch_results, self.cfg, batch_id)
                 if self._stage_data_ok(batch_id, "parse"):
                     parsed = self._read_stage(batch_id, "parse")  # resume: reuse
-                    if "bytes" in parsed.columns:
-                        # artifact from the pre-drop layout still carries the
-                        # payload bytes; keep the fetch artifact's copy as the
-                        # single source so the join below stays unambiguous
-                        parsed = parsed.drop("bytes")
                 else:
-                    parsed = parse_op.parse(fetch_results, self.cfg, batch_id)
-                    # the payload bytes already persist in the fetch
-                    # artifact — don't write them a second time here (the
-                    # payload projection below re-joins them by key)
-                    with python_stage_parallelism(self.spark):
-                        parsed = self._write_stage(
-                            parsed.drop("bytes"), batch_id, "parse"
-                        )
-                payloads = parse_op.payload_rows(
-                    parsed.join(
-                        fetch_results.select("url_hash", "bytes"), on="url_hash"
-                    )
-                )
+                    # the payload bytes persist in the fetch artifact
+                    # and the payload slice: not a third time here
+                    parsed = self._write_stage(full.drop("bytes"), batch_id, "parse")
+                payloads = parse_op.payload_rows(full)
                 # batch-keyed overwrite (not append): a resumed parse stage
                 # rewrites its own payload slice, never duplicates it
                 payloads.write.mode("overwrite").parquet(
@@ -550,9 +531,6 @@ class RoundDriver:
                     # store's delta snapshot (merge_linked below): the
                     # round's updates hit disk ONCE, not twice
                     merge_rows = self.store.with_bucket(merge_rows.drop("host_bucket"))
-                    # no pandas-UDF stage in the merge plan: let AQE coalesce
-                    # by bytes (the python_stage_parallelism pin here was
-                    # vestigial and cost ~1 s/round in tiny-task overhead)
                     merge_rows = self._write_stage(merge_rows, batch_id, "updatedb")
                 # record the bucket count the artifact was written with so
                 # merge_linked can reject a stale-layout artifact. A resume
@@ -660,7 +638,15 @@ class RoundDriver:
                     " fetch_duration_ms long, worker_id string"
                 ),
             )
-        return svc.ingest_fetch_results(tasks, denied, submitted, batch_id, now)
+        res = svc.ingest_fetch_results(tasks, denied, submitted, batch_id, now)
+
+        # one Python pass over the ingested rows, through the decode
+        # the native fetch pass runs per host group
+        def _decode(batches):
+            for pdf in batches:
+                yield pdf.join(parse_op.decode_payloads(pdf["bytes"]))
+
+        return res.mapInPandas(_decode, schema=fetch_op.fetch_output_schema())
 
     def _ensure_fetch_server(self):
         if getattr(self, "_fetch_server", None) is None:

@@ -219,13 +219,15 @@ class JobManager:
                     self._threads.pop(jid, None)
                     self._stop_flags.pop(jid, None)
             for info in self._jobs.values():
-                # a KILLED job's thread may still be unwinding (Spark
-                # cancellation is asynchronous); admission must wait for
-                # the worker to actually exit or two jobs could write
-                # the same workdir concurrently
+                # a KILLED job's thread may still be unwinding (abort()
+                # sets the state, and Spark cancellation is
+                # asynchronous); admission must wait for the worker to
+                # actually exit or two jobs could write the same
+                # workdir concurrently. Every other terminal state is
+                # published by the worker as its last act.
                 t = self._threads.get(info.id)
                 busy = info.state in (RUNNING, IDLE, STOPPING) or (
-                    t is not None and t.is_alive()
+                    info.state == KILLED and t is not None and t.is_alive()
                 )
                 if info.conf_id == conf_id and busy:
                     raise RuntimeError(
@@ -348,18 +350,13 @@ class JobManager:
                 return
             info.state = RUNNING
         drv = None
+        state, result, msg = FAILED, None, ""
         try:
             drv = self._driver(info)
             result = self._execute(info, drv, stop)
-            with self._lock:
-                if info.state not in (KILLED,):
-                    info.state = FINISHED
-                    info.result = result
+            state = FINISHED
         except Exception as e:  # noqa: BLE001 — job boundary
-            with self._lock:
-                if info.state != KILLED:
-                    info.state = FAILED
-                    info.msg = f"{type(e).__name__}: {e}"
+            msg = f"{type(e).__name__}: {e}"
         finally:
             if drv is not None:
                 try:
@@ -370,6 +367,11 @@ class JobManager:
                 sc.setJobGroup("", "")
             except Exception:
                 pass
+        # the terminal state is the worker's last act: a client that
+        # reads it may create the next job on this config at once
+        with self._lock:
+            if info.state != KILLED:
+                info.state, info.result, info.msg = state, result, msg
 
     def _execute(self, info: JobInfo, drv, stop: threading.Event):
         args = info.args
