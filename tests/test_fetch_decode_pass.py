@@ -186,3 +186,32 @@ def test_parse_plan_runs_no_python_and_no_broadcast(spark, native):
     plan = parsed._jdf.queryExecution().executedPlan().toString()
     for node in PYTHON_NODES + ("BroadcastExchange",):
         assert node not in plan, plan
+
+
+def test_crowd_decode_runs_shuffle_partitions_tasks_through_repartition_by_num(
+    spark, crowd, tmp_path
+):
+    """With AQE coalescing on, the crowd decode pass still runs on
+    ``spark.sql.shuffle.partitions`` tasks: its input is a
+    ``REPARTITION_BY_NUM`` exchange, which AQE never coalesces."""
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(fetch_mode="crowd"), WEB, START)
+    fetchlist = crowd["drv"]._read_stage("batch-0000", "generate")
+    res = drv._crowd_fetch(fetchlist, "batch-0000", START)
+    sc = spark.sparkContext
+    group = "crowd-decode-plan-test"
+    sc.setJobGroup(group, "crowd decode plan")
+    try:
+        res.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plan = res._jdf.queryExecution().executedPlan().executedPlan().toString()
+    lines = plan.splitlines()
+    decode = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    feed = next(ln for ln in lines[decode + 1 :] if "Exchange " in ln)
+    assert "REPARTITION_BY_NUM" in feed, plan
+    tracker = sc.statusTracker()
+    last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    assert tracker.getStageInfo(max(last_job.stageIds)).numTasks == n

@@ -9,9 +9,10 @@ fetch engine emits per batch: redirects
 history (``TaskScheduler.java:806-815`` — only rows fetched at least
 twice).
 
-The engine's canonical metrics live in the workdir's parquet metrics
-table (R11); these text reports are the operator-facing debug surface
-a reference user greps, produced from the same state. Report content
+The engine's canonical status counters live in each round stage's
+``_DONE`` record and are served by ``RoundDriver.metrics()`` (R11);
+these text reports are the operator-facing debug surface a reference
+user greps, produced from the same state. Report content
 streams through ``toLocalIterator`` — one page of rows in driver
 memory at a time, never a full collect."""
 

@@ -4,11 +4,14 @@ Reference: ``src/bin/crawl:128-193`` runs inject once, then per round
 generate -> fetch -> parse -> updatedb, each a separate MR job keyed
 by a batch id; a ``.STOP`` file breaks the loop. Here each stage is
 one DataFrame job writing a parquet artifact under
-``rounds/<batch_id>/<stage>/`` with a ``_DONE`` marker; the frontier
-store is versioned, so **any kill point resumes**: completed stages
-are skipped (their artifacts re-read), the interrupted stage re-runs
-idempotently (mirroring ``-resume`` / mark-presence guards,
-``FetchMapper.java:115-123``, ``ParserMapper.java:132-141``).
+``rounds/<batch_id>/<stage>/`` and, last, a ``_DONE`` record holding
+the stage's time and status counters (the NutchCounter families,
+``NutchCounter.java:49-71``; :meth:`RoundDriver.metrics` serves them).
+The frontier store is versioned, so **any kill point resumes**:
+completed stages are skipped (their artifacts re-read), the
+interrupted stage re-runs idempotently (mirroring ``-resume`` /
+mark-presence guards, ``FetchMapper.java:115-123``,
+``ParserMapper.java:132-141``).
 
 Time is a virtual clock: round r starts at start_ms +
 r * round_time_limit_ms, so politeness spacing, schedules and scores
@@ -18,7 +21,6 @@ Per-round state maintained alongside the frontier:
 - URL-seen Bloom partitions (``store/urlseen.py``),
 - unreachable-host table (3 strikes -> detached,
   ``TasksMonitor.java:343-366``),
-- metrics table (NutchCounter families + throughput),
 - payload table (the input_hint image+caption corpus).
 """
 
@@ -29,20 +31,26 @@ import logging
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import CrawlConfig
-from ..functions.status import CrawlStatus, ProtocolStatus
+from ..functions.status import ProtocolStatus
 from ..operators import fetch as fetch_op
 from ..operators import generate as gen_op
 from ..operators import inject as inj_op
 from ..operators import parse as parse_op
 from ..operators import updatedb as upd_op
+from ..schema import METRICS
 from ..store.frontier import ParquetFrontierStore
 from ..store.urlseen import BloomUrlSeen
 
 log = logging.getLogger(__name__)
+
+#: the parquet footer key under which Spark stores a file's row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def host_eviction_cond(cfg: CrawlConfig):
@@ -117,14 +125,23 @@ class RoundDriver:
     def _stage_dir(self, batch_id: str, stage: str) -> str:
         return os.path.join(self.workdir, "rounds", batch_id, stage)
 
-    def _done(self, batch_id: str, stage: str) -> bool:
-        return os.path.exists(os.path.join(self._stage_dir(batch_id, stage), "_DONE"))
+    def _record(self, batch_id: str, stage: str) -> dict | None:
+        """The stage's ``_DONE`` record, or None while it is not done."""
+        try:
+            with open(os.path.join(self._stage_dir(batch_id, stage), "_DONE")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
 
     def _mark_done(self, batch_id: str, stage: str, meta: dict | None = None) -> None:
+        """Write the ``_DONE`` record atomically: a kill mid-write
+        leaves only the temp file, and the stage reads as not done."""
         d = self._stage_dir(batch_id, stage)
         os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "_DONE"), "w") as f:
+        tmp = os.path.join(d, "_DONE.tmp")
+        with open(tmp, "w") as f:
             json.dump(meta or {}, f)
+        os.replace(tmp, os.path.join(d, "_DONE"))
 
     def _write_stage(self, df: DataFrame, batch_id: str, stage: str) -> DataFrame:
         """Write the stage artifact and return it read back with the
@@ -133,56 +150,66 @@ class RoundDriver:
         df.write.mode("overwrite").parquet(path)
         return self.spark.read.schema(df.schema).parquet(path)
 
-    def _stage_data_ok(self, batch_id: str, stage: str) -> bool:
-        """True when the stage's data artifact committed (_SUCCESS) —
-        a resume can reuse it instead of recomputing (critical for
-        updatedb, where recomputing against the already-merged frontier
-        would double-apply inlink contributions)."""
-        return os.path.exists(
-            os.path.join(self._stage_dir(batch_id, stage), "data", "_SUCCESS")
-        )
-
     def _read_stage(self, batch_id: str, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._stage_dir(batch_id, stage), "data"))
+        """A committed stage artifact, read with the Spark schema its
+        writer left in a part file's footer (no schema-inference job)."""
+        path = os.path.join(self._stage_dir(batch_id, stage), "data")
+        part = min(fn for fn in os.listdir(path) if fn.startswith("part-"))
+        meta = pq.read_schema(os.path.join(path, part)).metadata
+        schema = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+        return self.spark.read.schema(schema).parquet(path)
 
-    def _append_metrics(self, df: DataFrame, batch_id: str, stage: str) -> None:
-        """Metrics are keyed by (batch, stage) and written with
-        overwrite, so a resumed stage rewrites its own slice instead of
-        blind-appending a duplicate."""
-        path = os.path.join(self.workdir, "metrics", f"{batch_id}_{stage}")
-        df.write.mode("overwrite").parquet(path)
+    def _stage(self, batch_id: str, stage: str, build, *after) -> DataFrame | None:
+        """The round's one checkpoint protocol. A stage whose ``_DONE``
+        record exists returns its artifact. Otherwise the stage reuses
+        its committed artifact or writes ``build()`` as one, runs the
+        post-write actions ``after`` (each called with the artifact,
+        each idempotent on resume, each returning a counter dict or
+        None) through :meth:`_run_overlapped`, and last records its
+        time and counters in ``_DONE``. With ``build`` None the stage
+        has no artifact and its actions get None.
 
-    def _append_metrics_rows(self, rows: list, batch_id: str, stage: str) -> None:
-        """Driver-side variant of :meth:`_append_metrics` for counter
-        sets that were already collected (a handful of status rows):
-        writes the identical (batch_id, stage, counter, value) slice
-        without re-running the aggregation over the source artifact."""
-        df = self.spark.createDataFrame(
-            rows, schema="batch_id string, stage string, counter string, value long"
-        )
-        self._append_metrics(df, batch_id, stage)
+        A committed artifact (its ``_SUCCESS``) is reused, never
+        rebuilt: for updatedb, recomputing against the already-merged
+        frontier would double-apply inlink contributions."""
+        if self._record(batch_id, stage) is not None:
+            return self._read_stage(batch_id, stage) if build else None
+        t0 = time.time()
+        art, record = None, {}
+        if build is not None:
+            committed = os.path.join(self._stage_dir(batch_id, stage), "data", "_SUCCESS")
+            if os.path.exists(committed):
+                art = self._read_stage(batch_id, stage)  # resume: reuse
+            else:
+                art = self._write_stage(build(), batch_id, stage)
+            record["write_sec"] = time.time() - t0
+        counters: dict[str, int] = {}
+        for c in self._run_overlapped(*(lambda fn=fn: fn(art) for fn in after)):
+            counters.update(c or {})
+        record.update(sec=time.time() - t0, counters=counters)
+        self._mark_done(batch_id, stage, record)
+        return art
 
-    def _run_overlapped(self, *fns) -> None:
+    def _run_overlapped(self, *fns) -> list:
         """Run independent stage actions from a small thread pool so
         each later job back-fills the earlier jobs' task tails (guide
         §2.6 — Spark schedules concurrent jobs FIFO inside one
-        application). Callers pass only actions that are mutually
-        independent AND individually idempotent on resume; exceptions
-        propagate after all threads finish, so the stage's _DONE marker
-        is never written when any action failed. A lone failure is
-        re-raised as is; several are raised together as an
-        ExceptionGroup so none of their tracebacks is lost.
+        application) and return their results in order. Callers pass
+        only actions that are mutually independent AND individually
+        idempotent on resume; exceptions propagate after all threads
+        finish, so the stage's _DONE record is never written when any
+        action failed. A lone failure is re-raised as is; several are
+        raised together as an ExceptionGroup so none of their
+        tracebacks is lost.
 
         Overlap only pays when there IS a task tail to back-fill: on a
         near-single-core scheduler (e.g. one-core executors in the
         host-sharded scaling protocol) concurrent jobs just interleave
         on the same core and add scheduler/driver contention, so fall
         back to sequential execution there — scale-adaptive, not a
-        local[32] constant."""
-        if self.spark.sparkContext.defaultParallelism < 4:
-            for fn in fns:
-                fn()
-            return
+        local[32] constant. A lone action runs in the caller's thread."""
+        if len(fns) < 2 or self.spark.sparkContext.defaultParallelism < 4:
+            return [fn() for fn in fns]
         from concurrent.futures import ThreadPoolExecutor
 
         from py4j.clientserver import ClientServer
@@ -197,10 +224,10 @@ class RoundDriver:
         wrap = inheritable_thread_target(self.spark) if pinned else (lambda f: f)
         with ThreadPoolExecutor(max_workers=len(fns)) as pool:
             futures = [pool.submit(wrap(fn)) for fn in fns]
-            errors: list[BaseException] = []
+            results, errors = [], []
             for fut in futures:
                 try:
-                    fut.result()
+                    results.append(fut.result())
                 except BaseException as exc:  # propagate after joining all
                     errors.append(exc)
         if len(errors) == 1:
@@ -208,21 +235,21 @@ class RoundDriver:
         if errors:
             # an ExceptionGroup unless an interrupt is among them
             raise BaseExceptionGroup("overlapped stage actions failed", errors)
-
-    def _metrics_sum(self, batch_id: str, stage: str) -> int:
-        """Sum of one committed metrics slice — the resume-path source
-        for the per-round fetched/updated totals (the fresh-run path
-        keeps the collected counter rows in memory instead)."""
-        df = self.spark.read.parquet(
-            os.path.join(self.workdir, "metrics", f"{batch_id}_{stage}")
-        )
-        row = df.agg(F.coalesce(F.sum("value"), F.lit(0)).alias("v")).collect()[0]
-        return int(row["v"])
+        return results
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            os.path.join(self.workdir, "metrics")
-        )
+        """The status counters of every done stage, one
+        (batch_id, stage, counter, value) row each, from the ``_DONE``
+        records (no Spark job until the rows are read)."""
+        base = os.path.join(self.workdir, "rounds")
+        rows = [
+            (batch_id, stage, counter, value)
+            for batch_id in sorted(os.listdir(base))
+            for stage in sorted(os.listdir(os.path.join(base, batch_id)))
+            for counter, value in (self._record(batch_id, stage) or {})
+            .get("counters", {}).items()
+        ]
+        return self.spark.createDataFrame(rows, METRICS)
 
     def payloads(self) -> DataFrame:
         return self.spark.read.option("recursiveFileLookup", "true").parquet(
@@ -336,15 +363,15 @@ class RoundDriver:
         service maps the reference's separate GenerateJob / FetchJob /
         ParserJob / DbUpdateJob verbs onto the same checkpointed round:
         each stage-job resumes the batch at its own stage
-        (``service/impl/JobFactory.java:34-41`` type table)."""
+        (``service/impl/JobFactory.java:34-41`` type table).
+
+        The returned ``stage_sec``, ``fetched`` and ``updated`` come
+        from the stages' ``_DONE`` records, so a fresh, a resumed and a
+        stage-by-stage round report each stage's own time and counts."""
         batch_id = f"batch-{r:04d}"
         now = self.round_now(r)
         t0 = time.time()
-        stage_times: dict[str, float] = {}
-        # per-round totals derived from the collected counter rows (one
-        # action instead of a second scan of each stage artifact); a
-        # resumed round falls back to summing the committed metrics slice
-        counts: dict[str, int] = {}
+        done: list[str] = []  # stages reached, in round order
 
         # One frontier MOR materialization per round: the store version
         # is constant from generate until the updatedb merge at the end,
@@ -376,122 +403,97 @@ class RoundDriver:
                 df.unpersist()
             _round_frontier.clear()
 
+        def _run(stage: str, build, *after) -> DataFrame | None:
+            art = self._stage(batch_id, stage, build, *after)
+            done.append(stage)
+            return art
+
+        def _stage_sec() -> dict[str, float]:
+            """Each reached stage's time and its artifact write's time,
+            from the stage records."""
+            out: dict[str, float] = {}
+            for stage in done:
+                rec = self._record(batch_id, stage)
+                out[stage] = round(rec.get("sec", 0.0), 2)
+                if "write_sec" in rec:
+                    out[f"{stage}.plan_write"] = round(rec["write_sec"], 2)
+            return out
+
         def _partial(stage: str) -> dict:
-            _release_frontier()
             return {
                 "batch_id": batch_id,
                 "elapsed_sec": time.time() - t0,
                 "stopped_after": stage,
-                "stage_sec": {k: round(v, 2) for k, v in stage_times.items()},
+                "stage_sec": _stage_sec(),
             }
 
-        # a stage that runs in this call hands its artifact on as the
-        # DataFrame _write_stage returned; a stage an earlier call
-        # completed is read back from disk
-        fetchlist = fetch_results = parsed = None
         try:
-            # -- generate ----------------------------------------------------
-            if not self._done(batch_id, "generate"):
-                if not self._stage_data_ok(batch_id, "generate"):
-                    fl = gen_op.generate(
-                        _frontier(), self.cfg, now, batch_id,
-                        self.unreachable_hosts(), current_round=r,
-                        avg_page_bytes=self._avg_page_bytes(),
-                    )
-                    # The GENERATE_MARK lives in the fetchlist artifact until
-                    # updatedb folds it into the single per-round MERGE (one
-                    # frontier delta per round instead of two; intra-round
-                    # resume is covered by the artifact + _DONE marker, the
-                    # F13 guard semantics are unchanged for the next round).
-                    fetchlist = self._write_stage(fl, batch_id, "generate")
-                self._mark_done(batch_id, "generate")
-            stage_times["generate"] = time.time() - t0
+            # The GENERATE_MARK lives in the fetchlist artifact until
+            # updatedb folds it into the single per-round MERGE (one
+            # frontier delta per round instead of two; intra-round
+            # resume is covered by the artifact + _DONE record, the
+            # F13 guard semantics are unchanged for the next round).
+            fetchlist = _run("generate", lambda: gen_op.generate(
+                _frontier(), self.cfg, now, batch_id,
+                self.unreachable_hosts(), current_round=r,
+                avg_page_bytes=self._avg_page_bytes(),
+            ))
             if stop_after == "generate":
                 return _partial("generate")
-            if fetchlist is None:
-                fetchlist = self._read_stage(batch_id, "generate")
 
-            # -- fetch ---------------------------------------------------------
-            t_f = time.time()
-            if not self._done(batch_id, "fetch"):
-                if self._stage_data_ok(batch_id, "fetch"):
-                    fetch_results = self._read_stage(batch_id, "fetch")  # resume: reuse
-                else:
-                    if self.cfg.fetch_mode == "crowd":
-                        res = self._crowd_fetch(fetchlist, batch_id, now)
-                    else:
-                        res = fetch_op.fetch(
-                            fetchlist, self._robots_df(), self.cfg, now, batch_id,
-                            self.web_params, host_config=self.host_config(),
-                        )
-                    fetch_results = self._write_stage(res, batch_id, "fetch")
-                # the host-state update and the fetch metrics both read
-                # the committed fetch artifact but are independent of
-                # each other: overlap the two actions (guide §2.6) so
-                # the second one back-fills the first one's task tail
-                def _hosts_update() -> None:
-                    self._update_host_failures(fetch_results, batch_id)
+            # -- fetch: the host-state update and the status counters
+            # both read the committed fetch artifact but are independent
+            # of each other, so they overlap and the second back-fills
+            # the first one's task tail
+            def _fetch() -> DataFrame:
+                if self.cfg.fetch_mode == "crowd":
+                    return self._crowd_fetch(fetchlist, batch_id, now)
+                return fetch_op.fetch(
+                    fetchlist, self._robots_df(), self.cfg, now, batch_id,
+                    self.web_params, host_config=self.host_config(),
+                )
 
-                def _fetch_metrics() -> None:
-                    # collect the handful of per-status rows once: the
-                    # same rows feed the metrics slice AND the round's
-                    # fetched total, which previously cost a second
-                    # artifact scan
-                    fetch_counter_rows = [
-                        tuple(r)
-                        for r in fetch_results.filter(F.col("fetched"))
-                        .groupBy("new_status")
-                        .agg(F.count("*").alias("value"))
-                        .select(
-                            F.lit(batch_id).alias("batch_id"),
-                            F.lit("fetch").alias("stage"),
-                            F.col("new_status").cast("string").alias("counter"),
-                            "value",
-                        )
-                        .collect()
-                    ]
-                    self._append_metrics_rows(fetch_counter_rows, batch_id, "fetch")
-                    counts["fetched"] = sum(r[3] for r in fetch_counter_rows)
+            def _fetch_counters(res: DataFrame) -> dict:
+                rows = (
+                    res.filter(F.col("fetched"))
+                    .groupBy(F.col("new_status").cast("string"))
+                    .count()
+                    .collect()
+                )
+                return {row[0]: row[1] for row in rows}
 
-                self._run_overlapped(_hosts_update, _fetch_metrics)
-                self._mark_done(batch_id, "fetch")
-            stage_times["fetch"] = time.time() - t_f
+            fetch_results = _run(
+                "fetch", _fetch,
+                lambda res: self._update_host_failures(res, batch_id), _fetch_counters,
+            )
             if stop_after == "fetch":
                 return _partial("fetch")
-            if fetch_results is None:
-                fetch_results = self._read_stage(batch_id, "fetch")
 
-            # -- parse -----------------------------------------------------------
-            t_p = time.time()
-            if not self._done(batch_id, "parse"):
-                # a JVM projection of the fetch artifact, which already
-                # holds the payload bytes and their decode columns
+            # -- parse: a JVM projection of the fetch artifact, which
+            # already holds the payload bytes and their decode columns.
+            # The bytes persist in the fetch artifact and the payload
+            # slice: not a third time in the parse artifact.
+            def _payloads(_parsed) -> None:
+                # batch-keyed overwrite (not append): a resumed parse
+                # stage rewrites its own payload slice, never duplicates it
                 full = parse_op.parse(fetch_results, self.cfg, batch_id)
-                if self._stage_data_ok(batch_id, "parse"):
-                    parsed = self._read_stage(batch_id, "parse")  # resume: reuse
-                else:
-                    # the payload bytes persist in the fetch artifact
-                    # and the payload slice: not a third time here
-                    parsed = self._write_stage(full.drop("bytes"), batch_id, "parse")
-                payloads = parse_op.payload_rows(full)
-                # batch-keyed overwrite (not append): a resumed parse stage
-                # rewrites its own payload slice, never duplicates it
-                payloads.write.mode("overwrite").parquet(
+                parse_op.payload_rows(full).write.mode("overwrite").parquet(
                     os.path.join(self.workdir, "payloads", batch_id)
                 )
-                self._mark_done(batch_id, "parse")
-            stage_times["parse"] = time.time() - t_p
+
+            parsed = _run(
+                "parse",
+                lambda: parse_op.parse(fetch_results, self.cfg, batch_id).drop("bytes"),
+                _payloads,
+            )
             if stop_after == "parse":
                 return _partial("parse")
-            if parsed is None:
-                parsed = self._read_stage(batch_id, "parse")
 
             # -- JIT index (TaskScheduler.java:799-804 + JITIndexer.java):
             # index documents leave the round as soon as parse lands,
             # without waiting for updatedb or a separate IndexJob pass
             if self.cfg.index_jit:
-                t_j = time.time()
-                if not self._done(batch_id, "jit_index"):
+                def _jit_index(_none) -> None:
                     from ..operators import indexer as idx_op
 
                     docs = idx_op.build_jit_documents(
@@ -510,94 +512,61 @@ class RoundDriver:
                         # round re-pushes the batch — bulk index actions
                         # are idempotent per _id, so replays are safe.
                         idx_op.push_bulk_http(lines, self.cfg.index_endpoint)
-                    self._mark_done(batch_id, "jit_index")
-                stage_times["jit_index"] = time.time() - t_j
 
-            # -- updatedb ----------------------------------------------------------
-            t_u = time.time()
-            if not self._done(batch_id, "updatedb"):
-                t_sub = time.time()
-                if self._stage_data_ok(batch_id, "updatedb"):
-                    # resume after the artifact committed: NEVER recompute —
-                    # the frontier may already contain this batch's merge,
-                    # and recomputing against it would double-apply inlink
-                    # contributions. The artifact is the single source.
-                    merge_rows = self._read_stage(batch_id, "updatedb")
-                else:
-                    merge_rows = upd_op.updatedb(
-                        _frontier(), fetchlist, parsed, self.cfg, now, batch_id, self.urlseen
-                    )
-                    # pre-bucket so the resume artifact doubles as the
-                    # store's delta snapshot (merge_linked below): the
-                    # round's updates hit disk ONCE, not twice
-                    merge_rows = self.store.with_bucket(merge_rows.drop("host_bucket"))
-                    merge_rows = self._write_stage(merge_rows, batch_id, "updatedb")
-                # record the bucket count the artifact was written with so
-                # merge_linked can reject a stale-layout artifact. A resume
-                # stamps too: a kill between the artifact's commit and its
-                # stamp leaves it unstamped, and this store wrote it (the
-                # manifest pins the store's bucket count)
-                self.store.stamp_bucketing(
-                    os.path.join(self._stage_dir(batch_id, "updatedb"), "data")
+                _run("jit_index", None, _jit_index)
+
+            # -- updatedb: a committed artifact is NEVER recomputed on
+            # resume — the frontier may already contain this batch's
+            # merge, and recomputing against it would double-apply
+            # inlink contributions. The artifact is pre-bucketed so it
+            # doubles as the store's delta snapshot (merge_linked): the
+            # round's updates hit disk ONCE, not twice.
+            data_dir = os.path.join(self._stage_dir(batch_id, "updatedb"), "data")
+
+            def _merge_rows() -> DataFrame:
+                rows = upd_op.updatedb(
+                    _frontier(), fetchlist, parsed, self.cfg, now, batch_id, self.urlseen
                 )
-                counters = upd_op.updatedb_counters(merge_rows, batch_id)
-                stage_times["updatedb.plan_write"] = time.time() - t_sub
+                return self.store.with_bucket(rows.drop("host_bucket"))
 
-                # the three post-write actions — store adopt, URL-seen
-                # Bloom merge, counter metrics — touch disjoint state
-                # and each is idempotent on resume (committed_ops guard,
-                # URL-seen batch guard, keyed metrics overwrite):
-                # overlap them (guide §2.6); per-substage times stay in
-                # stage_sec as each thread's own wall
-                def _adopt() -> None:
-                    tt = time.time()
-                    if ("updatedb", batch_id) not in self.store.committed_ops():
-                        self.store.merge_linked(
-                            os.path.join(self._stage_dir(batch_id, "updatedb"), "data"),
-                            {"op": "updatedb", "batch_id": batch_id},
-                        )
-                    stage_times["updatedb.adopt"] = time.time() - tt
+            # the three post-write actions — store adopt, URL-seen
+            # merge, status counters — touch disjoint state and each is
+            # idempotent on resume (committed_ops guard, URL-seen batch
+            # guard, counters recomputed from the artifact)
+            def _adopt(_rows) -> None:
+                # record the bucket count the artifact was written with
+                # so merge_linked can reject a stale-layout artifact. A
+                # resume stamps too: a kill between the artifact's
+                # commit and its stamp leaves it unstamped, and this
+                # store wrote it (the manifest pins the bucket count)
+                self.store.stamp_bucketing(data_dir)
+                if ("updatedb", batch_id) not in self.store.committed_ops():
+                    self.store.merge_linked(data_dir, {"op": "updatedb", "batch_id": batch_id})
 
-                def _urlseen_merge() -> None:
-                    tt = time.time()
-                    # a batch the URL-seen manifest already lists is
-                    # skipped, so a resumed round does not replay it
-                    self.urlseen.merge_round(
-                        merge_rows.select("url_hash"), "url_hash", batch_id
-                    )
-                    stage_times["updatedb.urlseen"] = time.time() - tt
+            def _urlseen_merge(rows: DataFrame) -> None:
+                # a batch the URL-seen manifest already lists is
+                # skipped, so a resumed round does not replay it
+                self.urlseen.merge_round(rows.select("url_hash"), "url_hash", batch_id)
 
-                def _updatedb_metrics() -> None:
-                    tt = time.time()
-                    counter_rows = [tuple(r) for r in counters.collect()]
-                    self._append_metrics_rows(counter_rows, batch_id, "updatedb")
-                    counts["updated"] = sum(r[3] for r in counter_rows)
-                    stage_times["updatedb.metrics"] = time.time() - tt
+            def _updatedb_counters(rows: DataFrame) -> dict:
+                counters = upd_op.updatedb_counters(rows, batch_id).collect()
+                return {row["counter"]: row["value"] for row in counters}
 
-                self._run_overlapped(_adopt, _urlseen_merge, _updatedb_metrics)
-                self._mark_done(batch_id, "updatedb")
-            stage_times["updatedb"] = time.time() - t_u
+            _run("updatedb", _merge_rows, _adopt, _urlseen_merge, _updatedb_counters)
             _release_frontier()  # merged: the cached MOR view is now stale
 
+            fetched, updated = (
+                sum(self._record(batch_id, stage).get("counters", {}).values())
+                for stage in ("fetch", "updatedb")
+            )
             elapsed = time.time() - t0
-            # totals from the collected counter rows (sum over the
-            # status groups equals the old artifact-filter counts by
-            # construction); a resumed round whose stages were already
-            # done sums the committed metrics slice instead of
-            # re-scanning the fetch / updatedb artifacts
-            fetched = counts.get("fetched")
-            if fetched is None:
-                fetched = self._metrics_sum(batch_id, "fetch")
-            updated = counts.get("updated")
-            if updated is None:
-                updated = self._metrics_sum(batch_id, "updatedb")
             return {
                 "batch_id": batch_id,
                 "elapsed_sec": elapsed,
                 "fetched": fetched,
                 "updated": updated,
                 "throughput_rows_per_sec": (fetched + updated) / elapsed if elapsed else 0.0,
-                "stage_sec": {k: round(v, 2) for k, v in stage_times.items()},
+                "stage_sec": _stage_sec(),
             }
         finally:
             # a stage raising mid-round must not leak the cached
@@ -641,12 +610,17 @@ class RoundDriver:
         res = svc.ingest_fetch_results(tasks, denied, submitted, batch_id, now)
 
         # one Python pass over the ingested rows, through the decode
-        # the native fetch pass runs per host group
+        # the native fetch pass runs per host group. Repartitioned by
+        # number, as fetch does: AQE never coalesces that, whereas a
+        # byte-sized shuffle packs the payloads onto one or two tasks.
         def _decode(batches):
             for pdf in batches:
                 yield pdf.join(parse_op.decode_payloads(pdf["bytes"]))
 
-        return res.mapInPandas(_decode, schema=fetch_op.fetch_output_schema())
+        n_tasks = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return res.repartition(n_tasks).mapInPandas(
+            _decode, schema=fetch_op.fetch_output_schema()
+        )
 
     def _ensure_fetch_server(self):
         if getattr(self, "_fetch_server", None) is None:
