@@ -233,14 +233,23 @@ def test_host_config_overrides_queue_delay(spark):
 
 
 def test_queue_spacing_column_matches_scalar(spark):
-    """queue_spacing_cols (oracle form) and _resolve_queue_spacing
-    (group-UDF form) implement the same resolution."""
+    """queue_spacing_cols resolves every combination of host-table
+    override, robots delay and default to the FetchQueue spacing:
+    q_mt > 1 spaces by q_mcd (else the configured min delay), otherwise
+    by q_cd, else the robots delay, else the configured delay."""
     import itertools
 
     import pandas as pd
 
     cfg = make_test_config(crawl_delay_ms=5000, min_crawl_delay_ms=500)
     cases = list(itertools.product([None, 2000], [None, 4], [None, 250], [None, 3000]))
+    # one per case, in the order above (q_cd, q_mt, q_mcd, robots_delay)
+    want = [
+        5000, 3000, 5000, 3000,  # no q_cd, one thread: robots > default
+        500, 500, 250, 250,  # no q_cd, 4 threads: q_mcd > min delay
+        2000, 2000, 2000, 2000,  # q_cd, one thread: q_cd wins
+        500, 500, 250, 250,  # q_cd, 4 threads: q_mcd > min delay
+    ]
     pdf = pd.DataFrame(cases, columns=["q_cd", "q_mt", "q_mcd", "robots_delay"])
     df = spark.createDataFrame(
         pdf.assign(i=range(len(pdf))),
@@ -250,6 +259,4 @@ def test_queue_spacing_column_matches_scalar(spark):
         F.col("q_cd"), F.col("q_mt"), F.col("q_mcd"), F.col("robots_delay"), cfg
     )
     got = {r["i"]: r["s"] for r in df.select("i", spacing.alias("s")).collect()}
-    for i, row in pdf.iterrows():
-        one = pd.DataFrame({k: [row[k]] for k in pdf.columns})
-        assert got[i] == fetch_op._resolve_queue_spacing(one, cfg), dict(row)
+    assert [got[i] for i in range(len(cases))] == want

@@ -169,3 +169,72 @@ def test_crowd_mode_crawl_matches_native_end_to_end(spark, tmp_path_factory):
     assert (a.distance == b.distance).all()
     assert ((a.score - b.score).abs() < 1e-3).all()
     assert ((a.cash - b.cash).abs() < 1e-3).all()
+
+
+def test_crowd_domain_mode_shares_one_queue_across_subdomains(spark):
+    """byDomain: sibling subdomains are one politeness queue for crowd
+    workers too, so a one-per-queue lease hands out only one of them."""
+    cfg = make_test_config(crawl_delay_ms=1000, partition_mode="domain")
+    urls = ["http://a.site.test/detail/1", "http://b.site.test/detail/1"]
+    tasks, _denied = svc.emit_fetch_tasks(_fetchlist(spark, cfg, urls), None, cfg, "b1")
+    assert {r["queue_id"] for r in tasks.collect()} == {"site.test"}
+    leased = svc.lease_tasks(tasks, count=10, per_queue=1).toPandas()
+    assert len(leased) == 1
+
+
+def _native_spacing(res, host):
+    """The one request spacing native fetch applied to ``host``."""
+    gaps = set(np.diff(sorted(res[(res.host == host) & res.fetched].fetch_ts)))
+    assert len(gaps) == 1, (host, gaps)
+    return gaps.pop()
+
+
+def test_crowd_task_delay_is_native_spacing_under_host_config(spark, web):
+    """Host-table overrides (q_cd; q_mt > 1 with q_mcd) reach crowd
+    tasks: each task's crawl_delay_ms is the spacing native fetch
+    applies to its host."""
+    cfg = make_test_config(crawl_delay_ms=1000, min_crawl_delay_ms=100)
+    j = np.arange(60)
+    urls = []
+    for h in range(3):
+        ok = web.http_status(np.full(60, h), j) == 200
+        urls += [f"http://host{h}.test/{simweb.CATEGORIES[x % 8]}/{x}" for x in j[ok][:4]]
+    fl = _fetchlist(spark, cfg, urls)
+    host_cfg = spark.createDataFrame(
+        [("host0.test", None, 3000, None), ("host1.test", 4, None, 200)],
+        "host string, q_mt int, q_cd long, q_mcd long",
+    )
+    native = fetch_op.fetch(fl, None, cfg, NOW, "b1", WEB, host_config=host_cfg).toPandas()
+    tasks, _denied = svc.emit_fetch_tasks(fl, None, cfg, "b1", host_config=host_cfg)
+    delays = tasks.groupBy("host").agg(F.collect_set("crawl_delay_ms").alias("d")).collect()
+    got = {r["host"]: r["d"] for r in delays}
+    want = {h: [_native_spacing(native, h)] for h in ("host0.test", "host1.test", "host2.test")}
+    assert want == {"host0.test": [3000], "host1.test": [200], "host2.test": [1000]}
+    assert got == want
+
+
+def test_nan_robots_delay_spaces_by_configured_delay(spark, web):
+    """A robots frame built from pandas without Arrow carries NaN for a
+    host without Crawl-delay: native fetch spaces that host by the
+    configured delay, and its crowd tasks carry the same delay."""
+    cfg = make_test_config(crawl_delay_ms=1000)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    arrow = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        robots = spark.createDataFrame(web.robots())
+    finally:
+        spark.conf.set(key, arrow)
+    assert robots.filter(F.isnan("crawl_delay_ms")).count() > 0
+    j = np.arange(60)
+    urls = []
+    for h in (0, 3):  # host3 sets Crawl-delay: 2000
+        ok = web.http_status(np.full(60, h), j) == 200
+        urls += [f"http://host{h}.test/{simweb.CATEGORIES[x % 8]}/{x}" for x in j[ok][:4]]
+    fl = _fetchlist(spark, cfg, urls)
+    native = fetch_op.fetch(fl, robots, cfg, NOW, "b1", WEB).toPandas()
+    assert _native_spacing(native, "host0.test") == cfg.crawl_delay_ms
+    assert _native_spacing(native, "host3.test") == 2000
+    tasks, _denied = svc.emit_fetch_tasks(fl, robots, cfg, "b1")
+    got = {(r["host"], r["crawl_delay_ms"]) for r in tasks.collect()}
+    assert got == {("host0.test", cfg.crawl_delay_ms), ("host3.test", 2000)}

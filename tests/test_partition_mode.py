@@ -36,3 +36,29 @@ def test_by_domain_mode_serializes_subdomains(spark):
     res = fetch_op.fetch(_fl(spark, cfg, urls), None, cfg, NOW, "b1", WEB).toPandas()
     ts = sorted(res.fetch_ts)
     assert ts[1] - ts[0] >= 1000  # one queue: politeness spacing applies
+
+
+def test_by_domain_mode_takes_first_override_of_each_column_in_queue_order(spark):
+    """A domain queue whose hosts carry different host-table overrides
+    gets one spacing: each override column's first non-null value in
+    best-first queue order (here a's q_cd, and b's q_mt = 3 with its
+    q_mcd = 400, so the queue spaces by 400 ms)."""
+    cfg = make_test_config(crawl_delay_ms=1000, min_crawl_delay_ms=100, partition_mode="domain")
+    urls = [f"http://{h}.site.test/detail/{i}" for h in "ab" for i in (1, 9, 17)]
+    host_cfg = spark.createDataFrame(
+        [("a.site.test", None, 3000, None), ("b.site.test", 3, None, 400)],
+        "host string, q_mt int, q_cd long, q_mcd long",
+    )
+    res = fetch_op.fetch(
+        _fl(spark, cfg, urls), None, cfg, NOW, "b1", WEB, host_config=host_cfg
+    ).toPandas()
+    got = dict(zip(res.url, res.fetch_ts))
+    assert got == {
+        "http://a.site.test/detail/1": NOW,
+        "http://a.site.test/detail/17": NOW + 400,
+        "http://a.site.test/detail/9": NOW + 800,
+        "http://b.site.test/detail/1": NOW + 1200,
+        "http://b.site.test/detail/17": NOW + 1600,
+        "http://b.site.test/detail/9": NOW + 2000,
+    }
+    assert res.fetched.all()

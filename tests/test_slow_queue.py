@@ -2,13 +2,15 @@
 politeness clock (FetchQueue nextFetchTime = endTime + delay) and
 slow hosts are detached for subsequent rounds."""
 
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from warps_nutch_spark.config import make_test_config
 from warps_nutch_spark.operators import fetch as fetch_op
 from warps_nutch_spark.operators.rows import complete_rows
-from warps_nutch_spark.plans.round import RoundDriver
+from warps_nutch_spark.plans.round import RoundDriver, unreachable_hosts
 from warps_nutch_spark.simweb import SimWeb
 
 NOW = 1_700_000_000_000
@@ -58,3 +60,24 @@ def test_slow_hosts_detached_next_round(spark, tmp_path):
     }
     assert "host5.test" not in fl_hosts
     assert len(fl_hosts) > 0
+
+
+def test_unreachable_hosts_plans_without_a_spark_job(spark, tmp_path):
+    """The host state is read with the schema it is written with
+    (``schema.HOSTS``), so planning the detached-host frame, as
+    generate does each round, submits no schema-inference job."""
+    cfg = make_test_config()
+    spark.createDataFrame(
+        [("host0.test", 3, 900, 3), ("host1.test", 0, 300, 2)],
+        "host string, failures long, total_duration_ms long, fetch_count long",
+    ).write.parquet(os.path.join(tmp_path, "hosts", "v0000-batch-0000"))
+    sc = spark.sparkContext
+    group = "host-state-plan-test"
+    sc.setJobGroup(group, "plan unreachable hosts")
+    try:
+        detached = unreachable_hosts(spark, str(tmp_path), cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert [r["host"] for r in detached.collect()] == ["host0.test"]

@@ -6,9 +6,11 @@ Codes mirror the reference:
 - dispatch ProtocolStatus -> CrawlStatus
   (``fetch/TaskScheduler.java:665-729``)
 
-The dispatch is exposed both as a plain dict (for the vectorized fetch
-UDF — a pandas ``Series.map`` over int codes) and as a Spark Column
-``CASE WHEN`` builder so counters can be recomputed declaratively.
+Each mapping is a plain dict (for the protocol plugins, the driver
+queries' SQL and the test oracle) and a Spark Column lookup, which
+the fetch result projection
+(``operators/fetch.py::fetch_result``) applies to every response,
+native or crowd.
 """
 
 from __future__ import annotations
@@ -95,12 +97,27 @@ HTTP_TO_PROTOCOL: dict[int, int] = {
 }
 
 
+def _lookup_col(key: Column, table: dict[int, int], default: int) -> Column:
+    """``table[key]``, or ``default`` for a key outside the table or
+    null, as one map-literal lookup. PySpark records a call site for
+    each Column function it builds, so a CASE chain costs several such
+    calls per entry to plan; the map literal costs the same at any
+    size."""
+    pairs = ", ".join(f"{k}, {v}" for k, v in table.items())
+    return F.coalesce(F.element_at(F.expr(f"map({pairs})"), key), F.lit(default))
+
+
 def protocol_to_crawl_col(code: Column) -> Column:
-    """CASE WHEN form of the dispatch (for declarative counters)."""
-    expr = F.lit(CrawlStatus.RETRY)
-    for proto, crawl in PROTOCOL_TO_CRAWL.items():
-        expr = F.when(code == proto, F.lit(crawl)).otherwise(expr)
-    return expr
+    """Column form of :data:`PROTOCOL_TO_CRAWL`; an unmapped code
+    retries."""
+    return _lookup_col(code, PROTOCOL_TO_CRAWL, CrawlStatus.RETRY)
+
+
+def http_to_protocol_col(http_status: Column) -> Column:
+    """Column form of :data:`HTTP_TO_PROTOCOL`; -1 is a timeout and
+    any other unmapped code an exception."""
+    table = {-1: ProtocolStatus.TIMEOUT, **HTTP_TO_PROTOCOL}
+    return _lookup_col(http_status, table, ProtocolStatus.EXCEPTION)
 
 
 def status_name_col(status: Column) -> Column:

@@ -1,36 +1,44 @@
-"""Fetch: politeness-sequenced protocol execution over host groups.
+"""Fetch: politeness-sequenced protocol execution over politeness queues.
 
 The reference runs a multi-threaded producer/consumer engine inside
 the fetch reducer (``fetch/FetchMonitor.java:166-196``, FeederThread +
 FetchThreads + per-host FIFO queues ``fetch/data/FetchQueue.java``).
 None of that thread machinery is ported: Spark tasks are the
-concurrency model. The invariants that survive are:
+concurrency model. The politeness rules live once, on the JVM, in the
+queue plan :func:`fetch_queues` and the response projection
+:func:`fetch_result`; native fetch and crowd mode
+(``fetch_service.py``, which leases tasks from the same queues like
+the fork's ``TaskSchedulers.randomFetchItems``) both run them. The
+invariants that survive are:
 
-- **one host is never fetched concurrently by two workers** —
-  ``groupBy("host").applyInPandas`` puts each host in exactly one
-  task (the analog of FetchEntryPartitioner sending all URLs of a
-  host to one reducer, ``crawl/URLPartitioner.java:127-150``);
+- **one queue is never fetched concurrently by two workers** —
+  ``groupBy(queue key).applyInPandas`` puts each host (or domain) in
+  exactly one task (the analog of FetchEntryPartitioner sending all
+  URLs of a host to one reducer, ``crawl/URLPartitioner.java:127-150``);
   speculative execution must stay off for this stage
   (``FetchJob.java:149-150``);
-- **consecutive requests to one host are >= crawl_delay apart**
-  (``FetchQueue.java:339-346``: nextFetchTime = endTime + crawlDelay;
-  per-host override from the Host table, ``TasksMonitor.java:480-496``)
-  — enforced with a *virtual clock* inside the group UDF so results
-  are reproducible (SURVEY.md §7 hard-part 5) while the politeness
-  *budget* (how many URLs a host can yield per round) is identical to
-  wall-clock behavior: capacity = round_time_limit / crawl_delay;
+- **consecutive requests to one queue are >= its spacing apart**
+  (``FetchQueue.java:339-346``: nextFetchTime = endTime + crawlDelay,
+  minCrawlDelay for a multi-threaded queue; per-host override from the
+  Host table, ``TasksMonitor.java:480-496``) — the queue plan resolves
+  one spacing per queue, and a *virtual clock* inside the group UDF
+  applies it so results are reproducible (SURVEY.md §7 hard-part 5)
+  while the politeness *budget* (how many URLs a host can yield per
+  round) is identical to wall-clock behavior: capacity =
+  round_time_limit / crawl_delay;
 - **queue order is best-first** (priority desc, score desc, url asc —
   the SelectorEntry comparator, ``GenerateJob.java:213-224``);
 - **robots gating** before any request (north_rule; vanilla Nutch 2.3
   gates in FetchThread; the fork keeps the ROBOTS_DENIED plumbing at
   ``TaskScheduler.java:716-720``) — rules are joined onto the
-  fetchlist as a per-host ``disallow`` prefix array and evaluated
-  vectorized inside the same Arrow batch;
-- **status dispatch** ProtocolStatus -> CrawlStatus
+  fetchlist as a per-host ``disallow`` prefix array and evaluated as
+  a JVM predicate in the queue plan; the clock only skips denied rows;
+- **status dispatch** HTTP -> ProtocolStatus -> CrawlStatus
   (``TaskScheduler.java:665-729``) including redirect capture as an
   outlink (``TaskScheduler.java:731-774``) and rows the round's time
   limit never reached being returned untouched (the FeederThread
-  drain at ``fetch/FeederThread.java:126-140``).
+  drain at ``fetch/FeederThread.java:126-140``) — one JVM projection
+  over the raw responses the group UDF returns.
 
 The same group call decodes the payloads it has just rendered
 (``parse.decode_payloads``; the reference fork's parse inside the
@@ -38,29 +46,47 @@ fetch reducer, ``TaskScheduler.java:777-835``), so each payload makes
 one trip through Python and the fetch result carries the parse columns.
 
 Skew note: group size per host is bounded by generate.max_per_host,
-so one hot host cannot dominate a task. Hosts are spread across tasks
-by an explicit ``repartition(spark.sql.shuffle.partitions, queue
-key)``: AQE coalesces shuffles by bytes and would pack the
-byte-small, Python-heavy groups onto one or two tasks, but it never
-coalesces a repartition by number.
+so one hot host cannot dominate a task. Queues are spread across
+``spark.sql.shuffle.partitions`` tasks by the queue plan's
+repartition by number.
 
-The protocol here is the deterministic SimWeb (the sandbox has no
-network); a production deployment swaps ``_simulate_host`` for an
-async-HTTP pandas batch with identical outputs.
+The protocol here is the deterministic SimWeb; a production
+deployment swaps ``SimWeb.respond`` for an async-HTTP pandas batch
+with identical outputs.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import simweb as sw
 from ..config import CrawlConfig
-from ..functions.status import HTTP_TO_PROTOCOL, PROTOCOL_TO_CRAWL, CrawlStatus, ProtocolStatus
+from ..functions.status import ProtocolStatus, http_to_protocol_col, protocol_to_crawl_col
+from ..functions.urls import domain_col
 from .parse import PARSE_FIELDS, decode_payloads
+
+# the fetchlist columns a fetch result carries
+CARRY_FIELDS = [
+    T.StructField("url", T.StringType()),
+    T.StructField("url_hash", T.StringType()),
+    T.StructField("host", T.StringType()),
+    T.StructField("status", T.IntegerType()),
+    T.StructField("fetch_time", T.LongType()),
+    T.StructField("fetch_interval", T.IntegerType()),
+    T.StructField("retries_since_fetch", T.IntegerType()),
+    T.StructField("score", T.FloatType()),
+    T.StructField("cash", T.FloatType()),
+    T.StructField("distance", T.IntegerType()),
+    T.StructField("priority", T.IntegerType()),
+    T.StructField("batch_id", T.StringType()),
+    T.StructField("signature", T.StringType()),
+    T.StructField("is_seed", T.BooleanType()),
+]
+CARRY_COLS = [f.name for f in CARRY_FIELDS]
 
 # fetch output = the fetchlist columns we carry + result columns
 RESULT_EXTRA_FIELDS = [
@@ -73,42 +99,22 @@ RESULT_EXTRA_FIELDS = [
     T.StructField("fetch_duration_ms", T.LongType()),
 ]
 
-CARRY_COLS = [
-    "url",
-    "url_hash",
-    "host",
-    "status",
-    "fetch_time",
-    "fetch_interval",
-    "retries_since_fetch",
-    "score",
-    "cash",
-    "distance",
-    "priority",
-    "batch_id",
-    "signature",
-    "is_seed",
+#: the raw response to one queue row, null where no request was made;
+#: :func:`fetch_result` maps it to the fetch result
+RESPONSE_FIELDS = [T.StructField("http_status", T.IntegerType())] + [
+    f for f in RESULT_EXTRA_FIELDS
+    if f.name in ("fetch_ts", "bytes", "out_urls", "fetch_duration_ms")
 ]
 
 
+def best_first() -> tuple:
+    """Queue order, best first (SelectorEntry comparator,
+    GenerateJob.java:213-224)."""
+    return F.desc("priority"), F.desc("score"), F.asc("url")
+
+
 def fetch_result_schema() -> T.StructType:
-    base = [
-        T.StructField("url", T.StringType()),
-        T.StructField("url_hash", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("status", T.IntegerType()),
-        T.StructField("fetch_time", T.LongType()),
-        T.StructField("fetch_interval", T.IntegerType()),
-        T.StructField("retries_since_fetch", T.IntegerType()),
-        T.StructField("score", T.FloatType()),
-        T.StructField("cash", T.FloatType()),
-        T.StructField("distance", T.IntegerType()),
-        T.StructField("priority", T.IntegerType()),
-        T.StructField("batch_id", T.StringType()),
-        T.StructField("signature", T.StringType()),
-        T.StructField("is_seed", T.BooleanType()),
-    ]
-    return T.StructType(base + RESULT_EXTRA_FIELDS)
+    return T.StructType(CARRY_FIELDS + RESULT_EXTRA_FIELDS)
 
 
 def fetch_output_schema() -> T.StructType:
@@ -126,9 +132,8 @@ def queue_spacing_cols(q_cd, q_mt, q_mcd, robots_delay, cfg: CrawlConfig):
     minCrawlDelay instead of crawlDelay (FetchQueue.java:339-346).
 
     Precedence: explicit host-table override > robots crawl-delay >
-    configured default. The fetch group UDF applies the identical
-    scalar resolution (pinned equal by pytest + the
-    `host_politeness_override` oracle query)."""
+    configured default. :func:`fetch_queues` applies it once per
+    queue; the `host_politeness_override` oracle query checks it."""
     delay = F.coalesce(q_cd, robots_delay, F.lit(int(cfg.crawl_delay_ms))).cast("long")
     threads = F.coalesce(q_mt, F.lit(int(cfg.threads_per_queue))).cast("int")
     spacing = F.when(
@@ -137,147 +142,169 @@ def queue_spacing_cols(q_cd, q_mt, q_mcd, robots_delay, cfg: CrawlConfig):
     return delay, threads, spacing
 
 
-def _resolve_queue_spacing(pdf: pd.DataFrame, cfg: CrawlConfig) -> int:
-    """Scalar twin of :func:`queue_spacing_cols` for one host group
-    (first non-null value per override column wins — host == group)."""
-
-    def first(col):
-        if col in pdf:
-            vals = pdf[col].dropna()
-            if len(vals):
-                return int(vals.iloc[0])
-        return None
-
-    q_cd, q_mt, q_mcd = first("q_cd"), first("q_mt"), first("q_mcd")
-    robots = first("robots_delay")
-    delay = q_cd if q_cd is not None else (robots if robots is not None else cfg.crawl_delay_ms)
-    threads = q_mt if q_mt is not None else cfg.threads_per_queue
-    if threads > 1:
-        return q_mcd if q_mcd is not None else cfg.min_crawl_delay_ms
-    return delay
-
-
 def robots_denied_col(path, disallow):
     """F14 robots gate as a JVM-side predicate: the URL path matches
     any disallow prefix (SimpleRobotRules prefix semantics; the fork
-    keeps ROBOTS_DENIED plumbing at TaskScheduler.java:716-720). This
-    is the Column twin of :func:`_robots_denied` (the numpy form used
-    inside the fetch group UDF); tests pin them equal, and the
-    `robots_gate` driver query oracle-checks this form."""
+    keeps ROBOTS_DENIED plumbing at TaskScheduler.java:716-720). The
+    `robots_gate` driver query oracle-checks it."""
     return F.exists(
         F.coalesce(disallow, F.array().cast("array<string>")),
         lambda p: path.startswith(p),
     )
 
 
-def _robots_denied(paths: pd.Series, disallow: list[str] | None) -> np.ndarray:
-    if not disallow:
-        return np.zeros(len(paths), dtype=bool)
-    denied = np.zeros(len(paths), dtype=bool)
-    for prefix in disallow:
-        denied |= paths.str.startswith(prefix).fillna(False).to_numpy()
-    return denied
+def fetch_queues(
+    fetchlist: DataFrame,
+    robots: DataFrame | None,
+    host_config: DataFrame | None,
+    cfg: CrawlConfig,
+    batch_id: str,
+    partitions: int | None = None,
+) -> DataFrame:
+    """The politeness queue plan that native and crowd fetch share:
+    the fetchlist rows generated for this batch (mark-presence guard,
+    FetchMapper.java:102-106), each with
+
+    - ``_queue_key``: the queue unit, host (default) or registered
+      domain (URLPartitioner byDomain mode), which is never fetched
+      concurrently;
+    - ``denied``: the row's host robots rules disallow its path;
+    - ``spacing_ms``: the queue's request spacing. Each override
+      column (``host_config``'s ``q_cd``/``q_mt``/``q_mcd``,
+      TasksMonitor.java:480-496, and the robots crawl delay) gives its
+      first non-null value in best-first queue order, so a domain queue
+      takes one timing even when its hosts carry different overrides.
+
+    With ``partitions`` set, the rows are first clustered by queue with
+    a repartition by number, which the spacing window and the caller's
+    per-queue work share: AQE coalesces shuffles by bytes and would
+    pack the byte-small, Python-heavy queues of native fetch onto one
+    or two tasks, but it never coalesces a repartition by number."""
+    fl = fetchlist.filter(F.col("generated_batch") == batch_id).select(*CARRY_COLS)
+    if robots is None:
+        fl = fl.withColumns({
+            "disallow": F.lit(None).cast("array<string>"),
+            "robots_delay": F.lit(None).cast("double"),
+        })
+    else:
+        rb = robots.select("host", "disallow", F.col("crawl_delay_ms").alias("robots_delay"))
+        fl = fl.join(F.broadcast(rb), on="host", how="left")
+    if host_config is None:
+        fl = fl.withColumns({c: F.lit(None).cast("long") for c in ("q_mt", "q_cd", "q_mcd")})
+    else:
+        hc = host_config.select("host", "q_mt", "q_cd", "q_mcd")
+        fl = fl.join(F.broadcast(hc), on="host", how="left")
+    key = domain_col(F.col("host")) if cfg.partition_mode == "domain" else F.col("host")
+    fl = fl.withColumn("_queue_key", key)
+    if partitions is not None:
+        fl = fl.repartition(partitions, "_queue_key")
+
+    queue = (
+        Window.partitionBy("_queue_key")
+        .orderBy(*best_first())
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+
+    def first(col):
+        return F.first(col, ignorenulls=True).over(queue)
+
+    # a robots frame built from pandas carries NaN, not null, for a
+    # host without Crawl-delay
+    robots_delay = F.when(~F.isnan("robots_delay"), F.col("robots_delay").cast("long"))
+    _, _, spacing = queue_spacing_cols(
+        first("q_cd"), first("q_mt"), first("q_mcd"), first(robots_delay), cfg
+    )
+    path = F.regexp_replace("url", r"^[a-z]+://[^/]+", "")
+    return fl.select(
+        *CARRY_COLS,
+        "_queue_key",
+        robots_denied_col(path, F.col("disallow")).alias("denied"),
+        spacing.alias("spacing_ms"),
+    )
+
+
+def fetch_result(rows: DataFrame, round_start_ms: int, *extra: str) -> DataFrame:
+    """The one response projection, native and crowd: queue rows with
+    ``denied`` and a raw response (:data:`RESPONSE_FIELDS`) become the
+    fetch result (:func:`fetch_result_schema`, then the ``extra``
+    columns). A denied row is answered ROBOTS_DENIED without a
+    request. A row with no response was never requested (the round's
+    time limit, the FeederThread drain at ``FeederThread.java:126-140``,
+    or no crowd worker returned it): it stays unfetched with its status
+    untouched. The rest go through ProtocolStatus -> CrawlStatus
+    dispatch (``TaskScheduler.java:665-729``)."""
+    requested = F.col("http_status").isNotNull()
+    fetched = F.col("denied") | requested
+    proto = F.when(F.col("denied"), F.lit(ProtocolStatus.ROBOTS_DENIED)).when(
+        requested, http_to_protocol_col(F.col("http_status"))
+    )
+    return rows.select(
+        *CARRY_COLS,
+        proto.cast("int").alias("proto_code"),
+        F.when(fetched, protocol_to_crawl_col(proto))
+        .otherwise(F.col("status"))
+        .cast("int")
+        .alias("new_status"),
+        F.coalesce("fetch_ts", F.lit(round_start_ms)).alias("fetch_ts"),
+        "bytes",
+        "out_urls",
+        fetched.alias("fetched"),
+        F.coalesce("fetch_duration_ms", F.lit(0).cast("long")).alias("fetch_duration_ms"),
+        *extra,
+    )
+
+
+def _scatter(n: int, idx: np.ndarray, values) -> list:
+    """A length-``n`` list with ``values`` at positions ``idx`` and
+    None elsewhere."""
+    out = [None] * n
+    for i, v in zip(idx, values):
+        out[i] = v
+    return out
 
 
 def _make_fetch_group(cfg: CrawlConfig, web_params: tuple, round_start_ms: int):
-    """Returns the applyInPandas function for one host group."""
+    """Returns the applyInPandas function for one politeness queue."""
 
     def fetch_group(pdf: pd.DataFrame) -> pd.DataFrame:
         web = sw.SimWeb(*web_params)
-        # queue order: best-first (SelectorEntry comparator)
         pdf = pdf.sort_values(
             ["priority", "score", "url"], ascending=[False, False, True]
         ).reset_index(drop=True)
         n = len(pdf)
-
-        # queue-level spacing: host-table overrides (q_cd/q_mt/q_mcd)
-        # > robots crawl-delay > configured default; multi-threaded
-        # queues space by min delay (FetchQueue.java:339-346). First
-        # per-host value in the group wins (host == group in byHost
-        # mode; in byDomain mode this is the domain-level override).
-        delay = _resolve_queue_spacing(pdf, cfg)
-
-        paths = pdf["url"].str.replace(r"^[a-z]+://[^/]+", "", regex=True)
-        # robots disallow is per HOST even when the queue is a domain
-        denied = np.zeros(len(pdf), dtype=bool)
-        if "robots_disallow" in pdf:
-            for host in pdf["host"].unique():
-                sel = (pdf["host"] == host).to_numpy()
-                disallow = pdf.loc[sel, "robots_disallow"].iloc[0]
-                if isinstance(disallow, np.ndarray):
-                    disallow = disallow.tolist()
-                denied[sel] = _robots_denied(paths[sel], disallow)
-
         hi, j, valid = sw.parse_urls(pdf["url"])
-        http = web.http_status(hi, j)
-        http[~valid] = 404
-
-        proto = np.full(n, ProtocolStatus.EXCEPTION, dtype=np.int64)
-        for code, p in HTTP_TO_PROTOCOL.items():
-            proto[http == code] = p
-        proto[http == -1] = ProtocolStatus.TIMEOUT
-        proto[denied] = ProtocolStatus.ROBOTS_DENIED
-
-        # virtual politeness clock: robots-denied rows consume no
-        # request slot; everything else advances the clock by the
-        # request duration + crawl delay (FetchQueue.java:339-346:
-        # nextFetchTime = endTime + crawlDelay). Rows past the round
-        # time budget stay unfetched (feeder drain).
         durations = np.zeros(n, dtype=np.int64)
         if cfg.slow_host_avg_ms > 0:
             durations = web.response_time_ms(hi, j)
             durations[~valid] = 100
-        fetch_ts = np.zeros(n, dtype=np.int64)
-        fetched = np.zeros(n, dtype=bool)
+
+        # virtual politeness clock: robots-denied rows consume no
+        # request slot; everything else advances the clock by the
+        # request duration + queue spacing (FetchQueue.java:339-346:
+        # nextFetchTime = endTime + crawlDelay). Rows past the round
+        # time budget are not requested (feeder drain).
+        denied = pdf["denied"].to_numpy(dtype=bool)
+        spacing = int(pdf["spacing_ms"].iloc[0])
+        fetch_ts: list[int | None] = [None] * n
+        requested = np.zeros(n, dtype=bool)
         t = int(round_start_ms)
         budget_end = round_start_ms + cfg.round_time_limit_ms
         for i in range(n):
             if denied[i]:
-                fetched[i] = True  # evaluated, no request made
-                fetch_ts[i] = t
-                continue
-            if t >= budget_end:
-                continue  # time limit: remains ungenerated-for-this-round
-            fetch_ts[i] = t
-            fetched[i] = True
-            t += delay + int(durations[i])
+                fetch_ts[i] = t  # evaluated, no request made
+            elif t < budget_end:
+                fetch_ts[i], requested[i] = t, True
+                t += spacing + int(durations[i])
 
-        new_status = np.array(
-            [PROTOCOL_TO_CRAWL.get(int(p), CrawlStatus.RETRY) for p in proto],
-            dtype=np.int64,
-        )
-        new_status[~fetched] = pdf["status"].to_numpy()[~fetched]
-
-        # payload bytes for successful fetches (batch-rendered)
-        blobs: list[bytes | None] = [None] * n
-        outs: list[list[str] | None] = [None] * n
-        ok = fetched & (proto == ProtocolStatus.SUCCESS) & valid
-        ok_idx = np.nonzero(ok)[0]
-        if len(ok_idx):
-            rendered = web.render_payload_batch(hi[ok_idx], j[ok_idx])
-            for k, i in enumerate(ok_idx):
-                blobs[i] = rendered[k]
-        if ok.any():
-            ol = web.outlinks_of(hi[ok], j[ok])
-            for k, i in enumerate(np.nonzero(ok)[0]):
-                outs[i] = ol[k]
-        # redirects: target recorded as the single outlink
-        # (TaskScheduler.java:731-774)
-        redir = fetched & np.isin(proto, [ProtocolStatus.MOVED, ProtocolStatus.TEMP_MOVED])
-        if redir.any():
-            targets = web.redirect_target(hi[redir], j[redir])
-            for k, i in enumerate(np.nonzero(redir)[0]):
-                outs[i] = [str(targets[k])]
-
-        out = pdf[CARRY_COLS].copy()
-        out["proto_code"] = proto.astype("int32")
-        out["new_status"] = new_status.astype("int32")
-        out["fetch_ts"] = fetch_ts
-        out["bytes"] = blobs
-        out["out_urls"] = outs
-        out["fetched"] = fetched
+        sent = np.flatnonzero(requested)
+        http, blobs, outs = web.respond(hi[sent], j[sent], valid[sent])
+        out = pdf[CARRY_COLS + ["denied"]].copy()
+        out["http_status"] = pd.array(_scatter(n, sent, http.tolist()), dtype="Int32")
+        out["bytes"] = _scatter(n, sent, blobs)
+        out["out_urls"] = _scatter(n, sent, outs)
+        out["fetch_ts"] = pd.array(fetch_ts, dtype="Int64")
         out["fetch_duration_ms"] = durations
-        return out.join(decode_payloads(blobs))
+        return out.join(decode_payloads(out["bytes"]))
 
     return fetch_group
 
@@ -292,47 +319,23 @@ def fetch(
     host_config: DataFrame | None = None,
 ) -> DataFrame:
     """Run the politeness engine. Returns fetch results (one row per
-    fetchlist row; ``fetched`` False for rows the round budget never
-    reached) with the decode columns (``PARSE_FIELDS``) of each
-    rendered payload. Mark-presence guard: only rows generated for
-    this batch are fetched (FetchMapper.java:102-106).
+    fetchlist row of this batch; ``fetched`` False for rows the round
+    budget never reached) with the decode columns (``PARSE_FIELDS``)
+    of each rendered payload.
 
     ``host_config``: optional per-host queue overrides (columns
     ``host``, ``q_mt``, ``q_cd``, ``q_mcd`` — TasksMonitor.java:
     480-496), broadcast-joined like robots rules."""
-    fl = fetchlist.filter(F.col("generated_batch") == batch_id).select(*CARRY_COLS)
-    if robots is not None:
-        rb = robots.select(
-            "host",
-            F.col("disallow").alias("robots_disallow"),
-            F.col("crawl_delay_ms").alias("robots_delay"),
-        )
-        fl = fl.join(F.broadcast(rb), on="host", how="left")
-    else:
-        fl = fl.withColumn("robots_disallow", F.lit(None).cast("array<string>")).withColumn(
-            "robots_delay", F.lit(None).cast("long")
-        )
-    if host_config is not None:
-        hc = host_config.select(
-            "host",
-            F.col("q_mt").cast("int").alias("q_mt"),
-            F.col("q_cd").cast("long").alias("q_cd"),
-            F.col("q_mcd").cast("long").alias("q_mcd"),
-        )
-        fl = fl.join(F.broadcast(hc), on="host", how="left")
-    # politeness-queue unit: host (default) or registered domain
-    # (URLPartitioner byDomain mode) — the group key is the unit that
-    # is never fetched concurrently
-    if cfg.partition_mode == "domain":
-        from ..functions import urls as _urls
-
-        fl = fl.withColumn("_queue_key", _urls.domain_col(F.col("host")))
-    else:
-        fl = fl.withColumn("_queue_key", F.col("host"))
-    group_fn = _make_fetch_group(cfg, web_params, round_start_ms)
-    n_tasks = int(fl.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        fl.repartition(n_tasks, "_queue_key")
-        .groupBy("_queue_key")
-        .applyInPandas(group_fn, schema=fetch_output_schema())
+    group_schema = T.StructType(
+        CARRY_FIELDS
+        + [T.StructField("denied", T.BooleanType())]
+        + RESPONSE_FIELDS
+        + PARSE_FIELDS
     )
+    n_tasks = int(fetchlist.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    responses = (
+        fetch_queues(fetchlist, robots, host_config, cfg, batch_id, n_tasks)
+        .groupBy("_queue_key")
+        .applyInPandas(_make_fetch_group(cfg, web_params, round_start_ms), schema=group_schema)
+    )
+    return fetch_result(responses, round_start_ms, *(f.name for f in PARSE_FIELDS))

@@ -5,23 +5,25 @@
 batch contract instead of a long-lived REST server:
 
 - :func:`emit_fetch_tasks` publishes the round's fetchlist as a
-  leaseable task table (task key = url_hash, queue id = the politeness
-  queue key, per-queue crawl delay attached so external workers honor
-  politeness — the reference moves politeness to the workers by
-  leasing at most a few tasks per queue per call,
-  ``TaskSchedulers.randomFetchItems``);
+  leaseable task table (task key = url_hash). Queue id and per-queue
+  crawl delay come from the politeness queue plan native fetch runs
+  on (``fetch.fetch_queues``: host or domain queue key, host-config
+  overrides, multi-threaded queue spacing), so external workers honor
+  the same politeness — the reference moves politeness to the workers
+  by leasing at most a few tasks per queue per call,
+  ``TaskSchedulers.randomFetchItems``;
 - :func:`lease_tasks` emulates ``GET /fetch/schedule/{count}``: up to
   ``count`` tasks spread round-robin across queues (rank-over-queue
   window — never more than ``per_queue`` consecutive tasks of one
-  host, the randomFetchItems fairness property made deterministic);
+  queue, the randomFetchItems fairness property made deterministic);
 - :func:`ingest_fetch_results` accepts worker-submitted responses
   (url_hash, http_status, bytes, out_urls, fetch_ts, worker_id) and
-  produces rows in the SAME fetch-result schema the native engine
-  emits, so parse/updatedb are mode-agnostic. Tasks no worker returned
-  stay ``fetched = false`` — the round driver's budget-drop path keeps
-  their GENERATE_MARK and the stale-mark escape regenerates them
-  (the analog of pending-task re-scheduling,
-  ``TasksMonitor.java:retune``).
+  maps them through the native engine's response projection
+  (``fetch.fetch_result``), so parse/updatedb are mode-agnostic.
+  Tasks no worker returned stay ``fetched = false`` — the round
+  driver's budget-drop path keeps their GENERATE_MARK and the
+  stale-mark escape regenerates them (the analog of pending-task
+  re-scheduling, ``TasksMonitor.java:retune``).
 
 Robots gating stays engine-side: denied rows are answered immediately
 as ROBOTS_DENIED and never published as tasks (the reference's crowd
@@ -34,13 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
-from ..functions.status import (
-    HTTP_TO_PROTOCOL,
-    CrawlStatus,
-    ProtocolStatus,
-    protocol_to_crawl_col,
-)
-from .fetch import CARRY_COLS, robots_denied_col
+from .fetch import CARRY_COLS, best_first, fetch_queues, fetch_result
 
 #: columns an external worker must submit per completed task
 CROWD_RESULT_COLUMNS = [
@@ -54,62 +50,32 @@ CROWD_RESULT_COLUMNS = [
 ]
 
 
-def _http_to_protocol_col(http_status):
-    expr = F.lit(ProtocolStatus.EXCEPTION)
-    for code, proto in HTTP_TO_PROTOCOL.items():
-        expr = F.when(http_status == code, F.lit(proto)).otherwise(expr)
-    return F.when(http_status == -1, F.lit(ProtocolStatus.TIMEOUT)).otherwise(expr)
-
-
 def emit_fetch_tasks(
     fetchlist: DataFrame,
     robots: DataFrame | None,
     cfg: CrawlConfig,
     batch_id: str,
+    host_config: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (tasks, denied). ``tasks`` is the leaseable task table
     (best-first order rank within each queue attached); ``denied`` are
-    robots-blocked rows already answered engine-side."""
-    fl = fetchlist.filter(F.col("generated_batch") == batch_id).select(*CARRY_COLS)
-    if robots is not None:
-        rb = robots.select(
-            "host",
-            F.col("disallow").alias("robots_disallow"),
-            F.col("crawl_delay_ms").alias("robots_delay"),
-        )
-        fl = fl.join(F.broadcast(rb), on="host", how="left")
-    else:
-        fl = fl.withColumn(
-            "robots_disallow", F.lit(None).cast("array<string>")
-        ).withColumn("robots_delay", F.lit(None).cast("long"))
-    path = F.regexp_replace("url", r"^[a-z]+://[^/]+", "")
-    fl = fl.withColumn(
-        "_denied", robots_denied_col(path, F.col("robots_disallow"))
-    )
-    denied = fl.filter(F.col("_denied")).drop("_denied")
-    queue_win = Window.partitionBy("host").orderBy(
-        F.desc("priority"), F.desc("score"), F.asc("url")
-    )
+    the robots-blocked queue rows, answered engine-side.
+    ``host_config`` takes the per-host queue overrides native fetch
+    takes."""
+    queues = fetch_queues(fetchlist, robots, host_config, cfg, batch_id)
+    rank = Window.partitionBy("_queue_key").orderBy(*best_first())
     tasks = (
-        fl.filter(~F.col("_denied"))
-        .drop("_denied", "robots_disallow")
-        .withColumn("queue_id", F.col("host"))
-        .withColumn("queue_rank", F.row_number().over(queue_win))
-        .withColumn(
-            "crawl_delay_ms",
-            # robots frames built from pandas carry NaN (not NULL) for
-            # hosts without a Crawl-delay — coalesce alone would leak
-            # NaN to workers
-            F.when(
-                F.col("robots_delay").isNotNull()
-                & ~F.isnan(F.col("robots_delay").cast("double")),
-                F.col("robots_delay").cast("long"),
-            ).otherwise(F.lit(int(cfg.crawl_delay_ms))),
+        queues.filter(~F.col("denied"))
+        .withColumn("queue_rank", F.row_number().over(rank))
+        .select(
+            *CARRY_COLS,
+            F.col("_queue_key").alias("queue_id"),
+            "queue_rank",
+            F.col("spacing_ms").alias("crawl_delay_ms"),
+            F.lit(batch_id).alias("task_batch"),
         )
-        .drop("robots_delay")
-        .withColumn("task_batch", F.lit(batch_id))
     )
-    return tasks, denied
+    return tasks, queues.filter(F.col("denied"))
 
 
 def lease_tasks(tasks: DataFrame, count: int, per_queue: int = 1) -> DataFrame:
@@ -144,37 +110,9 @@ def ingest_fetch_results(
         submitted.select(*CROWD_RESULT_COLUMNS)
         .withColumn("_rn", F.row_number().over(sub_win))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn", "worker_id")
     )
-    proto = _http_to_protocol_col(F.col("http_status"))
-    joined = tasks.drop("queue_id", "queue_rank", "crawl_delay_ms", "task_batch").join(
-        sub.withColumnRenamed("url_hash", "url_hash")
-        .withColumnRenamed("bytes", "_bytes")
-        .withColumnRenamed("out_urls", "_out_urls"),
-        on="url_hash",
-        how="left",
+    queue_rows = tasks.select(*CARRY_COLS, F.lit(False).alias("denied")).unionByName(
+        denied.select(*CARRY_COLS, "denied")
     )
-    returned = F.col("http_status").isNotNull()
-    out = joined.select(
-        *CARRY_COLS,
-        F.when(returned, proto).otherwise(F.lit(None).cast("int")).alias("proto_code"),
-        F.when(returned, protocol_to_crawl_col(proto).cast("int"))
-        .otherwise(F.col("status"))
-        .alias("new_status"),
-        F.coalesce(F.col("fetch_ts"), F.lit(round_start_ms)).alias("fetch_ts"),
-        F.col("_bytes").alias("bytes"),
-        F.col("_out_urls").alias("out_urls"),
-        returned.alias("fetched"),
-        F.coalesce(F.col("fetch_duration_ms"), F.lit(0)).alias("fetch_duration_ms"),
-    )
-    denied_rows = denied.drop("robots_disallow", "robots_delay").select(
-        *CARRY_COLS,
-        F.lit(ProtocolStatus.ROBOTS_DENIED).alias("proto_code"),
-        F.lit(CrawlStatus.GONE).cast("int").alias("new_status"),
-        F.lit(round_start_ms).alias("fetch_ts"),
-        F.lit(None).cast("binary").alias("bytes"),
-        F.lit(None).cast("array<string>").alias("out_urls"),
-        F.lit(True).alias("fetched"),
-        F.lit(0).cast("long").alias("fetch_duration_ms"),
-    )
-    return out.unionByName(denied_rows)
+    return fetch_result(queue_rows.join(sub, on="url_hash", how="left"), round_start_ms)

@@ -43,7 +43,7 @@ from ..operators import generate as gen_op
 from ..operators import inject as inj_op
 from ..operators import parse as parse_op
 from ..operators import updatedb as upd_op
-from ..schema import METRICS
+from ..schema import HOSTS, METRICS
 from ..store.frontier import ParquetFrontierStore
 from ..store.urlseen import BloomUrlSeen
 
@@ -87,7 +87,7 @@ def unreachable_hosts(spark: SparkSession, workdir: str, cfg: CrawlConfig) -> Da
     versions = host_state_versions(workdir)
     if not versions:
         return None
-    hosts = spark.read.parquet(os.path.join(workdir, "hosts", versions[-1]))
+    hosts = spark.read.schema(HOSTS).parquet(os.path.join(workdir, "hosts", versions[-1]))
     return hosts.filter(host_eviction_cond(cfg)).select("host")
 
 
@@ -293,7 +293,7 @@ class RoundDriver:
         )
         p = self._hosts_path()
         if os.path.exists(p):
-            prev = self.spark.read.parquet(p)
+            prev = self.spark.read.schema(HOSTS).parquet(p)
             merged = prev.join(stats, on="host", how="outer").select(
                 "host",
                 (F.coalesce("failures", F.lit(0)) + F.coalesce("new_failures", F.lit(0))).alias(
@@ -589,7 +589,7 @@ class RoundDriver:
         from ..operators import fetch_service as svc
 
         tasks, denied = svc.emit_fetch_tasks(
-            fetchlist, self._robots_df(), self.cfg, batch_id
+            fetchlist, self._robots_df(), self.cfg, batch_id, self.host_config()
         )
         if self.cfg.fetch_service_port >= 0:
             # REST transport (fetch/service/FetchServer.java): serve the
@@ -645,36 +645,18 @@ class RoundDriver:
 
         from .. import simweb as sw
 
-        web = sw.SimWeb(*self.web_params)
         hi, j, valid = sw.parse_urls(task_pdf["url"])
-        http = web.http_status(hi, j)
-        http[~valid] = 404
-        rows = []
-        for k in range(len(task_pdf)):
-            blob, out_urls = None, None
-            if http[k] == 200:
-                blob = web.render_payload_batch(hi[k : k + 1], j[k : k + 1])[0]
-                out_urls = web.outlinks_of(hi[k : k + 1], j[k : k + 1])[0]
-            elif http[k] in (301, 302):
-                out_urls = [str(web.redirect_target(hi[k : k + 1], j[k : k + 1])[0])]
-            rows.append(
-                {
-                    "url_hash": task_pdf["url_hash"].iloc[k],
-                    "http_status": int(http[k]),
-                    "bytes": blob,
-                    "out_urls": out_urls,
-                    "fetch_ts": int(now + k),
-                    "fetch_duration_ms": 5,
-                    "worker_id": f"worker-{k % 4}",
-                }
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "url_hash", "http_status", "bytes", "out_urls",
-                "fetch_ts", "fetch_duration_ms", "worker_id",
-            ],
-        )
+        http, blobs, outs = sw.SimWeb(*self.web_params).respond(hi, j, valid)
+        k = np.arange(len(task_pdf))
+        return pd.DataFrame({
+            "url_hash": task_pdf["url_hash"].to_numpy(),
+            "http_status": http,
+            "bytes": pd.Series(blobs, dtype=object),
+            "out_urls": pd.Series(outs, dtype=object),
+            "fetch_ts": now + k,
+            "fetch_duration_ms": 5,
+            "worker_id": [f"worker-{i % 4}" for i in k],
+        })
 
     def _robots_df(self) -> DataFrame:
         from .. import simweb as sw

@@ -98,14 +98,14 @@ ROBOTS = T.StructType(
     ]
 )
 
+#: the host state each fetch stage writes (``plans/round.py``):
+#: failure strikes and fetch time per host
 HOSTS = T.StructType(
     [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("page_count", T.LongType()),
-        T.StructField("fetched_count", T.LongType()),
-        T.StructField("avg_score", T.DoubleType()),
-        T.StructField("failures", T.IntegerType()),
-        T.StructField("unreachable", T.BooleanType()),
+        T.StructField("host", T.StringType()),
+        T.StructField("failures", T.LongType()),
+        T.StructField("total_duration_ms", T.LongType()),
+        T.StructField("fetch_count", T.LongType()),
     ]
 )
 

@@ -225,6 +225,27 @@ class SimWeb:
             out.append(codec.encode_image(px, str(fmts[k]), caption=str(captions[k])))
         return out
 
+    def respond(
+        self, hi: np.ndarray, j: np.ndarray, valid: np.ndarray
+    ) -> tuple[np.ndarray, list[bytes | None], list[list[str] | None]]:
+        """One request to each page: (HTTP status, payload, outlinks).
+        A 200 carries the rendered payload and its outlinks, a redirect
+        its target as the single outlink (TaskScheduler.java:731-774).
+        A URL outside the SimWeb space (``valid`` False) answers 404."""
+        http = self.http_status(hi, j)
+        http[~valid] = 404
+        blobs: list[bytes | None] = [None] * len(hi)
+        outs: list[list[str] | None] = [None] * len(hi)
+        ok = np.flatnonzero(http == 200)
+        if len(ok):  # the batch renderer needs at least one page
+            rendered = self.render_payload_batch(hi[ok], j[ok])
+            for i, blob, links in zip(ok, rendered, self.outlinks_of(hi[ok], j[ok])):
+                blobs[i], outs[i] = blob, links
+        redir = np.flatnonzero(np.isin(http, (301, 302)))
+        for i, target in zip(redir, self.redirect_target(hi[redir], j[redir])):
+            outs[i] = [str(target)]
+        return http, blobs, outs
+
     # -- enumeration (for seeds and oracle checks) ----------------------
     def all_urls(self) -> pd.DataFrame:
         frames = []
