@@ -3,6 +3,8 @@ must be mode-transparent — parse/updatedb see the same fetch-result
 rows the native engine produces (FetchMode.CROWDSOURCING,
 fetch/service/FetchResource.java, plugin/protocol-crowd)."""
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -238,3 +240,25 @@ def test_nan_robots_delay_spaces_by_configured_delay(spark, web):
     tasks, _denied = svc.emit_fetch_tasks(fl, robots, cfg, "b1")
     got = {(r["host"], r["crawl_delay_ms"]) for r in tasks.collect()}
     assert got == {("host0.test", cfg.crawl_delay_ms), ("host3.test", 2000)}
+
+
+def test_crowd_worker_stamps_fetch_ts_by_url_hash_not_row_order(spark, tmp_path, web):
+    """The simulated crowd workers number their responses in url_hash
+    order: permuting the task table leaves every response's fetch_ts
+    and worker id unchanged."""
+    from warps_nutch_spark.plans.round import RoundDriver
+
+    drv = RoundDriver(spark, str(tmp_path / "wd"), make_test_config(), WEB, NOW)
+    urls = web.seeds(3)
+    hashes = [hashlib.sha1(u.encode()).hexdigest() for u in urls]
+    task_pdf = pd.DataFrame({"url_hash": hashes, "url": urls})
+    permuted = task_pdf.sample(frac=1, random_state=7).reset_index(drop=True)
+    assert list(permuted["url_hash"]) != list(task_pdf["url_hash"])
+
+    def stamps(pdf):
+        out = drv.crowd_worker(pdf, NOW)
+        return dict(zip(out["url_hash"], zip(out["fetch_ts"], out["worker_id"])))
+
+    got = stamps(task_pdf)
+    assert got == stamps(permuted)
+    assert sorted(ts for ts, _ in got.values()) == list(range(NOW, NOW + len(urls)))

@@ -193,58 +193,23 @@ def test_kill_and_resume_identical_state(spark, tmp_path_factory):
     assert ((a.score - b.score).abs() < 1e-3).all()
 
 
-def test_overlapped_failures_all_surface(spark, tmp_path):
-    """Overlapped stage actions: a lone failure re-raises unchanged,
-    two failures surface together as one ExceptionGroup."""
-    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(), WEB, START)
-    assert spark.sparkContext.defaultParallelism >= 4  # the threaded path
-    ran = []
-
-    def ok():
-        ran.append("ok")
-
-    def bad_io():
-        raise OSError("disk")
-
-    def bad_value():
-        raise ValueError("layout")
-
-    with pytest.raises(ValueError, match="layout"):
-        drv._run_overlapped(ok, bad_value)
-    with pytest.raises(ExceptionGroup) as info:
-        drv._run_overlapped(bad_io, ok, bad_value)
-    assert {type(e) for e in info.value.exceptions} == {OSError, ValueError}
-    assert ran == ["ok", "ok"]  # every action ran to the end
-
-
-def test_overlapped_actions_run_in_the_callers_job_group(spark, tmp_path):
-    """Pool-thread jobs carry the caller's job group, so a REST KILL
-    (cancelJobGroup) reaches the overlapped post-write actions."""
-    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(), WEB, START)
+def test_every_round_job_runs_in_the_callers_job_group(spark, tmp_path):
+    """A round's jobs, post-write actions included, all run in the
+    caller's thread and so carry its job group: a REST KILL
+    (``cancelJobGroup``) reaches every one of them."""
+    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(index_jit=True), WEB, START)
+    drv.inject(_seeds_df(spark, SimWeb(*WEB)))
     sc = spark.sparkContext
-    group = "overlapped-job-group"
-    sc.setJobGroup(group, "overlapped actions")
+    tracker = sc.statusTracker()
+    group = "round-job-group"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "one round")
     try:
-        drv._run_overlapped(
-            lambda: spark.range(10).count(), lambda: spark.range(20).collect()
-        )
+        drv.run_round(0)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
-
-
-def test_overlapped_actions_run_without_pinned_threads(spark, tmp_path, monkeypatch):
-    """With PYSPARK_PIN_THREAD=false the gateway is not a ClientServer and
-    inheritable_thread_target(session) returns the session; the overlapped
-    actions must still run."""
-    import py4j.clientserver
-
-    monkeypatch.setattr(py4j.clientserver, "ClientServer", type("Unpinned", (), {}))
-    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(), WEB, START)
-    out: list[int] = []
-    drv._run_overlapped(
-        lambda: out.append(spark.range(10).count()),
-        lambda: out.append(len(spark.range(20).collect())),
-    )
-    assert sorted(out) == [10, 20]
+    # the tracker may evict old jobs, never add ungrouped ones
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert tracker.getJobIdsForGroup(group)
+    assert os.listdir(os.path.join(drv.workdir, "index", "batch-0000"))

@@ -10,6 +10,7 @@ import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from warps_nutch_spark.config import make_test_config
 from warps_nutch_spark.plans.round import RoundDriver
@@ -132,19 +133,42 @@ def test_a_done_round_reruns_without_a_spark_job(spark, staged):
     assert st["stage_sec"] == staged["calls"]["updatedb"]["stage_sec"]
 
 
-def test_failed_done_write_leaves_the_stage_undone_and_resumes(spark, tmp_path, monkeypatch):
-    """``os.replace`` fails while fetch's record is written: the record
-    is absent (only its temp file exists), and resuming ends in the
-    state of an uninterrupted crawl."""
-    full = _driver(spark, tmp_path / "full")
-    for r in range(2):
-        full.run_round(r)
+def test_done_counters_equal_a_group_by_over_the_committed_artifact(spark, staged):
+    """The counters observed during each artifact write equal a
+    ``groupBy`` over the artifact as committed."""
+    drv = staged["drv"]
+    counted_rows = {
+        "fetch": ("new_status", lambda batch_id: F.col("fetched")),
+        "updatedb": ("status", lambda batch_id: F.col("updated_batch") == batch_id),
+    }
+    for batch_id in ("batch-0000", "batch-0001"):
+        for stage, (status, where) in counted_rows.items():
+            art = drv._read_stage(batch_id, stage).filter(where(batch_id))
+            counted = {str(r[0]): r[1] for r in art.groupBy(status).count().collect()}
+            assert drv._record(batch_id, stage)["counters"] == counted, (batch_id, stage)
 
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    drv = _driver(spark, tmp_path_factory.mktemp("full"))
+    for r in range(2):
+        drv.run_round(r)
+    return drv
+
+
+@pytest.mark.parametrize("killed_stage", ["fetch", "updatedb"])
+def test_failed_done_write_leaves_the_stage_undone_and_resumes(
+    spark, tmp_path, monkeypatch, uninterrupted, killed_stage
+):
+    """``os.replace`` fails while the stage's record is written: the
+    record is absent (only its temp file exists), and resuming, which
+    counts the reused artifact with one ``agg``, ends in the state and
+    counters of an uninterrupted crawl."""
     killed = _driver(spark, tmp_path / "killed")
     mark_done = killed._mark_done
 
-    def failing_fetch_mark(batch_id, stage, meta=None):
-        if stage != "fetch":
+    def failing_mark(batch_id, stage, meta=None):
+        if stage != killed_stage:
             return mark_done(batch_id, stage, meta)
 
         def boom(*a, **kw):
@@ -154,16 +178,16 @@ def test_failed_done_write_leaves_the_stage_undone_and_resumes(spark, tmp_path, 
             m.setattr(os, "replace", boom)
             mark_done(batch_id, stage, meta)
 
-    killed._mark_done = failing_fetch_mark
+    killed._mark_done = failing_mark
     with pytest.raises(OSError, match="_DONE swap"):
         killed.run_round(0)
-    fetch_dir = killed._stage_dir("batch-0000", "fetch")
-    assert killed._record("batch-0000", "fetch") is None
-    with open(os.path.join(fetch_dir, "_DONE.tmp")) as f:
+    stage_dir = killed._stage_dir("batch-0000", killed_stage)
+    assert killed._record("batch-0000", killed_stage) is None
+    with open(os.path.join(stage_dir, "_DONE.tmp")) as f:
         assert json.load(f)["counters"]  # the record was complete, not swapped in
 
     resumed = RoundDriver(spark, killed.workdir, killed.cfg, WEB, START)
     for r in range(2):
         resumed.run_round(r)
-    assert _metric_rows(resumed) == _metric_rows(full)
-    _assert_same_frontier(resumed, full)
+    assert _metric_rows(resumed) == _metric_rows(uninterrupted)
+    _assert_same_frontier(resumed, uninterrupted)

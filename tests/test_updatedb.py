@@ -14,7 +14,11 @@ from warps_nutch_spark.functions.schedules import (
     STATE_NOTMODIFIED,
     adaptive_schedule_cols,
 )
-from warps_nutch_spark.functions.status import CrawlStatus, ProtocolStatus
+from warps_nutch_spark.functions.status import (
+    CrawlStatus,
+    ProtocolStatus,
+    status_counter_cols,
+)
 from warps_nutch_spark.operators import fetch as fetch_op
 from warps_nutch_spark.operators import updatedb as upd_op
 from warps_nutch_spark.operators.rows import complete_rows
@@ -101,6 +105,13 @@ def _updatedb(frontier, parsed, cfg):
     return upd_op.updatedb(frontier, _fetchlist(frontier, parsed), parsed, cfg, NOW, "b1")
 
 
+def _updated_counts(merged, batch_id):
+    """The updatedb stage counters (rows this batch updated, per
+    status) as the round driver defines them."""
+    cols = status_counter_cols(F.col("status"), F.col("updated_batch") == batch_id)
+    return merged.agg(*cols).first().asDict()
+
+
 def test_opic_distribution_positional_and_cash(spark):
     cfg = make_test_config()
     # page A (cash 12) links to 3 urls: positional scores 3,2,1 + 12/3=4 each
@@ -148,7 +159,7 @@ def test_updatedb_new_rows_and_existing_update(spark):
         ],
     )
     merged = _updatedb(frontier, parsed, cfg)
-    counters = upd_op.updatedb_counters(merged, "b1")
+    counters = _updated_counts(merged, "b1")
     rows = {r["url"]: r for r in merged.collect()}
     # source page: cash reset, fetched schedule applied, marks cleared
     src = rows["http://a.test/p"]
@@ -171,8 +182,7 @@ def test_updatedb_new_rows_and_existing_update(spark):
     assert new["distance"] == 3
     assert new["priority"] == cfg.priority_default
     # counters cover all updated rows
-    total = sum(r["value"] for r in counters.collect())
-    assert total == 3
+    assert sum(counters.values()) == 3
 
 
 def test_updatedb_from_seed_priority(spark):
@@ -384,7 +394,7 @@ def test_budget_dropped_rows_keep_mark_and_fold_inlinks(spark):
     idle = rows["http://a.test/idle"]
     want = fetchlist.filter(F.col("url") == "http://a.test/idle").collect()[0]
     assert idle.asDict() == want.asDict()
-    counted = {r["counter"]: r["value"] for r in upd_op.updatedb_counters(merged, "b1").collect()}
+    counted = _updated_counts(merged, "b1")
     assert sum(counted.values()) == 2
 
 

@@ -189,20 +189,9 @@ def cmd_readdb(spark, args) -> int:
             )
         return 0
     # --stats (default): ReadDb stats output
-    fr = store.read()
-    by_status = {
-        str(r["status"]): r["n"]
-        for r in fr.groupBy("status").agg(F.count("*").alias("n")).collect()
-    }
-    print(
-        json.dumps(
-            {
-                "rows": fr.count(),
-                "by_status": by_status,
-                "version": store.current_version(),
-            }
-        )
-    )
+    from .service.dbreader import readdb_stats
+
+    print(json.dumps(readdb_stats(store)))
     return 0
 
 

@@ -10,7 +10,8 @@ Each mapping is a plain dict (for the protocol plugins, the driver
 queries' SQL and the test oracle) and a Spark Column lookup, which
 the fetch result projection
 (``operators/fetch.py::fetch_result``) applies to every response,
-native or crowd.
+native or crowd. :func:`status_counter_cols` defines the per-status
+counters fetch and updatedb record.
 """
 
 from __future__ import annotations
@@ -118,6 +119,15 @@ def http_to_protocol_col(http_status: Column) -> Column:
     any other unmapped code an exception."""
     table = {-1: ProtocolStatus.TIMEOUT, **HTTP_TO_PROTOCOL}
     return _lookup_col(http_status, table, ProtocolStatus.EXCEPTION)
+
+
+def status_counter_cols(status: Column, where: Column) -> list[Column]:
+    """A stage's status counters as aggregate Columns: per CrawlStatus
+    code, the rows matching ``where`` with that status, named by the
+    code. One ``observe`` on the artifact write evaluates them all, as
+    the reference counts its status families in the reduce that writes
+    the rows (``ReduceDatumBuilder.java:278-306``)."""
+    return [F.count_if(where & (status == code)).alias(str(code)) for code in CrawlStatus.NAMES]
 
 
 def status_name_col(status: Column) -> Column:

@@ -44,23 +44,20 @@ def eligible_candidates(
     cfg: CrawlConfig,
     now_ms: int,
     unreachable_hosts: DataFrame | None = None,
-    regenerate: bool = False,
     current_round: int | None = None,
 ) -> DataFrame:
-    df = frontier
-    if not regenerate:
-        # F9: skip marked rows UNLESS the mark is stale (>= regen_rounds
-        # old) — batch ids are zero-padded ordinals, so the age is a
-        # numeric diff (GenerateMapper.java:259-281 '1 day' escape)
-        not_marked = F.col("generated_batch").isNull()
-        if current_round is not None:
-            mark_round = F.regexp_extract(F.col("generated_batch"), r"^batch-(\d+)$", 1)
-            stale = (mark_round != "") & (
-                F.lit(current_round) - mark_round.cast("int") >= cfg.regen_rounds
-            )
-            df = df.filter(not_marked | stale)
-        else:
-            df = df.filter(not_marked)
+    # F9: skip marked rows UNLESS the mark is stale (>= regen_rounds
+    # old) — batch ids are zero-padded ordinals, so the age is a
+    # numeric diff (GenerateMapper.java:259-281 '1 day' escape)
+    not_marked = F.col("generated_batch").isNull()
+    if current_round is not None:
+        mark_round = F.regexp_extract(F.col("generated_batch"), r"^batch-(\d+)$", 1)
+        stale = (mark_round != "") & (
+            F.lit(current_round) - mark_round.cast("int") >= cfg.regen_rounds
+        )
+        df = frontier.filter(not_marked | stale)
+    else:
+        df = frontier.filter(not_marked)
     if cfg.max_distance >= 0:
         df = df.filter(F.col("distance") <= cfg.max_distance)
     df = df.filter(should_fetch_col(F.col("fetch_time"), F.col("fetch_interval"), now_ms, cfg))
@@ -119,16 +116,13 @@ def generate(
     now_ms: int,
     batch_id: str,
     unreachable_hosts: DataFrame | None = None,
-    regenerate: bool = False,
     current_round: int | None = None,
     avg_page_bytes: float | None = None,
 ) -> DataFrame:
     """Returns the fetchlist (frontier rows + sort/selection columns,
     marked with batch_id/generated_batch). Caller merges the marks.
     ``avg_page_bytes`` feeds the Q6 bandwidth cap when configured."""
-    cand = eligible_candidates(
-        frontier, cfg, now_ms, unreachable_hosts, regenerate, current_round
-    )
+    cand = eligible_candidates(frontier, cfg, now_ms, unreachable_hosts, current_round)
     cand = cand.withColumn(
         "sort_score", scoring.generator_sort_value(F.col("score"))
     ).withColumn("page_category", page_category_col(F.col("url")))
@@ -160,8 +154,3 @@ def generate(
         .withColumn("generated_batch", F.lit(batch_id))
         .drop("sort_score", "host_rank", "global_rank")
     )
-
-
-def mark_generated(frontier_cols: list[str], fetchlist: DataFrame) -> DataFrame:
-    """Project the fetchlist back to frontier schema for the MERGE."""
-    return fetchlist.select(*frontier_cols)

@@ -22,7 +22,8 @@ Reference dataflow (``mapreduce/DbUpdateJob``, SURVEY.md §3.4):
 - R7-R9 fetch schedule by status (adaptive), retry/gone backoff
   (``ReduceDatumBuilder.java:215-276``) -> CASE WHEN columns;
 - R10 mark cleanup (``ReduceDatumBuilder.java:195-213``);
-- R11 status counters (``NutchCounter.java:49-71``) -> groupBy/count.
+- R11 status counters (``NutchCounter.java:49-71``) -> counted while the
+  round driver writes these rows (``functions/status.py::status_counter_cols``).
 
 Scale shape: one keyed merge per URL, as the reference's one reduce
 per URL. The round's own rows (fetched pages and the fetchlist rows
@@ -305,19 +306,4 @@ def updatedb(
     absent = F.col("url_hash").isNull()
     return joined.select(
         *(F.when(absent, new[c]).otherwise(folded.get(c, F.col(c))).alias(c) for c in cols)
-    )
-
-
-def updatedb_counters(merge_rows: DataFrame, batch_id: str) -> DataFrame:
-    """R11 status counters: rows this batch updated, per status."""
-    return (
-        merge_rows.filter(F.col("updated_batch") == batch_id)
-        .groupBy("status")
-        .agg(F.count("*").alias("value"))
-        .select(
-            F.lit(batch_id).alias("batch_id"),
-            F.lit("updatedb").alias("stage"),
-            F.col("status").cast("string").alias("counter"),
-            F.col("value"),
-        )
     )

@@ -30,14 +30,15 @@ import json
 import logging
 import os
 import time
+from collections.abc import Sequence
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CrawlConfig
-from ..functions.status import ProtocolStatus
+from ..functions.status import ProtocolStatus, status_counter_cols
 from ..operators import fetch as fetch_op
 from ..operators import generate as gen_op
 from ..operators import inject as inj_op
@@ -159,15 +160,22 @@ class RoundDriver:
         schema = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
         return self.spark.read.schema(schema).parquet(path)
 
-    def _stage(self, batch_id: str, stage: str, build, *after) -> DataFrame | None:
+    def _stage(
+        self, batch_id: str, stage: str, build, *after, counters: Sequence[Column] = ()
+    ) -> DataFrame | None:
         """The round's one checkpoint protocol. A stage whose ``_DONE``
-        record exists returns its artifact. Otherwise the stage reuses
-        its committed artifact or writes ``build()`` as one, runs the
-        post-write actions ``after`` (each called with the artifact,
-        each idempotent on resume, each returning a counter dict or
-        None) through :meth:`_run_overlapped`, and last records its
-        time and counters in ``_DONE``. With ``build`` None the stage
-        has no artifact and its actions get None.
+        record exists returns its artifact. Otherwise the stage writes
+        ``build()`` as its artifact, or reuses the committed one, runs
+        the post-write actions ``after`` in order in the caller's thread
+        (each called with the artifact, each idempotent on resume), and
+        last records its time and counters in ``_DONE``. With ``build``
+        None the stage has no artifact and its actions get None.
+
+        ``counters`` are aggregate Columns (see
+        :func:`~warps_nutch_spark.functions.status.status_counter_cols`):
+        an ``Observation`` evaluates them during the artifact write, so
+        they cost no job of their own; a reused artifact is counted by
+        one ``agg`` over it. Zero counters are left out of the record.
 
         A committed artifact (its ``_SUCCESS``) is reused, never
         rebuilt: for updatedb, recomputing against the already-merged
@@ -175,67 +183,28 @@ class RoundDriver:
         if self._record(batch_id, stage) is not None:
             return self._read_stage(batch_id, stage) if build else None
         t0 = time.time()
-        art, record = None, {}
+        art, record, counts = None, {}, {}
         if build is not None:
             committed = os.path.join(self._stage_dir(batch_id, stage), "data", "_SUCCESS")
             if os.path.exists(committed):
                 art = self._read_stage(batch_id, stage)  # resume: reuse
+                if counters:
+                    counts = art.agg(*counters).first().asDict()
+            elif counters:
+                # unnamed: two crawls on one session may run the same stage
+                obs = Observation()
+                art = self._write_stage(build().observe(obs, *counters), batch_id, stage)
+                counts = obs.get
             else:
                 art = self._write_stage(build(), batch_id, stage)
             record["write_sec"] = time.time() - t0
-        counters: dict[str, int] = {}
-        for c in self._run_overlapped(*(lambda fn=fn: fn(art) for fn in after)):
-            counters.update(c or {})
-        record.update(sec=time.time() - t0, counters=counters)
+        for fn in after:
+            fn(art)
+        record.update(
+            sec=time.time() - t0, counters={k: v for k, v in counts.items() if v}
+        )
         self._mark_done(batch_id, stage, record)
         return art
-
-    def _run_overlapped(self, *fns) -> list:
-        """Run independent stage actions from a small thread pool so
-        each later job back-fills the earlier jobs' task tails (guide
-        §2.6 — Spark schedules concurrent jobs FIFO inside one
-        application) and return their results in order. Callers pass
-        only actions that are mutually independent AND individually
-        idempotent on resume; exceptions propagate after all threads
-        finish, so the stage's _DONE record is never written when any
-        action failed. A lone failure is re-raised as is; several are
-        raised together as an ExceptionGroup so none of their
-        tracebacks is lost.
-
-        Overlap only pays when there IS a task tail to back-fill: on a
-        near-single-core scheduler (e.g. one-core executors in the
-        host-sharded scaling protocol) concurrent jobs just interleave
-        on the same core and add scheduler/driver contention, so fall
-        back to sequential execution there — scale-adaptive, not a
-        local[32] constant. A lone action runs in the caller's thread."""
-        if len(fns) < 2 or self.spark.sparkContext.defaultParallelism < 4:
-            return [fn() for fn in fns]
-        from concurrent.futures import ThreadPoolExecutor
-
-        from py4j.clientserver import ClientServer
-        from pyspark import SparkContext, inheritable_thread_target
-
-        # In pinned-thread mode (PYSPARK_PIN_THREAD, on by default) each
-        # action carries the caller's local properties (job group,
-        # description), so a cancelJobGroup reaches the pool-thread jobs.
-        # Unpinned, Python threads have no JVM thread of their own to carry
-        # them, and inheritable_thread_target(session) returns the session.
-        pinned = isinstance(SparkContext._gateway, ClientServer)
-        wrap = inheritable_thread_target(self.spark) if pinned else (lambda f: f)
-        with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-            futures = [pool.submit(wrap(fn)) for fn in fns]
-            results, errors = [], []
-            for fut in futures:
-                try:
-                    results.append(fut.result())
-                except BaseException as exc:  # propagate after joining all
-                    errors.append(exc)
-        if len(errors) == 1:
-            raise errors[0]
-        if errors:
-            # an ExceptionGroup unless an interrupt is among them
-            raise BaseExceptionGroup("overlapped stage actions failed", errors)
-        return results
 
     def metrics(self) -> DataFrame:
         """The status counters of every done stage, one
@@ -403,8 +372,8 @@ class RoundDriver:
                 df.unpersist()
             _round_frontier.clear()
 
-        def _run(stage: str, build, *after) -> DataFrame | None:
-            art = self._stage(batch_id, stage, build, *after)
+        def _run(stage: str, build, *after, counters=()) -> DataFrame | None:
+            art = self._stage(batch_id, stage, build, *after, counters=counters)
             done.append(stage)
             return art
 
@@ -441,10 +410,8 @@ class RoundDriver:
             if stop_after == "generate":
                 return _partial("generate")
 
-            # -- fetch: the host-state update and the status counters
-            # both read the committed fetch artifact but are independent
-            # of each other, so they overlap and the second back-fills
-            # the first one's task tail
+            # -- fetch: the status counters of the fetched rows ride the
+            # artifact write; the host-state update reads the artifact
             def _fetch() -> DataFrame:
                 if self.cfg.fetch_mode == "crowd":
                     return self._crowd_fetch(fetchlist, batch_id, now)
@@ -453,18 +420,9 @@ class RoundDriver:
                     self.web_params, host_config=self.host_config(),
                 )
 
-            def _fetch_counters(res: DataFrame) -> dict:
-                rows = (
-                    res.filter(F.col("fetched"))
-                    .groupBy(F.col("new_status").cast("string"))
-                    .count()
-                    .collect()
-                )
-                return {row[0]: row[1] for row in rows}
-
             fetch_results = _run(
-                "fetch", _fetch,
-                lambda res: self._update_host_failures(res, batch_id), _fetch_counters,
+                "fetch", _fetch, lambda res: self._update_host_failures(res, batch_id),
+                counters=status_counter_cols(F.col("new_status"), F.col("fetched")),
             )
             if stop_after == "fetch":
                 return _partial("fetch")
@@ -529,10 +487,10 @@ class RoundDriver:
                 )
                 return self.store.with_bucket(rows.drop("host_bucket"))
 
-            # the three post-write actions — store adopt, URL-seen
-            # merge, status counters — touch disjoint state and each is
-            # idempotent on resume (committed_ops guard, URL-seen batch
-            # guard, counters recomputed from the artifact)
+            # the status counters of the rows this batch updated ride
+            # the artifact write; the post-write actions, store adopt
+            # then URL-seen merge, are each idempotent on resume
+            # (committed_ops guard, URL-seen batch guard)
             def _adopt(_rows) -> None:
                 # record the bucket count the artifact was written with
                 # so merge_linked can reject a stale-layout artifact. A
@@ -548,11 +506,12 @@ class RoundDriver:
                 # skipped, so a resumed round does not replay it
                 self.urlseen.merge_round(rows.select("url_hash"), "url_hash", batch_id)
 
-            def _updatedb_counters(rows: DataFrame) -> dict:
-                counters = upd_op.updatedb_counters(rows, batch_id).collect()
-                return {row["counter"]: row["value"] for row in counters}
-
-            _run("updatedb", _merge_rows, _adopt, _urlseen_merge, _updatedb_counters)
+            _run(
+                "updatedb", _merge_rows, _adopt, _urlseen_merge,
+                counters=status_counter_cols(
+                    F.col("status"), F.col("updated_batch") == batch_id
+                ),
+            )
             _release_frontier()  # merged: the cached MOR view is now stale
 
             fetched, updated = (
@@ -647,7 +606,9 @@ class RoundDriver:
 
         hi, j, valid = sw.parse_urls(task_pdf["url"])
         http, blobs, outs = sw.SimWeb(*self.web_params).respond(hi, j, valid)
-        k = np.arange(len(task_pdf))
+        # responses are numbered in url_hash order, so a response's
+        # fetch_ts does not depend on the task table's row order
+        k = task_pdf["url_hash"].rank(method="first").to_numpy(dtype=np.int64) - 1
         return pd.DataFrame({
             "url_hash": task_pdf["url_hash"].to_numpy(),
             "http_status": http,

@@ -47,6 +47,22 @@ from ..functions.urlfilters import RegexUrlFilter
 DEFAULT_DB_LIMIT = 100
 
 
+def readdb_stats(store) -> dict:
+    """ReadDb ``-stats`` (``WebTableReader.java:68-160``): the frontier's
+    rows per status and the store version, for ``readdb --stats`` and
+    the REST READDB job. ``rows`` is the sum over the statuses, so the
+    stats cost one Spark job."""
+    by_status = {
+        str(r["status"]): r["n"]
+        for r in store.read().groupBy("status").agg(F.count("*").alias("n")).collect()
+    }
+    return {
+        "rows": sum(by_status.values()),
+        "by_status": by_status,
+        "version": store.current_version(),
+    }
+
+
 def url_filter_col(url: Column, rules_text: str | None) -> Column:
     """Compile a regex-urlfilter rules body (or bare regex) into a
     boolean Column. None/empty accepts everything (DbResource feeds

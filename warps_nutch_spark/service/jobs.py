@@ -417,16 +417,7 @@ class JobManager:
                 push_bulk_http(lines, args["endpoint"])
             return {"indexed_docs": docs.count(), "out": out}
         if info.type == "READDB":
-            from pyspark.sql import functions as F
+            from .dbreader import readdb_stats
 
-            fr = drv.store.read()
-            by_status = {
-                str(r["status"]): r["n"]
-                for r in fr.groupBy("status").agg(F.count("*").alias("n")).collect()
-            }
-            return {
-                "rows": fr.count(),
-                "by_status": by_status,
-                "version": drv.store.current_version(),
-            }
+            return readdb_stats(drv.store)
         raise ValueError(f"Unknown job type {info.type}")
