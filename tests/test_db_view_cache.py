@@ -1,8 +1,8 @@
-"""The REST ``/db`` handler serves pages from one persisted merge-on-read
-view per store version. The cached path must return exactly what
-``db_query`` returns over a fresh ``store.read()`` at the version the
-store is at, across every kind of commit (merge, delete, compact), and
-the view must be rebuilt when Spark evicts it behind the server's back.
+"""The REST ``/db`` handler serves pages from one in-process Arrow view of
+the merge-on-read frontier per store version. The cached path must
+return exactly what ``db_query`` returns over a fresh ``store.read()`` at
+the version the store is at, across every kind of commit (merge, delete,
+compact), run no Spark job for a page, and hold nothing in Spark's cache.
 """
 
 import os
@@ -66,6 +66,19 @@ def _expected(store, q) -> list[dict]:
     return [r.asDict(recursive=True) for r in db_query(store.read(), **kw).collect()]
 
 
+def _count_reads(monkeypatch) -> list:
+    """The version of each ``ParquetFrontierStore.read()`` from now on."""
+    reads = []
+    read = ParquetFrontierStore.read
+
+    def counted(self):
+        reads.append(self.current_version())
+        return read(self)
+
+    monkeypatch.setattr(ParquetFrontierStore, "read", counted)
+    return reads
+
+
 def _check_pages(client, store):
     for q in QUERIES:
         got = client.db_query(crawlId=CRAWL, **q)["values"]
@@ -96,8 +109,7 @@ def served(spark, tmp_path):
 def test_cached_pages_equal_fresh_read_across_commits(served):
     spark, srv, client, store, before = served
     _check_pages(client, store)
-    views = _persisted(spark) - before
-    assert len(views) == 1
+    assert not (_persisted(spark) - before)  # the server holds no persisted RDD
     assert srv._views[CRAWL][1] == store.current_version()
 
     # a merge that re-marks and re-scores rows, and adds new ones
@@ -122,8 +134,9 @@ def test_cached_pages_equal_fresh_read_across_commits(served):
     _check_pages(client, store)
 
     # one view at a time: each commit's view replaced the last
-    assert len(_persisted(spark) - before) == 1
+    assert list(srv._views) == [CRAWL]
     assert srv._views[CRAWL][1] == store.current_version()
+    assert not (_persisted(spark) - before)
 
 
 def test_concurrent_first_queries_build_the_view_once(served, monkeypatch):
@@ -135,14 +148,7 @@ def test_concurrent_first_queries_build_the_view_once(served, monkeypatch):
     )
     expected = [_expected(store, q) for q in QUERIES]
 
-    reads = []
-    read = ParquetFrontierStore.read
-
-    def counted(self):
-        reads.append(self.current_version())
-        return read(self)
-
-    monkeypatch.setattr(ParquetFrontierStore, "read", counted)
+    reads = _count_reads(monkeypatch)
     got: dict = {}
     errors: list = []
     n = (os.cpu_count() or 2) + 2  # more clients than cores
@@ -170,10 +176,10 @@ def test_concurrent_first_queries_build_the_view_once(served, monkeypatch):
     assert not errors
     assert all(got[t] == expected for t in range(n))
     assert reads == [store.current_version()]
-    assert len(_persisted(spark) - before) == 1
+    assert not (_persisted(spark) - before)
 
 
-def test_cached_page_is_one_spark_job(served):
+def test_cached_page_runs_no_spark_job(served):
     spark, srv, client, store, _ = served
     sc = spark.sparkContext
     for q in QUERIES:
@@ -182,27 +188,34 @@ def test_cached_page_is_one_spark_job(served):
     sc.setJobGroup(group, "cached /db pages")
     try:
         for q in QUERIES:
-            srv._db_query(dict(q, crawlId=CRAWL))
+            assert srv._db_query(dict(q, crawlId=CRAWL))["values"]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == len(QUERIES)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
 
-def test_evicted_view_is_rebuilt_and_close_releases_it(served):
+def test_clear_cache_keeps_the_view_and_close_drops_it(served, monkeypatch):
     spark, srv, client, store, before = served
     _check_pages(client, store)
-    assert len(_persisted(spark) - before) == 1
-    view = srv._views[CRAWL][2]
+    expected = [_expected(store, q) for q in QUERIES]
+    reads = _count_reads(monkeypatch)
 
-    # the cache manager matches by plan: clearCache() drops the view
-    # without the server knowing, and the next query must rebuild it
+    # the view is not in Spark's cache: clearCache() cannot drop it
     spark.catalog.clearCache()
-    assert not view.storageLevel.useMemory
-    _check_pages(client, store)
-    level = srv._views[CRAWL][2].storageLevel
-    assert level.useMemory or level.useDisk
-    assert len(_persisted(spark) - before) == 1
+    assert [client.db_query(crawlId=CRAWL, **q)["values"] for q in QUERIES] == expected
+    assert reads == []
 
     srv.close()
     assert not srv._views
     assert not (_persisted(spark) - before)
+
+
+def test_zero_row_frontier_pages_are_empty(served):
+    spark, srv, client, store, _ = served
+    _check_pages(client, store)
+    store.delete(store.read().select("url_hash", "host"), {"op": "delete"})
+    assert store.read().count() == 0
+    for q in QUERIES:
+        assert client.db_query(crawlId=CRAWL, **q) == {"values": []}, q
+        assert _expected(store, q) == [], q
+    assert srv._views[CRAWL][1] == store.current_version()

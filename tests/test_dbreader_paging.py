@@ -1,11 +1,13 @@
 """DbReader paging invariants: consecutive /db pages tile the full
 reversed-key-ordered result with no gaps, overlaps, or reorderings —
-including the reference's start-1 offset quirk (DbResource.java:48)."""
+including the reference's start-1 offset quirk (DbResource.java:48) —
+and a page cut from the Arrow frontier view equals the DataFrame form's."""
 
 import pytest
 
+from warps_nutch_spark.functions.urlfilters import DEFAULT_REGEX_RULES
 from warps_nutch_spark.queries import derived_frontier
-from warps_nutch_spark.service.dbreader import db_query
+from warps_nutch_spark.service.dbreader import db_page, db_query, frontier_view
 
 
 def _urls(page):
@@ -69,3 +71,29 @@ def test_deep_page_over_persisted_frontier_is_one_take_ordered(spark):
         assert "Window" not in above_cache
     finally:
         fr.unpersist()
+
+
+# the default rule set as a rules body: its trap guard uses a backreference
+DEFAULT_RULES_BODY = "\n".join(("+" if ok else "-") + pat for ok, pat in DEFAULT_REGEX_RULES)
+
+
+@pytest.mark.parametrize(
+    "flt",
+    [
+        # q_db_query's filter: raw reversed keys, a rules body, deep start
+        dict(start_key="test.src1", end_key="test.src1~", keys_reversed=True,
+             url_filter="-\\.jpg$\n-index\\.html$\n+.", batch_id=None,
+             fields=["url", "host", "score", "fetch_time"], start=11, limit=200),
+        dict(url_filter=DEFAULT_RULES_BODY, batch_id=None, start=30, limit=50),
+        dict(url_filter=r"src[0-9]\.test/.*[0-9]$", batch_id=None, fields=["score", "url"],
+             limit=25),
+        dict(start_key="http://test.src2/", batch_id=None, start=3, limit=0),
+    ],
+)
+def test_arrow_page_equals_db_query(spark, flt):
+    fr = derived_frontier(spark, "/root/testdata/sf0.001").filter(
+        "url NOT LIKE '%index.html'"
+    )
+    want = [r.asDict(recursive=True) for r in db_query(fr, **flt).collect()]
+    assert db_page(frontier_view(fr), **flt) == want
+    assert want or flt["limit"] == 0

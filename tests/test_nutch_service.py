@@ -15,6 +15,7 @@ Parity pins:
   resources do.
 """
 
+import json
 import os
 import time
 
@@ -167,6 +168,36 @@ def test_db_endpoint_page_semantics(spark, client, master):
     assert {v["url"] for v in got["values"]} == exp
 
 
+def test_db_full_rows_equal_db_query(spark, client, master):
+    """Default-projection /db pages over the stage crawl's rows, which
+    carry protocol_status, outlinks and inlinks, equal ``db_query``'s
+    rows over a fresh read, nested structs and arrays included."""
+    from warps_nutch_spark.service.dbreader import db_query
+    from warps_nutch_spark.store.frontier import ParquetFrontierStore
+
+    store = ParquetFrontierStore(
+        spark, os.path.join(master.base_dir, "stagecrawl", "frontier"), 4
+    )
+    kw = {"startKey": "start_key", "endKey": "end_key", "urlFilter": "url_filter",
+          "batchId": "batch_id", "start": "start", "limit": "limit"}
+    queries = [
+        {"startKey": "http://host1.test/", "endKey": "http://host1.test/~", "limit": 40},
+        {"urlFilter": "-/search\n+host[0-2]\\.test/", "batchId": None, "limit": 40},
+        {"start": 4, "limit": 40},
+        {"batchId": "batch-0001", "start": 2, "limit": 40},
+    ]
+    nested = set()
+    for q in queries:
+        got = client.db_query(crawlId="stagecrawl", **q)["values"]
+        frontier = store.read()
+        want = [r.asDict(recursive=True)
+                for r in db_query(frontier, **{kw[k]: v for k, v in q.items()}).collect()]
+        assert got == want, q
+        assert got and set(got[0]) == set(frontier.columns), q
+        nested |= {c for row in got for c in ("protocol_status", "outlinks", "inlinks") if row[c]}
+    assert nested == {"protocol_status", "outlinks", "inlinks"}
+
+
 def test_job_admission_and_state_machine(client, master):
     cid = _mk_config(client, "conf-admission")
     seed_dir = client.create_seed(SimWeb(*WEB).seeds(2))
@@ -242,6 +273,14 @@ def test_error_paths(client, master):
     with pytest.raises(urllib.error.HTTPError) as ei:
         client.db_query(crawlId="stagecrawl", startKey="not a url")
     assert ei.value.code == 400
+    # a urlFilter that does not compile, bare or as a rule, and a
+    # negative limit -> 400 naming the bad input
+    for bad, named in (({"urlFilter": "("}, "'('"), ({"urlFilter": "-/x\n+("}, "'('"),
+                       ({"limit": -1}, "-1")):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            client.db_query(crawlId="stagecrawl", **bad)
+        assert ei.value.code == 400, bad
+        assert named in json.loads(ei.value.read())["error"], bad
 
 
 def test_create_right_after_finished_is_admitted(spark, tmp_path, monkeypatch):

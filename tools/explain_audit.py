@@ -320,9 +320,11 @@ def main():
         ("parse_tika_tier", "contains MapInPandas", "MapInPandas" in tika_plan)
     )
 
-    # REST /db page query (DbReader): the paging must compile to a
-    # per-partition top-(offset+limit) TakeOrderedAndProject, never a
-    # global Sort + Exchange — only one page of rows reaches the driver
+    # DbReader page query: q_db_query's DataFrame form (the REST server
+    # no longer runs it; it cuts pages from an in-process Arrow view)
+    # must compile to a per-partition top-(offset+limit)
+    # TakeOrderedAndProject, never a global Sort + Exchange — only one
+    # page of rows reaches the driver
     from warps_nutch_spark.queries import QUERIES as _Q
 
     db_plan = formatted(_Q["db_query"](spark, sf_dir))

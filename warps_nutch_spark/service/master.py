@@ -15,21 +15,22 @@ classes under ``service/resources/``:
 - ``POST /job/create`` · ``GET /job[?state=]`` · ``GET /job/{id}`` ·
   ``GET /job/{id}/stop`` · ``GET /job/{id}/abort`` — ``JobResource.java``
 - ``POST /db`` (DbFilter JSON)            → DbQueryResult {values:[...]}
-  — ``DbResource.java`` over :func:`..service.dbreader.db_query`
+  — ``DbResource.java`` over :func:`..service.dbreader.db_page`
 - ``POST /seed/create`` (SeedList JSON)   → seed dir path —
   ``SeedResource.java:36-63`` (writes the url list to a server-side
   file whose parent dir is returned, to be fed to an INJECT job)
 
 Transport is stdlib ThreadingHTTPServer (the proven in-process live
-test pattern from the ES-bulk / fetch-server sinks); every data-plane
-call delegates to the shared SparkSession. Jobs stream through Spark
-and the db endpoint returns one bounded page. The only row data the
-server holds is one cached frontier view per ``crawlId``: the
-merge-on-read (MOR) resolution of the store at one version, persisted
-in Spark's block cache (the analog of the HBase block cache under the
-reference's DbReader scans). It is released when the store's version
-changes and on ``close()``. Beyond that the footprint is O(jobs +
-configs), like the reference's in-memory managers.
+test pattern from the ES-bulk / fetch-server sinks); every job delegates
+to the shared SparkSession and streams through Spark. The only row data
+the server holds is one frontier view per ``crawlId``: the
+merge-on-read (MOR) resolution of the store at one version, copied into
+the server process as an Arrow table sorted by the reversed row key. A
+``/db`` page is cut from it in the request thread with no Spark job
+(:func:`..service.dbreader.db_page`), as the reference's DbReader scans
+rows inside the server process. The view is replaced when the
+store's version changes and dropped on ``close()``. Beyond that the
+footprint is O(jobs + configs), like the reference's in-memory managers.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from .dbreader import DEFAULT_DB_LIMIT, db_query
+from .dbreader import DEFAULT_DB_LIMIT, db_page, frontier_view
 from .jobs import ANY, ConfManager, JobManager, RUNNING
 
 
@@ -78,7 +79,7 @@ class NutchMasterServer:
         self.start_time_ms = int(_dt.datetime.now().timestamp() * 1000)
         self._stop_delay_s = stop_delay_s
         self._stopped = threading.Event()
-        # crawlId -> (store, resolved version, persisted MOR view)
+        # crawlId -> (store, resolved version, Arrow frontier view)
         self._views: dict[str, tuple] = {}
         self._views_lock = threading.Lock()
         outer = self
@@ -151,8 +152,6 @@ class NutchMasterServer:
             self._srv.shutdown()
             self._srv.server_close()
         with self._views_lock:
-            for _, _, view in self._views.values():
-                view.unpersist()
             self._views.clear()
 
     # -- routing ----------------------------------------------------------
@@ -243,54 +242,48 @@ class NutchMasterServer:
         view = self._frontier_view(flt.get("crawlId") or "default")
         if view is None:
             return {"values": []}
-        page = db_query(
-            view,
-            start_key=flt.get("startKey"),
-            end_key=flt.get("endKey"),
-            url_filter=flt.get("urlFilter"),
-            batch_id=flt.get("batchId", "-all"),
-            fields=flt.get("fields"),
-            start=int(flt.get("start", 0)),
-            limit=int(flt.get("limit", DEFAULT_DB_LIMIT)),
-            keys_reversed=bool(flt.get("isKeysReversed", False)),
-        )
-        return {"values": [r.asDict(recursive=True) for r in page.collect()]}
+        return {
+            "values": db_page(
+                view,
+                start_key=flt.get("startKey"),
+                end_key=flt.get("endKey"),
+                url_filter=flt.get("urlFilter"),
+                batch_id=flt.get("batchId", "-all"),
+                fields=flt.get("fields"),
+                start=flt.get("start", 0),
+                limit=flt.get("limit", DEFAULT_DB_LIMIT),
+                keys_reversed=bool(flt.get("isKeysReversed", False)),
+            )
+        }
 
     @staticmethod
-    def _is_live(entry: tuple) -> bool:
-        """The cached view still serves its store's current version.
-        Spark's cache manager matches cached data by plan, so
-        ``clearCache()`` or an ``unpersist()`` of an equal plan (a
-        round's released frontier at the same version) evicts the view
-        behind the server's back; its storage level then reads NONE."""
-        store, version, view = entry
-        level = view.storageLevel
-        return store.current_version() == version and (level.useMemory or level.useDisk)
+    def _is_live(entry: tuple | None) -> bool:
+        """The cached view still serves its store's current version."""
+        return entry is not None and entry[0].current_version() == entry[1]
 
     def _frontier_view(self, crawl_id: str):
-        """The crawl's frontier, MOR-resolved and persisted once per
-        store version, or None when the crawl has no store yet. A hit
-        reads only the store's manifest (``_VERSION``); a miss (new
-        version, evicted view) builds the view under the lock, so
-        concurrent first queries after a commit resolve it once, and
-        releases the old one. Opening the store and planning the view
-        take the layout and schema from the manifest, not from Spark.
+        """The crawl's frontier, MOR-resolved into an Arrow table sorted
+        by the reversed row key once per store version
+        (:func:`..service.dbreader.frontier_view`), or None when the
+        crawl has no store yet. A hit reads only the store's manifest
+        (``_VERSION``); a miss builds the view under the lock, so
+        concurrent first queries after a commit resolve it once.
+        Opening the store and planning the read take the layout and
+        schema from the manifest, not from Spark.
 
-        The view reads the snapshot files its version's manifest
-        lists, so snapshot expiry must pin the version a cached view
-        holds."""
+        The view holds its rows in the server process's memory, one copy
+        per ``crawlId``, and does not spill to disk. It references no
+        snapshot file, so no store version stays pinned by it."""
         from ..store.frontier import ParquetFrontierStore
 
         entry = self._views.get(crawl_id)
-        if entry is not None and self._is_live(entry):
+        if self._is_live(entry):
             return entry[2]
         with self._views_lock:
             entry = self._views.get(crawl_id)
-            if entry is not None:
-                if self._is_live(entry):
-                    return entry[2]
-                del self._views[crawl_id]
-                entry[2].unpersist()
+            if self._is_live(entry):
+                return entry[2]
+            self._views.pop(crawl_id, None)  # free the old copy before the build
             try:
                 # pure reader: adopt the store's recorded bucket layout
                 store = ParquetFrontierStore.open(
@@ -302,15 +295,13 @@ class NutchMasterServer:
             # across the call means no commit landed inside it
             version = store.current_version()
             while True:
-                view = store.read()
+                frontier = store.read()
                 before, version = version, store.current_version()
                 if version == before:
                     break
-            if self._stopped.is_set():  # close() already released the cache
-                return view
-            view = view.persist()
-            view.count()
-            self._views[crawl_id] = (store, version, view)
+            view = frontier_view(frontier)
+            if not self._stopped.is_set():  # close() already dropped the views
+                self._views[crawl_id] = (store, version, view)
             return view
 
     # -- seed (SeedResource.createSeedFile) --------------------------------
