@@ -1,8 +1,9 @@
 """The REST ``/db`` handler serves pages from one in-process Arrow view of
 the merge-on-read frontier per store version. The cached path must
 return exactly what ``db_query`` returns over a fresh ``store.read()`` at
-the version the store is at, across every kind of commit (merge, delete,
-compact), run no Spark job for a page, and hold nothing in Spark's cache.
+the version the store is at, across every kind of commit (merge,
+compact, a new base), run no Spark job for a page, and hold nothing in
+Spark's cache.
 """
 
 import os
@@ -123,11 +124,6 @@ def test_cached_pages_equal_fresh_read_across_commits(served):
         {"op": "updatedb", "batch_id": "b2"},
     )
     _check_pages(client, store)
-    # a delete whose tombstones carry the host
-    victims = store.read().filter(F.col("url").rlike(r"/p/(2|5)$"))
-    store.delete(victims.select("url_hash", "host"), {"op": "delete"})
-    _check_pages(client, store)
-    assert store.read().filter(F.col("url").rlike(r"/p/(2|5)$")).count() == 0
     # a compaction: same rows, new base
     store.compact()
     assert not store.has_deltas()
@@ -213,7 +209,8 @@ def test_clear_cache_keeps_the_view_and_close_drops_it(served, monkeypatch):
 def test_zero_row_frontier_pages_are_empty(served):
     spark, srv, client, store, _ = served
     _check_pages(client, store)
-    store.delete(store.read().select("url_hash", "host"), {"op": "delete"})
+    # a new zero-row base
+    store.init(spark.createDataFrame([], store.read().schema), {"op": "init"})
     assert store.read().count() == 0
     for q in QUERIES:
         assert client.db_query(crawlId=CRAWL, **q) == {"values": []}, q

@@ -199,46 +199,6 @@ def test_budget_dropped_rows_keep_generate_mark(spark, tmp_path_factory):
     assert {r.url for r in fr.itertuples()} == oracle.seen()
 
 
-def test_mor_equality_deletes(spark, tmp_path):
-    """Tombstone deltas (Iceberg equality-delete analog): deleted keys
-    vanish at read, O(deletes) write cost; compaction removes them
-    physically; a later merge can re-insert the key."""
-    st = _store(spark, tmp_path, compact_ratio=100.0)
-    st.init(_rows(spark, [("a", 1, 1.0), ("b", 2, 2.0), ("c", 1, 3.0)]))
-    st.merge(_rows(spark, [("d", 3, 4.0)]))
-    st.delete(spark.createDataFrame([("b",), ("d",)], ["url_hash"]))
-    got = {r["url_hash"] for r in st.read().collect()}
-    assert got == {"a", "c"}
-    kinds = [ln["kind"] for ln in st.lineage_chain()]
-    assert kinds == ["base", "delta", "delta"]  # delete was O(deletes)
-    # compaction drops tombstones physically and preserves the view
-    st.compact()
-    got2 = {r["url_hash"]: r["score"] for r in st.read().collect()}
-    assert got2 == {"a": 1.0, "c": 3.0}
-    assert "_tombstone" not in st.read().columns
-    # re-insert a deleted key
-    st.merge(_rows(spark, [("b", 2, 9.0)]))
-    assert {r["url_hash"]: r["score"] for r in st.read().collect()}["b"] == 9.0
-
-
-def test_mor_delete_with_host_colocates_tombstone(spark, tmp_path):
-    """A delete key carrying host must bucket its tombstone exactly like
-    the live row (with_bucket), so a bucket-pruned MOR read would see
-    tombstone and victim together."""
-    st = _store(spark, tmp_path, compact_ratio=100.0)
-    st.init(_rows(spark, [("a", 1, 1.0), ("b", 2, 2.0), ("c", 1, 3.0)]))
-    st.delete(
-        spark.createDataFrame([("b", "host2.test")], ["url_hash", "host"])
-    )
-    assert {r["url_hash"] for r in st.read().collect()} == {"a", "c"}
-    # tombstone landed in the victim's bucket
-    base = spark.read.parquet(os.path.join(str(tmp_path), "fr", "v000000", "data"))
-    victim_bucket = base.filter(F.col("url_hash") == "b").collect()[0]["host_bucket"]
-    tomb = spark.read.parquet(os.path.join(str(tmp_path), "fr", "v000001", "data"))
-    tb = tomb.filter(F.col("_tombstone")).collect()
-    assert len(tb) == 1 and tb[0]["host_bucket"] == victim_bucket
-
-
 def test_round_updatedb_uses_linked_merge(spark, tmp_path):
     """The round's delta snapshot must be hard-linked from the stage
     artifact (one write of the round's updates, not two) — guard
@@ -291,31 +251,16 @@ def test_incremental_compaction_links_untouched_buckets(spark, tmp_path):
     assert after == before
 
 
-def test_incremental_compaction_stray_tombstone_falls_back(spark, tmp_path):
-    """A host-less tombstone (bucketed by url_hash, maybe away from its
-    victim) must force the full rewrite, never resurrect the key."""
-    st = _store(spark, tmp_path, compact_ratio=100.0)
-    st.init(_rows(spark, [(f"u{i}", (i % 6) + 1, float(i)) for i in range(12)]))
-    st.delete(spark.createDataFrame([("u3",)], ["url_hash"]))
-    v = st.compact()
-    assert "compacted_buckets" not in st.lineage(v)  # full rewrite path
-    got = {r["url_hash"] for r in st.read().collect()}
-    assert "u3" not in got and len(got) == 11
-
-
 def test_read_host_pruned_equals_full_read(spark, tmp_path):
-    """read_host must equal read().filter(host) in every delta state,
-    including colocated tombstones, and scan only one bucket."""
+    """read_host must equal read().filter(host) over a store with a
+    delta, and scan only one bucket."""
     from pyspark.sql import functions as F
 
     st = _store(spark, tmp_path, compact_ratio=100.0)
     rows = [(f"u{i}", (i % 6) + 1, float(i)) for i in range(24)]
     st.init(_rows(spark, rows))
     st.merge(_rows(spark, [("u1", 2, 100.0), ("u30", 2, 30.0)]))
-    st.delete(
-        spark.createDataFrame([("u7", "host2.test")], ["url_hash", "host"])
-    )
-    for host in ["host2.test", "host5.test"]:
+    for host in ["host2.test", "host3.test", "host5.test"]:
         want = {
             r["url_hash"]: r["score"]
             for r in st.read().filter(F.col("host") == host).collect()
@@ -334,15 +279,6 @@ def test_read_host_pruned_equals_full_read(spark, tmp_path):
     files = {r[0] for r in base_scan.select(F.input_file_name()).distinct().collect()}
     base_buckets = {f.split("host_bucket=")[1].split("/")[0] for f in files}
     assert base_buckets == {str(b)}
-
-    # host-less tombstone -> falls back, still equal
-    st.delete(spark.createDataFrame([("u2",)], ["url_hash"]))
-    for host in ["host3.test"]:
-        want = {
-            r["url_hash"] for r in st.read().filter(F.col("host") == host).collect()
-        }
-        got = {r["url_hash"] for r in st.read_host(host).collect()}
-        assert got == want
 
 
 def test_reopen_with_wrong_bucket_count_refused(spark, tmp_path):
@@ -391,35 +327,27 @@ def test_single_resolver_equals_pandas_upsert(spark, tmp_path):
     """read(), the union of read_host() over every host, and read()
     after an incremental compact() all resolve through one MOR
     resolver, and all equal a plain pandas upsert of the same inputs:
-    three overlapping deltas (newest wins), tombstones carrying a host,
-    and a re-insert of a deleted key."""
+    three overlapping deltas (newest wins) that update and insert."""
     import pandas as pd
 
     st = _store(spark, tmp_path, compact_ratio=100.0)
     base = [(f"u{i}", (i % 12) + 1, float(i)) for i in range(24)]
     # every delta stays on hosts 1-3, so compaction leaves buckets alone
     steps = [
-        ("merge", [("u0", 1, 100.0), ("u1", 2, 101.0), ("n0", 3, 50.0)]),
-        ("merge", [("u0", 1, 200.0), ("u1", 2, 201.0)]),
-        ("delete", [("u2", 3), ("u12", 1)]),
-        ("merge", [("u0", 1, 300.0), ("u2", 3, 302.0)]),
+        [("u0", 1, 100.0), ("u1", 2, 101.0), ("n0", 3, 50.0)],
+        [("u0", 1, 200.0), ("u1", 2, 201.0)],
+        [("u0", 1, 300.0), ("u2", 3, 302.0)],
     ]
     st.init(_rows(spark, base))
     want = pd.DataFrame(base, columns=["url_hash", "h", "score"]).set_index("url_hash")
-    for op, items in steps:
-        if op == "merge":
-            st.merge(_rows(spark, items))
-            upd = pd.DataFrame(items, columns=["url_hash", "h", "score"])
-            want = pd.concat([want.drop(upd.url_hash, errors="ignore"),
-                              upd.set_index("url_hash")])
-        else:
-            st.delete(spark.createDataFrame(
-                [(u, f"host{h}.test") for u, h in items], ["url_hash", "host"]
-            ))
-            want = want.drop([u for u, _ in items])
+    for items in steps:
+        st.merge(_rows(spark, items))
+        upd = pd.DataFrame(items, columns=["url_hash", "h", "score"])
+        want = pd.concat([want.drop(upd.url_hash, errors="ignore"),
+                          upd.set_index("url_hash")])
     want = want.score.to_dict()
-    assert [ln["kind"] for ln in st.lineage_chain()] == ["base"] + ["delta"] * 4
-    assert want["u0"] == 300.0 and want["u2"] == 302.0 and "u12" not in want
+    assert [ln["kind"] for ln in st.lineage_chain()] == ["base"] + ["delta"] * 3
+    assert want["u0"] == 300.0 and want["u1"] == 201.0 and want["u2"] == 302.0
 
     def _scores(rows):
         got = {r["url_hash"]: r["score"] for r in rows}
@@ -534,7 +462,7 @@ def test_store_metadata_costs_no_spark_job(spark, tmp_path):
     """Every metadata answer comes from the manifest: planning a MOR
     read and adopting a stamped artifact submit no Spark job, and the
     footer row counts a commit records equal Spark's count of each
-    snapshot (init, merge, linked, delete and compact)."""
+    snapshot (init, merge, linked and compact)."""
     st = _store(spark, tmp_path, compact_ratio=100.0)
     st.init(_rows(spark, [(f"u{i}", (i % 6) + 1, float(i)) for i in range(24)]))
     st.merge(_rows(spark, [("u0", 1, 100.0), ("n0", 2, 50.0)]))
@@ -546,13 +474,12 @@ def test_store_metadata_costs_no_spark_job(spark, tmp_path):
     st.with_bucket(_rows(spark, [("u2", 3, 102.0), ("n1", 4, 51.0)])).write.parquet(art)
     st.stamp_bucketing(art)
     assert _jobs_submitted(spark, lambda: st.merge_linked(art)) == 0
-    st.delete(spark.createDataFrame([("u3", "host4.test")], ["url_hash", "host"]))
     st.compact()
 
     chain = st.lineage_chain()
     assert [(ln["op"], ln["kind"]) for ln in chain] == [
         ("init", "base"), ("merge", "delta"), ("merge", "delta"),
-        ("merge", "delta"), ("delete", "delta"), ("compact", "base"),
+        ("merge", "delta"), ("compact", "base"),
     ]
     assert "linked_from" in chain[3]
     for ln in chain:
@@ -563,10 +490,36 @@ def test_store_metadata_costs_no_spark_job(spark, tmp_path):
     assert ParquetFrontierStore.open(spark, st.path).host_buckets == 4
 
 
+def test_read_host_runs_no_job_and_prunes_to_the_host_bucket(spark, tmp_path):
+    """read_host hashes the host inside the plan: building the read over
+    a store with deltas submits no Spark job, and the executed scans
+    carry the host's bucket as a partition filter."""
+    import re
+
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    st.init(_rows(spark, [(f"u{i}", (i % 6) + 1, float(i)) for i in range(24)]))
+    st.merge(_rows(spark, [("u1", 2, 100.0), ("n0", 2, 50.0)]))
+    st.merge(_rows(spark, [("u7", 2, 107.0)]))
+    host = "host2.test"
+    assert _jobs_submitted(spark, lambda: st.read_host(host)) == 0
+
+    bucket = spark.range(1).select(st._bucket(F.lit(host)).alias("b")).collect()[0]["b"]
+    rows = st.read_host(host)
+    assert {r["url_hash"]: r["score"] for r in rows.collect()} == {
+        r["url_hash"]: r["score"] for r in st.read().filter(F.col("host") == host).collect()
+    }
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    # every scan (the base and both partitioned deltas) reads one bucket
+    scans = re.findall(r"FileScan parquet.*", plan)
+    pruned = [re.search(r"PartitionFilters: \[[^\]]*\(host_bucket#\d+ = (\d+)\)", sc)
+              for sc in scans]
+    assert scans and all(m and m.group(1) == str(bucket) for m in pruned), plan
+
+
 def test_readers_during_commits_see_committed_versions(spark, tmp_path):
     """A reader looping read().collect() while the writer merges, adopts
-    a linked artifact, deletes and compacts never fails, and every
-    result equals the upsert state of some committed version."""
+    a linked artifact and compacts never fails, and every result equals
+    the upsert state of some committed version."""
     import threading
     import time
 
@@ -586,12 +539,10 @@ def test_readers_during_commits_see_committed_versions(spark, tmp_path):
         except Exception as exc:  # surfaced by the assertion below
             errors.append(exc)
 
-    def committed(items=(), deleted=()):
+    def committed(items=()):
         """Record the new committed state, then let the reader finish
         at least one more read before the next commit."""
         state.update({u: s for u, _, s in items})
-        for u in deleted:
-            del state[u]
         states.append(dict(state))
         n, deadline = len(reads), time.time() + 60
         while len(reads) == n and not errors and time.time() < deadline:
@@ -610,8 +561,6 @@ def test_readers_during_commits_see_committed_versions(spark, tmp_path):
         st.stamp_bucketing(art)
         st.merge_linked(art)
         committed(upd)
-        st.delete(spark.createDataFrame([("u1", "host2.test")], ["url_hash", "host"]))
-        committed(deleted=["u1"])
         st.compact()
         committed()
     finally:
@@ -619,7 +568,7 @@ def test_readers_during_commits_see_committed_versions(spark, tmp_path):
         t.join(timeout=120)
     assert not t.is_alive(), "reader thread did not stop"
     assert not errors, errors
-    assert len(reads) >= 5
+    assert len(reads) >= len(states)
     for got in reads:
         assert got in states
     assert {r["url_hash"]: r["score"] for r in st.read().collect()} == states[-1]

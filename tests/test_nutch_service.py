@@ -274,13 +274,20 @@ def test_error_paths(client, master):
         client.db_query(crawlId="stagecrawl", startKey="not a url")
     assert ei.value.code == 400
     # a urlFilter that does not compile, bare or as a rule, and a
-    # negative limit -> 400 naming the bad input
-    for bad, named in (({"urlFilter": "("}, "'('"), ({"urlFilter": "-/x\n+("}, "'('"),
-                       ({"limit": -1}, "-1")):
-        with pytest.raises(urllib.error.HTTPError) as ei:
-            client.db_query(crawlId="stagecrawl", **bad)
-        assert ei.value.code == 400, bad
-        assert named in json.loads(ei.value.read())["error"], bad
+    # negative limit -> 400 naming the bad input, on a crawl with a
+    # store and on one without ("ghost")
+    for crawl in ("stagecrawl", "ghost"):
+        for bad, named in (({"urlFilter": "("}, "'('"), ({"urlFilter": "-/x\n+("}, "'('"),
+                           ({"limit": -1}, "-1")):
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                client.db_query(crawlId=crawl, **bad)
+            assert ei.value.code == 400, (crawl, bad)
+            assert named in json.loads(ei.value.read())["error"], (crawl, bad)
+    # the filter dialect is Python re, and the error says so
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        client.db_query(crawlId="ghost", urlFilter=r"\p{Alpha}")
+    assert ei.value.code == 400
+    assert "Python re" in json.loads(ei.value.read())["error"]
 
 
 def test_create_right_after_finished_is_admitted(spark, tmp_path, monkeypatch):

@@ -144,12 +144,9 @@ class CrawlConfig:
     salt_factor: int = 8
 
     # --- URL-seen filter (north_rule: "Bloom/cuckoo") -------------------
-    # "bloom" (default): OR-mergeable bitmaps, naturally idempotent,
-    # cannot delete. "cuckoo": fingerprint table supporting true
-    # deletion (store/cuckoo.py) — pair with frontier equality deletes
-    # so a deleted URL's pre-screen recovers instead of answering
-    # maybe_seen forever.
-    urlseen_backend: str = "bloom"
+    # a partitioned Bloom filter (store/urlseen.py): OR-mergeable
+    # bitmaps, naturally idempotent. It cannot delete, and need not:
+    # no crawl step removes a URL from the frontier.
     bloom_partitions: int = 32
     bloom_capacity_per_partition: int = 1_000_000
     bloom_fp_rate: float = 0.01

@@ -109,12 +109,7 @@ class RoundDriver:
         self.store = ParquetFrontierStore(
             spark, os.path.join(workdir, "frontier"), cfg.host_buckets
         )
-        seen_cls = BloomUrlSeen
-        if cfg.urlseen_backend == "cuckoo":
-            from ..store.cuckoo import CuckooUrlSeen
-
-            seen_cls = CuckooUrlSeen
-        self.urlseen = seen_cls(
+        self.urlseen = BloomUrlSeen(
             os.path.join(workdir, "urlseen"),
             cfg.bloom_partitions,
             cfg.bloom_capacity_per_partition,

@@ -109,7 +109,9 @@ def _url_filter(rules_text: str | None) -> RegexUrlFilter | None:
         flt = RegexUrlFilter.parse_rules(rules_text)
         return flt if flt.rules else RegexUrlFilter([(True, rules_text)])
     except re.error as e:
-        raise ValueError(f"Bad urlFilter pattern {e.pattern!r}: {e}") from None
+        raise ValueError(
+            f"Bad urlFilter pattern {e.pattern!r} (Python re syntax): {e}"
+        ) from None
 
 
 def read_filter(
@@ -132,6 +134,10 @@ def read_filter(
     keys; the range is inclusive on both ends (Gora setStartKey /
     setEndKey). ``fields`` projects the row; ``url`` rides along unless
     an explicit field list omits it (``DbIterator.pageAsMap``).
+
+    ``url_filter`` patterns are Python ``re`` patterns, the engine a
+    page runs, not Java regex: Java-only syntax such as ``\\p{Alpha}``
+    raises ValueError.
     """
 
     def bound(url: str | None) -> str | None:

@@ -42,7 +42,8 @@ import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from .dbreader import DEFAULT_DB_LIMIT, db_page, frontier_view
+from ..schema import FRONTIER
+from .dbreader import DEFAULT_DB_LIMIT, db_page, frontier_view, read_filter
 from .jobs import ANY, ConfManager, JobManager, RUNNING
 
 
@@ -239,22 +240,22 @@ class NutchMasterServer:
 
     # -- db (DbResource.runQuery) ------------------------------------------
     def _db_query(self, flt: dict) -> dict:
+        db_filter = dict(
+            start_key=flt.get("startKey"),
+            end_key=flt.get("endKey"),
+            url_filter=flt.get("urlFilter"),
+            batch_id=flt.get("batchId", "-all"),
+            fields=flt.get("fields"),
+            start=flt.get("start", 0),
+            limit=flt.get("limit", DEFAULT_DB_LIMIT),
+            keys_reversed=bool(flt.get("isKeysReversed", False)),
+        )
         view = self._frontier_view(flt.get("crawlId") or "default")
         if view is None:
+            # a crawl with no store answers bad input as an existing one does
+            read_filter(FRONTIER.names, **db_filter)
             return {"values": []}
-        return {
-            "values": db_page(
-                view,
-                start_key=flt.get("startKey"),
-                end_key=flt.get("endKey"),
-                url_filter=flt.get("urlFilter"),
-                batch_id=flt.get("batchId", "-all"),
-                fields=flt.get("fields"),
-                start=flt.get("start", 0),
-                limit=flt.get("limit", DEFAULT_DB_LIMIT),
-                keys_reversed=bool(flt.get("isKeysReversed", False)),
-            )
-        }
+        return {"values": db_page(view, **db_filter)}
 
     @staticmethod
     def _is_live(entry: tuple | None) -> bool:

@@ -16,13 +16,17 @@ Two implementations behind one interface:
 
       base  ⟕anti  delta-keys   ∪   latest-version delta rows
 
-  i.e. exactly Iceberg's equality-delete MOR scan: the anti-join
-  against the (small) delta key set is a broadcast hash join while
-  deltas are small, and AQE falls back to a shuffle join when they
-  grow. ``read`` resolves every bucket, ``read_host`` one host bucket
-  and ``compact`` the delta-touched buckets, each through that one
-  resolver. When total delta rows exceed ``COMPACT_RATIO`` × base
-  rows (or the delta count or broadcast gate is exceeded),
+  i.e. Iceberg's equality-delete MOR scan as it serves upserts: a delta
+  key shadows the base row. The anti-join against the (small) delta key
+  set is a broadcast hash join while deltas are small, and AQE falls
+  back to a shuffle join when they grow. ``read`` resolves every
+  bucket, ``read_host`` one host bucket and ``compact`` the
+  delta-touched buckets, each through that one resolver. The store is
+  upsert-only, as the reference's crawl cycle never deletes a webtable
+  row: a delta row lands in the bucket of the base row it shadows
+  (same URL, same host), so a bucket-scoped resolve is exact. When
+  total delta rows exceed ``COMPACT_RATIO`` × base rows (or the delta
+  count or broadcast gate is exceeded),
   ``compact()`` materializes the merged view as a new base — amortized
   O(frontier) every ~1/ratio rounds instead of every round.
   Snapshots are partitioned by ``host_bucket`` = pmod(xxhash64(host),
@@ -239,34 +243,19 @@ class ParquetFrontierStore(FrontierStore):
 
     def _delta_union(self, schema: T.StructType, deltas: list[dict]) -> DataFrame:
         """Every delta snapshot since the base in one union, each row
-        tagged with its version and a ``_tombstone`` flag (null in the
-        snapshots that carry no tombstones)."""
-        schema = T.StructType(schema.fields + [T.StructField("_tombstone", T.BooleanType())])
+        tagged with its version."""
         dl = None
         for ln in deltas:
             dv = ln["version"]
             d = self.spark.read.schema(schema).parquet(self._data_dir(dv))
             d = d.withColumn("_delta_v", F.lit(dv))
             dl = d if dl is None else dl.unionByName(d)
-        return dl.withColumn("_tombstone", F.coalesce("_tombstone", F.lit(False)))
-
-    @staticmethod
-    def _has_hostless_tombstone(dl: DataFrame) -> bool:
-        """A host-less tombstone buckets by url_hash, NOT by its
-        victim's host bucket — bucket-scoped resolution would then miss
-        the victim and resurrect it, so bucket-scoped callers fall back
-        to resolving every bucket (delete() with host is colocated and
-        safe)."""
-        return (
-            dl.filter(F.col("_tombstone") & F.col("host").isNull()).limit(1).count()
-            > 0
-        )
+        return dl
 
     def _resolve(self, base: DataFrame, dl: DataFrame, deltas: list[dict]) -> DataFrame:
         """The MOR scan: base rows not shadowed by a delta key, plus the
-        newest delta row per key; tombstoned keys (equality deletes)
-        drop out entirely. Callers may pre-filter ``base`` and ``dl`` to
-        the same buckets."""
+        newest delta row per key. Callers may pre-filter ``base`` and
+        ``dl`` to the same buckets."""
         # newest delta wins per key; the delta set is O(updates since
         # last compaction), so this window shuffles deltas, not the base
         win = Window.partitionBy("url_hash").orderBy(F.desc("_delta_v"))
@@ -283,8 +272,7 @@ class ParquetFrontierStore(FrontierStore):
         if sum(ln.get("rows", 0) for ln in deltas) <= self.BROADCAST_DELTA_KEYS_MAX:
             delta_keys = F.broadcast(delta_keys)
         kept = base.join(delta_keys, on="url_hash", how="left_anti")
-        live = latest.filter(~F.col("_tombstone")).drop("_tombstone")
-        return kept.unionByName(live.select(*base.columns))
+        return kept.unionByName(latest.select(*base.columns))
 
     def has_deltas(self) -> bool:
         """True when read() must resolve delta snapshots (window +
@@ -309,18 +297,16 @@ class ParquetFrontierStore(FrontierStore):
         """Host-scoped MOR read that touches ONLY the host's bucket:
         the base scan is partition-pruned to ``host_bucket=N`` (the S4
         reversed-key range-scan analog, CrawlFilters.java:147-175) and
-        delta resolution filters to the same bucket. Falls back to the
-        full read when any delta carries a host-less tombstone."""
+        delta resolution filters to the same bucket. The bucket is the
+        bucket expression over the literal host, which Catalyst folds
+        into the partition filter, so building the read runs no Spark
+        job."""
         schema, base_ln, deltas = self._layout()
-        bucket = self.spark.range(1).select(self._bucket(F.lit(host)).alias("b"))
-        in_bucket = F.col("host_bucket") == bucket.collect()[0]["b"]
+        in_bucket = F.col("host_bucket") == self._bucket(F.lit(host))
         rows = self._read_base(schema, base_ln).filter(in_bucket)
         if deltas:
-            dl = self._delta_union(schema, deltas)
-            if self._has_hostless_tombstone(dl):
-                rows = self._resolve(self._read_base(schema, base_ln), dl, deltas)
-            else:
-                rows = self._resolve(rows, dl.filter(in_bucket), deltas)
+            dl = self._delta_union(schema, deltas).filter(in_bucket)
+            rows = self._resolve(rows, dl, deltas)
         return rows.filter(F.col("host") == host)
 
     # -- operations ------------------------------------------------------
@@ -449,46 +435,9 @@ class ParquetFrontierStore(FrontierStore):
         with open(os.path.join(data_dir, "_WNS_BUCKETING.json"), "w") as f:
             json.dump({"host_buckets": self.host_buckets}, f)
 
-    def delete(self, keys: DataFrame, lineage: dict | None = None) -> int:
-        """Equality delete (Iceberg MERGE ... WHEN MATCHED THEN DELETE
-        analog): append a tombstone delta carrying only the keys —
-        O(deletes), the rows vanish at read and physically at the next
-        compaction. ``keys`` must have url_hash; pass host too when
-        available so tombstones land in the SAME bucket as the live
-        rows they kill — bucket-scoped resolution (read_host,
-        incremental compact) can then stay in one bucket; a host-less
-        tombstone forces those back to resolving every bucket.
-
-        URL-seen interplay: the Bloom backend cannot unset bits, so a
-        deleted URL still probes maybe_seen=True — which routes it to
-        updatedb's exact frontier semi-join, where it correctly shows as new
-        and can be re-discovered. No invariant breaks (this is the
-        same path as any Bloom false positive). The cuckoo backend
-        (``store/cuckoo.py``, cfg.urlseen_backend="cuckoo") supports
-        true deletion — call its ``delete_round`` with the same keys
-        so the pre-screen's selectivity recovers too."""
-        schema, _, _ = self._layout()
-        has_host = "host" in keys.columns
-        tomb = keys.select("url_hash", *(["host"] if has_host else []))
-        for field in schema.fields:
-            if field.name in ("url_hash", "host_bucket") or field.name in tomb.columns:
-                continue
-            tomb = tomb.withColumn(field.name, F.lit(None).cast(field.dataType))
-        # with host: bucket identically to live rows (with_bucket) so a
-        # bucket-pruned read sees tombstone and victim together; without
-        # one, spread by key (correct for full scans only — see above)
-        tomb = tomb.withColumn(
-            "host_bucket", self._bucket(F.col("host" if has_host else "url_hash"))
-        )
-        tomb = tomb.withColumn("_tombstone", F.lit(True))
-        return self._write_snapshot(
-            tomb, dict(lineage or {"op": "delete"}), kind="delta"
-        )["version"]
-
     def compact(self, lineage: dict | None = None) -> int:
         """Materialize the MOR view as a new base snapshot (Iceberg's
-        rewrite_data_files analog); tombstoned rows are physically
-        removed here.
+        rewrite_data_files analog).
 
         INCREMENTAL: only host_buckets that appear in a delta are
         resolved and rewritten; every untouched bucket's partition
@@ -496,18 +445,12 @@ class ParquetFrontierStore(FrontierStore):
         therefore O(touched frontier), not O(frontier) — at 10^10 rows
         with thousands of buckets a round's updates touch a subset, so
         the periodic compaction spike shrinks with update locality
-        instead of scaling with the table. Falls back to the full
-        rewrite when every bucket is touched."""
+        instead of scaling with the table. When every bucket is touched
+        this is the full rewrite."""
         schema, base_ln, deltas = self._layout()
         if not deltas:
             return base_ln["version"]
-        meta = dict(lineage or {"op": "compact"})
         dl = self._delta_union(schema, deltas)
-        base = self._read_base(schema, base_ln)
-        if self._has_hostless_tombstone(dl):
-            return self._write_snapshot(
-                self._resolve(base, dl, deltas), meta, kind="base"
-            )["version"]
         # touched buckets = buckets present in any delta (linked deltas
         # carry host_bucket as a data column; partitioned ones as a
         # partition column — both read back as a column)
@@ -527,9 +470,9 @@ class ParquetFrontierStore(FrontierStore):
         )
         untouched = [b for b in base_listed if b not in set(touched)]
         # resolve MOR only for the touched buckets (partition-pruned
-        # base scan). When EVERY bucket is touched this is the full
-        # rewrite — still resolved from the dl union built above (one
-        # delta read + one window), never a second self.read() pass.
+        # base scan), from the dl union built above (one delta read +
+        # one window), never a second self.read() pass
+        base = self._read_base(schema, base_ln)
         if untouched:
             base = base.filter(F.col("host_bucket").isin(touched))
         v = self.current_version() + 1
@@ -540,6 +483,7 @@ class ParquetFrontierStore(FrontierStore):
             src = os.path.join(base_dir, f"host_bucket={b}")
             if os.path.isdir(src):  # else: bucket empty in base
                 self._link_parts(src, os.path.join(out, f"host_bucket={b}"))
+        meta = dict(lineage or {"op": "compact"})
         meta["compacted_buckets"] = len(touched)
         return self._commit(v, meta, kind="base")["version"]
 
