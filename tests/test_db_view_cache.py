@@ -126,7 +126,7 @@ def test_cached_pages_equal_fresh_read_across_commits(served):
     _check_pages(client, store)
     # a compaction: same rows, new base
     store.compact()
-    assert not store.has_deltas()
+    assert store.lineage()["kind"] == "base"
     _check_pages(client, store)
 
     # one view at a time: each commit's view replaced the last

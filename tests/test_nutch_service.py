@@ -305,3 +305,95 @@ def test_create_right_after_finished_is_admitted(spark, tmp_path, monkeypatch):
         while jobs.get(jid)["state"] in ("IDLE", "RUNNING") and time.time() < deadline:
             time.sleep(0.005)
         assert jobs.get(jid)["state"] == "FINISHED"
+
+
+def test_stop_file_crawl_job_runs_no_round(client, master):
+    """A ``.STOP`` file in the crawl's workdir ends a REST CRAWL job
+    before its first round, as it ends ``RoundDriver.run``."""
+    cid = _mk_config(client, "conf-stopfile")
+    wd = os.path.join(master.base_dir, "stopcrawl")
+    os.makedirs(wd)
+    open(os.path.join(wd, ".STOP"), "w").close()
+    seed_dir = client.create_seed(SimWeb(*WEB).seeds(2))
+    jid = client.create_job("CRAWL", {"rounds": 2, "seedDir": seed_dir},
+                            conf_id=cid, crawl_id="stopcrawl")
+    info = client.wait_job(jid, timeout_s=600)
+    assert info["state"] == "FINISHED", info
+    assert info["result"] == []
+    assert os.listdir(os.path.join(wd, "rounds")) == []
+
+
+def test_a_failed_driver_close_fails_the_job(spark, tmp_path, monkeypatch):
+    """A cleanup failure is the job's failure: a ``close`` that raises
+    ends the job FAILED and names the close, after the job's own error
+    when it has one."""
+    from warps_nutch_spark.service.jobs import ConfManager, JobManager
+
+    def bad_close(self):
+        raise OSError("port still bound")
+
+    def bad_job(self, info, drv, stop):
+        raise ValueError("bad round")
+
+    monkeypatch.setattr(RoundDriver, "close", bad_close)
+    jobs = JobManager(spark, str(tmp_path), ConfManager(), web_params=WEB)
+    monkeypatch.setattr(JobManager, "_execute", lambda self, info, drv, stop: {"ok": True})
+    info = jobs.wait(jobs.create({"type": "READDB", "args": {}}), timeout_s=60)
+    assert info["state"] == "FAILED", info
+    assert info["msg"] == "driver close failed: OSError: port still bound"
+    monkeypatch.setattr(JobManager, "_execute", bad_job)
+    info = jobs.wait(jobs.create({"type": "READDB", "args": {}}), timeout_s=60)
+    assert info["state"] == "FAILED", info
+    assert info["msg"] == (
+        "ValueError: bad round; driver close failed: OSError: port still bound"
+    )
+
+
+def test_a_failed_cancel_raises(spark, tmp_path, monkeypatch):
+    """``abort`` reports a cancel that failed instead of the job as
+    killed: the job reads STOPPING and then ends with its own
+    outcome."""
+    import threading
+
+    from warps_nutch_spark.service.jobs import ConfManager, JobManager
+
+    started, release = threading.Event(), threading.Event()
+
+    def slow_job(self, info, drv, stop):
+        started.set()
+        release.wait(30)
+        return {}
+
+    def bad_cancel(group):
+        raise RuntimeError("context stopped")
+
+    monkeypatch.setattr(JobManager, "_execute", slow_job)
+    monkeypatch.setattr(spark.sparkContext, "cancelJobGroup", bad_cancel)
+    jobs = JobManager(spark, str(tmp_path), ConfManager(), web_params=WEB)
+    jid = jobs.create({"type": "READDB", "args": {}})
+    assert started.wait(30)
+    with pytest.raises(RuntimeError, match="context stopped"):
+        jobs.abort(jid)
+    assert jobs.get(jid)["state"] == "STOPPING"
+    release.set()
+    info = jobs.wait(jid, timeout_s=30)
+    assert info["state"] == "FINISHED", info
+    assert info["result"] == {}
+
+
+def test_resumed_crawl_job_ignores_a_missing_seed_dir(client):
+    """A CRAWL job reads its seedDir only to inject into an empty
+    store, so a resumed crawl runs after the seeds are gone."""
+    import shutil
+
+    cid = _mk_config(client, "conf-resume")
+    seed_dir = client.create_seed(SimWeb(*WEB).seeds(2))
+    args = {"rounds": 1, "seedDir": seed_dir}
+    jid = client.create_job("CRAWL", args, conf_id=cid, crawl_id="resumecrawl")
+    assert client.wait_job(jid, timeout_s=600)["state"] == "FINISHED"
+    shutil.rmtree(seed_dir)
+    jid = client.create_job("CRAWL", {**args, "startRound": 1}, conf_id=cid,
+                            crawl_id="resumecrawl")
+    info = client.wait_job(jid, timeout_s=600)
+    assert info["state"] == "FINISHED", info
+    assert [s["batch_id"] for s in info["result"]] == ["batch-0001"]

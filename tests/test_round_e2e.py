@@ -213,3 +213,52 @@ def test_every_round_job_runs_in_the_callers_job_group(spark, tmp_path):
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
     assert tracker.getJobIdsForGroup(group)
     assert os.listdir(os.path.join(drv.workdir, "index", "batch-0000"))
+
+
+def test_a_delta_round_persists_nothing(spark, tmp_path, monkeypatch):
+    """Round 1 reads a store with a delta, and generate and updatedb
+    each read it themselves: no RDD is persisted while updatedb builds
+    its plan, in round 0 or in round 1."""
+    from warps_nutch_spark.operators import updatedb as upd_op
+    from warps_nutch_spark.store.frontier import ParquetFrontierStore
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    persisted = []
+    build = upd_op.updatedb
+
+    def watched(*args, **kw):
+        persisted.append(set(jsc.getPersistentRDDs().keys()) - before)
+        return build(*args, **kw)
+
+    monkeypatch.setattr(upd_op, "updatedb", watched)
+    # round 0's delta would outgrow the seeds and compact
+    monkeypatch.setattr(ParquetFrontierStore, "COMPACT_RATIO", float("inf"))
+    drv = RoundDriver(spark, str(tmp_path / "wd"), _cfg(), WEB, START)
+    drv.inject(_seeds_df(spark, SimWeb(*WEB)))
+    drv.run_round(0)
+    assert drv.store.lineage()["kind"] == "delta"
+    drv.run_round(1)
+    assert persisted == [set(), set()]
+
+
+def test_a_stop_file_or_event_runs_no_round(spark, tmp_path):
+    """``bin/crawl``'s ``.STOP`` file and the REST job's stop event
+    each end the loop before its first round; the seeds are injected.
+    Given no seeds, the loop runs from its start round."""
+    import threading
+
+    wd = str(tmp_path / "wd")
+    drv = RoundDriver(spark, wd, _cfg(), WEB, START)
+    stop_file = os.path.join(wd, ".STOP")
+    open(stop_file, "w").close()
+    assert drv.run(_seeds_df(spark, SimWeb(*WEB)), rounds=2) == []
+    os.remove(stop_file)
+    stop = threading.Event()
+    stop.set()
+    assert drv.run(None, rounds=2, stop=stop) == []
+    assert os.listdir(os.path.join(wd, "rounds")) == []
+    assert [ln["op"] for ln in drv.store.lineage_chain()] == ["inject"]
+    stats = drv.run(None, rounds=1, start_round=1)
+    assert [s["batch_id"] for s in stats] == ["batch-0001"]
+    assert os.listdir(os.path.join(wd, "rounds")) == ["batch-0001"]

@@ -91,13 +91,9 @@ def _open_store(spark, args):
     return ParquetFrontierStore.open(spark, os.path.join(args.workdir, "frontier"))
 
 
-def _seeds_df(spark, path: str):
-    return spark.read.text(path).withColumnRenamed("value", "value")
-
-
 def cmd_inject(spark, args) -> int:
     drv = _driver(spark, args)
-    drv.inject(_seeds_df(spark, args.seeds))
+    drv.inject(spark.read.text(args.seeds))
     n = drv.store.read().count()
     print(json.dumps({"injected_frontier_rows": n}))
     return 0
@@ -150,7 +146,7 @@ def cmd_hostinject(spark, args) -> int:
 
 def cmd_crawl(spark, args) -> int:
     drv = _driver(spark, args)
-    stats = drv.run(_seeds_df(spark, args.seeds), rounds=args.rounds)
+    stats = drv.run(spark.read.text(args.seeds), rounds=args.rounds)
     drv.close()
     for s in stats:
         print(

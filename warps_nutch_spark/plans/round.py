@@ -13,6 +13,12 @@ interrupted stage re-runs idempotently (mirroring ``-resume`` /
 mark-presence guards, ``FetchMapper.java:115-123``,
 ``ParserMapper.java:132-141``).
 
+:meth:`RoundDriver.run` is the one crawl loop: the CLI, the tools and
+the REST CRAWL job all call it. Generate and updatedb each read the
+committed store themselves, as each reference job scans the web table
+with its own field projection (``GenerateJob.java:159-168``); a round
+caches no frontier view.
+
 Time is a virtual clock: round r starts at start_ms +
 r * round_time_limit_ms, so politeness spacing, schedules and scores
 are bit-reproducible across re-runs (SURVEY.md §7 hard-part 5).
@@ -27,8 +33,8 @@ Per-round state maintained alongside the frontier:
 from __future__ import annotations
 
 import json
-import logging
 import os
+import threading
 import time
 from collections.abc import Sequence
 
@@ -47,8 +53,6 @@ from ..operators import updatedb as upd_op
 from ..schema import HOSTS, METRICS
 from ..store.frontier import ParquetFrontierStore
 from ..store.urlseen import BloomUrlSeen
-
-log = logging.getLogger(__name__)
 
 #: the parquet footer key under which Spark stores a file's row schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -337,36 +341,6 @@ class RoundDriver:
         t0 = time.time()
         done: list[str] = []  # stages reached, in round order
 
-        # One frontier MOR materialization per round: the store version
-        # is constant from generate until the updatedb merge at the end,
-        # and both generate and updatedb's frontier semi-join read it —
-        # without a persist the base+delta resolution subtree executes
-        # once per consumer.
-        # MEMORY_AND_DISK: at 10^10 rows the cache spills instead of
-        # OOMing, and a spilled read still beats re-running the MOR
-        # window + anti-join per consumer.
-        # ONLY cache when deltas exist: a base-only read is a plain
-        # parquet scan, and caching it costs more memory traffic than
-        # the re-scan it saves (the unconditional persist cut the
-        # 4-executor scaling efficiency from ~0.9 to 0.64 — the cache
-        # build saturated the box's shared memory bandwidth).
-        _round_frontier: list[DataFrame] = []
-
-        def _frontier() -> DataFrame:
-            if not _round_frontier:
-                df = self.store.read()
-                if self.store.has_deltas():
-                    from pyspark import StorageLevel
-
-                    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                _round_frontier.append(df)
-            return _round_frontier[0]
-
-        def _release_frontier() -> None:
-            for df in _round_frontier:
-                df.unpersist()
-            _round_frontier.clear()
-
         def _run(stage: str, build, *after, counters=()) -> DataFrame | None:
             art = self._stage(batch_id, stage, build, *after, counters=counters)
             done.append(stage)
@@ -391,141 +365,135 @@ class RoundDriver:
                 "stage_sec": _stage_sec(),
             }
 
-        try:
-            # The GENERATE_MARK lives in the fetchlist artifact until
-            # updatedb folds it into the single per-round MERGE (one
-            # frontier delta per round instead of two; intra-round
-            # resume is covered by the artifact + _DONE record, the
-            # F13 guard semantics are unchanged for the next round).
-            fetchlist = _run("generate", lambda: gen_op.generate(
-                _frontier(), self.cfg, now, batch_id,
-                self.unreachable_hosts(), current_round=r,
-                avg_page_bytes=self._avg_page_bytes(),
-            ))
-            if stop_after == "generate":
-                return _partial("generate")
+        # The GENERATE_MARK lives in the fetchlist artifact until
+        # updatedb folds it into the single per-round MERGE (one
+        # frontier delta per round instead of two; intra-round
+        # resume is covered by the artifact + _DONE record, the
+        # F13 guard semantics are unchanged for the next round).
+        fetchlist = _run("generate", lambda: gen_op.generate(
+            self.store.read(), self.cfg, now, batch_id,
+            self.unreachable_hosts(), current_round=r,
+            avg_page_bytes=self._avg_page_bytes(),
+        ))
+        if stop_after == "generate":
+            return _partial("generate")
 
-            # -- fetch: the status counters of the fetched rows ride the
-            # artifact write; the host-state update reads the artifact
-            def _fetch() -> DataFrame:
-                if self.cfg.fetch_mode == "crowd":
-                    return self._crowd_fetch(fetchlist, batch_id, now)
-                return fetch_op.fetch(
-                    fetchlist, self._robots_df(), self.cfg, now, batch_id,
-                    self.web_params, host_config=self.host_config(),
+        # -- fetch: the status counters of the fetched rows ride the
+        # artifact write; the host-state update reads the artifact
+        def _fetch() -> DataFrame:
+            if self.cfg.fetch_mode == "crowd":
+                return self._crowd_fetch(fetchlist, batch_id, now)
+            return fetch_op.fetch(
+                fetchlist, self._robots_df(), self.cfg, now, batch_id,
+                self.web_params, host_config=self.host_config(),
+            )
+
+        fetch_results = _run(
+            "fetch", _fetch, lambda res: self._update_host_failures(res, batch_id),
+            counters=status_counter_cols(F.col("new_status"), F.col("fetched")),
+        )
+        if stop_after == "fetch":
+            return _partial("fetch")
+
+        # -- parse: a JVM projection of the fetch artifact, which
+        # already holds the payload bytes and their decode columns.
+        # The bytes are kept in the fetch artifact and the payload
+        # slice: not a third time in the parse artifact.
+        def _payloads(_parsed) -> None:
+            # batch-keyed overwrite (not append): a resumed parse
+            # stage rewrites its own payload slice, never duplicates it
+            full = parse_op.parse(fetch_results, self.cfg, batch_id)
+            parse_op.payload_rows(full).write.mode("overwrite").parquet(
+                os.path.join(self.workdir, "payloads", batch_id)
+            )
+
+        parsed = _run(
+            "parse",
+            lambda: parse_op.parse(fetch_results, self.cfg, batch_id).drop("bytes"),
+            _payloads,
+        )
+        if stop_after == "parse":
+            return _partial("parse")
+
+        # -- JIT index (TaskScheduler.java:799-804 + JITIndexer.java):
+        # index documents leave the round as soon as parse lands,
+        # without waiting for updatedb or a separate IndexJob pass
+        if self.cfg.index_jit:
+            def _jit_index(_none) -> None:
+                from ..operators import indexer as idx_op
+
+                docs = idx_op.build_jit_documents(
+                    parsed,
+                    batch_id,
+                    min_text_length=self.cfg.index_min_text_length,
+                    prev_state=fetchlist.select("url_hash", "inlinks", "repr_url"),
                 )
-
-            fetch_results = _run(
-                "fetch", _fetch, lambda res: self._update_host_failures(res, batch_id),
-                counters=status_counter_cols(F.col("new_status"), F.col("fetched")),
-            )
-            if stop_after == "fetch":
-                return _partial("fetch")
-
-            # -- parse: a JVM projection of the fetch artifact, which
-            # already holds the payload bytes and their decode columns.
-            # The bytes persist in the fetch artifact and the payload
-            # slice: not a third time in the parse artifact.
-            def _payloads(_parsed) -> None:
-                # batch-keyed overwrite (not append): a resumed parse
-                # stage rewrites its own payload slice, never duplicates it
-                full = parse_op.parse(fetch_results, self.cfg, batch_id)
-                parse_op.payload_rows(full).write.mode("overwrite").parquet(
-                    os.path.join(self.workdir, "payloads", batch_id)
+                lines = idx_op.to_bulk_ndjson(docs, index_name=self.cfg.index_name)
+                idx_op.write_bulk_files(
+                    lines, os.path.join(self.workdir, "index", batch_id)
                 )
+                if self.cfg.index_endpoint:
+                    # live deployment shape: the same bulk entries go
+                    # to {endpoint}/_bulk from the executors. A resumed
+                    # round re-pushes the batch — bulk index actions
+                    # are idempotent per _id, so replays are safe.
+                    idx_op.push_bulk_http(lines, self.cfg.index_endpoint)
 
-            parsed = _run(
-                "parse",
-                lambda: parse_op.parse(fetch_results, self.cfg, batch_id).drop("bytes"),
-                _payloads,
+            _run("jit_index", None, _jit_index)
+
+        # -- updatedb: a committed artifact is NEVER recomputed on
+        # resume — the frontier may already contain this batch's
+        # merge, and recomputing against it would double-apply
+        # inlink contributions. The artifact is pre-bucketed so it
+        # doubles as the store's delta snapshot (merge_linked): the
+        # round's updates hit disk ONCE, not twice.
+        data_dir = os.path.join(self._stage_dir(batch_id, "updatedb"), "data")
+
+        def _merge_rows() -> DataFrame:
+            rows = upd_op.updatedb(
+                self.store.read(), fetchlist, parsed, self.cfg, now, batch_id, self.urlseen
             )
-            if stop_after == "parse":
-                return _partial("parse")
+            return self.store.with_bucket(rows.drop("host_bucket"))
 
-            # -- JIT index (TaskScheduler.java:799-804 + JITIndexer.java):
-            # index documents leave the round as soon as parse lands,
-            # without waiting for updatedb or a separate IndexJob pass
-            if self.cfg.index_jit:
-                def _jit_index(_none) -> None:
-                    from ..operators import indexer as idx_op
+        # the status counters of the rows this batch updated ride
+        # the artifact write; the post-write actions, store adopt
+        # then URL-seen merge, are each idempotent on resume
+        # (committed_ops guard, URL-seen batch guard)
+        def _adopt(_rows) -> None:
+            # record the bucket count the artifact was written with
+            # so merge_linked can reject a stale-layout artifact. A
+            # resume stamps too: a kill between the artifact's
+            # commit and its stamp leaves it unstamped, and this
+            # store wrote it (the manifest pins the bucket count)
+            self.store.stamp_bucketing(data_dir)
+            if ("updatedb", batch_id) not in self.store.committed_ops():
+                self.store.merge_linked(data_dir, {"op": "updatedb", "batch_id": batch_id})
 
-                    docs = idx_op.build_jit_documents(
-                        parsed,
-                        batch_id,
-                        min_text_length=self.cfg.index_min_text_length,
-                        prev_state=fetchlist.select("url_hash", "inlinks", "repr_url"),
-                    )
-                    lines = idx_op.to_bulk_ndjson(docs, index_name=self.cfg.index_name)
-                    idx_op.write_bulk_files(
-                        lines, os.path.join(self.workdir, "index", batch_id)
-                    )
-                    if self.cfg.index_endpoint:
-                        # live deployment shape: the same bulk entries go
-                        # to {endpoint}/_bulk from the executors. A resumed
-                        # round re-pushes the batch — bulk index actions
-                        # are idempotent per _id, so replays are safe.
-                        idx_op.push_bulk_http(lines, self.cfg.index_endpoint)
+        def _urlseen_merge(rows: DataFrame) -> None:
+            # a batch the URL-seen manifest already lists is
+            # skipped, so a resumed round does not replay it
+            self.urlseen.merge_round(rows.select("url_hash"), "url_hash", batch_id)
 
-                _run("jit_index", None, _jit_index)
+        _run(
+            "updatedb", _merge_rows, _adopt, _urlseen_merge,
+            counters=status_counter_cols(
+                F.col("status"), F.col("updated_batch") == batch_id
+            ),
+        )
 
-            # -- updatedb: a committed artifact is NEVER recomputed on
-            # resume — the frontier may already contain this batch's
-            # merge, and recomputing against it would double-apply
-            # inlink contributions. The artifact is pre-bucketed so it
-            # doubles as the store's delta snapshot (merge_linked): the
-            # round's updates hit disk ONCE, not twice.
-            data_dir = os.path.join(self._stage_dir(batch_id, "updatedb"), "data")
-
-            def _merge_rows() -> DataFrame:
-                rows = upd_op.updatedb(
-                    _frontier(), fetchlist, parsed, self.cfg, now, batch_id, self.urlseen
-                )
-                return self.store.with_bucket(rows.drop("host_bucket"))
-
-            # the status counters of the rows this batch updated ride
-            # the artifact write; the post-write actions, store adopt
-            # then URL-seen merge, are each idempotent on resume
-            # (committed_ops guard, URL-seen batch guard)
-            def _adopt(_rows) -> None:
-                # record the bucket count the artifact was written with
-                # so merge_linked can reject a stale-layout artifact. A
-                # resume stamps too: a kill between the artifact's
-                # commit and its stamp leaves it unstamped, and this
-                # store wrote it (the manifest pins the bucket count)
-                self.store.stamp_bucketing(data_dir)
-                if ("updatedb", batch_id) not in self.store.committed_ops():
-                    self.store.merge_linked(data_dir, {"op": "updatedb", "batch_id": batch_id})
-
-            def _urlseen_merge(rows: DataFrame) -> None:
-                # a batch the URL-seen manifest already lists is
-                # skipped, so a resumed round does not replay it
-                self.urlseen.merge_round(rows.select("url_hash"), "url_hash", batch_id)
-
-            _run(
-                "updatedb", _merge_rows, _adopt, _urlseen_merge,
-                counters=status_counter_cols(
-                    F.col("status"), F.col("updated_batch") == batch_id
-                ),
-            )
-            _release_frontier()  # merged: the cached MOR view is now stale
-
-            fetched, updated = (
-                sum(self._record(batch_id, stage).get("counters", {}).values())
-                for stage in ("fetch", "updatedb")
-            )
-            elapsed = time.time() - t0
-            return {
-                "batch_id": batch_id,
-                "elapsed_sec": elapsed,
-                "fetched": fetched,
-                "updated": updated,
-                "throughput_rows_per_sec": (fetched + updated) / elapsed if elapsed else 0.0,
-                "stage_sec": _stage_sec(),
-            }
-        finally:
-            # a stage raising mid-round must not leak the cached
-            # MOR view into a long-lived driver session
-            _release_frontier()
+        fetched, updated = (
+            sum(self._record(batch_id, stage).get("counters", {}).values())
+            for stage in ("fetch", "updatedb")
+        )
+        elapsed = time.time() - t0
+        return {
+            "batch_id": batch_id,
+            "elapsed_sec": elapsed,
+            "fetched": fetched,
+            "updated": updated,
+            "throughput_rows_per_sec": (fetched + updated) / elapsed if elapsed else 0.0,
+            "stage_sec": _stage_sec(),
+        }
 
     def _crowd_fetch(self, fetchlist: DataFrame, batch_id: str, now: int) -> DataFrame:
         """FetchMode.CROWDSOURCING round: publish tasks, hand every
@@ -620,26 +588,26 @@ class RoundDriver:
         web = sw.SimWeb(*self.web_params)
         return self.spark.createDataFrame(web.robots())
 
-    def run(self, seeds, rounds: int) -> list[dict]:
-        # session hygiene before a multi-round crawl in a long-lived
-        # session: drop whatever earlier work left in the SQL cache
-        # (any cached frontier view would alias stale store state once
-        # the rounds start merging anyway) and prompt a full GC so the
-        # ContextCleaner releases dropped-but-uncollected shuffle and
-        # checkpoint blocks NOW instead of via async weak-ref drain
-        # mid-round. Measured on the bench web after a 20-query
-        # pressure load: crawl 72.4 -> 62.6 s; a no-op on a fresh
-        # session. The round's own persists all happen after this.
-        try:
-            self.spark.catalog.clearCache()
-            self.spark.sparkContext._jvm.System.gc()
-        except Exception:  # hygiene only — never fail a crawl over it
-            log.warning("pre-crawl cache clear / GC failed", exc_info=True)
-        if self.store.current_version() < 0:
+    def run(
+        self,
+        seeds,
+        rounds: int,
+        start_round: int = 0,
+        stop: threading.Event | None = None,
+    ) -> list[dict]:
+        """The crawl loop (``src/bin/crawl:128-193``): inject ``seeds``
+        when they are given and the store is empty, then run rounds
+        ``start_round`` .. ``start_round + rounds - 1``. Before each
+        round the loop ends if a ``.STOP`` file sits in the workdir
+        (``bin/crawl:135-140``) or ``stop`` is set (the REST job's
+        cooperative stop). Returns one ``run_round`` dict per round run."""
+        if seeds is not None and self.store.current_version() < 0:
             self.inject(seeds)
         stats = []
-        for r in range(rounds):
-            if os.path.exists(os.path.join(self.workdir, ".STOP")):
-                break  # bin/crawl:135-140 semantics
+        for r in range(start_round, start_round + rounds):
+            if os.path.exists(os.path.join(self.workdir, ".STOP")) or (
+                stop is not None and stop.is_set()
+            ):
+                break
             stats.append(self.run_round(r))
         return stats

@@ -1078,7 +1078,9 @@ def q_frontier_status_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(CrawlStatus.UNFETCHED))
     )
     fr = derived_frontier(spark, sf_dir).withColumn("status", st)
-    return frontier_stats(fr)
+    return frontier_stats(fr).select(
+        "status_name", "n", "avg_score", "min_score", "max_score"
+    )
 
 
 def _status_name_case() -> str:

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from ..functions import urls
 from ..functions.urlfilters import RegexUrlFilter
+from ..sources.readers import frontier_stats
 
 #: DbFilter.DefaultDbLimit
 DEFAULT_DB_LIMIT = 100
@@ -67,13 +68,14 @@ _AS_PY = methodcaller("as_py")
 
 def readdb_stats(store) -> dict:
     """ReadDb ``-stats`` (``WebTableReader.java:68-160``): the frontier's
-    rows per status and the store version, for ``readdb --stats`` and
-    the REST READDB job. ``rows`` is the sum over the statuses, so the
-    stats cost one Spark job."""
-    by_status = {
-        str(r["status"]): r["n"]
-        for r in store.read().groupBy("status").agg(F.count("*").alias("n")).collect()
-    }
+    rows per status code, read from :func:`frontier_stats`, and the
+    store version, for ``readdb --stats`` and the REST READDB job.
+    ``rows`` is the sum over the statuses, so the stats cost one Spark
+    job."""
+    # selecting the count alone lets the optimizer prune the score
+    # aggregates and the score column from the scan
+    rows = frontier_stats(store.read()).select("status", "n").collect()
+    by_status = {str(r["status"]): r["n"] for r in rows}
     return {
         "rows": sum(by_status.values()),
         "by_status": by_status,

@@ -15,14 +15,16 @@ map onto the Spark engine: INJECT → RoundDriver.inject; the four stage
 jobs → ``run_round(r, stop_after=stage)`` over the same checkpointed
 batch artifacts (running them in sequence is bit-identical to one
 native round — pinned by test); INDEX → build_index_documents over the
-frontier; READDB → status stats; CRAWL → full rounds.
+frontier; READDB → status stats; CRAWL → ``RoundDriver.run``, the one
+crawl loop the CLI runs too.
 
 Concurrency model: each job runs in its own Python thread against the
 shared SparkSession with a per-job Spark job group (PySpark pinned
 thread mode keeps the group thread-local), so ``abort`` maps to
 ``cancelJobGroup`` — the analog of JobWorker.killJob — and ``stop``
-sets a cooperative flag checked between rounds (JobWorker.stopJob
-semantics: finish the current unit, skip the rest).
+sets a cooperative flag that ``RoundDriver.run`` checks before each
+round (JobWorker.stopJob semantics: finish the current unit, skip the
+rest).
 """
 
 from __future__ import annotations
@@ -287,11 +289,17 @@ class JobManager:
             if info.state not in (RUNNING, IDLE, STOPPING):
                 return False  # already terminal — nothing to kill
             self._stop_flags[job_id].set()
+            # cancel under the lock, so the worker cannot record its
+            # outcome in between: a failed cancel raises (the REST
+            # boundary replies with the error) and leaves the job
+            # STOPPING, as its set stop flag ends it before its next
+            # round and lets it record its own outcome
+            try:
+                self.spark.sparkContext.cancelJobGroup(job_id)
+            except Exception:
+                info.state = STOPPING
+                raise
             info.state = KILLED
-        try:
-            self.spark.sparkContext.cancelJobGroup(job_id)
-        except Exception:
-            pass
         return True
 
     def wait(self, job_id: str, timeout_s: float = 120.0) -> dict:
@@ -335,12 +343,6 @@ class JobManager:
         return last
 
     def _run(self, info: JobInfo, stop: threading.Event) -> None:
-        sc = self.spark.sparkContext
-        try:
-            sc.setJobGroup(info.id, f"{info.type} {info.crawl_id}",
-                           interruptOnCancel=True)
-        except Exception:
-            pass
         with self._lock:
             if info.state == KILLED:
                 return  # aborted before the worker started
@@ -349,29 +351,30 @@ class JobManager:
                 info.msg = "stopped before start"
                 return
             info.state = RUNNING
-        drv = None
-        state, result, msg = FAILED, None, ""
+        sc = self.spark.sparkContext
+        drv, result, errors = None, None, []
         try:
+            sc.setJobGroup(info.id, f"{info.type} {info.crawl_id}",
+                           interruptOnCancel=True)
             drv = self._driver(info)
             result = self._execute(info, drv, stop)
-            state = FINISHED
         except Exception as e:  # noqa: BLE001 — job boundary
-            msg = f"{type(e).__name__}: {e}"
-        finally:
-            if drv is not None:
-                try:
-                    drv.close()
-                except Exception:
-                    pass
+            errors.append(f"{type(e).__name__}: {e}")
+        # a cleanup failure fails the job too; the job's own error, if
+        # it has one, comes first in the message
+        cleanups = [("driver close", drv.close)] if drv is not None else []
+        cleanups.append(("job group reset", lambda: sc.setJobGroup("", "")))
+        for what, cleanup in cleanups:
             try:
-                sc.setJobGroup("", "")
-            except Exception:
-                pass
+                cleanup()
+            except Exception as e:  # noqa: BLE001 — job boundary
+                errors.append(f"{what} failed: {type(e).__name__}: {e}")
         # the terminal state is the worker's last act: a client that
         # reads it may create the next job on this config at once
         with self._lock:
             if info.state != KILLED:
-                info.state, info.result, info.msg = state, result, msg
+                info.state = FAILED if errors else FINISHED
+                info.result, info.msg = result, "; ".join(errors)
 
     def _execute(self, info: JobInfo, drv, stop: threading.Event):
         args = info.args
@@ -387,17 +390,16 @@ class JobManager:
             stats = drv.run_round(r, stop_after=stage)
             return stats
         if info.type == "CRAWL":
-            rounds = int(args.get("rounds", 1))
             seed_dir = args.get("seedDir") or args.get("seed_dir")
-            if seed_dir and drv.store.current_version() < 0:
-                drv.inject(self.spark.read.text(seed_dir))
-            stats = []
-            for r in range(int(args.get("startRound", 0)),
-                           int(args.get("startRound", 0)) + rounds):
-                if stop.is_set():
-                    break
-                stats.append(drv.run_round(r))
-            return stats
+            # a resumed crawl's seedDir may be gone: read it only for
+            # an empty store, the one case ``run`` injects
+            inject = seed_dir and drv.store.current_version() < 0
+            return drv.run(
+                self.spark.read.text(seed_dir) if inject else None,
+                rounds=int(args.get("rounds", 1)),
+                start_round=int(args.get("startRound", 0)),
+                stop=stop,
+            )
         if info.type == "INDEX":
             from ..operators.indexer import (
                 build_index_documents,

@@ -23,16 +23,17 @@ from ..functions.status import status_name_col
 
 
 def frontier_stats(frontier: DataFrame) -> DataFrame:
-    """Counts by status + min/max/avg score (WebTableReader -stats)."""
-    by_status = frontier.groupBy(
-        status_name_col(F.col("status")).alias("status_name")
-    ).agg(
+    """WebTableReader -stats: one row per status code, with the
+    status's name, its row count and its min/max/avg score. The one
+    implementation behind ``readdb --stats``, the REST READDB job and
+    the ``frontier_status_stats`` driver query."""
+    return frontier.groupBy("status").agg(
+        status_name_col(F.col("status")).alias("status_name"),
         F.count("*").alias("n"),
         F.round(F.avg("score"), 6).alias("avg_score"),
         F.round(F.min("score"), 6).alias("min_score"),
         F.round(F.max("score"), 6).alias("max_score"),
     )
-    return by_status
 
 
 def dump(frontier: DataFrame, url_regex: str | None = None, columns: list[str] | None = None) -> DataFrame:

@@ -47,7 +47,10 @@ Scale note (100 TB / 10^10 rows): per-round write cost is O(updates);
 per-read overhead is one anti-join whose build side is the delta key
 set (≤ COMPACT_RATIO × base). At the reference's sizing (10^7 new
 URLs/round against 10^10 stored) the delta keys broadcast and the MOR
-read is within noise of a plain scan.
+read is within noise of a plain scan. Nothing caches the resolved
+view: each ``read`` is a new plan over the committed snapshots, and a
+round's generate and updatedb each run their own, as each reference
+job scans the web table itself.
 """
 
 from __future__ import annotations
@@ -273,16 +276,6 @@ class ParquetFrontierStore(FrontierStore):
             delta_keys = F.broadcast(delta_keys)
         kept = base.join(delta_keys, on="url_hash", how="left_anti")
         return kept.unionByName(latest.select(*base.columns))
-
-    def has_deltas(self) -> bool:
-        """True when read() must resolve delta snapshots (window +
-        anti-join) on top of the base scan. Callers use this to decide
-        whether caching the MOR view is worth anything: a base-only
-        read is a plain columnar parquet scan, and re-scanning it is
-        CHEAPER than building + reading a block cache (measured: the
-        unconditional per-round persist cost ~1.5x per-shard slowdown
-        under 4-way executor concurrency on the scaling bench)."""
-        return bool(self._layout()[2])
 
     def read(self) -> DataFrame:
         """The current table: the base scan, MOR-resolved against every

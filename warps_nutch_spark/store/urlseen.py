@@ -68,6 +68,11 @@ def _indices(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
         return ((u1[:, None] + i * u2[:, None]) % np.uint64(m)).astype(np.int64)
 
 
+def _bitmap_file(path: str, pid: int) -> str:
+    """The packed bitmap of partition ``pid`` under the filter's dir."""
+    return os.path.join(path, f"pid={pid}.npy")
+
+
 class BloomUrlSeen:
     def __init__(
         self,
@@ -99,9 +104,6 @@ class BloomUrlSeen:
                 "items": 0,
             }
 
-    def _bitmap_file(self, pid: int) -> str:
-        return os.path.join(self.path, f"pid={pid}.npy")
-
     # -- build / merge ---------------------------------------------------
     def merge_round(self, df: DataFrame, key: str, batch_id: str) -> None:
         """OR the keys of ``df`` into the per-partition bitmaps.
@@ -124,7 +126,7 @@ class BloomUrlSeen:
             bits = np.zeros(m, dtype=bool)
             bits[idx.ravel()] = True
             packed = np.packbits(bits)
-            f = os.path.join(path, f"pid={pid}.npy")
+            f = _bitmap_file(path, pid)
             if os.path.exists(f):
                 packed |= np.load(f)  # OR in packed form, no unpack
             tmp = f"{f}.{os.getpid()}.tmp.npy"
@@ -171,7 +173,7 @@ class BloomUrlSeen:
                 for pid in np.unique(pids):
                     p = int(pid)
                     if p not in cache:
-                        f = os.path.join(path, f"pid={p}.npy")
+                        f = _bitmap_file(path, p)
                         cache[p] = np.load(f) if os.path.exists(f) else None
                     packed = cache[p]
                     sel = pids == pid
