@@ -208,8 +208,8 @@ class CrawlOracle:
             # OPIC distribute resets cash on EVERY fetch attempt,
             # outlinks or not (OPICScoringFilter.distributeScoreToOutlinks
             # runs unconditionally in the updatedb map) — including
-            # RETRY/GONE rows, matching operators/updatedb.py
-            # updated_fetched_rows.
+            # RETRY/GONE rows, matching the fetched-row update in
+            # operators/updatedb.py.
             r.cash = 0.0
             if crawl == CrawlStatus.RETRY:
                 r.retries += 1

@@ -226,31 +226,6 @@ def test_round_updatedb_uses_linked_merge(spark, tmp_path):
     assert fr.count() == fr.select("url_hash").distinct().count()
 
 
-def test_incremental_compaction_links_untouched_buckets(spark, tmp_path):
-    """Compaction rewrites only delta-touched buckets; untouched bucket
-    partitions are hard-linked from the old base, and the view is
-    unchanged."""
-    import os
-
-    st = _store(spark, tmp_path, compact_ratio=100.0)
-    rows = [(f"u{i}", (i % 6) + 1, float(i)) for i in range(24)]
-    st.init(_rows(spark, rows))
-    before = {r["url_hash"]: r["score"] for r in st.read().collect()}
-    # touch only host1's rows (one bucket, typically)
-    st.merge(_rows(spark, [("u0", 1, 100.0), ("u6", 1, 106.0)]))
-    before["u0"], before["u6"] = 100.0, 106.0
-    v = st.compact()
-    ln = st.lineage(v)
-    assert ln["kind"] == "base"
-    assert 0 < ln["compacted_buckets"] < st.host_buckets
-    # linked dirs exist for untouched buckets (hard links share inode)
-    out = st._data_dir(v)
-    bucket_dirs = [d for d in os.listdir(out) if d.startswith("host_bucket=")]
-    assert len(bucket_dirs) >= ln["compacted_buckets"]
-    after = {r["url_hash"]: r["score"] for r in st.read().collect()}
-    assert after == before
-
-
 def test_read_host_pruned_equals_full_read(spark, tmp_path):
     """read_host must equal read().filter(host) over a store with a
     delta, and scan only one bucket."""
@@ -293,8 +268,8 @@ def test_reopen_with_wrong_bucket_count_refused(spark, tmp_path):
 
 def test_merge_linked_rejects_mismatched_bucketing(spark, tmp_path):
     """A stale resume artifact bucketed with a different host_buckets
-    must not be adopted as a delta (bucket-pruned reads and incremental
-    compaction would resolve it against the wrong partitions)."""
+    must not be adopted as a delta (bucket-pruned reads would resolve
+    it against the wrong partitions)."""
     st = _store(spark, tmp_path, compact_ratio=100.0)
     st.init(_rows(spark, [("a", 1, 1.0), ("b", 2, 2.0)]))
     other = ParquetFrontierStore(
@@ -325,14 +300,13 @@ def test_merge_linked_rejects_mismatched_bucketing(spark, tmp_path):
 
 def test_single_resolver_equals_pandas_upsert(spark, tmp_path):
     """read(), the union of read_host() over every host, and read()
-    after an incremental compact() all resolve through one MOR
+    after a compact() all resolve through one MOR
     resolver, and all equal a plain pandas upsert of the same inputs:
     three overlapping deltas (newest wins) that update and insert."""
     import pandas as pd
 
     st = _store(spark, tmp_path, compact_ratio=100.0)
     base = [(f"u{i}", (i % 12) + 1, float(i)) for i in range(24)]
-    # every delta stays on hosts 1-3, so compaction leaves buckets alone
     steps = [
         [("u0", 1, 100.0), ("u1", 2, 101.0), ("n0", 3, 50.0)],
         [("u0", 1, 200.0), ("u1", 2, 201.0)],
@@ -361,9 +335,7 @@ def test_single_resolver_equals_pandas_upsert(spark, tmp_path):
     assert _scores(per_host) == want
 
     v = st.compact()
-    ln = st.lineage(v)
-    base_buckets = [d for d in os.listdir(st._data_dir(0)) if d.startswith("host_bucket=")]
-    assert ln["kind"] == "base" and 0 < ln["compacted_buckets"] < len(base_buckets)
+    assert st.lineage(v)["kind"] == "base"
     assert _scores(st.read().collect()) == want
 
 
@@ -488,6 +460,65 @@ def test_store_metadata_costs_no_spark_job(spark, tmp_path):
     names = {fn for _, _, files in os.walk(st.path) for fn in files}
     assert not names & {"_LINEAGE.json", "_STORE_META.json"}
     assert ParquetFrontierStore.open(spark, st.path).host_buckets == 4
+
+
+def test_compaction_is_one_resolve_and_write(spark, tmp_path):
+    """compact() over a store with deltas runs the jobs of writing the
+    resolved table bucket by bucket and no more: no job asks which
+    buckets the deltas touched."""
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    st.init(_rows(spark, [(f"u{i}", (i % 6) + 1, float(i)) for i in range(24)]))
+    st.merge(_rows(spark, [("u1", 2, 100.0), ("n0", 3, 50.0)]))
+    art = os.path.join(str(tmp_path), "artifact")
+    st.with_bucket(_rows(spark, [("u2", 3, 102.0)])).write.parquet(art)
+    st.stamp_bucketing(art)
+    st.merge_linked(art)
+    want = {r["url_hash"]: r["score"] for r in st.read().collect()}
+
+    def write_resolved():
+        schema, base, deltas = st._layout()
+        resolved = st._resolve(
+            st._read_base(schema, base), st._delta_union(schema, deltas), deltas
+        )
+        st._write_buckets(resolved, os.path.join(str(tmp_path), "resolved"))
+
+    written = _jobs_submitted(spark, write_resolved)
+    assert written > 0
+    assert _jobs_submitted(spark, st.compact) == written
+    assert [ln["kind"] for ln in st.lineage_chain()] == ["base", "delta", "delta", "base"]
+    assert {r["url_hash"]: r["score"] for r in st.read().collect()} == want
+
+
+def test_a_killed_compaction_leaves_nothing_in_the_next_snapshot(spark, tmp_path, monkeypatch):
+    """A compaction killed after its write but before its commit leaves
+    files at the next version. The next linked delta takes that
+    version: it holds only its own rows, and the view stays the upsert
+    of every committed snapshot."""
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    base = [(f"u{i}", (i % 6) + 1, float(i)) for i in range(24)]
+    st.init(_rows(spark, base))
+    st.merge(_rows(spark, [("u1", 2, 100.0)]))
+    commit = st._commit
+
+    def killed(version, lineage, kind, schema=None):
+        if kind == "base":
+            raise RuntimeError("killed before the compaction's commit")
+        return commit(version, lineage, kind, schema)
+
+    monkeypatch.setattr(st, "_commit", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        st.compact()
+    monkeypatch.undo()
+    assert os.path.isdir(st._data_dir(st.current_version() + 1))
+
+    art = os.path.join(str(tmp_path), "artifact")
+    st.with_bucket(_rows(spark, [("u2", 3, 102.0)])).write.parquet(art)
+    st.stamp_bucketing(art)
+    st.merge_linked(art)
+    assert [ln["kind"] for ln in st.lineage_chain()] == ["base", "delta", "delta"]
+    assert st.lineage()["rows"] == 1
+    want = {u: s for u, _, s in base} | {"u1": 100.0, "u2": 102.0}
+    assert {r["url_hash"]: r["score"] for r in st.read().collect()} == want
 
 
 def test_read_host_runs_no_job_and_prunes_to_the_host_bucket(spark, tmp_path):

@@ -76,6 +76,19 @@ def test_config_crud(client):
     assert cid not in client.list_configs()
 
 
+def test_config_map_round_trips_and_ignores_unknown_keys():
+    """Every CrawlConfig field is a scalar that round-trips through the
+    string property map, and a key no field reads (one an older client
+    may still send) is ignored."""
+    from warps_nutch_spark.config import CrawlConfig
+    from warps_nutch_spark.service.jobs import config_from_map, default_config_map
+
+    props = default_config_map()
+    assert config_from_map(props) == CrawlConfig()
+    props.update(extras="{}", priority_index_page="1", top_n="7")
+    assert config_from_map(props) == CrawlConfig(top_n=7)
+
+
 def test_stage_jobs_equal_native_round(spark, client, master, workdir):
     """INJECT + 2×(GENERATE,FETCH,PARSE,UPDATEDB) over REST == native."""
     web = SimWeb(*WEB)

@@ -93,16 +93,18 @@ def _parsed_df(spark, rows):
     return spark.createDataFrame(rows, schema=schema)
 
 
-def _fetchlist(frontier, parsed):
-    """The frontier rows the parsed pages were generated from, marked
-    as the generate stage marks them."""
-    return frontier.join(parsed.select("url_hash"), on="url_hash", how="left_semi").withColumn(
-        "generated_batch", F.lit("b1")
-    )
+def _fetchlist(frontier, parsed, cfg):
+    """The fetchlist the parsed pages were fetched from, as the round
+    builds it: each parsed row's carried columns over its frontier
+    state (schema defaults for a page the frontier lacks), marked as
+    the generate stage marks them."""
+    state = frontier.drop(*(c for c in fetch_op.CARRY_COLS if c != "url_hash"))
+    carried = parsed.select(*fetch_op.CARRY_COLS).join(state, on="url_hash", how="left")
+    return complete_rows(carried, cfg, NOW).withColumn("generated_batch", F.lit("b1"))
 
 
 def _updatedb(frontier, parsed, cfg):
-    return upd_op.updatedb(frontier, _fetchlist(frontier, parsed), parsed, cfg, NOW, "b1")
+    return upd_op.updatedb(frontier, _fetchlist(frontier, parsed, cfg), parsed, cfg, NOW, "b1")
 
 
 def _updated_counts(merged, batch_id):
@@ -347,7 +349,10 @@ def test_retry_row_cash_reset_on_refetch(spark):
             )
         ],
     )
-    out = upd_op.updated_fetched_rows(parsed, cfg, NOW, "b1").collect()[0]
+    frontier = complete_rows(
+        spark.createDataFrame(pd.DataFrame({"url": ["http://a.test/flaky"]})), cfg, NOW
+    )
+    out = _updatedb(frontier, parsed, cfg).collect()[0]
     assert out["cash"] == 0.0
     assert out["status"] == CrawlStatus.RETRY
     assert out["retries_since_fetch"] == 1
@@ -466,6 +471,62 @@ def test_merge_rows_scan_the_frontier_once_uncached(spark, workdir):
     assert "InMemoryTableScanExec" not in names
 
 
+def _joins(plan) -> int:
+    """Join nodes in a logical plan tree."""
+    kids = plan.children()
+    return int(plan.getClass().getSimpleName() == "Join") + sum(
+        _joins(kids.apply(i)) for i in range(kids.size())
+    )
+
+
+def test_own_rows_are_one_fetchlist_join(spark, workdir):
+    """Over a base-only store, the merge rows' optimized plan has four
+    joins: the fetchlist with the parse results, the link targets
+    against the fetchlist keys, the frontier semi-join and the keyed
+    fold. A fetched row's prior state is its fetchlist row, so no join
+    re-attaches that state, and no anti-join looks for the rows the
+    fetch budget dropped."""
+    import os
+
+    from warps_nutch_spark.store.frontier import ParquetFrontierStore
+    from warps_nutch_spark.store.urlseen import BloomUrlSeen
+
+    cfg = make_test_config()
+    store = ParquetFrontierStore(spark, os.path.join(workdir, "frontier"), cfg.host_buckets)
+    store.init(complete_rows(
+        spark.createDataFrame(pd.DataFrame(
+            {"url": ["http://a.test/p", "http://a.test/known", "http://a.test/d"]}
+        )),
+        cfg,
+        NOW,
+    ))
+    seen = BloomUrlSeen(os.path.join(workdir, "urlseen"), 2, 1000, 0.01)
+    seen.merge_round(store.read().select("url_hash"), "url_hash", "inject")
+    frontier = store.read()
+    parsed_path = os.path.join(workdir, "parsed")
+    _parsed_df(
+        spark, [_parsed_row("http://a.test/p", ["http://a.test/known", "http://a.test/new"])]
+    ).write.parquet(parsed_path)
+    parsed = spark.read.parquet(parsed_path)
+    fl_path = os.path.join(workdir, "fetchlist")
+    _fetchlist(frontier, parsed, cfg).unionByName(
+        frontier.filter(F.col("url") == "http://a.test/d").withColumn(
+            "generated_batch", F.lit("b1")
+        )
+    ).write.parquet(fl_path)
+
+    merged = upd_op.updatedb(
+        frontier, spark.read.parquet(fl_path), parsed, cfg, NOW, "b1", seen
+    )
+    assert _joins(merged._jdf.queryExecution().optimizedPlan()) == 4
+    rows = {r["url"]: r for r in merged.collect()}
+    assert sorted(rows) == [
+        "http://a.test/d", "http://a.test/known", "http://a.test/new", "http://a.test/p",
+    ]
+    assert rows["http://a.test/p"]["fetched_batch"] == "b1"
+    assert rows["http://a.test/d"]["generated_batch"] == "b1"
+
+
 def test_second_inject_seed_keeps_seed_state_when_linked(spark, workdir):
     """Every inject feeds the URL-seen pre-screen, also a second one
     under the same default batch id: a seed of the second inject that
@@ -484,7 +545,7 @@ def test_second_inject_seed_keeps_seed_state_when_linked(spark, workdir):
     frontier = drv.store.read()
     parsed = _parsed_df(spark, [_parsed_row(first, [second], is_seed=True)])
     merged = upd_op.updatedb(
-        frontier, _fetchlist(frontier, parsed), parsed, cfg, NOW, "b1", drv.urlseen
+        frontier, _fetchlist(frontier, parsed, cfg), parsed, cfg, NOW, "b1", drv.urlseen
     )
     seed = {r["url"]: r for r in merged.collect()}[second]
     injected = frontier.filter(F.col("url") == second).collect()[0]

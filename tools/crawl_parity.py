@@ -1,0 +1,102 @@
+"""Compare two crawl workdirs table by table.
+
+Run: python tools/crawl_parity.py WORKDIR_A WORKDIR_B
+
+Compares, on both sides of the same relative path:
+
+- every stage artifact (``rounds/<batch_id>/<stage>/data``), every
+  frontier snapshot (``frontier/v*/data``) and every payload slice
+  (``payloads/<batch_id>``), read with pyarrow (hive partitions
+  included) and sorted by ``url_hash`` (``image_id`` for payloads);
+- every URL-seen bitmap (``urlseen/pid=*.npy``), byte for byte.
+
+A table or bitmap that exists on one side only is a difference.
+Prints one line per difference and a summary; exits 1 on any
+difference, 0 when everything is equal. Needs no Spark session.
+"""
+
+from __future__ import annotations
+
+import filecmp
+import glob
+import os
+import sys
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+TABLES = ("rounds/*/*/data", "frontier/v*/data", "payloads/*")
+BITMAPS = "urlseen/pid=*.npy"
+KEYS = ("url_hash", "image_id")
+
+
+def _relpaths(root: str, pattern: str) -> set[str]:
+    return {os.path.relpath(p, root) for p in glob.glob(os.path.join(root, pattern))}
+
+
+def _sorted_table(path: str) -> pa.Table:
+    """The table under ``path``, columns by name and rows by key, then
+    by every flat column (so rows that share a key sort the same way
+    on both sides)."""
+    t = pq.read_table(path)
+    # hive partition columns read back dictionary-encoded
+    t = pa.table({
+        c: t[c].cast(t[c].type.value_type) if pa.types.is_dictionary(t[c].type) else t[c]
+        for c in sorted(t.column_names)
+    })
+    key = next((k for k in KEYS if k in t.column_names), None)
+    if key is None:
+        raise ValueError(f"{path}: no key column among {KEYS}")
+    flat = [f.name for f in t.schema if f.name != key and not pa.types.is_nested(f.type)]
+    return t.take(pc.sort_indices(t, [(c, "ascending") for c in [key, *flat]]))
+
+
+def _table_diff(a: str, b: str) -> str | None:
+    """None when the tables at ``a`` and ``b`` hold the same rows, else
+    what differs."""
+    ta, tb = _sorted_table(a), _sorted_table(b)
+    if ta.schema != tb.schema:
+        return f"schemas differ: {ta.schema} vs {tb.schema}"
+    if ta.num_rows != tb.num_rows:
+        return f"{ta.num_rows} vs {tb.num_rows} rows"
+    cols = [c for c in ta.column_names if not ta[c].equals(tb[c])]
+    return f"columns differ: {cols}" if cols else None
+
+
+def compare(a: str, b: str) -> list[str]:
+    """One line per difference between the workdirs ``a`` and ``b``."""
+    diffs: list[str] = []
+    n = 0
+    for pattern in TABLES + (BITMAPS,):
+        in_a, in_b = _relpaths(a, pattern), _relpaths(b, pattern)
+        diffs += [f"only in {a}: {p}" for p in sorted(in_a - in_b)]
+        diffs += [f"only in {b}: {p}" for p in sorted(in_b - in_a)]
+        for rel in sorted(in_a & in_b):
+            n += 1
+            fa, fb = os.path.join(a, rel), os.path.join(b, rel)
+            if pattern == BITMAPS:
+                diff = None if filecmp.cmp(fa, fb, shallow=False) else "bytes differ"
+            else:
+                try:
+                    diff = _table_diff(fa, fb)
+                except pa.ArrowException as exc:
+                    diff = f"unreadable: {exc}"
+            if diff:
+                diffs.append(f"{rel}: {diff}")
+    print(f"compared {n} tables and bitmaps, {len(diffs)} differences")
+    return diffs
+
+
+def main(argv: list[str]) -> int:
+    if len(argv) != 2:
+        print("usage: python tools/crawl_parity.py WORKDIR_A WORKDIR_B", file=sys.stderr)
+        return 2
+    diffs = compare(*argv)
+    for line in diffs:
+        print(line)
+    return 1 if diffs else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

@@ -31,12 +31,16 @@ from warps_nutch_spark.plans.round import RoundDriver
 from warps_nutch_spark.simweb import SimWeb
 
 cpus = int(os.environ["WNS_CPUS"])
+# 24g, or half the machine's memory where that is less: the Python
+# workers and the OS need the rest
+phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+driver_mb = min(24 * 1024, phys_mb // 2)
 web_params = tuple(json.loads(os.environ["WNS_WEB"]))
 rounds = int(os.environ["WNS_ROUNDS"])
 spark = (SparkSession.builder.master(f"local[{cpus}]")
          .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 16)))
          .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.driver.memory", "24g")
+         .config("spark.driver.memory", f"{driver_mb}m")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")

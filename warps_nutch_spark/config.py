@@ -7,7 +7,7 @@ to executors inside pandas UDF closures.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 SECONDS_PER_DAY = 24 * 3600
 
@@ -153,14 +153,9 @@ class CrawlConfig:
 
     # --- priorities (metadata/Nutch.java:78-84) -------------------------
     priority_default: int = 0
-    priority_index_page: int = 1
-    priority_detail_page: int = 2
-    priority_must_generate: int = 100
     priority_from_seed: int = 101
     priority_must_fetch: int = 1000
     priority_seed: int = 1001
-
-    extras: dict = field(default_factory=dict, compare=False, hash=False)
 
 
 DEFAULT_CONFIG = CrawlConfig()

@@ -26,12 +26,17 @@ Reference dataflow (``mapreduce/DbUpdateJob``, SURVEY.md §3.4):
   round driver writes these rows (``functions/status.py::status_counter_cols``).
 
 Scale shape: one keyed merge per URL, as the reference's one reduce
-per URL. The round's own rows (fetched pages and the fetchlist rows
-the fetch budget dropped) and the existing link targets meet the
-aggregated contributions in ONE full outer join on url_hash, consumed
-by one projection. The frontier is read once, by a semi-join against
-the broadcast link targets that are not own rows; the Bloom pre-screen
-keeps definitely-new targets off that broadcast side, so it stays
+per URL. The round's own rows are its fetchlist: one left join adds
+each fetched page's parse results (status, fetch time, signature,
+outlinks, decode columns) and one projection applies R7-R10 to it, as
+the reference's fetcher writes its results into the webtable row that
+DbUpdateReducer then reads (SURVEY.md §3.4). A fetchlist row the fetch
+budget dropped has no parse results and stays as generated. The own
+rows and the existing link targets meet the aggregated contributions
+in ONE full outer join on url_hash, consumed by one projection. The
+frontier is read once, by a semi-join against the broadcast link
+targets that are not fetchlist rows; the Bloom pre-screen keeps
+definitely-new targets off that broadcast side, so it stays
 proportional to the already-known targets, not to all outlinks.
 Nothing is persisted.
 """
@@ -41,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import schema
 from ..config import CrawlConfig
 from ..functions import scoring, urls
 from ..functions.schedules import (
@@ -51,7 +57,7 @@ from ..functions.schedules import (
 )
 from ..functions.status import CrawlStatus
 from ..store.urlseen import BloomUrlSeen
-from .rows import complete_rows, frontier_defaults
+from .rows import frontier_defaults
 
 
 def explode_contributions(parsed: DataFrame, cfg: CrawlConfig) -> DataFrame:
@@ -138,83 +144,84 @@ def aggregate_contributions(contribs: DataFrame, cfg: CrawlConfig) -> DataFrame:
     )
 
 
-def updated_fetched_rows(
-    parsed: DataFrame, cfg: CrawlConfig, now_ms: int, batch_id: str
-) -> DataFrame:
-    """R7-R10 for the fetched pages themselves: schedule by status,
-    signature rotation, cash reset (OPIC distribute), mark cleanup."""
+#: the parse artifact's result columns: all a fetch adds to a row. The
+#: rest of a fetched row's state is its fetchlist row's
+_RESULT_COLS = (
+    "proto_code", "new_status", "fetch_ts", "new_signature",
+    "outlinks", "image_id", "caption", "phash",
+)
+
+
+def _fetch_updates(cfg: CrawlConfig, now_ms: int, batch_id: str) -> dict:
+    """R7-R10 for a fetched page, as Columns over its fetchlist row
+    joined with its ``_``-prefixed parse results: schedule by status,
+    signature rotation, cash reset (OPIC distribute), reprUrl on
+    redirect, mark cleanup. Every expression reads the row's prior
+    values."""
+    new_status, signature = F.col("_new_status"), F.col("_new_signature")
+    fetch_ts, outlinks = F.col("_fetch_ts"), F.col("_outlinks")
+    interval = F.col("fetch_interval")
     # `signature` is the OLD frontier value; parse computed the new one
-    # into `new_signature` (SignatureComparator semantics: prev missing
-    # -> UNKNOWN, equal -> NOTMODIFIED, different -> MODIFIED)
-    df = parsed.withColumn(
-        "mod_state",
-        F.when(
-            F.col("new_status").isin(
-                CrawlStatus.FETCHED, CrawlStatus.REDIR_PERM, CrawlStatus.REDIR_TEMP
-            )
-            & F.col("new_signature").isNotNull(),
-            modified_state_col(F.col("new_signature"), F.col("signature")),
-        ).otherwise(F.lit(STATE_UNKNOWN)),
-    )
+    # (SignatureComparator semantics: prev missing -> UNKNOWN, equal ->
+    # NOTMODIFIED, different -> MODIFIED)
+    mod_state = F.when(
+        new_status.isin(CrawlStatus.FETCHED, CrawlStatus.REDIR_PERM, CrawlStatus.REDIR_TEMP)
+        & signature.isNotNull(),
+        modified_state_col(signature, F.col("signature")),
+    ).otherwise(F.lit(STATE_UNKNOWN))
+    # modified_time unknown in simulation -> fetch time
     new_fetch_time, new_interval = adaptive_schedule_cols(
-        F.col("fetch_ts"),
-        F.col("fetch_ts"),  # modified_time unknown in simulation -> fetch time
-        F.col("fetch_interval"),
-        F.col("mod_state"),
-        cfg,
+        fetch_ts, fetch_ts, interval, mod_state, cfg
     )
-    is_fetch_like = F.col("new_status").isin(
+    is_fetch_like = new_status.isin(
         CrawlStatus.FETCHED,
         CrawlStatus.REDIR_PERM,
         CrawlStatus.REDIR_TEMP,
         CrawlStatus.NOTMODIFIED,
     )
-    is_retry = F.col("new_status") == CrawlStatus.RETRY
-    retry_exhausted = is_retry & (
-        F.col("retries_since_fetch") + 1 >= F.lit(cfg.max_retries)
-    )
-    is_gone = (F.col("new_status") == CrawlStatus.GONE) | retry_exhausted
-
-    out = (
-        df.withColumn(
-            "status",
-            F.when(is_gone, F.lit(CrawlStatus.GONE)).otherwise(F.col("new_status")),
-        )
-        .withColumn("prev_fetch_time", F.col("fetch_time"))
-        .withColumn(
-            "fetch_time",
-            F.when(is_fetch_like, new_fetch_time)
-            .when(is_retry & ~retry_exhausted, F.lit(now_ms) + F.col("fetch_interval").cast("long") * 1000)
-            .otherwise(F.lit(now_ms) + F.col("fetch_interval").cast("long") * 1000),
-        )
-        .withColumn(
-            "fetch_interval",
-            F.when(is_fetch_like, new_interval)
-            .when(is_gone, gone_backoff_interval(F.col("fetch_interval"), cfg))
-            .otherwise(F.col("fetch_interval")),
-        )
-        .withColumn(
-            "retries_since_fetch",
-            F.when(is_retry, F.col("retries_since_fetch") + 1).otherwise(F.lit(0)),
-        )
-        .withColumn("prev_signature", F.col("signature"))
-        .withColumn("signature", F.coalesce(F.col("new_signature"), F.col("signature")))
-        .withColumn("cash", F.lit(0.0).cast("float"))  # OPIC distribute reset
-        .withColumn(
-            "protocol_status",
-            F.struct(
-                F.col("proto_code").alias("code"),
-                F.array().cast("array<string>").alias("args"),
-                F.col("fetch_ts").alias("last_modified"),
+    is_retry = new_status == CrawlStatus.RETRY
+    retry_exhausted = is_retry & (F.col("retries_since_fetch") + 1 >= F.lit(cfg.max_retries))
+    is_gone = (new_status == CrawlStatus.GONE) | retry_exhausted
+    return {
+        "status": F.when(is_gone, F.lit(CrawlStatus.GONE)).otherwise(new_status),
+        "prev_fetch_time": F.col("fetch_time"),
+        "fetch_time": F.when(is_fetch_like, new_fetch_time).otherwise(
+            F.lit(now_ms) + interval.cast("long") * 1000
+        ),
+        "fetch_interval": F.when(is_fetch_like, new_interval)
+        .when(is_gone, gone_backoff_interval(interval, cfg))
+        .otherwise(interval),
+        "retries_since_fetch": F.when(is_retry, F.col("retries_since_fetch") + 1).otherwise(
+            F.lit(0)
+        ),
+        "prev_signature": F.col("signature"),
+        "signature": F.coalesce(signature, F.col("signature")),
+        "cash": F.lit(0.0),  # OPIC distribute reset
+        "protocol_status": F.struct(
+            F.col("_proto_code").alias("code"),
+            F.array().cast("array<string>").alias("args"),
+            fetch_ts.alias("last_modified"),
+        ),
+        "modified_time": fetch_ts,
+        "fetched_batch": F.lit(batch_id),
+        "parsed_batch": F.lit(batch_id),
+        "updated_batch": F.lit(batch_id),
+        "generated_batch": F.lit(None),  # R10 clear marks
+        # reprUrl on redirect (URLUtil.chooseRepr, TaskScheduler.java:731-774)
+        "repr_url": F.when(
+            new_status.isin(CrawlStatus.REDIR_PERM, CrawlStatus.REDIR_TEMP)
+            & (F.size(F.coalesce(outlinks, F.array())) > 0),
+            urls.choose_repr_col(
+                F.col("url"),
+                F.element_at(outlinks, 1).getField("url"),
+                new_status == CrawlStatus.REDIR_TEMP,
             ),
-        )
-        .withColumn("modified_time", F.col("fetch_ts"))
-        .withColumn("fetched_batch", F.lit(batch_id))
-        .withColumn("parsed_batch", F.lit(batch_id))
-        .withColumn("updated_batch", F.lit(batch_id))
-        .withColumn("generated_batch", F.lit(None).cast("string"))  # R10 clear marks
-    )
-    return out
+        ).otherwise(F.col("repr_url")),
+        "outlinks": outlinks,
+        "image_id": F.col("_image_id"),
+        "caption": F.col("_caption"),
+        "phash": F.col("_phash"),
+    }
 
 
 def updatedb(
@@ -227,46 +234,34 @@ def updatedb(
     urlseen: BloomUrlSeen | None = None,
 ) -> DataFrame:
     """The round's merge rows, full frontier-schema rows keyed by
-    url_hash: the fetched pages, the fetchlist rows the fetch budget
-    dropped, the existing link targets and the newly discovered URLs.
+    url_hash: the fetchlist rows (each fetched page updated by its
+    fetch, the rows the fetch budget dropped as generated), the
+    existing link targets and the newly discovered URLs.
     ``fetchlist`` is the round's generate artifact and ``parsed`` the
-    rows the round fetched from it."""
+    rows the round fetched from it, so its keys are fetchlist keys."""
     cols = frontier.columns
     agg = aggregate_contributions(explode_contributions(parsed, cfg), cfg)
 
-    # own rows: the fetched pages take their prior inlinks / repr_url
-    # from the fetchlist (that state does not ride through the fetch
-    # UDF); fetchlist rows with no parsed row were dropped by the fetch
-    # budget and stay as generated, GENERATE_MARK included
-    # (FeederThread drain semantics)
-    prior = fetchlist.select("url_hash", "inlinks", F.col("repr_url").alias("_prev_repr"))
-    fetched = updated_fetched_rows(parsed, cfg, now_ms, batch_id).join(
-        prior, on="url_hash", how="left"
-    )
-    # reprUrl on redirect (URLUtil.chooseRepr, TaskScheduler.java:731-774)
-    redirected = F.col("new_status").isin(
-        CrawlStatus.REDIR_PERM, CrawlStatus.REDIR_TEMP
-    ) & (F.size(F.coalesce("outlinks", F.array())) > 0)
-    fetched = fetched.withColumn(
-        "repr_url",
-        F.when(
-            redirected,
-            urls.choose_repr_col(
-                F.col("url"),
-                F.element_at("outlinks", 1).getField("url"),
-                F.col("new_status") == CrawlStatus.REDIR_TEMP,
-            ),
-        ).otherwise(F.col("_prev_repr")),
-    )
-    dropped = fetchlist.join(parsed.select("url_hash"), on="url_hash", how="left_anti")
-    own = complete_rows(fetched, cfg, now_ms).select(*cols).unionByName(dropped.select(*cols))
+    # own rows: the fetchlist left-joined with the parse results, as the
+    # reference's fetcher writes its results into the webtable row. A
+    # fetchlist row with no parsed row was dropped by the fetch budget
+    # and stays as generated, GENERATE_MARK included (FeederThread
+    # drain semantics). Every parsed row has a status.
+    results = parsed.select("url_hash", *(F.col(c).alias(f"_{c}") for c in _RESULT_COLS))
+    fetched = F.col("_new_status").isNotNull()
+    types = {f.name: f.dataType for f in schema.FRONTIER.fields}
+    upd = _fetch_updates(cfg, now_ms, batch_id)
+    own = fetchlist.join(results, on="url_hash", how="left").select(*(
+        F.when(fetched, upd[c].cast(types[c])).otherwise(F.col(c)).alias(c)
+        if c in upd else F.col(c)
+        for c in cols
+    ))
 
     # existing link targets: the one frontier lookup. The Bloom
     # pre-screen (R6 URL-seen) keeps definitely-new targets off the
     # broadcast side; the semi-join itself is the exact check.
-    own_keys = fetchlist.select("url_hash").unionByName(parsed.select("url_hash"))
     targets = agg.select(F.col("to_url_hash").alias("url_hash")).join(
-        own_keys, on="url_hash", how="left_anti"
+        fetchlist.select("url_hash"), on="url_hash", how="left_anti"
     )
     if urlseen is not None:
         targets = urlseen.maybe_seen(targets, "url_hash").filter("maybe_seen").drop("maybe_seen")

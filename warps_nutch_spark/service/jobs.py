@@ -68,16 +68,12 @@ _STAGE_OF = {"GENERATE": "generate", "FETCH": "fetch", "PARSE": "parse",
 
 def default_config_map() -> dict[str, str]:
     """The default CrawlConfig flattened to a string property map (the
-    ConfManagerImpl seeded NutchConfiguration analog). Only scalar
-    fields flatten — container-typed fields (dict/list defaults) can't
-    round-trip through string properties and keep their dataclass
-    defaults instead."""
+    ConfManagerImpl seeded NutchConfiguration analog); every field is
+    a scalar."""
     defaults = CrawlConfig()
     out: dict[str, str] = {}
     for f in dataclasses.fields(CrawlConfig):
         v = getattr(defaults, f.name)
-        if isinstance(v, (dict, list, set, tuple)):
-            continue
         out[f.name] = str(v).lower() if isinstance(v, bool) else str(v)
     return out
 
@@ -92,8 +88,6 @@ def config_from_map(props: dict[str, str]) -> CrawlConfig:
             continue
         raw = props[f.name]
         default_v = getattr(defaults, f.name)
-        if isinstance(default_v, (dict, list, set, tuple)):
-            continue  # container fields never flatten (see above)
         if isinstance(default_v, bool):
             kw[f.name] = str(raw).strip().lower() in ("true", "1", "yes")
         elif isinstance(default_v, int):

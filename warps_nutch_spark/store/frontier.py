@@ -20,11 +20,11 @@ Two implementations behind one interface:
   key shadows the base row. The anti-join against the (small) delta key
   set is a broadcast hash join while deltas are small, and AQE falls
   back to a shuffle join when they grow. ``read`` resolves every
-  bucket, ``read_host`` one host bucket and ``compact`` the
-  delta-touched buckets, each through that one resolver. The store is
-  upsert-only, as the reference's crawl cycle never deletes a webtable
-  row: a delta row lands in the bucket of the base row it shadows
-  (same URL, same host), so a bucket-scoped resolve is exact. When
+  bucket, ``read_host`` one host bucket and ``compact`` writes the
+  resolved table as a new base, each through that one resolver. The
+  store is upsert-only, as the reference's crawl cycle never deletes a
+  webtable row: a delta row lands in the bucket of the base row it
+  shadows (same URL, same host), so a bucket-scoped resolve is exact. When
   total delta rows exceed ``COMPACT_RATIO`` × base rows (or the delta
   count or broadcast gate is exceeded),
   ``compact()`` materializes the merged view as a new base — amortized
@@ -132,10 +132,9 @@ class ParquetFrontierStore(FrontierStore):
         self.host_buckets = host_buckets
         # the bucket count is part of the on-disk layout: reopening an
         # existing store with a different host_buckets would make
-        # bucket-pruned reads and incremental compaction resolve against
-        # the wrong partitions (silently dropping rows with bucket ids
-        # >= the new count). The manifest records it; hard-fail on a
-        # mismatch.
+        # bucket-pruned reads resolve against the wrong partitions
+        # (silently dropping rows with bucket ids >= the new count).
+        # The manifest records it; hard-fail on a mismatch.
         man = _read_manifest(path)
         if man is not None and man["host_buckets"] != host_buckets:
             raise ValueError(
@@ -327,19 +326,6 @@ class ParquetFrontierStore(FrontierStore):
         self._write_buckets(df, self._data_dir(v))
         return self._commit(v, lineage, kind, schema)
 
-    @staticmethod
-    def _link_parts(src: str, dst: str) -> None:
-        """Hard-link (copy across filesystems) every parquet part file
-        of ``src`` into ``dst``."""
-        os.makedirs(dst, exist_ok=True)
-        for fn in os.listdir(src):
-            if not _is_part(fn):
-                continue
-            try:
-                os.link(os.path.join(src, fn), os.path.join(dst, fn))
-            except OSError:
-                shutil.copy2(os.path.join(src, fn), os.path.join(dst, fn))
-
     def _maybe_compact(self, base: dict, deltas: list[dict]) -> None:
         """Compaction trigger after a delta commit (``deltas`` includes
         the new one): row ratio, snapshot count, or broadcast gate."""
@@ -389,9 +375,8 @@ class ParquetFrontierStore(FrontierStore):
         # the artifact's host_bucket values must have been computed with
         # THIS store's bucket count — a stale resume artifact with a
         # different bucketing would pass the column check but poison
-        # bucket-pruned reads and incremental compaction. Writers stamp
-        # the count via stamp_bucketing(); an unstamped artifact is
-        # refused.
+        # bucket-pruned reads. Writers stamp the count via
+        # stamp_bucketing(); an unstamped artifact is refused.
         stamp = os.path.join(data_dir, "_WNS_BUCKETING.json")
         if not os.path.exists(stamp):
             raise ValueError(
@@ -414,7 +399,16 @@ class ParquetFrontierStore(FrontierStore):
         if missing:
             raise ValueError(f"merge_linked: artifact missing columns {missing}")
         v = self.current_version() + 1
-        self._link_parts(data_dir, self._data_dir(v))
+        out = self._data_dir(v)
+        # files at an uncommitted version are a killed write's leftovers
+        # (say, a compaction's buckets): the snapshot holds only the links
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        for fn in parts:
+            try:
+                os.link(os.path.join(data_dir, fn), os.path.join(out, fn))
+            except OSError:  # across filesystems
+                shutil.copy2(os.path.join(data_dir, fn), os.path.join(out, fn))
         meta = dict(lineage or {"op": "merge"})
         meta["linked_from"] = data_dir
         new = self._commit(v, meta, kind="delta")
@@ -430,55 +424,21 @@ class ParquetFrontierStore(FrontierStore):
 
     def compact(self, lineage: dict | None = None) -> int:
         """Materialize the MOR view as a new base snapshot (Iceberg's
-        rewrite_data_files analog).
-
-        INCREMENTAL: only host_buckets that appear in a delta are
-        resolved and rewritten; every untouched bucket's partition
-        directory is hard-linked from the old base. Compaction cost is
-        therefore O(touched frontier), not O(frontier) — at 10^10 rows
-        with thousands of buckets a round's updates touch a subset, so
-        the periodic compaction spike shrinks with update locality
-        instead of scaling with the table. When every bucket is touched
-        this is the full rewrite."""
+        rewrite_data_files analog): one resolve of the base against
+        every delta since it, written bucket by bucket. Every bucket is
+        rewritten. Skipping one would pay only if none of its hosts had
+        a fetched page or a link target since the last compaction, and
+        the expected number of such buckets, B(1-1/B)^H for B buckets
+        and H active hosts, is near zero for a crawl."""
         schema, base_ln, deltas = self._layout()
         if not deltas:
             return base_ln["version"]
-        dl = self._delta_union(schema, deltas)
-        # touched buckets = buckets present in any delta (linked deltas
-        # carry host_bucket as a data column; partitioned ones as a
-        # partition column — both read back as a column)
-        touched = sorted(
-            r["host_bucket"]
-            for r in dl.select("host_bucket").distinct().collect()
-        )
-        base_dir = self._data_dir(base_ln["version"])
-        # derive untouched buckets from the base directory listing, not
-        # range(host_buckets): the listing is ground truth for what the
-        # base actually holds, so even a bucket-count drift that slipped
-        # past the manifest's guard cannot silently drop partitions
-        base_listed = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(base_dir)
-            if d.startswith("host_bucket=") and os.path.isdir(os.path.join(base_dir, d))
-        )
-        untouched = [b for b in base_listed if b not in set(touched)]
-        # resolve MOR only for the touched buckets (partition-pruned
-        # base scan), from the dl union built above (one delta read +
-        # one window), never a second self.read() pass
-        base = self._read_base(schema, base_ln)
-        if untouched:
-            base = base.filter(F.col("host_bucket").isin(touched))
         v = self.current_version() + 1
-        out = self._data_dir(v)
-        self._write_buckets(self._resolve(base, dl, deltas), out)
-        # link every untouched bucket's partition dir from the old base
-        for b in untouched:
-            src = os.path.join(base_dir, f"host_bucket={b}")
-            if os.path.isdir(src):  # else: bucket empty in base
-                self._link_parts(src, os.path.join(out, f"host_bucket={b}"))
-        meta = dict(lineage or {"op": "compact"})
-        meta["compacted_buckets"] = len(touched)
-        return self._commit(v, meta, kind="base")["version"]
+        resolved = self._resolve(
+            self._read_base(schema, base_ln), self._delta_union(schema, deltas), deltas
+        )
+        self._write_buckets(resolved, self._data_dir(v))
+        return self._commit(v, dict(lineage or {"op": "compact"}), kind="base")["version"]
 
 
 class IcebergFrontierStore(FrontierStore):
