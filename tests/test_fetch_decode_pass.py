@@ -1,11 +1,13 @@
 """Decode inside the fetch pass: the fetch artifact carries the parse
-columns, parse is a JVM projection, and a round sets no session conf.
+columns, parse is the fetched-row gate over it, and a round sets no
+session conf.
 
-Native fetch decodes each payload in the host-group call that renders
+Native fetch decodes each payload in the partition call that renders
 it; crowd mode decodes the worker-submitted bytes in one pass over the
 ingested rows. Both go through ``parse.decode_payloads``, and the
-parse artifact must equal ``codec.decode_full`` + ``codec.phash``
-applied directly to the fetch artifact's bytes."""
+fetched rows of the parse stage's (linked) artifact must equal
+``codec.decode_full`` + ``codec.phash`` applied directly to the fetch
+artifact's bytes."""
 
 import os
 
@@ -96,7 +98,7 @@ def _expected_decode(blob) -> dict:
 def _assert_parse_matches_direct_decode(drv):
     fetched = _artifact(drv, "fetch").set_index("url_hash")
     parsed = _artifact(drv, "parse").set_index("url_hash")
-    assert "bytes" not in parsed.columns
+    parsed = parsed[parsed["fetched"]]
     assert len(parsed) == int(fetched["fetched"].sum()) > 0
     for h, row in parsed.iterrows():
         want = _expected_decode(fetched.at[h, "bytes"])
@@ -118,6 +120,7 @@ def test_fetch_output_schema_in_both_modes(native, crowd):
     assert [f.name for f in fetch_op.fetch_output_schema().fields] == (
         [f.name for f in fetch_op.fetch_result_schema().fields]
         + [f.name for f in parse_op.PARSE_FIELDS]
+        + [f.name for f in parse_op.PARSED_FIELDS]
     )
     for state in (native, crowd):
         art = state["drv"].spark.read.parquet(

@@ -167,11 +167,20 @@ def test_parse_extracts_caption_phash_and_invariants(spark):
 
 
 def test_parse_outlink_pipeline_dedup_limit(spark):
+    """The X3 outlink pipeline runs in fetch_result's JVM projection:
+    a fetched row's raw outlinks come out canonical, filtered, deduped
+    and capped; a row the round never requested gets none and is not
+    parsed."""
     cfg = make_test_config(max_outlinks_per_page=3, round_time_limit_ms=10_000_000)
-    # craft a fetch-results-like frame directly
+    # queue rows with a raw response, as the fetch pass hands them to
+    # fetch_result
     import pyspark.sql.types as T
 
-    schema = fetch_op.fetch_result_schema()
+    schema = T.StructType(
+        fetch_op.CARRY_FIELDS
+        + [T.StructField("denied", T.BooleanType())]
+        + fetch_op.RESPONSE_FIELDS
+    )
     row = {
         "url": "http://host0.test/detail/1",
         "url_hash": "a" * 40,
@@ -187,8 +196,8 @@ def test_parse_outlink_pipeline_dedup_limit(spark):
         "batch_id": "b1",
         "signature": None,
         "is_seed": False,
-        "proto_code": ProtocolStatus.SUCCESS,
-        "new_status": CrawlStatus.FETCHED,
+        "denied": False,
+        "http_status": 200,
         "fetch_ts": NOW,
         "bytes": None,
         "out_urls": [
@@ -199,12 +208,19 @@ def test_parse_outlink_pipeline_dedup_limit(spark):
             "http://x.test/c",
             "http://x.test/d",  # over limit
         ],
-        "fetched": True,
+        "fetch_duration_ms": 0,
     }
-    df = spark.createDataFrame([row], schema=schema)
-    parsed = parse_op.parse(df, cfg, "b1").toPandas()
-    links = [l["url"] for l in parsed.outlinks.iloc[0]]
+    unrequested = dict(row, url_hash="b" * 40, http_status=None, fetch_ts=None)
+    df = spark.createDataFrame([row, unrequested], schema=schema)
+    out = fetch_op.fetch_result(df, cfg, "b1", NOW)
+    res = out.toPandas().set_index("url_hash")
+    assert res.at["a" * 40, "new_status"] == CrawlStatus.FETCHED
+    links = [l["url"] for l in res.at["a" * 40, "outlinks"]]
     assert links == ["http://x.test/a", "http://x.test/b", "http://x.test/c"]
+    assert res.at["a" * 40, "parsed_batch"] == "b1"
+    assert res.at["b" * 40, "outlinks"] is None
+    assert res.at["b" * 40, "parsed_batch"] is None
+    assert [r.url_hash for r in parse_op.parse(out, cfg, "b1").collect()] == ["a" * 40]
 
 
 def test_host_config_overrides_queue_delay(spark):

@@ -82,7 +82,7 @@ def test_crowd_mode_matches_native_fetch(spark, web):
     submitted = spark.createDataFrame(_simulate_workers(task_pdf, web))
     crowd = {
         r["url"]: r
-        for r in svc.ingest_fetch_results(tasks, denied, submitted, "b1", NOW).collect()
+        for r in svc.ingest_fetch_results(tasks, denied, submitted, cfg, "b1", NOW).collect()
     }
 
     assert set(native) == set(crowd)
@@ -109,7 +109,7 @@ def test_crowd_unreturned_tasks_stay_unfetched(spark, web):
     task_pdf = tasks.select("url_hash", "url").toPandas()
     # workers only return half the tasks
     submitted = spark.createDataFrame(_simulate_workers(task_pdf.iloc[:5], web))
-    res = svc.ingest_fetch_results(tasks, denied, submitted, "b1", NOW).toPandas()
+    res = svc.ingest_fetch_results(tasks, denied, submitted, cfg, "b1", NOW).toPandas()
     assert (~res.fetched).sum() == len(task_pdf) - 5
     unret = res[~res.fetched]
     # pending-requeue semantics: status untouched, no protocol verdict
@@ -133,7 +133,7 @@ def test_lease_fairness_across_queues(spark, web):
     dup["fetch_ts"] = dup["fetch_ts"] + 1000
     dup["worker_id"] = "late-worker"
     both = spark.createDataFrame(pd.concat([dup, sub]))
-    res = svc.ingest_fetch_results(tasks, denied, both, "b1", NOW)
+    res = svc.ingest_fetch_results(tasks, denied, both, cfg, "b1", NOW)
     got = res.filter(F.col("fetched")).select("url", "fetch_ts").toPandas()
     assert (got["fetch_ts"] < NOW + 1000).all()
 

@@ -603,3 +603,42 @@ def test_readers_during_commits_see_committed_versions(spark, tmp_path):
     for got in reads:
         assert got in states
     assert {r["url_hash"]: r["score"] for r in st.read().collect()} == states[-1]
+
+
+def test_a_round_resumed_after_a_killed_compaction_compacts(spark, tmp_path_factory, monkeypatch):
+    """Round 1's delta trips the compaction trigger, and the compaction
+    is killed before its commit. The resumed round finds its delta
+    committed and evaluates the trigger again, so the store's version
+    history and view equal the uninterrupted run's."""
+    web = SimWeb(*WEB)
+
+    def driver(wd):
+        drv = RoundDriver(spark, str(wd), _cfg(), WEB, START)
+        drv.store.COMPACT_RATIO = 5.0  # round 1's delta compacts, round 0's does not
+        return drv
+
+    whole = driver(tmp_path_factory.mktemp("uninterrupted"))
+    whole.run(_seeds_df(spark, web), rounds=3)
+    kinds = [ln["kind"] for ln in whole.store.lineage_chain()]
+    assert kinds == ["base", "delta", "delta", "base", "delta"]
+
+    wd = tmp_path_factory.mktemp("killed")
+    killed = driver(wd)
+    killed.run(_seeds_df(spark, web), rounds=1)
+    commit = killed.store._commit
+
+    def kill_compaction(version, lineage, kind, schema=None):
+        if kind == "base":
+            raise RuntimeError("killed before the compaction's commit")
+        return commit(version, lineage, kind, schema)
+
+    monkeypatch.setattr(killed.store, "_commit", kill_compaction)
+    with pytest.raises(RuntimeError, match="killed"):
+        killed.run_round(1)
+    monkeypatch.undo()
+    assert [ln["kind"] for ln in killed.store.lineage_chain()] == kinds[:3]
+
+    resumed = driver(wd)
+    resumed.run(None, rounds=2, start_round=1)
+    assert [ln["kind"] for ln in resumed.store.lineage_chain()] == kinds
+    pd.testing.assert_frame_equal(_frontier_pdf(whole), _frontier_pdf(resumed))

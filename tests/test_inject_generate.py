@@ -202,3 +202,24 @@ def test_bandwidth_cap_limits_fetchlist(spark):
     # throttle off -> full topN
     out_full = gen_op.generate(fr, cfg, 1_700_000_000_001, "b1")
     assert out_full.count() == cfg.top_n
+
+
+def test_complete_rows_adds_one_projection(spark):
+    """complete_rows fills the frontier schema in one projection over
+    its input, whichever frontier columns the input already carries."""
+    from warps_nutch_spark import schema
+
+    cfg = make_test_config()
+
+    def projects(df):
+        return df._jdf.queryExecution().analyzed().toString().count("Project [")
+
+    for src in (
+        spark.createDataFrame([("http://host0.test/a",)], ["url"]),
+        spark.createDataFrame([("http://host0.test/a", "host0.test", 3)], ["url", "host", "distance"]),
+    ):
+        out = complete_rows(src, cfg, NOW)
+        assert projects(out) == projects(src) + 1
+        assert [(f.name, f.dataType) for f in out.schema] == [
+            (f.name, f.dataType) for f in schema.FRONTIER
+        ]

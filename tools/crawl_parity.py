@@ -10,7 +10,11 @@ Compares, on both sides of the same relative path:
   included) and sorted by ``url_hash`` (``image_id`` for payloads);
 - every URL-seen bitmap (``urlseen/pid=*.npy``), byte for byte.
 
-A table or bitmap that exists on one side only is a difference.
+A table or bitmap that exists on one side only is a difference. Two
+tables whose schemas differ are reported by field: ``+name`` only in
+B, ``-name`` only in A, ``~name`` typed differently; their shared
+columns are then compared row for row, so a deliberate column addition
+reads ``schemas differ: +new_col; shared columns equal``.
 Prints one line per difference and a summary; exits 1 on any
 difference, 0 when everything is equal. Needs no Spark session.
 """
@@ -35,16 +39,18 @@ def _relpaths(root: str, pattern: str) -> set[str]:
     return {os.path.relpath(p, root) for p in glob.glob(os.path.join(root, pattern))}
 
 
-def _sorted_table(path: str) -> pa.Table:
-    """The table under ``path``, columns by name and rows by key, then
-    by every flat column (so rows that share a key sort the same way
-    on both sides)."""
+def _read_table(path: str) -> pa.Table:
     t = pq.read_table(path)
     # hive partition columns read back dictionary-encoded
-    t = pa.table({
+    return pa.table({
         c: t[c].cast(t[c].type.value_type) if pa.types.is_dictionary(t[c].type) else t[c]
         for c in sorted(t.column_names)
     })
+
+
+def _sorted(t: pa.Table, path: str) -> pa.Table:
+    """``t`` with its rows sorted by key, then by every flat column (so
+    rows that share a key sort the same way on both sides)."""
     key = next((k for k in KEYS if k in t.column_names), None)
     if key is None:
         raise ValueError(f"{path}: no key column among {KEYS}")
@@ -52,16 +58,38 @@ def _sorted_table(path: str) -> pa.Table:
     return t.take(pc.sort_indices(t, [(c, "ascending") for c in [key, *flat]]))
 
 
+def _schema_changes(ta: pa.Table, tb: pa.Table) -> list[str]:
+    """The fields added (+), missing (-) and retyped (~) from ``ta`` to
+    ``tb``."""
+    fa = {f.name: f for f in ta.schema}
+    fb = {f.name: f for f in tb.schema}
+    return (
+        [f"+{c}" for c in fb if c not in fa]
+        + [f"-{c}" for c in fa if c not in fb]
+        + [f"~{c}" for c in fa if c in fb and not fa[c].equals(fb[c])]
+    )
+
+
 def _table_diff(a: str, b: str) -> str | None:
     """None when the tables at ``a`` and ``b`` hold the same rows, else
     what differs."""
-    ta, tb = _sorted_table(a), _sorted_table(b)
-    if ta.schema != tb.schema:
-        return f"schemas differ: {ta.schema} vs {tb.schema}"
+    ta, tb = _read_table(a), _read_table(b)
+    notes = []
+    changes = _schema_changes(ta, tb)
+    if changes:
+        notes.append("schemas differ: " + " ".join(changes))
+        shared = [c for c in ta.column_names if c in tb.column_names and f"~{c}" not in changes]
+        ta, tb = ta.select(shared), tb.select(shared)
+    ta, tb = _sorted(ta, a), _sorted(tb, b)
     if ta.num_rows != tb.num_rows:
-        return f"{ta.num_rows} vs {tb.num_rows} rows"
-    cols = [c for c in ta.column_names if not ta[c].equals(tb[c])]
-    return f"columns differ: {cols}" if cols else None
+        notes.append(f"{ta.num_rows} vs {tb.num_rows} rows")
+    else:
+        cols = [c for c in ta.column_names if not ta[c].equals(tb[c])]
+        if cols:
+            notes.append(f"columns differ: {cols}")
+        elif notes:
+            notes.append("shared columns equal")
+    return "; ".join(notes) or None
 
 
 def compare(a: str, b: str) -> list[str]:

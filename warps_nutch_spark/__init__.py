@@ -7,10 +7,12 @@ Spark DataFrames:
 - frontier = a big keyed table (url_hash) stored as parquet snapshots
   (Iceberg MERGE INTO on a real cluster; see ``store.frontier``),
 - generate = window-rank top-N per host (Nutch Generator semantics),
-- fetch = politeness-sequenced simulated protocol inside
-  ``applyInPandas`` over host groups (hosts spread across partitions by
-  salted hash; one host never spans two groups),
-- parse = vectorized image decode + outlink extraction,
+- fetch = politeness-sequenced simulated protocol inside one
+  ``mapInPandas`` call per partition of the queue plan (a repartition
+  by host puts each host queue in one task), decoding the payloads it
+  renders,
+- parse = signature + outlink processing projected on the fetch
+  result, and the fetched-row gate over it,
 - updatedb = posexplode(outlinks) + OPIC cash distribution +
   groupBy(url) merge back into the frontier (the URL-seen dedup),
 - URL-seen = partitioned Bloom filter pre-screen with an exact frontier

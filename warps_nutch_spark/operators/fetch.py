@@ -11,19 +11,20 @@ queue plan :func:`fetch_queues` and the response projection
 the fork's ``TaskSchedulers.randomFetchItems``) both run them. The
 invariants that survive are:
 
-- **one queue is never fetched concurrently by two workers** —
-  ``groupBy(queue key).applyInPandas`` puts each host (or domain) in
+- **one queue is never fetched concurrently by two workers** — the
+  queue plan's repartition by queue key puts each host (or domain) in
   exactly one task (the analog of FetchEntryPartitioner sending all
-  URLs of a host to one reducer, ``crawl/URLPartitioner.java:127-150``);
-  speculative execution must stay off for this stage
+  URLs of a host to one reducer, ``crawl/URLPartitioner.java:127-150``),
+  and one ``mapInPandas`` call per partition fetches its queues one
+  after the other; speculative execution must stay off for this stage
   (``FetchJob.java:149-150``);
 - **consecutive requests to one queue are >= its spacing apart**
   (``FetchQueue.java:339-346``: nextFetchTime = endTime + crawlDelay,
   minCrawlDelay for a multi-threaded queue; per-host override from the
   Host table, ``TasksMonitor.java:480-496``) — the queue plan resolves
-  one spacing per queue, and a *virtual clock* inside the group UDF
-  applies it so results are reproducible (SURVEY.md §7 hard-part 5)
-  while the politeness *budget* (how many URLs a host can yield per
+  one spacing per queue, and a *virtual clock* per queue in the
+  partition call applies it so results are reproducible (SURVEY.md §7
+  hard-part 5) while the politeness *budget* (how many URLs a host can yield per
   round) is identical to wall-clock behavior: capacity =
   round_time_limit / crawl_delay;
 - **queue order is best-first** (priority desc, score desc, url asc —
@@ -38,17 +39,20 @@ invariants that survive are:
   outlink (``TaskScheduler.java:731-774``) and rows the round's time
   limit never reached being returned untouched (the FeederThread
   drain at ``fetch/FeederThread.java:126-140``) — one JVM projection
-  over the raw responses the group UDF returns.
+  over the raw responses the partition call returns.
 
-The same group call decodes the payloads it has just rendered
-(``parse.decode_payloads``; the reference fork's parse inside the
-fetch reducer, ``TaskScheduler.java:777-835``), so each payload makes
-one trip through Python and the fetch result carries the parse columns.
+The reference fork parses inside the fetch reducer
+(``TaskScheduler.java:777-835``), and so does this pass: the partition
+call decodes the payloads it has just rendered
+(``parse.decode_payloads``), and the response projection adds the
+signature and processed outlinks (``parse.parsed_cols``). Each payload
+makes one trip through Python, and the fetch result is the parsed row.
 
-Skew note: group size per host is bounded by generate.max_per_host,
-so one hot host cannot dominate a task. Queues are spread across
+Skew note: queue size is bounded by generate.max_per_host, so one hot
+host cannot dominate a task. Queues are spread across
 ``spark.sql.shuffle.partitions`` tasks by the queue plan's
-repartition by number.
+repartition by number, and a task makes one Python call for all of
+its queues, not one per queue.
 
 The protocol here is the deterministic SimWeb; a production
 deployment swaps ``SimWeb.respond`` for an async-HTTP pandas batch
@@ -67,7 +71,7 @@ from .. import simweb as sw
 from ..config import CrawlConfig
 from ..functions.status import ProtocolStatus, http_to_protocol_col, protocol_to_crawl_col
 from ..functions.urls import domain_col
-from .parse import PARSE_FIELDS, decode_payloads
+from .parse import PARSE_FIELDS, PARSED_FIELDS, decode_payloads, parsed_cols
 
 # the fetchlist columns a fetch result carries
 CARRY_FIELDS = [
@@ -119,8 +123,9 @@ def fetch_result_schema() -> T.StructType:
 
 def fetch_output_schema() -> T.StructType:
     """What a fetch pass returns, native or crowd: the fetch result
-    plus the decode columns of each payload."""
-    return T.StructType(fetch_result_schema().fields + PARSE_FIELDS)
+    plus the parse columns, the decode of each payload and the
+    signature, outlinks and parse mark of each fetched row."""
+    return T.StructType(fetch_result_schema().fields + PARSE_FIELDS + PARSED_FIELDS)
 
 
 def queue_spacing_cols(q_cd, q_mt, q_mcd, robots_delay, cfg: CrawlConfig):
@@ -223,16 +228,19 @@ def fetch_queues(
     )
 
 
-def fetch_result(rows: DataFrame, round_start_ms: int, *extra: str) -> DataFrame:
+def fetch_result(
+    rows: DataFrame, cfg: CrawlConfig, batch_id: str, round_start_ms: int, *extra: str
+) -> DataFrame:
     """The one response projection, native and crowd: queue rows with
     ``denied`` and a raw response (:data:`RESPONSE_FIELDS`) become the
     fetch result (:func:`fetch_result_schema`, then the ``extra``
-    columns). A denied row is answered ROBOTS_DENIED without a
-    request. A row with no response was never requested (the round's
-    time limit, the FeederThread drain at ``FeederThread.java:126-140``,
-    or no crowd worker returned it): it stays unfetched with its status
-    untouched. The rest go through ProtocolStatus -> CrawlStatus
-    dispatch (``TaskScheduler.java:665-729``)."""
+    columns, then the parse columns of :func:`~.parse.parsed_cols`). A
+    denied row is answered ROBOTS_DENIED without a request. A row with
+    no response was never requested (the round's time limit, the
+    FeederThread drain at ``FeederThread.java:126-140``, or no crowd
+    worker returned it): it stays unfetched with its status untouched.
+    The rest go through ProtocolStatus -> CrawlStatus dispatch
+    (``TaskScheduler.java:665-729``)."""
     requested = F.col("http_status").isNotNull()
     fetched = F.col("denied") | requested
     proto = F.when(F.col("denied"), F.lit(ProtocolStatus.ROBOTS_DENIED)).when(
@@ -251,6 +259,7 @@ def fetch_result(rows: DataFrame, round_start_ms: int, *extra: str) -> DataFrame
         fetched.alias("fetched"),
         F.coalesce("fetch_duration_ms", F.lit(0).cast("long")).alias("fetch_duration_ms"),
         *extra,
+        *parsed_cols(fetched, cfg, batch_id),
     )
 
 
@@ -263,11 +272,11 @@ def _scatter(n: int, idx: np.ndarray, values) -> list:
     return out
 
 
-def _make_fetch_group(cfg: CrawlConfig, web_params: tuple, round_start_ms: int):
-    """Returns the applyInPandas function for one politeness queue."""
+def _make_fetch_partition(cfg: CrawlConfig, web_params: tuple, round_start_ms: int):
+    """Returns the mapInPandas function for one partition of the queue
+    plan: it fetches each queue of the partition in turn."""
 
-    def fetch_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        web = sw.SimWeb(*web_params)
+    def fetch_queue(web: sw.SimWeb, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
             ["priority", "score", "url"], ascending=[False, False, True]
         ).reset_index(drop=True)
@@ -306,7 +315,20 @@ def _make_fetch_group(cfg: CrawlConfig, web_params: tuple, round_start_ms: int):
         out["fetch_duration_ms"] = durations
         return out.join(decode_payloads(out["bytes"]))
 
-    return fetch_group
+    def fetch_partition(batches):
+        # a queue may straddle Arrow batches, so the call sees the whole
+        # partition, a share of the top_n-bounded fetchlist, first
+        batches = [b for b in batches if len(b)]
+        if not batches:
+            return
+        web = sw.SimWeb(*web_params)
+        pdf = pd.concat(batches, ignore_index=True)
+        yield pd.concat(
+            [fetch_queue(web, q) for _, q in pdf.groupby("_queue_key", sort=False)],
+            ignore_index=True,
+        )
+
+    return fetch_partition
 
 
 def fetch(
@@ -320,22 +342,22 @@ def fetch(
 ) -> DataFrame:
     """Run the politeness engine. Returns fetch results (one row per
     fetchlist row of this batch; ``fetched`` False for rows the round
-    budget never reached) with the decode columns (``PARSE_FIELDS``)
-    of each rendered payload.
+    budget never reached) with the parse columns of each fetched row
+    (:func:`fetch_output_schema`).
 
     ``host_config``: optional per-host queue overrides (columns
     ``host``, ``q_mt``, ``q_cd``, ``q_mcd`` — TasksMonitor.java:
     480-496), broadcast-joined like robots rules."""
-    group_schema = T.StructType(
+    response_schema = T.StructType(
         CARRY_FIELDS
         + [T.StructField("denied", T.BooleanType())]
         + RESPONSE_FIELDS
         + PARSE_FIELDS
     )
     n_tasks = int(fetchlist.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    responses = (
-        fetch_queues(fetchlist, robots, host_config, cfg, batch_id, n_tasks)
-        .groupBy("_queue_key")
-        .applyInPandas(_make_fetch_group(cfg, web_params, round_start_ms), schema=group_schema)
+    responses = fetch_queues(fetchlist, robots, host_config, cfg, batch_id, n_tasks).mapInPandas(
+        _make_fetch_partition(cfg, web_params, round_start_ms), schema=response_schema
     )
-    return fetch_result(responses, round_start_ms, *(f.name for f in PARSE_FIELDS))
+    return fetch_result(
+        responses, cfg, batch_id, round_start_ms, *(f.name for f in PARSE_FIELDS)
+    )

@@ -95,14 +95,16 @@ def ingest_fetch_results(
     tasks: DataFrame,
     denied: DataFrame,
     submitted: DataFrame,
+    cfg: CrawlConfig,
     batch_id: str,
     round_start_ms: int,
 ) -> DataFrame:
     """Fold worker submissions back into the native fetch-result
-    schema. Unreturned tasks come back ``fetched = false`` with their
-    frontier status untouched (pending-requeue semantics); duplicate
-    submissions for one task keep the earliest fetch_ts (first worker
-    wins, like the reference's task-key dedup)."""
+    schema, the parse columns of :func:`~.fetch.fetch_result` included.
+    Unreturned tasks come back ``fetched = false`` with their frontier
+    status untouched (pending-requeue semantics); duplicate submissions
+    for one task keep the earliest fetch_ts (first worker wins, like the
+    reference's task-key dedup)."""
     sub_win = Window.partitionBy("url_hash").orderBy(
         F.asc("fetch_ts"), F.asc("worker_id")
     )
@@ -115,4 +117,6 @@ def ingest_fetch_results(
     queue_rows = tasks.select(*CARRY_COLS, F.lit(False).alias("denied")).unionByName(
         denied.select(*CARRY_COLS, "denied")
     )
-    return fetch_result(queue_rows.join(sub, on="url_hash", how="left"), round_start_ms)
+    return fetch_result(
+        queue_rows.join(sub, on="url_hash", how="left"), cfg, batch_id, round_start_ms
+    )

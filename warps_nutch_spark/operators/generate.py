@@ -123,9 +123,10 @@ def generate(
     marked with batch_id/generated_batch). Caller merges the marks.
     ``avg_page_bytes`` feeds the Q6 bandwidth cap when configured."""
     cand = eligible_candidates(frontier, cfg, now_ms, unreachable_hosts, current_round)
-    cand = cand.withColumn(
-        "sort_score", scoring.generator_sort_value(F.col("score"))
-    ).withColumn("page_category", page_category_col(F.col("url")))
+    cand = cand.withColumns({
+        "sort_score": scoring.generator_sort_value(F.col("score")),
+        "page_category": page_category_col(F.col("url")),
+    })
 
     order = [F.desc("priority"), F.desc("sort_score"), F.asc("url")]
 
@@ -149,8 +150,6 @@ def generate(
         cand.filter(~exempt).orderBy(*order).limit(effective_top_n)
     )
 
-    return (
-        selected.withColumn("batch_id", F.lit(batch_id))
-        .withColumn("generated_batch", F.lit(batch_id))
-        .drop("sort_score", "host_rank", "global_rank")
-    )
+    return selected.withColumns(
+        {"batch_id": F.lit(batch_id), "generated_batch": F.lit(batch_id)}
+    ).drop("sort_score", "host_rank")

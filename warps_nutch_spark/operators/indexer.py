@@ -291,7 +291,7 @@ def build_jit_documents(
         & (F.length(F.coalesce(F.col("caption"), F.lit(""))) >= min_text_length)
     )
     # fetch-time inlink/reprUrl state rides the fetchlist, not the
-    # parse artifact; absent -> empty anchors, null reprUrl
+    # parsed rows; absent -> empty anchors, null reprUrl
     if prev_state is not None:
         docs = docs.join(
             prev_state.select("url_hash", "inlinks", "repr_url"),
@@ -331,7 +331,7 @@ def build_jit_documents(
         # index-more / index-metadata fields known AT FETCH TIME (same
         # default column set as build_index_documents so the two doc
         # streams stay interchangeable): modified-time and crawl
-        # history live in the frontier, not the parse artifact, so the
+        # history live in the frontier, not the parsed rows, so the
         # JIT doc carries this round's fetch_ts as its crawl time and
         # no last-modified — the frontier IndexJob doc supersedes it
         _jit_ct.alias("content_type"),

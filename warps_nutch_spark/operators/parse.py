@@ -19,18 +19,22 @@ Reference mapping (SURVEY.md §2.5):
 - PARSE_MARK gate: only rows fetched in this batch are parsed
   (``ParserMapper.java:121-130``).
 
-The decode runs in the fetch pass, so the fetch artifact already holds
-the parse columns and :func:`parse` runs no Python: it is one JVM-side
-projection of the gated fetch rows.
+The fetch pass does all of it: its Python call decodes each payload,
+and its JVM response projection (``fetch.fetch_result``) adds the X3
+and X4 columns, :func:`parsed_cols`, to every fetched row. The fetch
+artifact is therefore the parsed row, and :func:`parse` is only the
+PARSE_MARK gate over it. The round's parse stage writes no artifact:
+its ``data`` directory links the fetch artifact's part files.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import schema
 from ..config import CrawlConfig
 from ..functions import codec, urls
 from ..functions.status import CrawlStatus
@@ -43,6 +47,14 @@ PARSE_FIELDS = [
     T.StructField("h", T.IntegerType()),
     T.StructField("fmt", T.StringType()),
     T.StructField("decode_ok", T.BooleanType()),
+]
+
+#: the columns :func:`parsed_cols` adds to a fetch result, null on a
+#: row the round did not fetch
+PARSED_FIELDS = [
+    T.StructField("new_signature", T.StringType()),
+    T.StructField("outlinks", T.ArrayType(schema.OUTLINK)),
+    T.StructField("parsed_batch", T.StringType()),
 ]
 
 ASSET_SUFFIX_RE = r"\.(js|css|jpg|png|jpeg|gif)([?#].*)?$"
@@ -108,34 +120,32 @@ def decode_payloads(blobs) -> pd.DataFrame:
     )
 
 
-def parse(
-    fetch_results: DataFrame,
-    cfg: CrawlConfig,
-    batch_id: str,
-) -> DataFrame:
-    """Returns the gated fetch rows (decode columns included) +
-    ``new_signature``, ``parsed_batch`` and processed ``outlinks``
-    array<struct<url,anchor>>. Non-success rows pass through with null
-    parse columns (their redirect outlinks still get processed)."""
-    gated = fetch_results.filter(
-        (F.col("batch_id") == batch_id) & F.col("fetched")
-    )
-    return gated.withColumns(
-        {
-            # X4 signature: md5(bytes) (NULL when no content — the old
-            # `signature` column still holds the frontier's previous
-            # value, which updatedb needs for the modified-state compare)
-            "new_signature": F.when(
-                F.col("bytes").isNotNull(), F.md5(F.col("bytes"))
-            ).otherwise(F.lit(None).cast("string")),
-            # X3 outlink pipeline
-            "outlinks": F.transform(
-                process_outlinks_col(F.col("out_urls"), cfg),
-                lambda u: F.struct(u.alias("url"), F.lit("").alias("anchor")),
-            ),
-            "parsed_batch": F.lit(batch_id),
-        }
-    )
+def parsed_cols(fetched: Column, cfg: CrawlConfig, batch_id: str) -> list[Column]:
+    """The :data:`PARSED_FIELDS` columns of a fetch result, set on the
+    rows where ``fetched`` holds (only a fetched row has ``bytes``). A
+    fetched row without content still gets its outlinks processed (a
+    redirect's target)."""
+    return [
+        # X4 signature: md5(bytes) (NULL when no content — the old
+        # `signature` column still holds the frontier's previous
+        # value, which updatedb needs for the modified-state compare)
+        F.when(F.col("bytes").isNotNull(), F.md5(F.col("bytes"))).alias("new_signature"),
+        # X3 outlink pipeline
+        F.when(fetched, F.transform(
+            process_outlinks_col(F.col("out_urls"), cfg),
+            lambda u: F.struct(u.alias("url"), F.lit("").alias("anchor")),
+        )).alias("outlinks"),
+        F.when(fetched, F.lit(batch_id)).alias("parsed_batch"),
+    ]
+
+
+def parse(fetch_results: DataFrame, cfg: CrawlConfig, batch_id: str) -> DataFrame:
+    """The PARSE_MARK gate: the rows of ``fetch_results`` fetched in
+    batch ``batch_id``. A fetch result already carries every parse
+    column (:data:`PARSE_FIELDS`, :data:`PARSED_FIELDS`, built with
+    ``cfg`` by the fetch pass); non-success rows pass with null decode
+    columns."""
+    return fetch_results.filter((F.col("batch_id") == batch_id) & F.col("fetched"))
 
 
 def payload_rows(parsed: DataFrame) -> DataFrame:

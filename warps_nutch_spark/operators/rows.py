@@ -64,18 +64,17 @@ def frontier_defaults(cfg: CrawlConfig, now_ms: int) -> dict[str, Column]:
 
 
 def complete_rows(df: DataFrame, cfg: CrawlConfig, now_ms: int) -> DataFrame:
-    """Fill every missing frontier column with its schema default.
-    ``df`` must already have ``url``; url_hash/host are derived if
-    absent."""
-    cols = {f.name: f.dataType.simpleString() for f in schema.FRONTIER.fields}
-    out = df
-    if "url_hash" not in out.columns:
-        out = out.withColumn("url_hash", urls.url_hash_col(F.col("url")))
-    if "host" not in out.columns:
-        out = out.withColumn("host", urls.host_col(F.col("url")))
-    for name, default in frontier_defaults(cfg, now_ms).items():
-        if name not in out.columns:
-            out = out.withColumn(name, default)
-        else:
-            out = out.withColumn(name, F.col(name).cast(cols[name]))
-    return out.select(*cols.keys())
+    """Fill every missing frontier column with its schema default, in
+    one projection over ``schema.FRONTIER``. ``df`` must already have
+    ``url``; url_hash/host are derived if absent."""
+    have = set(df.columns)
+    defaults = {
+        "url_hash": urls.url_hash_col(F.col("url")),
+        "host": urls.host_col(F.col("url")),
+        **frontier_defaults(cfg, now_ms),
+    }
+    return df.select(*(
+        F.col(f.name).cast(f.dataType).alias(f.name) if f.name in have
+        else defaults[f.name].alias(f.name)
+        for f in schema.FRONTIER.fields
+    ))

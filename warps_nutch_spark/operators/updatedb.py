@@ -144,7 +144,7 @@ def aggregate_contributions(contribs: DataFrame, cfg: CrawlConfig) -> DataFrame:
     )
 
 
-#: the parse artifact's result columns: all a fetch adds to a row. The
+#: the parsed fetch result's columns: all a fetch adds to a row. The
 #: rest of a fetched row's state is its fetchlist row's
 _RESULT_COLS = (
     "proto_code", "new_status", "fetch_ts", "new_signature",

@@ -51,7 +51,7 @@ from ..operators import inject as inj_op
 from ..operators import parse as parse_op
 from ..operators import updatedb as upd_op
 from ..schema import HOSTS, METRICS
-from ..store.frontier import ParquetFrontierStore
+from ..store.frontier import ParquetFrontierStore, link_parts
 from ..store.urlseen import BloomUrlSeen
 
 #: the parquet footer key under which Spark stores a file's row schema
@@ -395,23 +395,23 @@ class RoundDriver:
         if stop_after == "fetch":
             return _partial("fetch")
 
-        # -- parse: a JVM projection of the fetch artifact, which
-        # already holds the payload bytes and their decode columns.
-        # The bytes are kept in the fetch artifact and the payload
-        # slice: not a third time in the parse artifact.
-        def _payloads(_parsed) -> None:
+        # -- parse: the fetch artifact is already the parsed row, so the
+        # stage writes no artifact. Its data directory links the fetch
+        # artifact's part files, and its one Spark action writes the
+        # payload slice. Updatedb and the JIT index read the gated rows.
+        parsed = parse_op.parse(fetch_results, self.cfg, batch_id)
+        fetch_dir, parse_dir = (
+            os.path.join(self._stage_dir(batch_id, s), "data") for s in ("fetch", "parse")
+        )
+
+        def _payloads(_none) -> None:
             # batch-keyed overwrite (not append): a resumed parse
             # stage rewrites its own payload slice, never duplicates it
-            full = parse_op.parse(fetch_results, self.cfg, batch_id)
-            parse_op.payload_rows(full).write.mode("overwrite").parquet(
+            parse_op.payload_rows(parsed).write.mode("overwrite").parquet(
                 os.path.join(self.workdir, "payloads", batch_id)
             )
 
-        parsed = _run(
-            "parse",
-            lambda: parse_op.parse(fetch_results, self.cfg, batch_id).drop("bytes"),
-            _payloads,
-        )
+        _run("parse", None, lambda _none: link_parts(fetch_dir, parse_dir), _payloads)
         if stop_after == "parse":
             return _partial("parse")
 
@@ -466,7 +466,11 @@ class RoundDriver:
             # commit and its stamp leaves it unstamped, and this
             # store wrote it (the manifest pins the bucket count)
             self.store.stamp_bucketing(data_dir)
-            if ("updatedb", batch_id) not in self.store.committed_ops():
+            if ("updatedb", batch_id) in self.store.committed_ops():
+                # resume: the delta is committed, but the compaction it
+                # triggered may have been killed before its commit
+                self.store.maybe_compact()
+            else:
                 self.store.merge_linked(data_dir, {"op": "updatedb", "batch_id": batch_id})
 
         def _urlseen_merge(rows: DataFrame) -> None:
@@ -529,20 +533,24 @@ class RoundDriver:
                     " fetch_duration_ms long, worker_id string"
                 ),
             )
-        res = svc.ingest_fetch_results(tasks, denied, submitted, batch_id, now)
+        res = svc.ingest_fetch_results(tasks, denied, submitted, self.cfg, batch_id, now)
 
         # one Python pass over the ingested rows, through the decode
-        # the native fetch pass runs per host group. Repartitioned by
+        # the native fetch pass runs per partition. Repartitioned by
         # number, as fetch does: AQE never coalesces that, whereas a
         # byte-sized shuffle packs the payloads onto one or two tasks.
         def _decode(batches):
             for pdf in batches:
                 yield pdf.join(parse_op.decode_payloads(pdf["bytes"]))
 
-        n_tasks = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        return res.repartition(n_tasks).mapInPandas(
-            _decode, schema=fetch_op.fetch_output_schema()
+        # the decode adds the PARSE_FIELDS; the ingested columns keep the
+        # types fetch_result projected, as in a native fetch artifact
+        ingested = {f.name: f for f in res.schema.fields}
+        schema = T.StructType(
+            [ingested.get(f.name, f) for f in fetch_op.fetch_output_schema().fields]
         )
+        n_tasks = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return res.repartition(n_tasks).mapInPandas(_decode, schema=schema)
 
     def _ensure_fetch_server(self):
         if getattr(self, "_fetch_server", None) is None:

@@ -843,7 +843,7 @@ FROM cfgd
 # Q2 politeness spacing — the virtual clock's TIMING, not just its order
 # (FetchQueue.java:339-346: nextFetchTime = endTime + crawlDelay).
 # fetch_ts[i] = round_start + sum over preceding queue rows of
-# (spacing + duration): the exact cumulative-sum the fetch group UDF's
+# (spacing + duration): the exact cumulative-sum the fetch queue loop's
 # imperative loop computes, expressed as a window cumsum so DuckDB can
 # replay it. Spacing comes from the REAL queue_spacing_cols resolution
 # (host-table overrides > robots > default); durations are the same

@@ -91,6 +91,21 @@ def _is_part(filename: str) -> bool:
     return filename.startswith("part-") and filename.endswith(".parquet")
 
 
+def link_parts(src: str, dst: str) -> None:
+    """Make ``dst`` hold hard links to the part files of ``src``, or
+    copies where the two sit on different filesystems. Whatever ``dst``
+    held before goes first, so a killed link or write leaves nothing
+    behind."""
+    shutil.rmtree(dst, ignore_errors=True)
+    os.makedirs(dst)
+    for fn in os.listdir(src):
+        if _is_part(fn):
+            try:
+                os.link(os.path.join(src, fn), os.path.join(dst, fn))
+            except OSError:  # across filesystems
+                shutil.copy2(os.path.join(src, fn), os.path.join(dst, fn))
+
+
 class FrontierStore:
     """Interface: read() -> DataFrame, merge(updates) -> new version."""
 
@@ -326,9 +341,13 @@ class ParquetFrontierStore(FrontierStore):
         self._write_buckets(df, self._data_dir(v))
         return self._commit(v, lineage, kind, schema)
 
-    def _maybe_compact(self, base: dict, deltas: list[dict]) -> None:
-        """Compaction trigger after a delta commit (``deltas`` includes
-        the new one): row ratio, snapshot count, or broadcast gate."""
+    def maybe_compact(self) -> None:
+        """Compact when the deltas since the base pass a trigger: row
+        ratio, snapshot count, or broadcast gate. Every delta commit
+        calls it, and so does a resumed round whose delta was already
+        committed: the compaction that delta triggered may have been
+        killed before its commit."""
+        _, base, deltas = self._layout()
         delta_rows = sum(ln.get("rows", 0) for ln in deltas)
         if (
             delta_rows > self.COMPACT_RATIO * max(base.get("rows", 0), 1)
@@ -346,12 +365,10 @@ class ParquetFrontierStore(FrontierStore):
         shadowing happens at read (MOR). ``updates`` must carry
         complete frontier-schema rows; the merge itself is mechanical
         so update logic stays in the operators."""
-        schema, base_ln, deltas = self._layout()
+        schema = self._layout()[0]
         updates = self.with_bucket(updates.drop("host_bucket")).select(*schema.names)
-        new = self._write_snapshot(
-            updates, dict(lineage or {"op": "merge"}), kind="delta"
-        )
-        self._maybe_compact(base_ln, deltas + [new])
+        self._write_snapshot(updates, dict(lineage or {"op": "merge"}), kind="delta")
+        self.maybe_compact()
         return self.current_version()
 
     def merge_linked(self, data_dir: str, lineage: dict | None = None) -> int:
@@ -371,7 +388,7 @@ class ParquetFrontierStore(FrontierStore):
         Scale note: this is the difference between writing the round's
         updates once vs twice; at 10^10 rows the delta write is pure
         I/O, so halving it halves the updatedb tail."""
-        schema, base_ln, deltas = self._layout()
+        schema = self._layout()[0]
         # the artifact's host_bucket values must have been computed with
         # THIS store's bucket count — a stale resume artifact with a
         # different bucketing would pass the column check but poison
@@ -399,20 +416,13 @@ class ParquetFrontierStore(FrontierStore):
         if missing:
             raise ValueError(f"merge_linked: artifact missing columns {missing}")
         v = self.current_version() + 1
-        out = self._data_dir(v)
         # files at an uncommitted version are a killed write's leftovers
         # (say, a compaction's buckets): the snapshot holds only the links
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out)
-        for fn in parts:
-            try:
-                os.link(os.path.join(data_dir, fn), os.path.join(out, fn))
-            except OSError:  # across filesystems
-                shutil.copy2(os.path.join(data_dir, fn), os.path.join(out, fn))
+        link_parts(data_dir, self._data_dir(v))
         meta = dict(lineage or {"op": "merge"})
         meta["linked_from"] = data_dir
-        new = self._commit(v, meta, kind="delta")
-        self._maybe_compact(base_ln, deltas + [new])
+        self._commit(v, meta, kind="delta")
+        self.maybe_compact()
         return self.current_version()
 
     def stamp_bucketing(self, data_dir: str) -> None:
