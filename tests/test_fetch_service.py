@@ -15,6 +15,7 @@ from warps_nutch_spark.config import make_test_config
 from warps_nutch_spark.functions.status import ProtocolStatus
 from warps_nutch_spark.operators import fetch as fetch_op
 from warps_nutch_spark.operators import fetch_service as svc
+from warps_nutch_spark.operators.fetch_server import FetchServer
 from warps_nutch_spark.operators.rows import complete_rows
 
 NOW = 1_700_000_000_000
@@ -56,6 +57,17 @@ def _simulate_workers(leased_pdf, web, n_workers=3):
             }
         )
     return pd.DataFrame(rows)
+
+
+def _schedule(tasks, count, per_queue):
+    """One ``GET /fetch/schedule/{count}`` lease over a freshly
+    published task table, called on the engine side."""
+    srv = FetchServer()
+    try:
+        srv.publish(tasks)
+        return srv.schedule(count, per_queue)
+    finally:
+        srv.close()
 
 
 @pytest.fixture()
@@ -122,7 +134,7 @@ def test_lease_fairness_across_queues(spark, web):
     urls = [f"http://host{h}.test/doc/{i}" for h in range(4) for i in range(10)]
     fl = _fetchlist(spark, cfg, urls)
     tasks, denied = svc.emit_fetch_tasks(fl, None, cfg, "b1")
-    leased = svc.lease_tasks(tasks, count=8, per_queue=2).toPandas()
+    leased = pd.DataFrame(_schedule(tasks, count=8, per_queue=2))
     assert len(leased) == 8
     # fair: no queue over its per_queue allotment
     assert leased.groupby("queue_id").size().max() <= 2
@@ -180,8 +192,7 @@ def test_crowd_domain_mode_shares_one_queue_across_subdomains(spark):
     urls = ["http://a.site.test/detail/1", "http://b.site.test/detail/1"]
     tasks, _denied = svc.emit_fetch_tasks(_fetchlist(spark, cfg, urls), None, cfg, "b1")
     assert {r["queue_id"] for r in tasks.collect()} == {"site.test"}
-    leased = svc.lease_tasks(tasks, count=10, per_queue=1).toPandas()
-    assert len(leased) == 1
+    assert len(_schedule(tasks, count=10, per_queue=1)) == 1
 
 
 def _native_spacing(res, host):

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from tests.crawl_oracle import CrawlOracle
 from warps_nutch_spark.config import make_test_config
 from warps_nutch_spark.plans.round import RoundDriver
+from warps_nutch_spark.schema import HOSTS
 from warps_nutch_spark.simweb import SimWeb
 from warps_nutch_spark.store.frontier import ParquetFrontierStore
 
@@ -97,17 +98,32 @@ def _frontier_pdf(drv):
     )
 
 
-def test_resume_after_merge_before_done_is_idempotent(spark, tmp_path_factory):
+@pytest.fixture(scope="module")
+def two_rounds(spark, tmp_path_factory):
+    """An uninterrupted crawl of rounds 0-1 at the test config, the
+    reference state of the kill-and-resume tests."""
+    drv = RoundDriver(spark, str(tmp_path_factory.mktemp("two_rounds")), _cfg(), WEB, START)
+    drv.run(_seeds_df(spark, SimWeb(*WEB)), rounds=2)
+    return drv
+
+
+def _host_state_pdf(drv, r):
+    """Round ``r``'s host table, as its fetch stage wrote it."""
+    path = os.path.join(drv.workdir, "rounds", f"batch-{r:04d}", "fetch", "hosts")
+    return (
+        drv.spark.read.schema(HOSTS).parquet(path).toPandas()
+        .sort_values("host").reset_index(drop=True)
+    )
+
+
+def test_resume_after_merge_before_done_is_idempotent(spark, tmp_path_factory, two_rounds):
     """Kill point: updatedb artifact written AND frontier merged, but
     _DONE not yet marked (the r1 crash window where contributions were
     double-applied). The resume must reuse the artifact and skip the
     already-committed merge."""
     web = SimWeb(*WEB)
     cfg = _cfg()
-
-    wd_a = str(tmp_path_factory.mktemp("uninterrupted"))
-    drv_a = RoundDriver(spark, wd_a, cfg, WEB, START)
-    drv_a.run(_seeds_df(spark, web), rounds=2)
+    drv_a = two_rounds
 
     wd_b = str(tmp_path_factory.mktemp("killed"))
     drv_b = RoundDriver(spark, wd_b, cfg, WEB, START)
@@ -126,41 +142,6 @@ def test_resume_after_merge_before_done_is_idempotent(spark, tmp_path_factory):
     assert (a.status == b.status).all()
     assert ((a.score - b.score).abs() < 1e-3).all(), "scores double-applied on resume"
     assert ((a.cash - b.cash).abs() < 1e-3).all()
-
-
-def test_resume_stamps_an_unstamped_updatedb_artifact(spark, tmp_path_factory, monkeypatch):
-    """Kill point: updatedb's artifact committed but its bucketing stamp
-    not yet written. merge_linked refuses unstamped artifacts, so the
-    resume must stamp the artifact it reuses and end in the state of an
-    uninterrupted round."""
-    web = SimWeb(*WEB)
-    cfg = _cfg()
-
-    wd_a = str(tmp_path_factory.mktemp("uninterrupted"))
-    drv_a = RoundDriver(spark, wd_a, cfg, WEB, START)
-    drv_a.inject(_seeds_df(spark, web))
-    drv_a.run_round(0)
-
-    wd_b = str(tmp_path_factory.mktemp("killed_before_stamp"))
-    drv_b = RoundDriver(spark, wd_b, cfg, WEB, START)
-    drv_b.inject(_seeds_df(spark, web))
-
-    def killed(data_dir):
-        raise RuntimeError("killed before the stamp")
-
-    monkeypatch.setattr(drv_b.store, "stamp_bucketing", killed)
-    with pytest.raises(RuntimeError, match="killed"):
-        drv_b.run_round(0)
-    art = os.path.join(wd_b, "rounds", "batch-0000", "updatedb", "data")
-    assert os.path.exists(os.path.join(art, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(art, "_WNS_BUCKETING.json"))
-
-    drv_c = RoundDriver(spark, wd_b, cfg, WEB, START)
-    drv_c.run_round(0)  # resume
-    pd.testing.assert_frame_equal(_frontier_pdf(drv_a), _frontier_pdf(drv_c))
-    assert [(ln["op"], ln.get("batch_id")) for ln in drv_c.store.lineage_chain()] == [
-        (ln["op"], ln.get("batch_id")) for ln in drv_a.store.lineage_chain()
-    ]
 
 
 def test_budget_dropped_rows_keep_generate_mark(spark, tmp_path_factory):
@@ -267,35 +248,41 @@ def test_reopen_with_wrong_bucket_count_refused(spark, tmp_path):
 
 
 def test_merge_linked_rejects_mismatched_bucketing(spark, tmp_path):
-    """A stale resume artifact bucketed with a different host_buckets
-    must not be adopted as a delta (bucket-pruned reads would resolve
-    it against the wrong partitions)."""
+    """An artifact written without this store's bucketing (no
+    ``host_bucket`` column) must not be adopted as a delta; one
+    bucketed by the store's own ``with_bucket`` is."""
     st = _store(spark, tmp_path, compact_ratio=100.0)
     st.init(_rows(spark, [("a", 1, 1.0), ("b", 2, 2.0)]))
-    other = ParquetFrontierStore(
-        spark, os.path.join(str(tmp_path), "other"), host_buckets=16
-    )
-    art = os.path.join(str(tmp_path), "artifact")
-    other.with_bucket(_rows(spark, [("b", 2, 20.0)])).write.parquet(art)
-    # stamped mismatch -> refused before any data check
-    other.stamp_bucketing(art)
-    with pytest.raises(ValueError, match="host_buckets"):
-        st.merge_linked(art)
-    # unstamped artifact -> refused, since the bucketing stamp is
-    # required (its bucket value is also out of this store's range)
     art_bad = os.path.join(str(tmp_path), "artifact_bad")
-    st.with_bucket(_rows(spark, [("b", 2, 20.0)])).withColumn(
-        "host_bucket", F.lit(99)
-    ).write.parquet(art_bad)
-    with pytest.raises(ValueError, match="bucketing"):
+    _rows(spark, [("b", 2, 20.0)]).write.parquet(art_bad)
+    with pytest.raises(ValueError, match="missing columns.*host_bucket"):
         st.merge_linked(art_bad)
-    # correctly bucketed + stamped artifact is adopted
-    art2 = os.path.join(str(tmp_path), "artifact2")
-    st.with_bucket(_rows(spark, [("b", 2, 20.0)])).write.parquet(art2)
-    st.stamp_bucketing(art2)
-    st.merge_linked(art2)
+    assert [ln["kind"] for ln in st.lineage_chain()] == ["base"]
+    art = os.path.join(str(tmp_path), "artifact")
+    st.with_bucket(_rows(spark, [("b", 2, 20.0)])).write.parquet(art)
+    st.merge_linked(art)
     got = {r["url_hash"]: r["score"] for r in st.read().collect()}
     assert got == {"a": 1.0, "b": 20.0}
+
+
+def test_merge_linked_adopts_a_batch_once(spark, tmp_path):
+    """Two linked merges of the same (op, batch_id) commit one snapshot;
+    the second only runs the compaction trigger. Merges that name no
+    batch each commit."""
+    st = _store(spark, tmp_path, compact_ratio=100.0)
+    st.init(_rows(spark, [("a", 1, 1.0), ("b", 2, 2.0)]))
+    art = os.path.join(str(tmp_path), "artifact")
+    st.with_bucket(_rows(spark, [("b", 2, 20.0)])).write.parquet(art)
+    lineage = {"op": "updatedb", "batch_id": "batch-0000"}
+    v = st.merge_linked(art, lineage)
+    assert st.merge_linked(art, dict(lineage)) == v
+    assert [(ln["op"], ln.get("batch_id")) for ln in st.lineage_chain()] == [
+        ("init", None), ("updatedb", "batch-0000"),
+    ]
+    st.merge_linked(art)
+    st.merge_linked(art)
+    assert [ln["kind"] for ln in st.lineage_chain()] == ["base"] + ["delta"] * 3
+    assert {r["url_hash"]: r["score"] for r in st.read().collect()} == {"a": 1.0, "b": 20.0}
 
 
 def test_single_resolver_equals_pandas_upsert(spark, tmp_path):
@@ -358,7 +345,6 @@ def test_compaction_trigger_snapshot_count_and_linked_merge(spark, tmp_path):
     art = os.path.join(str(tmp_path), "artifact")
     upd = [("u0", 0, 10.0), ("n1", 1, 1.0), ("n2", 2, 2.0), ("n3", 0, 3.0)]
     lk.with_bucket(_rows(spark, upd)).write.parquet(art)
-    lk.stamp_bucketing(art)
     lk.merge_linked(art)  # 4 delta rows > 0.5 * 6 base rows
     chain = lk.lineage_chain()
     assert [ln["kind"] for ln in chain] == ["base", "delta", "base"]
@@ -432,7 +418,7 @@ def _jobs_submitted(spark, fn) -> int:
 
 def test_store_metadata_costs_no_spark_job(spark, tmp_path):
     """Every metadata answer comes from the manifest: planning a MOR
-    read and adopting a stamped artifact submit no Spark job, and the
+    read and adopting a bucketed artifact submit no Spark job, and the
     footer row counts a commit records equal Spark's count of each
     snapshot (init, merge, linked and compact)."""
     st = _store(spark, tmp_path, compact_ratio=100.0)
@@ -444,7 +430,6 @@ def test_store_metadata_costs_no_spark_job(spark, tmp_path):
 
     art = os.path.join(str(tmp_path), "artifact")
     st.with_bucket(_rows(spark, [("u2", 3, 102.0), ("n1", 4, 51.0)])).write.parquet(art)
-    st.stamp_bucketing(art)
     assert _jobs_submitted(spark, lambda: st.merge_linked(art)) == 0
     st.compact()
 
@@ -471,7 +456,6 @@ def test_compaction_is_one_resolve_and_write(spark, tmp_path):
     st.merge(_rows(spark, [("u1", 2, 100.0), ("n0", 3, 50.0)]))
     art = os.path.join(str(tmp_path), "artifact")
     st.with_bucket(_rows(spark, [("u2", 3, 102.0)])).write.parquet(art)
-    st.stamp_bucketing(art)
     st.merge_linked(art)
     want = {r["url_hash"]: r["score"] for r in st.read().collect()}
 
@@ -513,7 +497,6 @@ def test_a_killed_compaction_leaves_nothing_in_the_next_snapshot(spark, tmp_path
 
     art = os.path.join(str(tmp_path), "artifact")
     st.with_bucket(_rows(spark, [("u2", 3, 102.0)])).write.parquet(art)
-    st.stamp_bucketing(art)
     st.merge_linked(art)
     assert [ln["kind"] for ln in st.lineage_chain()] == ["base", "delta", "delta"]
     assert st.lineage()["rows"] == 1
@@ -589,7 +572,6 @@ def test_readers_during_commits_see_committed_versions(spark, tmp_path):
         art = os.path.join(str(tmp_path), "artifact")
         upd = [("u0", 1, 200.0), ("n1", 3, 51.0)]
         st.with_bucket(_rows(spark, upd)).write.parquet(art)
-        st.stamp_bucketing(art)
         st.merge_linked(art)
         committed(upd)
         st.compact()
@@ -642,3 +624,65 @@ def test_a_round_resumed_after_a_killed_compaction_compacts(spark, tmp_path_fact
     resumed.run(None, rounds=2, start_round=1)
     assert [ln["kind"] for ln in resumed.store.lineage_chain()] == kinds
     pd.testing.assert_frame_equal(_frontier_pdf(whole), _frontier_pdf(resumed))
+
+
+def test_a_crawl_keeps_one_commit_record_per_kind_of_state(two_rounds):
+    """Each round's host table sits in its fetch stage, under that
+    stage's _DONE, and the updatedb artifact carries no side stamp: a
+    crawl of rounds 0-1 writes no ``_WNS_BUCKETING.json`` and no
+    top-level ``hosts/``."""
+    wd = two_rounds.workdir
+    assert "_WNS_BUCKETING.json" not in {fn for _, _, fns in os.walk(wd) for fn in fns}
+    assert not os.path.exists(os.path.join(wd, "hosts"))
+    for r in range(2):
+        assert two_rounds._record(f"batch-{r:04d}", "fetch") is not None
+        assert len(_host_state_pdf(two_rounds, r)) > 0
+
+
+@pytest.mark.parametrize("kill", ["host_write", "adoption"])
+def test_a_resumed_round_counts_each_fetch_once_in_the_host_state(
+    spark, tmp_path_factory, monkeypatch, two_rounds, kill
+):
+    """Round 1 is killed after its fetch stage wrote the host table but
+    before the stage's _DONE, or after updatedb committed its artifact
+    but before the store adopted it. The resumed crawl's host tables,
+    frontier and snapshot kinds equal the uninterrupted run's, and each
+    host's fetch_count is its fetched rows over the rounds, so no fetch
+    is counted twice."""
+    wd = str(tmp_path_factory.mktemp(f"killed_{kill}"))
+    drv = RoundDriver(spark, wd, _cfg(), WEB, START)
+    drv.run(_seeds_df(spark, SimWeb(*WEB)), rounds=1)
+    if kill == "host_write":
+        write = drv._write_host_state
+
+        def killed(res, batch_id):
+            write(res, batch_id)
+            raise RuntimeError("killed before the fetch stage's _DONE")
+
+        monkeypatch.setattr(drv, "_write_host_state", killed)
+    else:
+        def killed(data_dir, lineage=None):
+            raise RuntimeError("killed before the store adopts the artifact")
+
+        monkeypatch.setattr(drv.store, "merge_linked", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        drv.run_round(1)
+    hosts_written = os.path.join(wd, "rounds", "batch-0001", "fetch", "hosts", "_SUCCESS")
+    assert os.path.exists(hosts_written)
+    assert drv._record("batch-0001", "fetch" if kill == "host_write" else "updatedb") is None
+
+    resumed = RoundDriver(spark, wd, _cfg(), WEB, START)
+    resumed.run(None, rounds=1, start_round=1)
+    for r in range(2):
+        pd.testing.assert_frame_equal(_host_state_pdf(two_rounds, r), _host_state_pdf(resumed, r))
+    pd.testing.assert_frame_equal(_frontier_pdf(two_rounds), _frontier_pdf(resumed))
+    assert [ln["kind"] for ln in resumed.store.lineage_chain()] == [
+        ln["kind"] for ln in two_rounds.store.lineage_chain()
+    ]
+    fetched = pd.concat(
+        resumed._read_stage(f"batch-{r:04d}", "fetch").filter(F.col("fetched"))
+        .select("host").toPandas()
+        for r in range(2)
+    )
+    counts = _host_state_pdf(resumed, 1).set_index("host")["fetch_count"]
+    assert counts.to_dict() == fetched.groupby("host").size().to_dict()

@@ -141,6 +141,32 @@ def test_payload_invariants(crawl_state):
         assert codec.phash(px) == row["phash"]
 
 
+def test_payloads_plan_without_a_spark_job(spark, crawl_state):
+    """The payload slices are read with the schema the parse stage
+    writes them with (``schema.PAYLOADS``), so planning the read, as the
+    bandwidth estimate does before each generate, submits no
+    schema-inference job; the typed read has the written types."""
+    import os
+
+    drv = crawl_state["drv"]
+    sc = spark.sparkContext
+    group = "payloads-plan-test"
+    sc.setJobGroup(group, "plan the payload read")
+    try:
+        typed = drv.payloads()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    inferred = spark.read.option("recursiveFileLookup", "true").parquet(
+        os.path.join(drv.workdir, "payloads")
+    )
+    assert [(f.name, f.dataType) for f in typed.schema] == [
+        (f.name, f.dataType) for f in inferred.schema
+    ]
+    assert typed.count() == inferred.count() > 0
+
+
 def test_frontier_grows_and_marks_cleared(crawl_state):
     drv = crawl_state["drv"]
     fr = drv.store.read()

@@ -65,12 +65,23 @@ def test_slow_hosts_detached_next_round(spark, tmp_path):
 def test_unreachable_hosts_plans_without_a_spark_job(spark, tmp_path):
     """The host state is read with the schema it is written with
     (``schema.HOSTS``), so planning the detached-host frame, as
-    generate does each round, submits no schema-inference job."""
+    generate does each round, submits no schema-inference job. The
+    state read is the host table of the newest round, by round number,
+    whose fetch stage is done."""
     cfg = make_test_config()
-    spark.createDataFrame(
-        [("host0.test", 3, 900, 3), ("host1.test", 0, 300, 2)],
-        "host string, failures long, total_duration_ms long, fetch_count long",
-    ).write.parquet(os.path.join(tmp_path, "hosts", "v0000-batch-0000"))
+    ddl = "host string, failures long, total_duration_ms long, fetch_count long"
+    for batch, detached_host, done in [
+        ("batch-9999", "host1.test", True),
+        ("batch-10000", "host0.test", True),
+        ("batch-10001", "host2.test", False),  # fetch not done: not committed
+    ]:
+        fetch_dir = os.path.join(tmp_path, "rounds", batch, "fetch")
+        spark.createDataFrame(
+            [(detached_host, 3, 900, 3), ("host9.test", 0, 300, 2)], ddl
+        ).write.parquet(os.path.join(fetch_dir, "hosts"))
+        if done:
+            with open(os.path.join(fetch_dir, "_DONE"), "w") as f:
+                f.write("{}")
     sc = spark.sparkContext
     group = "host-state-plan-test"
     sc.setJobGroup(group, "plan unreachable hosts")

@@ -5,9 +5,11 @@ Run: python tools/crawl_parity.py WORKDIR_A WORKDIR_B
 Compares, on both sides of the same relative path:
 
 - every stage artifact (``rounds/<batch_id>/<stage>/data``), every
+  round's host table (``rounds/<batch_id>/fetch/hosts``), every
   frontier snapshot (``frontier/v*/data``) and every payload slice
   (``payloads/<batch_id>``), read with pyarrow (hive partitions
-  included) and sorted by ``url_hash`` (``image_id`` for payloads);
+  included) and sorted by ``url_hash`` (``image_id`` for payloads,
+  ``host`` for host tables);
 - every URL-seen bitmap (``urlseen/pid=*.npy``), byte for byte.
 
 A table or bitmap that exists on one side only is a difference. Two
@@ -30,9 +32,9 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-TABLES = ("rounds/*/*/data", "frontier/v*/data", "payloads/*")
+TABLES = ("rounds/*/*/data", "rounds/*/fetch/hosts", "frontier/v*/data", "payloads/*")
 BITMAPS = "urlseen/pid=*.npy"
-KEYS = ("url_hash", "image_id")
+KEYS = ("url_hash", "image_id", "host")
 
 
 def _relpaths(root: str, pattern: str) -> set[str]:

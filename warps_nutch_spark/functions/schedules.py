@@ -109,20 +109,6 @@ def default_schedule_cols(
     return fetch_time_ms + fetch_interval_sec.cast("long") * F.lit(1000)
 
 
-def retry_schedule_cols(
-    now_ms: int,
-    retries: Column,
-    fetch_interval_sec: Column,
-    cfg: CrawlConfig,
-) -> tuple[Column, Column, Column]:
-    """(new_status_is_gone, new_fetch_time, new_retries) for RETRY rows
-    (ReduceDatumBuilder.java:264-271): under max retries -> try again
-    next round; at max -> GONE."""
-    gone = retries >= F.lit(int(cfg.max_retries))
-    new_fetch_time = F.lit(now_ms) + fetch_interval_sec.cast("long") * F.lit(1000)
-    return gone, new_fetch_time, retries + F.lit(1)
-
-
 def gone_backoff_interval(fetch_interval_sec: Column, cfg: CrawlConfig) -> Column:
     """GONE rows back off: interval *= 1.5 clamped to max
     (ReduceDatumBuilder.java:252-262)."""

@@ -135,15 +135,3 @@ def status_name_col(status: Column) -> Column:
     for code, name in CrawlStatus.NAMES.items():
         expr = F.when(status == code, F.lit(name)).otherwise(expr)
     return expr
-
-
-# Counter families mirroring NutchCounter (mapreduce/NutchCounter.java:49-71)
-COUNTER_FOR_STATUS = {
-    CrawlStatus.FETCHED: "stFetched",
-    CrawlStatus.REDIR_TEMP: "stRedirTemp",
-    CrawlStatus.REDIR_PERM: "stRedirPerm",
-    CrawlStatus.NOTMODIFIED: "stNotModified",
-    CrawlStatus.RETRY: "stRetry",
-    CrawlStatus.UNFETCHED: "stUnfetched",
-    CrawlStatus.GONE: "stGone",
-}

@@ -1,7 +1,7 @@
 """REST fetch-service transport — the fork's crowdsourcing headline
 feature served over live HTTP (``fetch/service/FetchServer.java``
 embedded-Jetty server + ``fetch/service/FetchResource.java`` REST
-resource), layered on the batch leasing contract in
+resource), serving the task table and result schema of
 :mod:`.fetch_service`:
 
 - ``GET /fetch/schedule/{count}[?per_queue=N]`` — lease up to ``count``
@@ -35,15 +35,10 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .fetch_service import CROWD_RESULT_COLUMNS
+from .fetch_service import CROWD_RESULT
 
 #: FetchResource.java MAX_TASKS_PER_SCHEDULE
 MAX_TASKS_PER_SCHEDULE = 100
-
-RESULT_DDL = (
-    "url_hash string, http_status int, bytes binary, out_urls array<string>,"
-    " fetch_ts long, fetch_duration_ms long, worker_id string"
-)
 
 
 class FetchServer:
@@ -187,7 +182,7 @@ class FetchServer:
                 if uh in self._results:
                     self._dup_submissions += 1
                     continue
-                row = {k: r.get(k) for k in CROWD_RESULT_COLUMNS}
+                row = {k: r.get(k) for k in CROWD_RESULT.names}
                 if row["bytes"] is not None:
                     row["bytes"] = base64.b64decode(row["bytes"])
                 self._results[uh] = row
@@ -223,10 +218,10 @@ class FetchServer:
         ``ingest_fetch_results`` input schema."""
         with self._lock:
             rows = [
-                tuple(r[k] for k in CROWD_RESULT_COLUMNS)
+                tuple(r[k] for k in CROWD_RESULT.names)
                 for r in self._results.values()
             ]
-        return spark.createDataFrame(rows, schema=RESULT_DDL)
+        return spark.createDataFrame(rows, schema=CROWD_RESULT)
 
     def close(self) -> None:
         self._srv.shutdown()

@@ -1,8 +1,9 @@
 """Crowdsourcing fetch mode — the fork's headline feature
 (``fetch/FetchMode.java`` NATIVE|PROXY|CROWDSOURCING,
 ``fetch/service/FetchResource.java`` REST task leasing,
-``plugin/protocol-crowd`` forwarded responses), re-expressed as a
-batch contract instead of a long-lived REST server:
+``plugin/protocol-crowd`` forwarded responses): the engine side of
+the task table and the responses, which :mod:`.fetch_server` serves
+over HTTP:
 
 - :func:`emit_fetch_tasks` publishes the round's fetchlist as a
   leaseable task table (task key = url_hash). Queue id and per-queue
@@ -12,14 +13,15 @@ batch contract instead of a long-lived REST server:
   the same politeness — the reference moves politeness to the workers
   by leasing at most a few tasks per queue per call,
   ``TaskSchedulers.randomFetchItems``;
-- :func:`lease_tasks` emulates ``GET /fetch/schedule/{count}``: up to
-  ``count`` tasks spread round-robin across queues (rank-over-queue
-  window — never more than ``per_queue`` consecutive tasks of one
-  queue, the randomFetchItems fairness property made deterministic);
+- workers lease the tasks through ``GET /fetch/schedule/{count}``
+  (:meth:`.fetch_server.FetchServer.schedule`): up to ``count`` tasks
+  spread round-robin across queues, never more than ``per_queue`` of
+  one queue per call (the randomFetchItems fairness property made
+  deterministic);
 - :func:`ingest_fetch_results` accepts worker-submitted responses
-  (url_hash, http_status, bytes, out_urls, fetch_ts, worker_id) and
-  maps them through the native engine's response projection
-  (``fetch.fetch_result``), so parse/updatedb are mode-agnostic.
+  (:data:`CROWD_RESULT`) and maps them through the native engine's
+  response projection (``fetch.fetch_result``), so parse/updatedb are
+  mode-agnostic.
   Tasks no worker returned stay ``fetched = false`` — the round
   driver's budget-drop path keeps their GENERATE_MARK and the
   stale-mark escape regenerates them (the analog of pending-task
@@ -34,20 +36,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import CrawlConfig
 from .fetch import CARRY_COLS, best_first, fetch_queues, fetch_result
 
-#: columns an external worker must submit per completed task
-CROWD_RESULT_COLUMNS = [
-    "url_hash",
-    "http_status",
-    "bytes",
-    "out_urls",
-    "fetch_ts",
-    "fetch_duration_ms",
-    "worker_id",
-]
+#: what an external worker submits per completed task
+CROWD_RESULT = T.StructType([
+    T.StructField("url_hash", T.StringType()),
+    T.StructField("http_status", T.IntegerType()),
+    T.StructField("bytes", T.BinaryType()),
+    T.StructField("out_urls", T.ArrayType(T.StringType())),
+    T.StructField("fetch_ts", T.LongType()),
+    T.StructField("fetch_duration_ms", T.LongType()),
+    T.StructField("worker_id", T.StringType()),
+])
 
 
 def emit_fetch_tasks(
@@ -78,19 +81,6 @@ def emit_fetch_tasks(
     return tasks, queues.filter(F.col("denied"))
 
 
-def lease_tasks(tasks: DataFrame, count: int, per_queue: int = 1) -> DataFrame:
-    """``GET /fetch/schedule/{count}`` analog: at most ``per_queue``
-    next-ranked tasks from each queue, globally capped at ``count``
-    (MAX_TASKS_PER_SCHEDULE=100 in the reference). Fair across queues
-    by construction: queue ranks are interleaved before the cap."""
-    eligible = tasks.filter(F.col("queue_rank") <= per_queue)
-    return (
-        eligible.orderBy(F.asc("queue_rank"), F.asc("queue_id"), F.asc("url"))
-        .limit(count)
-        .select("url_hash", "url", "queue_id", "queue_rank", "crawl_delay_ms")
-    )
-
-
 def ingest_fetch_results(
     tasks: DataFrame,
     denied: DataFrame,
@@ -109,7 +99,7 @@ def ingest_fetch_results(
         F.asc("fetch_ts"), F.asc("worker_id")
     )
     sub = (
-        submitted.select(*CROWD_RESULT_COLUMNS)
+        submitted.select(*CROWD_RESULT.names)
         .withColumn("_rn", F.row_number().over(sub_win))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "worker_id")

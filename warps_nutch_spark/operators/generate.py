@@ -125,7 +125,7 @@ def generate(
     cand = eligible_candidates(frontier, cfg, now_ms, unreachable_hosts, current_round)
     cand = cand.withColumns({
         "sort_score": scoring.generator_sort_value(F.col("score")),
-        "page_category": page_category_col(F.col("url")),
+        "page_category": page_category_col("url"),
     })
 
     order = [F.desc("priority"), F.desc("sort_score"), F.asc("url")]

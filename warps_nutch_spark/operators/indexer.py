@@ -100,7 +100,7 @@ def build_index_documents(
             ),
             F.col("fetch_time").cast("string"),
         ).alias("fetch_time_history"),
-        page_category_col(F.col("url")).alias("resource_category"),
+        page_category_col("url").alias("resource_category"),
     ]
     for key in metatag_keys:
         # try_element_at: ANSI-safe NULL for absent keys
@@ -306,7 +306,7 @@ def build_jit_documents(
     from .rows import page_category_col
 
     _jit_ct = content_type_col(F.col("url"))
-    _jit_category = page_category_col(F.col("url"))
+    _jit_category = page_category_col("url")
     return docs.select(
         F.col("url_hash").alias("id"),
         F.col("url"),

@@ -23,11 +23,15 @@ Time is a virtual clock: round r starts at start_ms +
 r * round_time_limit_ms, so politeness spacing, schedules and scores
 are bit-reproducible across re-runs (SURVEY.md §7 hard-part 5).
 
-Per-round state maintained alongside the frontier:
-- URL-seen Bloom partitions (``store/urlseen.py``),
-- unreachable-host table (3 strikes -> detached,
-  ``TasksMonitor.java:343-366``),
-- payload table (the input_hint image+caption corpus).
+Crawl state and the one record that commits each kind:
+- a round's stage artifacts, by each stage's ``_DONE``. The fetch
+  stage's also holds ``hosts``, the cumulative host table (3 strikes
+  -> detached, ``TasksMonitor.java:343-366``), and the parse stage's
+  covers the round's payload slice ``payloads/<batch_id>`` (the
+  input_hint image+caption corpus);
+- the frontier snapshots, by the store manifest ``_VERSION``;
+- the URL-seen Bloom partitions (``store/urlseen.py``), by their
+  ``_MANIFEST.json``.
 """
 
 from __future__ import annotations
@@ -50,7 +54,7 @@ from ..operators import generate as gen_op
 from ..operators import inject as inj_op
 from ..operators import parse as parse_op
 from ..operators import updatedb as upd_op
-from ..schema import HOSTS, METRICS
+from ..schema import HOSTS, METRICS, PAYLOADS
 from ..store.frontier import ParquetFrontierStore, link_parts
 from ..store.urlseen import BloomUrlSeen
 
@@ -71,28 +75,28 @@ def host_eviction_cond(cfg: CrawlConfig):
     return cond
 
 
-def host_state_versions(workdir: str) -> list[str]:
-    """Committed host-state versions under ``workdir`` (dir carries the
-    batch id so a resumed fetch stage can tell its update already
-    landed; only dirs with _SUCCESS count, so a mid-write kill is
-    invisible)."""
-    base = os.path.join(workdir, "hosts")
-    if not os.path.isdir(base):
-        return []
-    return sorted(
-        d
-        for d in os.listdir(base)
-        if d.startswith("v") and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-    )
+def _host_state(workdir: str) -> str | None:
+    """The host table of the newest round, by round number, whose
+    fetch stage is done (``rounds/<batch_id>/fetch/hosts``, committed
+    by that stage's ``_DONE``), or None before the first fetch."""
+    base = os.path.join(workdir, "rounds")
+    done = [
+        d for d in (os.listdir(base) if os.path.isdir(base) else [])
+        if os.path.exists(os.path.join(base, d, "fetch", "_DONE"))
+    ]
+    if not done:
+        return None
+    newest = max(done, key=lambda d: int(d.split("-")[1]))
+    return os.path.join(base, newest, "fetch", "hosts")
 
 
 def unreachable_hosts(spark: SparkSession, workdir: str, cfg: CrawlConfig) -> DataFrame | None:
     """Detached hosts in the latest committed host state (see
     :func:`host_eviction_cond`), or None before the first fetch."""
-    versions = host_state_versions(workdir)
-    if not versions:
+    path = _host_state(workdir)
+    if path is None:
         return None
-    hosts = spark.read.schema(HOSTS).parquet(os.path.join(workdir, "hosts", versions[-1]))
+    hosts = spark.read.schema(HOSTS).parquet(path)
     return hosts.filter(host_eviction_cond(cfg)).select("host")
 
 
@@ -220,32 +224,22 @@ class RoundDriver:
         return self.spark.createDataFrame(rows, METRICS)
 
     def payloads(self) -> DataFrame:
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
+        """Every round's payload slice, read with the schema the parse
+        stage writes it with (no schema-inference job)."""
+        return self.spark.read.schema(PAYLOADS).option("recursiveFileLookup", "true").parquet(
             os.path.join(self.workdir, "payloads")
         )
 
     # ---- unreachable hosts ------------------------------------------
-    def _hosts_path(self) -> str:
-        base = os.path.join(self.workdir, "hosts")
-        versions = host_state_versions(self.workdir)
-        return os.path.join(base, versions[-1]) if versions else os.path.join(base, "v0000")
-
-    def _hosts_batch_done(self, batch_id: str) -> bool:
-        return any(v.endswith(f"-{batch_id}") for v in host_state_versions(self.workdir))
-
-    def _next_hosts_path(self, batch_id: str) -> str:
-        base = os.path.join(self.workdir, "hosts")
-        os.makedirs(base, exist_ok=True)
-        versions = host_state_versions(self.workdir)
-        n = int(versions[-1][1:5]) + 1 if versions else 0
-        return os.path.join(base, f"v{n:04d}-{batch_id}")
-
     def unreachable_hosts(self) -> DataFrame | None:
         return unreachable_hosts(self.spark, self.workdir, self.cfg)
 
-    def _update_host_failures(self, fetch_results: DataFrame, batch_id: str) -> None:
-        if self._hosts_batch_done(batch_id):
-            return  # resume: this batch's host update already committed
+    def _write_host_state(self, fetch_results: DataFrame, batch_id: str) -> None:
+        """Write the cumulative host table, the newest done fetch's
+        table plus this batch's fetched rows, over
+        ``rounds/<batch_id>/fetch/hosts``. The fetch stage's ``_DONE``
+        commits it; until then the newest done fetch is an earlier
+        round's, so a re-run after a kill recomputes the same table."""
         stats = (
             fetch_results.filter(F.col("fetched"))
             .groupBy("host")
@@ -259,8 +253,8 @@ class RoundDriver:
                 F.count("*").alias("new_count"),
             )
         )
-        p = self._hosts_path()
-        if os.path.exists(p):
+        p = _host_state(self.workdir)
+        if p is not None:
             prev = self.spark.read.schema(HOSTS).parquet(p)
             merged = prev.join(stats, on="host", how="outer").select(
                 "host",
@@ -282,7 +276,9 @@ class RoundDriver:
                 F.col("new_duration").alias("total_duration_ms"),
                 F.col("new_count").alias("fetch_count"),
             )
-        merged.write.mode("overwrite").parquet(self._next_hosts_path(batch_id))
+        merged.write.mode("overwrite").parquet(
+            os.path.join(self._stage_dir(batch_id, "fetch"), "hosts")
+        )
 
     def host_config(self) -> DataFrame | None:
         """Optional operator-provided per-host queue overrides
@@ -379,7 +375,7 @@ class RoundDriver:
             return _partial("generate")
 
         # -- fetch: the status counters of the fetched rows ride the
-        # artifact write; the host-state update reads the artifact
+        # artifact write; the host table is written from the artifact
         def _fetch() -> DataFrame:
             if self.cfg.fetch_mode == "crowd":
                 return self._crowd_fetch(fetchlist, batch_id, now)
@@ -389,7 +385,7 @@ class RoundDriver:
             )
 
         fetch_results = _run(
-            "fetch", _fetch, lambda res: self._update_host_failures(res, batch_id),
+            "fetch", _fetch, lambda res: self._write_host_state(res, batch_id),
             counters=status_counter_cols(F.col("new_status"), F.col("fetched")),
         )
         if stop_after == "fetch":
@@ -455,31 +451,17 @@ class RoundDriver:
             )
             return self.store.with_bucket(rows.drop("host_bucket"))
 
-        # the status counters of the rows this batch updated ride
-        # the artifact write; the post-write actions, store adopt
-        # then URL-seen merge, are each idempotent on resume
-        # (committed_ops guard, URL-seen batch guard)
-        def _adopt(_rows) -> None:
-            # record the bucket count the artifact was written with
-            # so merge_linked can reject a stale-layout artifact. A
-            # resume stamps too: a kill between the artifact's
-            # commit and its stamp leaves it unstamped, and this
-            # store wrote it (the manifest pins the bucket count)
-            self.store.stamp_bucketing(data_dir)
-            if ("updatedb", batch_id) in self.store.committed_ops():
-                # resume: the delta is committed, but the compaction it
-                # triggered may have been killed before its commit
-                self.store.maybe_compact()
-            else:
-                self.store.merge_linked(data_dir, {"op": "updatedb", "batch_id": batch_id})
-
-        def _urlseen_merge(rows: DataFrame) -> None:
-            # a batch the URL-seen manifest already lists is
-            # skipped, so a resumed round does not replay it
-            self.urlseen.merge_round(rows.select("url_hash"), "url_hash", batch_id)
-
+        # the status counters of the rows this batch updated ride the
+        # artifact write. The post-write actions, the store's adoption
+        # of the artifact then the URL-seen merge, each skip a batch
+        # their manifest already lists, so a resumed round replays
+        # neither
         _run(
-            "updatedb", _merge_rows, _adopt, _urlseen_merge,
+            "updatedb", _merge_rows,
+            lambda _rows: self.store.merge_linked(
+                data_dir, {"op": "updatedb", "batch_id": batch_id}
+            ),
+            lambda rows: self.urlseen.merge_round(rows.select("url_hash"), "url_hash", batch_id),
             counters=status_counter_cols(
                 F.col("status"), F.col("updated_batch") == batch_id
             ),
@@ -503,15 +485,13 @@ class RoundDriver:
         """FetchMode.CROWDSOURCING round: publish tasks, hand every
         task to the crowd worker (default: the SimWeb protocol — the
         same deterministic web native mode fetches), ingest the
-        forwarded responses. Swap ``self.crowd_worker`` for a REST
-        bridge in a real deployment.
+        forwarded responses.
 
-        Scale note: the driver-side toPandas here is the WORKER
-        SIMULATION, not the contract — a production bridge leases from
-        the written task table (operators/fetch_service.lease_tasks
-        over the parquet artifact) and drops result files that
-        ingest_fetch_results reads, so no task ever rides through the
-        driver."""
+        With ``fetch_service_port >= 0`` the tasks are served over HTTP
+        (``operators/fetch_server.FetchServer``): external workers lease
+        them through its ``schedule`` and submit responses back.
+        Otherwise the driver-side toPandas below hands every task to
+        ``self.crowd_worker``, the worker simulation."""
         from ..operators import fetch_service as svc
 
         tasks, denied = svc.emit_fetch_tasks(
@@ -527,11 +507,7 @@ class RoundDriver:
         else:
             task_pdf = tasks.select("url_hash", "url").toPandas()
             submitted = self.spark.createDataFrame(
-                self.crowd_worker(task_pdf, now), schema=(
-                    "url_hash string, http_status int, bytes binary,"
-                    " out_urls array<string>, fetch_ts long,"
-                    " fetch_duration_ms long, worker_id string"
-                ),
+                self.crowd_worker(task_pdf, now), schema=svc.CROWD_RESULT
             )
         res = svc.ingest_fetch_results(tasks, denied, submitted, self.cfg, batch_id, now)
 

@@ -290,7 +290,7 @@ FROM frontier GROUP BY host
 def q_page_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     fr = derived_frontier(spark, sf_dir)
     return (
-        fr.withColumn("page_category", page_category_col(F.col("url")))
+        fr.withColumn("page_category", page_category_col("url"))
         .groupBy("page_category")
         .agg(F.count("*").alias("n"))
     )

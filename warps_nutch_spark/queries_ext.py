@@ -245,7 +245,7 @@ def q_detail_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
         NOW,
     )
     cand = fr.withColumn("sort_score", F.col("score")).withColumn(
-        "page_category", page_category_col(F.col("url"))
+        "page_category", page_category_col("url")
     )
     order = [F.desc("priority"), F.desc("sort_score"), F.asc("url")]
     out = apply_detail_quota(cand, CFG, order)

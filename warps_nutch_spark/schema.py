@@ -65,6 +65,8 @@ FRONTIER = T.StructType(
     ]
 )
 
+#: the payload slice each parse stage writes to ``payloads/<batch_id>``
+#: (``operators/parse.py::payload_rows``)
 PAYLOADS = T.StructType(
     [
         T.StructField("image_id", T.StringType(), False),
@@ -77,29 +79,9 @@ PAYLOADS = T.StructType(
     ]
 )
 
-LINK_GRAPH = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType()),
-        T.StructField("category", T.StringType()),
-        T.StructField("outlinks", T.ArrayType(T.StringType())),
-        T.StructField("http_status", T.IntegerType()),
-        T.StructField("redirect_to", T.StringType()),
-        T.StructField("image_id", T.StringType()),
-        T.StructField("caption", T.StringType()),
-    ]
-)
-
-ROBOTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("disallow", T.ArrayType(T.StringType())),
-        T.StructField("crawl_delay_ms", T.LongType()),
-    ]
-)
-
-#: the host state each fetch stage writes (``plans/round.py``):
-#: failure strikes and fetch time per host
+#: the cumulative host table each fetch stage writes to
+#: ``rounds/<batch_id>/fetch/hosts`` (``plans/round.py``): failure
+#: strikes and fetch time per host
 HOSTS = T.StructType(
     [
         T.StructField("host", T.StringType()),

@@ -32,8 +32,8 @@ Two implementations behind one interface:
   Snapshots are partitioned by ``host_bucket`` = pmod(xxhash64(host),
   K) so host-range scans prune partitions (the analog of the
   reversed-key range scan, ``CrawlFilters.java:147-175``). Every
-  version is a resume point, and lineage records (op, batch_id) so a
-  resumed round can skip an already-committed merge (idempotent
+  version is a resume point, and lineage records (op, batch_id) so
+  ``merge_linked`` skips a batch it already adopted (idempotent
   updatedb).
 
 - :class:`IcebergFrontierStore` — issues real ``MERGE INTO`` SQL
@@ -194,7 +194,7 @@ class ParquetFrontierStore(FrontierStore):
 
     def committed_ops(self) -> set[tuple[str, str | None]]:
         """(op, batch_id) pairs already committed — the idempotency
-        check a resumed round uses to skip a re-merge."""
+        check :meth:`merge_linked` runs to skip a re-adopted batch."""
         return {(ln.get("op"), ln.get("batch_id")) for ln in self.lineage_chain()}
 
     @staticmethod
@@ -344,7 +344,7 @@ class ParquetFrontierStore(FrontierStore):
     def maybe_compact(self) -> None:
         """Compact when the deltas since the base pass a trigger: row
         ratio, snapshot count, or broadcast gate. Every delta commit
-        calls it, and so does a resumed round whose delta was already
+        calls it, and so does a ``merge_linked`` of a batch already
         committed: the compaction that delta triggered may have been
         killed before its commit."""
         _, base, deltas = self._layout()
@@ -378,36 +378,30 @@ class ParquetFrontierStore(FrontierStore):
         no second write of the same rows. Iceberg's add_files analog.
 
         Requirements: the directory's part files must carry every store
-        column including a ``host_bucket`` computed with THIS store's
-        bucket count (callers use :meth:`with_bucket` before writing
-        the artifact and :meth:`stamp_bucketing` after). Raises
-        ValueError otherwise; :meth:`merge` rebuckets. The checks read
-        the stamp and one part file's footer, so adopting the artifact
-        runs no Spark job.
+        column, ``host_bucket`` included, computed with this store's
+        bucket count: callers bucket the artifact with
+        :meth:`with_bucket` before writing it, and the manifest pins
+        the count (``__init__`` refuses any other). Raises ValueError
+        on a directory without part files or with a missing column;
+        :meth:`merge` rebuckets. The checks read one part file's
+        footer, so adopting the artifact runs no Spark job.
+
+        Idempotent per batch: when ``lineage`` names a ``batch_id`` and
+        the manifest already lists its (op, batch_id), nothing is
+        linked or committed, and only the compaction trigger runs again
+        (the compaction the first adoption tripped may have been killed
+        before its commit).
 
         Scale note: this is the difference between writing the round's
         updates once vs twice; at 10^10 rows the delta write is pure
         I/O, so halving it halves the updatedb tail."""
+        meta = dict(lineage or {"op": "merge"})
+        if meta.get("batch_id") is not None and (
+            meta["op"], meta["batch_id"]
+        ) in self.committed_ops():
+            self.maybe_compact()
+            return self.current_version()
         schema = self._layout()[0]
-        # the artifact's host_bucket values must have been computed with
-        # THIS store's bucket count — a stale resume artifact with a
-        # different bucketing would pass the column check but poison
-        # bucket-pruned reads. Writers stamp the count via
-        # stamp_bucketing(); an unstamped artifact is refused.
-        stamp = os.path.join(data_dir, "_WNS_BUCKETING.json")
-        if not os.path.exists(stamp):
-            raise ValueError(
-                f"merge_linked: {data_dir} carries no bucketing stamp "
-                "(stamp_bucketing); use merge() to rebucket"
-            )
-        with open(stamp) as f:
-            artifact_buckets = int(json.load(f).get("host_buckets", -1))
-        if artifact_buckets != self.host_buckets:
-            raise ValueError(
-                f"merge_linked: artifact bucketed with host_buckets="
-                f"{artifact_buckets}, store uses {self.host_buckets}; "
-                f"use merge() to rebucket"
-            )
         parts = sorted(fn for fn in os.listdir(data_dir) if _is_part(fn))
         if not parts:
             raise ValueError(f"merge_linked: no part files in {data_dir}")
@@ -419,18 +413,10 @@ class ParquetFrontierStore(FrontierStore):
         # files at an uncommitted version are a killed write's leftovers
         # (say, a compaction's buckets): the snapshot holds only the links
         link_parts(data_dir, self._data_dir(v))
-        meta = dict(lineage or {"op": "merge"})
         meta["linked_from"] = data_dir
         self._commit(v, meta, kind="delta")
         self.maybe_compact()
         return self.current_version()
-
-    def stamp_bucketing(self, data_dir: str) -> None:
-        """Record this store's bucket count inside a stage-artifact
-        directory so a later :meth:`merge_linked` can verify the
-        artifact's ``host_bucket`` column matches the store layout."""
-        with open(os.path.join(data_dir, "_WNS_BUCKETING.json"), "w") as f:
-            json.dump({"host_buckets": self.host_buckets}, f)
 
     def compact(self, lineage: dict | None = None) -> int:
         """Materialize the MOR view as a new base snapshot (Iceberg's

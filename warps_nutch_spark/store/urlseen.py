@@ -35,15 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_PROBE_SCHEMA = T.StructType(
-    [
-        T.StructField("pid", T.IntegerType()),
-        T.StructField("h1", T.LongType()),
-        T.StructField("h2", T.LongType()),
-    ]
-)
-
-
 def _params(capacity: int, fp_rate: float) -> tuple[int, int]:
     m = int(math.ceil(-capacity * math.log(fp_rate) / (math.log(2) ** 2)))
     m = max(64, (m + 63) // 64 * 64)
