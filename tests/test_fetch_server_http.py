@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from warps_nutch_spark import simweb
 from warps_nutch_spark.config import make_test_config
+from warps_nutch_spark.operators import fetch as fetch_op
 from warps_nutch_spark.operators import fetch_service as svc
 from warps_nutch_spark.operators.fetch_server import (
     MAX_TASKS_PER_SCHEDULE,
@@ -83,7 +84,7 @@ def test_http_transport_schedule_submit_roundtrip(spark, web):
     urls = [f"http://host0.test/{simweb.CATEGORIES[x % 8]}/{x}" for x in j[ok][:12]]
     urls += [f"http://host1.test/{simweb.CATEGORIES[x % 8]}/{x}" for x in j[ok][:12]]
     fl = _fetchlist(spark, cfg, urls)
-    tasks, _denied = svc.emit_fetch_tasks(fl, None, cfg, "b1")
+    tasks = svc.emit_fetch_tasks(fetch_op.fetch_queues(fl, None, None, cfg, "b1"), "b1")
 
     # short lease TTL: the tasks this test leases directly (and never
     # submits) must become re-leasable for the worker threads below

@@ -4,9 +4,11 @@ rows the native engine produces (FetchMode.CROWDSOURCING,
 fetch/service/FetchResource.java, plugin/protocol-crowd)."""
 
 import hashlib
+import os
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -89,12 +91,13 @@ def test_crowd_mode_matches_native_fetch(spark, web):
         for r in fetch_op.fetch(fl, robots, cfg, NOW, "b1", WEB).collect()
     }
 
-    tasks, denied = svc.emit_fetch_tasks(fl, robots, cfg, "b1")
+    queues = fetch_op.fetch_queues(fl, robots, None, cfg, "b1")
+    tasks = svc.emit_fetch_tasks(queues, "b1")
     task_pdf = tasks.select("url_hash", "url").toPandas()
     submitted = spark.createDataFrame(_simulate_workers(task_pdf, web))
     crowd = {
         r["url"]: r
-        for r in svc.ingest_fetch_results(tasks, denied, submitted, cfg, "b1", NOW).collect()
+        for r in svc.ingest_fetch_results(queues, submitted, cfg, "b1", NOW).collect()
     }
 
     assert set(native) == set(crowd)
@@ -117,11 +120,11 @@ def test_crowd_unreturned_tasks_stay_unfetched(spark, web):
     ok = web.http_status(np.full(40, 0), j) == 200
     urls = [f"http://host0.test/{simweb.CATEGORIES[x % 8]}/{x}" for x in j[ok][:10]]
     fl = _fetchlist(spark, cfg, urls)
-    tasks, denied = svc.emit_fetch_tasks(fl, None, cfg, "b1")
-    task_pdf = tasks.select("url_hash", "url").toPandas()
+    queues = fetch_op.fetch_queues(fl, None, None, cfg, "b1")
+    task_pdf = svc.emit_fetch_tasks(queues, "b1").select("url_hash", "url").toPandas()
     # workers only return half the tasks
     submitted = spark.createDataFrame(_simulate_workers(task_pdf.iloc[:5], web))
-    res = svc.ingest_fetch_results(tasks, denied, submitted, cfg, "b1", NOW).toPandas()
+    res = svc.ingest_fetch_results(queues, submitted, cfg, "b1", NOW).toPandas()
     assert (~res.fetched).sum() == len(task_pdf) - 5
     unret = res[~res.fetched]
     # pending-requeue semantics: status untouched, no protocol verdict
@@ -129,25 +132,48 @@ def test_crowd_unreturned_tasks_stay_unfetched(spark, web):
     assert (unret["new_status"] == unret["status"]).all()
 
 
-def test_lease_fairness_across_queues(spark, web):
+def _tasks(fl, robots, cfg, host_config=None):
+    return svc.emit_fetch_tasks(fetch_op.fetch_queues(fl, robots, host_config, cfg, "b1"), "b1")
+
+
+def test_lease_fairness_across_queues(spark):
     cfg = make_test_config()
     urls = [f"http://host{h}.test/doc/{i}" for h in range(4) for i in range(10)]
-    fl = _fetchlist(spark, cfg, urls)
-    tasks, denied = svc.emit_fetch_tasks(fl, None, cfg, "b1")
+    tasks = _tasks(_fetchlist(spark, cfg, urls), None, cfg)
     leased = pd.DataFrame(_schedule(tasks, count=8, per_queue=2))
     assert len(leased) == 8
     # fair: no queue over its per_queue allotment
     assert leased.groupby("queue_id").size().max() <= 2
-    # duplicate submissions: first worker (earliest fetch_ts) wins
-    task_pdf = tasks.select("url_hash", "url").toPandas().iloc[:3]
-    sub = _simulate_workers(task_pdf, web)
-    dup = sub.copy()
-    dup["fetch_ts"] = dup["fetch_ts"] + 1000
-    dup["worker_id"] = "late-worker"
-    both = spark.createDataFrame(pd.concat([dup, sub]))
-    res = svc.ingest_fetch_results(tasks, denied, both, cfg, "b1", NOW)
-    got = res.filter(F.col("fetched")).select("url", "fetch_ts").toPandas()
-    assert (got["fetch_ts"] < NOW + 1000).all()
+
+
+def test_crowd_round_keeps_the_first_worker_row_per_task(spark, tmp_path, web):
+    """A crowd worker that returns two rows for one task, the later
+    fetch_ts first: the first row wins, as ``FetchServer.submit`` keeps
+    the first submission, and the fetch artifact holds one row for the
+    task."""
+    from warps_nutch_spark.plans.round import RoundDriver
+
+    cfg = make_test_config(fetch_mode="crowd", host_buckets=4)
+    drv = RoundDriver(spark, str(tmp_path / "wd"), cfg, WEB, NOW)
+    drv.inject(spark.createDataFrame([(u,) for u in web.seeds(2)], ["value"]))
+    simulate = drv.crowd_worker
+    first: dict = {}
+
+    def twice(task_pdf, now):
+        out = simulate(task_pdf, now)
+        late = out.iloc[:1].assign(fetch_ts=out["fetch_ts"].iloc[0] + 1000, worker_id="late")
+        first.update(url_hash=late["url_hash"].iloc[0], fetch_ts=int(late["fetch_ts"].iloc[0]))
+        return pd.concat([late, out], ignore_index=True)
+
+    drv.crowd_worker = twice
+    drv.run_round(0, stop_after="fetch")
+    art = pq.read_table(
+        os.path.join(drv.workdir, "rounds", "batch-0000", "fetch", "data")
+    ).to_pandas()
+    assert art["url_hash"].is_unique
+    row = art[art["url_hash"] == first["url_hash"]]
+    assert len(row) == 1 and bool(row["fetched"].iloc[0])
+    assert row["fetch_ts"].iloc[0] == first["fetch_ts"]
 
 
 def test_crowd_mode_crawl_matches_native_end_to_end(spark, tmp_path_factory):
@@ -190,7 +216,7 @@ def test_crowd_domain_mode_shares_one_queue_across_subdomains(spark):
     workers too, so a one-per-queue lease hands out only one of them."""
     cfg = make_test_config(crawl_delay_ms=1000, partition_mode="domain")
     urls = ["http://a.site.test/detail/1", "http://b.site.test/detail/1"]
-    tasks, _denied = svc.emit_fetch_tasks(_fetchlist(spark, cfg, urls), None, cfg, "b1")
+    tasks = _tasks(_fetchlist(spark, cfg, urls), None, cfg)
     assert {r["queue_id"] for r in tasks.collect()} == {"site.test"}
     assert len(_schedule(tasks, count=10, per_queue=1)) == 1
 
@@ -218,7 +244,7 @@ def test_crowd_task_delay_is_native_spacing_under_host_config(spark, web):
         "host string, q_mt int, q_cd long, q_mcd long",
     )
     native = fetch_op.fetch(fl, None, cfg, NOW, "b1", WEB, host_config=host_cfg).toPandas()
-    tasks, _denied = svc.emit_fetch_tasks(fl, None, cfg, "b1", host_config=host_cfg)
+    tasks = _tasks(fl, None, cfg, host_config=host_cfg)
     delays = tasks.groupBy("host").agg(F.collect_set("crawl_delay_ms").alias("d")).collect()
     got = {r["host"]: r["d"] for r in delays}
     want = {h: [_native_spacing(native, h)] for h in ("host0.test", "host1.test", "host2.test")}
@@ -248,7 +274,7 @@ def test_nan_robots_delay_spaces_by_configured_delay(spark, web):
     native = fetch_op.fetch(fl, robots, cfg, NOW, "b1", WEB).toPandas()
     assert _native_spacing(native, "host0.test") == cfg.crawl_delay_ms
     assert _native_spacing(native, "host3.test") == 2000
-    tasks, _denied = svc.emit_fetch_tasks(fl, robots, cfg, "b1")
+    tasks = _tasks(fl, robots, cfg)
     got = {(r["host"], r["crawl_delay_ms"]) for r in tasks.collect()}
     assert got == {("host0.test", cfg.crawl_delay_ms), ("host3.test", 2000)}
 

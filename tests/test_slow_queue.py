@@ -5,6 +5,7 @@ slow hosts are detached for subsequent rounds."""
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from warps_nutch_spark.config import make_test_config
@@ -92,3 +93,17 @@ def test_unreachable_hosts_plans_without_a_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert [r["host"] for r in detached.collect()] == ["host0.test"]
+
+
+def test_unreachable_hosts_names_the_old_host_state_layout(spark, tmp_path):
+    """A crawl dir that kept its host state in top-level
+    ``hosts/vNNNN-<batch>`` dirs has no host table in its newest done
+    fetch: reading the host state fails with an error that names the
+    old layout and says what to do."""
+    os.makedirs(os.path.join(tmp_path, "hosts", "v0000-batch-0000"))
+    fetch_dir = os.path.join(tmp_path, "rounds", "batch-0000", "fetch")
+    os.makedirs(os.path.join(fetch_dir, "data"))
+    with open(os.path.join(fetch_dir, "_DONE"), "w") as f:
+        f.write("{}")
+    with pytest.raises(ValueError, match=r"hosts/vNNNN-<batch>.*start a new crawl dir"):
+        unreachable_hosts(spark, str(tmp_path), make_test_config())

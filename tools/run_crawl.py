@@ -5,7 +5,12 @@ Package and run:
 
     cd /root/repo && zip -r /tmp/wns.zip warps_nutch_spark
     spark-submit --py-files /tmp/wns.zip tools/run_crawl.py \
-        --workdir /data/crawl --rounds 4 --hosts 2000 --seeds-per-host 4
+        --workdir /data/crawl --rounds 4 --hosts 2000 --seeds-per-host 4 \
+        --conf top_n=100000 --conf max_per_host=200 --conf crawl_delay_ms=5000
+
+``--conf key=value`` (repeatable) sets a ``CrawlConfig`` field, typed as
+the REST config service types it (``service/jobs.py::config_from_map``);
+unset fields keep their ``CrawlConfig`` defaults.
 
 On a real cluster add executor/memory flags and (for the Iceberg
 frontier) --packages org.apache.iceberg:iceberg-spark-runtime plus
@@ -15,7 +20,15 @@ frontier) --packages org.apache.iceberg:iceberg-spark-runtime plus
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
+
+
+def _key_value(arg: str) -> tuple[str, str]:
+    key, sep, value = arg.partition("=")
+    if not sep:
+        raise argparse.ArgumentTypeError(f"expected KEY=VALUE, got {arg!r}")
+    return key, value
 
 
 def main() -> None:
@@ -26,27 +39,31 @@ def main() -> None:
     p.add_argument("--pages-base", type=int, default=60)
     p.add_argument("--seeds-per-host", type=int, default=4)
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--top-n", type=int, default=100_000)
-    p.add_argument("--max-per-host", type=int, default=200)
-    p.add_argument("--crawl-delay-ms", type=int, default=5_000)
+    p.add_argument(
+        "--conf", action="append", default=[], type=_key_value, metavar="KEY=VALUE",
+        help="CrawlConfig field (repeatable)",
+    )
     p.add_argument("--seeds-file", default=None, help="real seed list (overrides SimWeb seeds)")
     args = p.parse_args()
+    conf = dict(args.conf)
+
+    from warps_nutch_spark.config import CrawlConfig
+
+    unknown = set(conf) - {f.name for f in dataclasses.fields(CrawlConfig)}
+    if unknown:
+        p.error(f"unknown CrawlConfig field(s): {', '.join(sorted(unknown))}")
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("warps-nutch-spark-crawl").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from warps_nutch_spark.config import CrawlConfig
     from warps_nutch_spark.plans.round import RoundDriver
+    from warps_nutch_spark.service.jobs import config_from_map
     from warps_nutch_spark.simweb import SimWeb
 
     web_params = (args.hosts, args.pages_base, args.seed)
-    cfg = CrawlConfig(
-        top_n=args.top_n,
-        max_per_host=args.max_per_host,
-        crawl_delay_ms=args.crawl_delay_ms,
-    )
+    cfg = config_from_map(conf)
     drv = RoundDriver(spark, args.workdir, cfg, web_params)
     if args.seeds_file:
         seeds = args.seeds_file

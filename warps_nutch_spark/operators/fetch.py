@@ -8,7 +8,9 @@ concurrency model. The politeness rules live once, on the JVM, in the
 queue plan :func:`fetch_queues` and the response projection
 :func:`fetch_result`; native fetch and crowd mode
 (``fetch_service.py``, which leases tasks from the same queues like
-the fork's ``TaskSchedulers.randomFetchItems``) both run them. The
+the fork's ``TaskSchedulers.randomFetchItems``) both run them, and
+both end in the same call: ``fetch_result`` over queue rows that carry
+the raw response and its decode (:data:`RESPONSE_ROW`). The
 invariants that survive are:
 
 - **one queue is never fetched concurrently by two workers** — the
@@ -45,8 +47,9 @@ The reference fork parses inside the fetch reducer
 (``TaskScheduler.java:777-835``), and so does this pass: the partition
 call decodes the payloads it has just rendered
 (``parse.decode_payloads``), and the response projection adds the
-signature and processed outlinks (``parse.parsed_cols``). Each payload
-makes one trip through Python, and the fetch result is the parsed row.
+signature and processed outlinks (``parse.parsed_cols``). Crowd ingest
+runs the same decode over the submitted payloads. Each payload makes
+one trip through Python, and the fetch result is the parsed row.
 
 Skew note: queue size is bounded by generate.max_per_host, so one hot
 host cannot dominate a task. Queues are spread across
@@ -71,44 +74,34 @@ from .. import simweb as sw
 from ..config import CrawlConfig
 from ..functions.status import ProtocolStatus, http_to_protocol_col, protocol_to_crawl_col
 from ..functions.urls import domain_col
+from ..schema import FRONTIER
 from .parse import PARSE_FIELDS, PARSED_FIELDS, decode_payloads, parsed_cols
 
-# the fetchlist columns a fetch result carries
-CARRY_FIELDS = [
-    T.StructField("url", T.StringType()),
-    T.StructField("url_hash", T.StringType()),
-    T.StructField("host", T.StringType()),
-    T.StructField("status", T.IntegerType()),
-    T.StructField("fetch_time", T.LongType()),
-    T.StructField("fetch_interval", T.IntegerType()),
-    T.StructField("retries_since_fetch", T.IntegerType()),
-    T.StructField("score", T.FloatType()),
-    T.StructField("cash", T.FloatType()),
-    T.StructField("distance", T.IntegerType()),
-    T.StructField("priority", T.IntegerType()),
-    T.StructField("batch_id", T.StringType()),
-    T.StructField("signature", T.StringType()),
-    T.StructField("is_seed", T.BooleanType()),
+#: the fetchlist columns a fetch result carries, typed as in the
+#: frontier but nullable, as Spark reads a stage artifact back
+CARRY_COLS = [
+    "url", "url_hash", "host", "status", "fetch_time", "fetch_interval",
+    "retries_since_fetch", "score", "cash", "distance", "priority", "batch_id",
+    "signature", "is_seed",
 ]
-CARRY_COLS = [f.name for f in CARRY_FIELDS]
-
-# fetch output = the fetchlist columns we carry + result columns
-RESULT_EXTRA_FIELDS = [
-    T.StructField("proto_code", T.IntegerType()),
-    T.StructField("new_status", T.IntegerType()),
-    T.StructField("fetch_ts", T.LongType()),  # virtual-clock request time
-    T.StructField("bytes", T.BinaryType()),
-    T.StructField("out_urls", T.ArrayType(T.StringType())),
-    T.StructField("fetched", T.BooleanType()),
-    T.StructField("fetch_duration_ms", T.LongType()),
-]
+CARRY_FIELDS = [T.StructField(c, FRONTIER[c].dataType) for c in CARRY_COLS]
 
 #: the raw response to one queue row, null where no request was made;
 #: :func:`fetch_result` maps it to the fetch result
-RESPONSE_FIELDS = [T.StructField("http_status", T.IntegerType())] + [
-    f for f in RESULT_EXTRA_FIELDS
-    if f.name in ("fetch_ts", "bytes", "out_urls", "fetch_duration_ms")
+RESPONSE_FIELDS = [
+    T.StructField("http_status", T.IntegerType()),
+    T.StructField("fetch_ts", T.LongType()),  # virtual-clock request time
+    T.StructField("bytes", T.BinaryType()),
+    T.StructField("out_urls", T.ArrayType(T.StringType())),
+    T.StructField("fetch_duration_ms", T.LongType()),
 ]
+
+#: a queue row with its raw response and the decode of its payload:
+#: what native fetch's partition call and crowd ingest's decode pass
+#: hand to :func:`fetch_result`
+RESPONSE_ROW = T.StructType(
+    CARRY_FIELDS + [T.StructField("denied", T.BooleanType())] + RESPONSE_FIELDS + PARSE_FIELDS
+)
 
 
 def best_first() -> tuple:
@@ -117,15 +110,32 @@ def best_first() -> tuple:
     return F.desc("priority"), F.desc("score"), F.asc("url")
 
 
-def fetch_result_schema() -> T.StructType:
-    return T.StructType(CARRY_FIELDS + RESULT_EXTRA_FIELDS)
-
-
 def fetch_output_schema() -> T.StructType:
-    """What a fetch pass returns, native or crowd: the fetch result
-    plus the parse columns, the decode of each payload and the
-    signature, outlinks and parse mark of each fetched row."""
-    return T.StructType(fetch_result_schema().fields + PARSE_FIELDS + PARSED_FIELDS)
+    """What a fetch pass returns, native or crowd: the carried columns,
+    the protocol verdict and the response, then the parse columns, the
+    decode of each payload and the signature, outlinks and parse mark
+    of each fetched row."""
+    response = {f.name: f for f in RESPONSE_FIELDS}
+    return T.StructType(
+        CARRY_FIELDS
+        + [
+            T.StructField("proto_code", T.IntegerType()),
+            T.StructField("new_status", T.IntegerType()),
+            response["fetch_ts"],
+            response["bytes"],
+            response["out_urls"],
+            T.StructField("fetched", T.BooleanType()),
+            response["fetch_duration_ms"],
+        ]
+        + PARSE_FIELDS
+        + PARSED_FIELDS
+    )
+
+
+def fetch_result_schema() -> T.StructType:
+    """:func:`fetch_output_schema` without its parse columns."""
+    parse = {f.name for f in PARSE_FIELDS + PARSED_FIELDS}
+    return T.StructType([f for f in fetch_output_schema().fields if f.name not in parse])
 
 
 def queue_spacing_cols(q_cd, q_mt, q_mcd, robots_delay, cfg: CrawlConfig):
@@ -234,7 +244,9 @@ def fetch_result(
     """The one response projection, native and crowd: queue rows with
     ``denied`` and a raw response (:data:`RESPONSE_FIELDS`) become the
     fetch result (:func:`fetch_result_schema`, then the ``extra``
-    columns, then the parse columns of :func:`~.parse.parsed_cols`). A
+    columns, then the parse columns of :func:`~.parse.parsed_cols`);
+    with the decode columns as ``extra``, that is
+    :func:`fetch_output_schema`. A
     denied row is answered ROBOTS_DENIED without a request. A row with
     no response was never requested (the round's time limit, the
     FeederThread drain at ``FeederThread.java:126-140``, or no crowd
@@ -348,15 +360,9 @@ def fetch(
     ``host_config``: optional per-host queue overrides (columns
     ``host``, ``q_mt``, ``q_cd``, ``q_mcd`` — TasksMonitor.java:
     480-496), broadcast-joined like robots rules."""
-    response_schema = T.StructType(
-        CARRY_FIELDS
-        + [T.StructField("denied", T.BooleanType())]
-        + RESPONSE_FIELDS
-        + PARSE_FIELDS
-    )
     n_tasks = int(fetchlist.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     responses = fetch_queues(fetchlist, robots, host_config, cfg, batch_id, n_tasks).mapInPandas(
-        _make_fetch_partition(cfg, web_params, round_start_ms), schema=response_schema
+        _make_fetch_partition(cfg, web_params, round_start_ms), schema=RESPONSE_ROW
     )
     return fetch_result(
         responses, cfg, batch_id, round_start_ms, *(f.name for f in PARSE_FIELDS)

@@ -12,9 +12,9 @@ resource), serving the task table and result schema of
   workers honor politeness. Mirrors
   ``FetchResource.getFetchItems`` (MAX_TASKS_PER_SCHEDULE=100).
 - ``PUT /fetch/submit`` — accept a JSON array of forwarded worker
-  responses (payload bytes base64-encoded); duplicates and unknown
-  task keys are counted, first submission per task wins downstream
-  (``ingest_fetch_results`` earliest-``fetch_ts`` dedup). Mirrors
+  responses (payload bytes base64-encoded); the first submission per
+  task wins, and later duplicates and unknown task keys are counted
+  and dropped, so ``drain_results`` holds one row per task. Mirrors
   ``FetchResource.postFetchResult``.
 - ``GET /fetch/status`` — ``{published, leased, submitted}`` counters.
 

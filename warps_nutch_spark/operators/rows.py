@@ -38,9 +38,9 @@ def page_category_col(url: str) -> Column:
 
 def frontier_defaults(cfg: CrawlConfig, now_ms: int) -> dict[str, Column]:
     """Schema default of every frontier column except url/url_hash/host:
-    the row a discovered URL starts from (ReduceDatumBuilder.java:76-96)."""
-    return {
-        "host_bucket": F.lit(None).cast("int"),
+    the row a discovered URL starts from (ReduceDatumBuilder.java:76-96).
+    A column not listed here defaults to null of its frontier type."""
+    non_null = {
         "status": F.lit(CrawlStatus.UNFETCHED),
         "fetch_time": F.lit(now_ms),
         "prev_fetch_time": F.lit(0).cast("long"),
@@ -52,21 +52,12 @@ def frontier_defaults(cfg: CrawlConfig, now_ms: int) -> dict[str, Column]:
         "cash": F.lit(0.0).cast("float"),
         "distance": F.lit(0),
         "priority": F.lit(cfg.priority_default),
-        "batch_id": F.lit(None).cast("string"),
-        "generated_batch": F.lit(None).cast("string"),
-        "fetched_batch": F.lit(None).cast("string"),
-        "parsed_batch": F.lit(None).cast("string"),
-        "updated_batch": F.lit(None).cast("string"),
-        "signature": F.lit(None).cast("string"),
-        "prev_signature": F.lit(None).cast("string"),
-        "protocol_status": F.lit(None).cast(schema.PROTOCOL_STATUS),
-        "outlinks": F.lit(None).cast(schema.FRONTIER["outlinks"].dataType),
-        "repr_url": F.lit(None).cast("string"),
-        "inlinks": F.lit(None).cast(schema.FRONTIER["inlinks"].dataType),
-        "image_id": F.lit(None).cast("string"),
-        "caption": F.lit(None).cast("string"),
-        "phash": F.lit(None).cast("long"),
         "is_seed": F.lit(False),
+    }
+    return {
+        f.name: non_null.get(f.name, F.lit(None).cast(f.dataType))
+        for f in schema.FRONTIER.fields
+        if f.name not in ("url", "url_hash", "host")
     }
 
 

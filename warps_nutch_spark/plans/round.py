@@ -87,7 +87,14 @@ def _host_state(workdir: str) -> str | None:
     if not done:
         return None
     newest = max(done, key=lambda d: int(d.split("-")[1]))
-    return os.path.join(base, newest, "fetch", "hosts")
+    path = os.path.join(base, newest, "fetch", "hosts")
+    if not os.path.isdir(path):
+        raise ValueError(
+            f"crawl dir {workdir} was written before host tables moved into the "
+            f"fetch stage (it keeps host state in hosts/vNNNN-<batch> dirs, and "
+            f"{path} is missing); start a new crawl dir"
+        )
+    return path
 
 
 def unreachable_hosts(spark: SparkSession, workdir: str, cfg: CrawlConfig) -> DataFrame | None:
@@ -240,43 +247,19 @@ class RoundDriver:
         ``rounds/<batch_id>/fetch/hosts``. The fetch stage's ``_DONE``
         commits it; until then the newest done fetch is an earlier
         round's, so a re-run after a kill recomputes the same table."""
-        stats = (
-            fetch_results.filter(F.col("fetched"))
-            .groupBy("host")
-            .agg(
-                F.sum(
-                    F.col("proto_code")
-                    .isin(ProtocolStatus.TIMEOUT, ProtocolStatus.UNKNOWN_HOST)
-                    .cast("long")
-                ).alias("new_failures"),
-                F.sum(F.coalesce("fetch_duration_ms", F.lit(0))).alias("new_duration"),
-                F.count("*").alias("new_count"),
-            )
+        failed = F.col("proto_code").isin(ProtocolStatus.TIMEOUT, ProtocolStatus.UNKNOWN_HOST)
+        rows = fetch_results.filter(F.col("fetched")).select(
+            "host",
+            failed.cast("long").alias("failures"),
+            F.col("fetch_duration_ms").alias("total_duration_ms"),
+            F.lit(1).cast("long").alias("fetch_count"),
         )
         p = _host_state(self.workdir)
         if p is not None:
-            prev = self.spark.read.schema(HOSTS).parquet(p)
-            merged = prev.join(stats, on="host", how="outer").select(
-                "host",
-                (F.coalesce("failures", F.lit(0)) + F.coalesce("new_failures", F.lit(0))).alias(
-                    "failures"
-                ),
-                (
-                    F.coalesce("total_duration_ms", F.lit(0))
-                    + F.coalesce("new_duration", F.lit(0))
-                ).alias("total_duration_ms"),
-                (F.coalesce("fetch_count", F.lit(0)) + F.coalesce("new_count", F.lit(0))).alias(
-                    "fetch_count"
-                ),
-            )
-        else:
-            merged = stats.select(
-                "host",
-                F.col("new_failures").alias("failures"),
-                F.col("new_duration").alias("total_duration_ms"),
-                F.col("new_count").alias("fetch_count"),
-            )
-        merged.write.mode("overwrite").parquet(
+            rows = rows.unionByName(self.spark.read.schema(HOSTS).parquet(p))
+        rows.groupBy("host").agg(
+            *(F.sum(c).alias(c) for c in HOSTS.names if c != "host")
+        ).write.mode("overwrite").parquet(
             os.path.join(self._stage_dir(batch_id, "fetch"), "hosts")
         )
 
@@ -482,10 +465,11 @@ class RoundDriver:
         }
 
     def _crowd_fetch(self, fetchlist: DataFrame, batch_id: str, now: int) -> DataFrame:
-        """FetchMode.CROWDSOURCING round: publish tasks, hand every
+        """FetchMode.CROWDSOURCING round: build the politeness queue
+        plan once, publish its robots-allowed rows as tasks, hand every
         task to the crowd worker (default: the SimWeb protocol — the
-        same deterministic web native mode fetches), ingest the
-        forwarded responses.
+        same deterministic web native mode fetches), and ingest the
+        forwarded responses over the same queue plan.
 
         With ``fetch_service_port >= 0`` the tasks are served over HTTP
         (``operators/fetch_server.FetchServer``): external workers lease
@@ -494,9 +478,10 @@ class RoundDriver:
         ``self.crowd_worker``, the worker simulation."""
         from ..operators import fetch_service as svc
 
-        tasks, denied = svc.emit_fetch_tasks(
-            fetchlist, self._robots_df(), self.cfg, batch_id, self.host_config()
+        queues = fetch_op.fetch_queues(
+            fetchlist, self._robots_df(), self.host_config(), self.cfg, batch_id
         )
+        tasks = svc.emit_fetch_tasks(queues, batch_id)
         if self.cfg.fetch_service_port >= 0:
             # REST transport (fetch/service/FetchServer.java): serve the
             # task table over live HTTP and wait for external workers
@@ -505,28 +490,14 @@ class RoundDriver:
             srv.await_complete(self.cfg.fetch_service_wait_s)
             submitted = srv.drain_results(self.spark)
         else:
-            task_pdf = tasks.select("url_hash", "url").toPandas()
+            # the first row per task wins, as FetchServer.submit keeps
+            # the first submission
+            results = self.crowd_worker(tasks.select("url_hash", "url").toPandas(), now)
             submitted = self.spark.createDataFrame(
-                self.crowd_worker(task_pdf, now), schema=svc.CROWD_RESULT
+                results.drop_duplicates("url_hash")[svc.CROWD_RESULT.names],
+                schema=svc.CROWD_RESULT,
             )
-        res = svc.ingest_fetch_results(tasks, denied, submitted, self.cfg, batch_id, now)
-
-        # one Python pass over the ingested rows, through the decode
-        # the native fetch pass runs per partition. Repartitioned by
-        # number, as fetch does: AQE never coalesces that, whereas a
-        # byte-sized shuffle packs the payloads onto one or two tasks.
-        def _decode(batches):
-            for pdf in batches:
-                yield pdf.join(parse_op.decode_payloads(pdf["bytes"]))
-
-        # the decode adds the PARSE_FIELDS; the ingested columns keep the
-        # types fetch_result projected, as in a native fetch artifact
-        ingested = {f.name: f for f in res.schema.fields}
-        schema = T.StructType(
-            [ingested.get(f.name, f) for f in fetch_op.fetch_output_schema().fields]
-        )
-        n_tasks = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        return res.repartition(n_tasks).mapInPandas(_decode, schema=schema)
+        return svc.ingest_fetch_results(queues, submitted, self.cfg, batch_id, now)
 
     def _ensure_fetch_server(self):
         if getattr(self, "_fetch_server", None) is None:
